@@ -160,8 +160,10 @@ object PageSynth {
 
   /** Byte-identical to f"https://host-${i % 997}%04d.example/p/$i%09d"
     * without java.util.Formatter (format-string parsing measured on the
-    * per-page hot path; PageSynthSpec pins equality). */
+    * per-page hot path; PageSynthSpec pins equality). Page indices are
+    * non-negative: the padding below has no sign handling. */
   def url(i: Long): String = {
+    require(i >= 0, s"page index must be non-negative, got $i")
     val sb = new java.lang.StringBuilder(40)
     sb.append("https://host-")
     val host = i % 997

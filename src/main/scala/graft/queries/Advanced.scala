@@ -542,8 +542,8 @@ object Advanced {
       FROM lab l JOIN vd ON vd.label = l.subj""")),
 
     // S15 serving layer end-to-end: load the ServingIndex from the
-    // materialized pipeline artifact (cached tables + broadcast label map)
-    // and resolve a drug name through it — exact-before-partial precedence,
+    // materialized pipeline artifact (collected once into a driver-side
+    // label map + adjacency store) and resolve a drug name through it — exact-before-partial precedence,
     // substring scan, shortest-label ordering, bounded partials, all
     // recomputed by the oracle from the vertices parquet. "zorvex1" has one
     // exact hit and ten zorvex1X partials, so both ranks carry rows.
@@ -551,13 +551,13 @@ object Advanced {
       graft.pipeline.Pipeline.run(s, KgRoot, nPages = 2000, partitions = 8,
         dedupPages = true)
       // loadOrGet: the get_store()-style session singleton — repeated
-      // bench passes reuse ONE cached table pair + broadcast label map
-      // instead of pinning a fresh copy per pass
+      // bench passes reuse ONE driver store instead of collecting a fresh
+      // copy per pass
       val idx = graft.query.ServingIndex.loadOrGet(s, KgRoot)
-      // nodeLabel goes through the broadcast map — assert it agrees with
+      // nodeLabel goes through the driver label map — assert it agrees with
       // the served frame so the O(1) lookup path is exercised too
       require(idx.nodeLabel("Drug", 1L).isDefined,
-        "broadcast label map missing Drug key 1")
+        "driver label map missing Drug key 1")
       idx.resolve("Drug", "zorvex1")
         .select(col("node_type"), col("key"), col("label"),
           col("match_rank"))

@@ -171,7 +171,7 @@ object PathTools {
   /** Reference PRR fallback (adverse_events.py:135-140): `meta["prr"]` when
     * the edge carries any meta at all (null if the key is absent), falling
     * back to strength_score ONLY when meta is entirely empty/missing. */
-  private def prrOf: Column =
+  private[query] def prrOf: Column =
     when(size(col("meta")) > 0, element_at(col("meta"), "prr").cast("double"))
       .otherwise(col("strength_score"))
 

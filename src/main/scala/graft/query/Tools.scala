@@ -55,9 +55,7 @@ object Tools {
       .limit(limit)
     val richness =
       if (vertices.columns.contains("props"))
-        when(col("match_rank") === 0,
-          when(element_at(col("props"), canonicalProp).isNotNull,
-            lit(1 << 20)).otherwise(lit(0)) + size(col("props")))
+        when(col("match_rank") === 0, propsRichness(canonicalProp))
           .otherwise(lit(0))
       else lit(0)
     exact.unionByName(partial)
@@ -65,6 +63,12 @@ object Tools {
         col("label"), col("key"))
       .drop("_lbl")
   }
+
+  /** [[resolve]]'s exact-tie richness of a vertex's `props` column:
+    * canonical-id bonus plus number of props. */
+  private[query] def propsRichness(canonicalProp: String): Column =
+    when(element_at(col("props"), canonicalProp).isNotNull, lit(1 << 20))
+      .otherwise(lit(0)) + size(col("props"))
 
   /** 1-hop traversal with dedup-keep-best + top-k
     * (reference:src/kg_ae/tools/adverse_events.py:26-52): out-edges of

@@ -101,5 +101,11 @@ class ExtractSpec extends AnyFunSuite {
       val i = rnd.nextLong(2000000000L)
       assert(PageSynth.url(i) == spec(i), s"i=$i")
     }
+    // page indices are non-negative; unchecked, -1 padded to
+    // "https://host-000-1.example/p/00000000-1", which the spec never
+    // produces (it gives "host--001" and "p/-00000001")
+    Seq(-1L, -998L, Long.MinValue).foreach { i =>
+      intercept[IllegalArgumentException](PageSynth.url(i))
+    }
   }
 }
