@@ -72,7 +72,13 @@ object Dedup {
     * exchange carries exactly one n-long signature row per doc — the
     * same bytes the signature frame materializes anyway. Signature
     * values are identical: min over the same hash multiset (shingle
-    * arrays are always non-empty — short docs shingle to [text]). */
+    * arrays are always non-empty — short docs shingle to [text]).
+    *
+    * Ids must be unique: the signature is grouped by id, so rows sharing
+    * an id merge into ONE signature over the union of their shingles
+    * (the element-wise min of their separate signatures), not one
+    * signature per row. Pre-assign unique ids (e.g. KeyAssigner.assign)
+    * when the input may repeat them. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 5, numHashes: Int = 64): DataFrame = {
     val sigCols = (0 until numHashes).map(i =>

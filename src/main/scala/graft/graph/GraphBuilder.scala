@@ -18,11 +18,11 @@ import graft.model.RawTriple
   *
   * Construction is pure DataFrame: dedup-by-normalized-label merge (the
   * reference's actual canonicalization rule, build.py:88-119), dense keys
-  * via KeyAssigner, then inner joins of triples against the per-type key
-  * tables — unmatched endpoints drop, which IS the reference's dict-lookup
-  * drop semantics (J6). Key tables are small relative to triples →
-  * broadcast; the only large shuffles are the claim groupBy and nothing
-  * else.
+  * per node type from one grouped KeyAssigner pass over every type, then
+  * inner joins of triples against the typed key table — unmatched
+  * endpoints drop, which IS the reference's dict-lookup drop semantics
+  * (J6). Key tables are small relative to triples → broadcast; the only
+  * large shuffles are the claim groupBy and nothing else.
   */
 object GraphBuilder {
 
@@ -45,33 +45,22 @@ object GraphBuilder {
 
   /** node label table: (node_type, label) distinct from gazetteer + observed
     * triple endpoints (exact-label merge = lower/trim, already normalized by
-    * the detector). */
+    * the detector), keyed 1..N per node type (reference keyspaces are per
+    * node type) by ONE grouped KeyAssigner pass over all types. */
   def buildVertices(spark: SparkSession, triples: Dataset[RawTriple], gaz: Gazetteer): DataFrame = {
     import spark.implicits._
     val bGaz = spark.sparkContext.broadcast(gaz)
-    // materialize ONCE: the vocabulary-sized endpoint table is consumed by
-    // the type collect below plus TWO passes per node type inside
-    // KeyAssigner (range-partition sampling + the eager rank checkpoint) —
-    // without the cut, each of those ~2×|types|+1 jobs re-executes the
-    // fact-proportional triples flatMap + distinct shuffle from scratch
-    val endpoints = triples.flatMap(t => Seq(t.subj, t.obj))
-      .distinct()
-      .map(l => (nodeTypeOf(bGaz.value, l), l))
+    // the endpoint table has ONE consumer, KeyAssigner: its distinct
+    // dedups (type, label) — a label's type is a function of the label —
+    // and its range sampling reads that distinct's shuffle output rather
+    // than re-running the triples scan, so no distinct or cut is needed here
+    val endpoints = triples
+      .flatMap(t => Seq(t.subj, t.obj).map(l => (nodeTypeOf(bGaz.value, l), l)))
       .toDF("node_type", "label")
       .where($"node_type" =!= "Unknown")
-      .localCheckpoint(true)
-    // dense keys PER TYPE (reference keyspaces are per node type)
-    val types = endpoints.select("node_type").distinct().as[String].collect().sorted
-    val keyed = types.map { t =>
-      val lbls = endpoints.where($"node_type" === t).select("label")
-      KeyAssigner.assign(lbls, "label")
-        .withColumn("node_type", lit(t))
-    }
-    val all = keyed.reduceOption(_ unionByName _)
-      .getOrElse(spark.emptyDataset[(String, Long, String)]
-        .toDF("label", "key", "node_type"))
-    all.select($"node_type", $"key", $"label",
-      map(lit("label"), $"label").as("props"))
+    KeyAssigner.assign(endpoints, "label", groupCols = Seq("node_type"))
+      .select($"node_type", $"key", $"label",
+        map(lit("label"), $"label").as("props"))
   }
 
   /** Aggregate raw triples into claim edges with provenance, then resolve

@@ -29,40 +29,48 @@ object Validator {
   }
 
   def validate(vertices: DataFrame, edges: DataFrame): Report = {
-    // THREE jobs total — one fused aggregation per table plus one fused
-    // orphan anti-join — not one full source scan per invariant (the
-    // naive 8-job version re-executed the uncached vertex/edge plans from
-    // source for every count; this gate runs on every pipeline build).
-    def flag(c: Column): Column = coalesce(sum(when(c, 1L)), lit(0L))
-    val v = vertices.agg(
-      count(lit(1)).as("n"),
-      flag(!col("node_type").isin(AllowedNodeTypes.toSeq: _*)).as("bad_types"),
-      flag(col("key").isNull || col("key") < 1).as("bad_keys"),
+    // ONE action: vertex rows and edge endpoints (src and dst, one row
+    // each) are unioned and grouped by (node_type, key); every invariant
+    // is a per-row flag summed twice — per (type, key), then overall. No
+    // source scan per invariant and no separate anti-join: an endpoint is
+    // an orphan when its (type, key) group holds no vertex. Under AQE the
+    // action is a few jobs (one per shuffle stage), not one per check.
+    def flag(c: Column): Column = when(c, 1L).otherwise(0L)
+    def total(c: Column): Column = coalesce(sum(c), lit(0L))
+    val vRows = vertices.select(col("node_type"), col("key"),
+      lit(1L).as("v"), lit(0L).as("e"), lit(0L).as("ends"),
+      flag(!col("node_type").isin(AllowedNodeTypes.toSeq: _*)).as("bad_type"),
+      flag(col("key").isNull || col("key") < 1).as("bad_key"),
+      lit(0L).as("missing"))
+    // edge-level counts ride on the src endpoint row only
+    val missing = flag(
+      col("src_type").isNull || col("src_key").isNull ||
+      col("dst_type").isNull || col("dst_key").isNull ||
+      col("edge").isNull || col("claim_type").isNull ||
+      col("dataset").isNull)
+    val srcRows = edges.select(col("src_type"), col("src_key"),
+      lit(0L), lit(1L), lit(1L), lit(0L), lit(0L), missing)
+    val dstRows = edges.select(col("dst_type"), col("dst_key"),
+      lit(0L), lit(0L), lit(1L), lit(0L), lit(0L), lit(0L))
+    val perKey = vRows.union(srcRows).union(dstRows)
+      .groupBy(col("node_type"), col("key"))
+      .agg(sum("v").as("v"), sum("e").as("e"), sum("ends").as("ends"),
+        sum("bad_type").as("bad_type"), sum("bad_key").as("bad_key"),
+        sum("missing").as("missing"))
+    // an endpoint with a null type or key matches no vertex (equi-join
+    // semantics), even when a vertex row carries the same nulls
+    val orphan = col("v") === 0 || col("node_type").isNull || col("key").isNull
+    val r = perKey.agg(
+      total(col("v")), total(col("e")), total(col("bad_type")),
+      total(col("bad_key")), total(col("missing")),
+      total(when(orphan, col("ends")).otherwise(0L)),
       // duplicates counted as EXTRA rows beyond the distinct (type, key)
       // set (3 rows sharing one key report 2) — zero iff keys are unique,
-      // which is the invariant; struct() keeps null-keyed rows countable
-      (count(lit(1)) -
-        countDistinct(struct(col("node_type"), col("key")))).as("dups")
+      // which is the invariant; null-keyed rows group like any other
+      total(greatest(col("v") - 1, lit(0L)))
     ).head()
-    val e = edges.agg(
-      count(lit(1)).as("n"),
-      flag(
-        col("src_type").isNull || col("src_key").isNull ||
-        col("dst_type").isNull || col("dst_key").isNull ||
-        col("edge").isNull || col("claim_type").isNull ||
-        col("dataset").isNull).as("missing")
-    ).head()
-    val vk = vertices.select(col("node_type"), col("key"))
-    // no orphan edges: both endpoints must exist (left_anti == violations);
-    // src and dst endpoint sets validate in ONE union + anti-join, and the
-    // union keeps duplicates so the count still reports every bad endpoint
-    val orphans = edges.select(
-        col("src_type").as("node_type"), col("src_key").as("key"))
-      .union(edges.select(
-        col("dst_type").as("node_type"), col("dst_key").as("key")))
-      .join(vk, Seq("node_type", "key"), "left_anti").count()
-    Report(v.getLong(0), e.getLong(0), v.getLong(1), v.getLong(2),
-      e.getLong(1), orphans, v.getLong(3))
+    Report(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+      r.getLong(4), r.getLong(5), r.getLong(6))
   }
 
   /** Fail-fast gate (reference build.py:849-854 raises on invalid). */

@@ -3,7 +3,7 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.extract.PageSynth
@@ -18,7 +18,8 @@ import graft.model.Page
   *
   * Each stage writes exactly one parquet table via a temp-dir + atomic
   * rename commit (the sandbox stand-in for an Iceberg snapshot commit) plus
-  * a manifest recording {stage, version, upstream fingerprints, row count}.
+  * a manifest recording {stage, version, upstream fingerprints, row count};
+  * the row count is observed on the write itself, so a commit is one job.
   * Replaced tables are retained as numbered snapshots with time-travel
   * reads, rollback and bounded retention (see [[runStage]] — the
   * snapshot/time-travel half of the Iceberg stand-in).
@@ -92,11 +93,15 @@ object Pipeline {
       case _ =>
         val tmp = Paths.get(root, s".tmp_$stage")
         graft.util.Fs.deleteRec(tmp)
-        val df = body
-        val writer = df.write.mode("overwrite")
+        // the committed row count comes from the write itself: the
+        // observed count is collected by the write job, so a commit is
+        // one job, not a write plus a re-read of the table to count it
+        val written = Observation(s"commit_$stage")
+        val writer = body.observe(written, count(lit(1)).as("rows"))
+          .write.mode("overwrite")
         (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
          else writer).parquet(tmp.toString)
-        val rows = spark.read.parquet(tmp.toString).count()
+        val rows = written.get("rows").asInstanceOf[Long]
         archiveIfCommitted(root, stage)
         graft.util.Fs.deleteRec(dir) // uncommitted leftovers only; committed dirs archived
         Files.createDirectories(dir.getParent)

@@ -85,6 +85,22 @@ class DedupSpec extends AnyFunSuite {
       s"LSH recall $found/${eligible.size}")
   }
 
+  test("minhashSignatures: rows sharing an id merge into one union signature") {
+    val a = "alpha beta gamma delta epsilon zeta"
+    val b = "eta theta iota kappa lambda mu"
+    def sigs(rows: (Long, String)*) = Dedup.minhashSignatures(
+        rows.toDF("doc_id", "text"), "doc_id", "text", k = 2, numHashes = 8)
+      .collect().map(r => r.getLong(0) -> (1 to 8).map(r.getLong)).toMap
+    val merged = sigs(1L -> a, 1L -> b)
+    val separate = sigs(1L -> a, 2L -> b)
+    // one signature for the shared id, equal to the element-wise min of
+    // the two rows' own signatures: the union of their shingles
+    assert(merged.keySet == Set(1L))
+    assert(merged(1L) == separate(1L).zip(separate(2L)).map {
+      case (x, y) => math.min(x, y) })
+    assert(merged(1L) != separate(1L) && merged(1L) != separate(2L))
+  }
+
   test("jaccardOnPairs matches naive computation") {
     val pairs = Seq((0L, 2000L), (1L, 2001L), (0L, 1L)).toDF("id_a", "id_b")
     val got = Dedup.jaccardOnPairs(docs, pairs, "doc_id", "text", 5)

@@ -211,6 +211,28 @@ class KgPipelineSpec extends AnyFunSuite {
     plans.foreach(p => assert(!p.toLowerCase.contains("broadcast"), p.take(500)))
   }
 
+  test("buildVertices keys all node types in one pass: jobs independent of type count") {
+    import spark.implicits._
+    // every type gets five labels; each label is a subject of one triple
+    // whose object is the first type's first label
+    def jobs(types: Seq[String]): Int = {
+      val norms = types.map(t => t -> (0 until 5).map(i => s"${t.toLowerCase}$i"))
+      val gaz = graft.link.Gazetteer(norms.flatMap { case (t, ns) =>
+        ns.map(graft.link.GazEntry(_, t)) })
+      val obj = norms.head._2.head
+      val triples = norms.flatMap(_._2).map(n =>
+        graft.model.RawTriple(n, "R", obj, s"u-$n", "s")).toDS()
+      val (_, seen) = JobProbe(spark) {
+        GraphBuilder.buildVertices(spark, triples, gaz)
+          .write.format("noop").mode("overwrite").save()
+      }
+      seen.size
+    }
+    val two = jobs(Seq("Drug", "Gene"))
+    val six = jobs(Validator.AllowedNodeTypes.toSeq.sorted)
+    assert(two == six, s"2 types: $two jobs, 6 types: $six jobs")
+  }
+
   test("multi-word + prefix-overlap mention semantics (leftmost-longest)") {
     val gaz = PageSynth.gazetteer
     val text = "zorvex1 causes severe rash17 and severe rash1 appears."

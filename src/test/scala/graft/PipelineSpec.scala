@@ -285,6 +285,32 @@ class PipelineSpec extends AnyFunSuite {
       6L -> (("added", None, None))))
   }
 
+  test("a fresh commit is one job; manifests count exactly the written rows") {
+    import org.apache.spark.sql.functions.lit
+    val root = Files.createTempDirectory("graft_commit").toString
+    def pages(n: Long) = graft.extract.PageSynth.pages(spark, n, 4).toDF()
+    def manifestRows(stage: String): Long = Files.readString(
+      java.nio.file.Paths.get(root, stage, "_MANIFEST")).split("\n")(2).toLong
+    def parquetRows(stage: String): Long =
+      spark.read.parquet(s"$root/$stage").count()
+    val (res, jobs) = JobProbe(spark)(
+      Pipeline.runStage(spark, root, "pages", "v1", "n=60")(pages(60)))
+    assert(jobs.size == 1, s"commit jobs: $jobs")
+    assert(res.rows == 60 && manifestRows("pages") == 60)
+    // empty stages: a filtered-empty frame and a frame with no partitions
+    Pipeline.runStage(spark, root, "filtered", "v1", "-")(
+      pages(60).where(lit(false)))
+    Pipeline.runStage(spark, root, "no_parts", "v1", "-")(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        pages(1).schema))
+    // the full run: unpartitioned stages and the claim_type-partitioned edges
+    Pipeline.run(spark, root, nPages = 60, partitions = 4)
+    for (st <- Seq("pages", "triples", "vertices", "edges", "filtered", "no_parts"))
+      assert(manifestRows(st) == parquetRows(st), st)
+    assert(manifestRows("filtered") == 0 && manifestRows("no_parts") == 0)
+    assert(manifestRows("edges") > 0)
+  }
+
   test("counters table records per-stage lineage") {
     val root = Files.createTempDirectory("graft_pipeD").toString
     Pipeline.run(spark, root, nPages = 100, partitions = 4)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{Edge, Vertex}
@@ -100,34 +99,15 @@ class ServingIndexSpec extends AnyFunSuite {
 
   test("after load, a tool call plus collect() submits no Spark job") {
     val idx = ServingIndex.build(vertices, edges)
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(job: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          job.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("serving-calls", "tool calls")
-      val answers = Seq(idx.resolve("Drug", "warf"),
-        idx.neighbors("Drug", 1, "AdverseEvent"), idx.drugToAePaths(1, 1),
-        idx.drugDrugInteractions(1, 1), idx.drugProfile(1)).map(_.collect())
+      val (answers, jobs) = JobProbe(spark) {
+        Seq(idx.resolve("Drug", "warf"),
+          idx.neighbors("Drug", 1, "AdverseEvent"), idx.drugToAePaths(1, 1),
+          idx.drugDrugInteractions(1, 1), idx.drugProfile(1)).map(_.collect())
+      }
       assert(answers.map(_.length) == Seq(1, 1, 1, 0, 3))
-      // a marker job after the calls: listener events arrive in order, so
-      // once the marker is seen every earlier job would have been too
-      sc.setJobGroup("serving-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!groups.contains("serving-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("serving-marker"))
-      assert(!groups.contains("serving-calls"), s"jobs seen: $groups")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-      idx.unpersist()
-    }
+      assert(jobs.isEmpty, s"jobs seen: $jobs")
+    } finally idx.unpersist()
   }
 
   test("bounded-vocabulary invariant fails fast, never silently collects") {

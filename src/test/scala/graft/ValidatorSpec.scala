@@ -42,4 +42,13 @@ class ValidatorSpec extends AnyFunSuite {
     val r = Validator.validate(dupV, Seq.empty[Edge].toDS().toDF())
     assert(r.duplicateVertexRows == 1)
   }
+
+  test("validate is one action: every job runs under one SQL execution") {
+    val e = Seq(edge("Drug", 1, "Gene", 1), edge("Drug", 1, "Gene", 99))
+      .toDS().toDF()
+    val (r, jobs) = JobProbe(spark)(Validator.validate(okV, e))
+    assert(r.orphanEdges == 1)
+    assert(jobs.nonEmpty && jobs.forall(_.isDefined) && jobs.distinct.size == 1,
+      s"jobs by SQL execution id: $jobs")
+  }
 }
