@@ -1,7 +1,9 @@
 package graft.canon
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+import graft.graph.LocalGraph
 
 /** Connected components via alternating large-star / small-star rounds —
   * the iterative-DataFrame-joins realization of the label-merge transitive
@@ -65,14 +67,15 @@ object ConnectedComponents {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Size-aware dispatch: below `localThreshold` edges the component graph
-    * fits trivially in driver memory (near-dup graphs are sparse — a few
-    * edges per duplicate cluster — even when the corpus is 100 TB), so a
-    * driver union-find avoids ~5 shuffle stages × O(log n) rounds of fixed
-    * job overhead. Above it, the distributed large-star/small-star loop
-    * runs. Both paths produce identical output (CanonSpec pins this). */
-  def run(edges: DataFrame, maxIter: Int = 25,
-      localThreshold: Long = 2000000L): DataFrame = {
+  /** Size-aware dispatch through the shared gate ([[LocalGraph.cut]]): at
+    * most [[LocalGraph.MaxEdges]] symmetric edges the component graph fits
+    * trivially in driver memory (near-dup graphs are sparse — a few edges
+    * per duplicate cluster — even when the corpus is 100 TB), so a driver
+    * union-find avoids ~5 shuffle stages × O(log n) rounds of fixed job
+    * overhead. Above it, the distributed large-star/small-star loop runs
+    * over the same cut. Both paths produce identical output (CanonSpec
+    * pins this). */
+  def run(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     // Materialize the raw pair projection ONCE: symmetrize AND the
     // degenerate-endpoint probe below both consume it, and callers pass
     // arbitrarily expensive plans as `edges` (minhash verify joins,
@@ -80,10 +83,9 @@ object ConnectedComponents {
     // re-execute that whole upstream plan. The pair list itself is
     // sparse-graph-sized, so the extra materialization is cheap.
     val ein = edges.select(col("src"), col("dst")).localCheckpoint(true)
-    val base = symmetrize(ein).localCheckpoint(true)
-    val core =
-      if (base.count() <= localThreshold) runLocal(base)
-      else loop(base, maxIter) // base already symmetric + lineage-cut
+    val (base, small) = LocalGraph.cut(symmetrize(ein))
+    // base is symmetric + lineage-cut, as loop requires
+    val core = small.fold(loop(base, maxIter))(runLocal(base, _))
     withSelfLoopOnly(ein, core)
   }
 
@@ -117,11 +119,9 @@ object ConnectedComponents {
     }
   }
 
-  /** Driver union-find over a (small) symmetric edge list. */
-  private def runLocal(base: DataFrame): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val pairs = base.select(col("src"), col("dst")).as[(Long, Long)].collect()
+  /** Driver union-find over the collected rows of the (small) symmetric
+    * edge list `base`. */
+  private def runLocal(base: DataFrame, rows: Array[Row]): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -130,15 +130,16 @@ object ConnectedComponents {
       while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
+    rows.foreach { row =>
+      val (ra, rb) = (find(row.getAs[Number](0).longValue),
+        find(row.getAs[Number](1).longValue))
       if (ra != rb) {
         if (ra < rb) parent(rb) = ra else parent(ra) = rb
       }
     }
     // root = min id of component: union-by-min above keeps roots minimal
     val out = parent.keys.toSeq.map(id => (id, find(id)))
-    spark.createDataFrame(out).toDF("id", "component")
+    base.sparkSession.createDataFrame(out).toDF("id", "component")
   }
 
   /** Rounds taken by the last distributed run — test introspection only. */

@@ -1,7 +1,8 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Community detection by synchronous label propagation (Raghavan et al.
   * 2007) over an undirected edge list: every node starts labeled with its
@@ -16,14 +17,17 @@ import org.apache.spark.sql.functions._
   * oracle can unroll the same rounds in SQL and hash-match.
   *
   * Scale shape (10¹²-page web graph, same contract as [[PageRank]]):
-  * the symmetrized edge list materializes ONCE behind a lineage cut;
-  * each round is one |V|-sized join (labels onto edges by dst) and two
-  * hash aggregates. The per-(node, label) count absorbs hub skew in the
-  * partial aggregate (a 10⁸-degree hub's neighbors arrive as one partial
-  * count per map partition per label), and the argmax is `min_by` over a
-  * (−count, label) struct — a hash aggregate, NOT a per-node sort window,
-  * so a hot node never serializes on one reducer's sort. Labels are
-  * lineage-cut per round: constant-depth plan at any round count.
+  * the symmetrized edge list materializes ONCE behind a lineage cut
+  * ([[LocalGraph.cut]]). At most [[LocalGraph.MaxEdges]] rows are
+  * collected and the rounds run on the driver over adjacency arrays — a
+  * fixed job count at any `iters`. Above the gate each round is one
+  * |V|-sized join (labels onto edges by dst) and two hash aggregates. The
+  * per-(node, label) count absorbs hub skew in the partial aggregate (a
+  * 10⁸-degree hub's neighbors arrive as one partial count per map
+  * partition per label), and the argmax is `min_by` over a (−count,
+  * label) struct — a hash aggregate, NOT a per-node sort window, so a hot
+  * node never serializes on one reducer's sort. Labels are lineage-cut
+  * per round: constant-depth plan at any round count.
   */
 object LabelPropagation {
 
@@ -34,12 +38,25 @@ object LabelPropagation {
     */
   def run(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
+    val (und, small) = LocalGraph.cut(prepare(edges))
+    small.fold(loop(und, iters))(local(und, _, iters))
+  }
+
+  /** The distributed loop alone, at any input size. */
+  private[graft] def runDistributed(edges: DataFrame, iters: Int = 3): DataFrame = {
+    require(iters >= 1, s"iters must be >= 1, got $iters")
+    loop(prepare(edges).localCheckpoint(true), iters)
+  }
+
+  private def prepare(edges: DataFrame): DataFrame = {
     val e0 = edges
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
-    val und = e0.union(e0.select(col("dst").as("src"),
-      col("src").as("dst"))).localCheckpoint(true)
+    e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  private def loop(und: DataFrame, iters: Int): DataFrame = {
     val nodes = und.select(col("src").as("node")).distinct()
       .localCheckpoint(true)
     var labels = nodes.withColumn("label", col("node"))
@@ -58,5 +75,38 @@ object LabelPropagation {
         .localCheckpoint(true) // constant-depth plan at any iters
     }
     labels
+  }
+
+  /** The same rounds on the driver over the cut's (src, dst) rows. */
+  private def local(und: DataFrame, rows: Array[Row], iters: Int): DataFrame = {
+    val g = LocalGraph.adjacency(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+    var label = g.ids.clone()
+    (1 to iters).foreach { _ =>
+      label = Array.tabulate(g.n) { u =>
+        val votes = Array.tabulate(g.off(u + 1) - g.off(u))(
+          j => label(g.nbr(g.off(u) + j)))
+        if (votes.isEmpty) g.ids(u)
+        else {
+          // most votes wins; sorted runs make the first maximum the
+          // smallest label
+          java.util.Arrays.sort(votes)
+          var best = votes(0)
+          var bestRun = 0
+          var i = 0
+          while (i < votes.length) {
+            var j = i
+            while (j < votes.length && votes(j) == votes(i)) j += 1
+            if (j - i > bestRun) { best = votes(i); bestRun = j - i }
+            i = j
+          }
+          best
+        }
+      }
+    }
+    // coalesce(label, node) is as nullable as node
+    val node = und.schema("src").copy(name = "node")
+    LocalGraph.frame(und.sparkSession,
+      (0 until g.n).map(u => Row(g.ids(u), label(u))),
+      StructType(Seq(node, node.copy(name = "label"))))
   }
 }

@@ -10820,7 +10820,9 @@ object Inference {
         .where(length(col("term")) > 0)
         // eager cut (r06): the token explode feeds top/stot/cells —
         // three replans of the corpus pass without it (the token stage
-        // table).
+        // table). Unlike the other r06 cuts, which are dimension- or
+        // cell-sized, this one pins the whole fact-sized token stream in
+        // block storage: re-measure it before any scale-up.
         .localCheckpoint(true)
       val top = toks.groupBy("term").agg(count(lit(1)).as("tc"))
         .orderBy(col("tc").desc, col("term")).limit(20)

@@ -21,14 +21,18 @@ class AnalyticsSpec extends AnyFunSuite {
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L), (2L, 4L),
       (5L, 6L)).toDF("src", "dst")
     val seeds = Seq(0L).toDF("node")
-    val got = graft.graph.Bfs.hops(edges, seeds, maxHops = 2)
-      .as[(Long, Long)].collect().toMap
-    assert(got === Map(0L -> 0L, 1L -> 1L, 2L -> 2L))
-    // wider bound reaches 3 and 4; the cycle back-edge must NOT relabel 0,
-    // and the frontier must drain (empty-frontier early exit) before 10
-    val got4 = graft.graph.Bfs.hops(edges, seeds, maxHops = 10)
-      .as[(Long, Long)].collect().toMap
-    assert(got4 === Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 3L))
+    Seq("local" -> graft.graph.Bfs.hops _,
+      "distributed" -> graft.graph.Bfs.hopsDistributed _).foreach {
+      case (path, bfs) =>
+        val got = bfs(edges, seeds, 2).as[(Long, Long)].collect().toMap
+        assert(got === Map(0L -> 0L, 1L -> 1L, 2L -> 2L), path)
+        // wider bound reaches 3 and 4; the cycle back-edge must NOT
+        // relabel 0, and the frontier must drain (empty-frontier early
+        // exit) before 10
+        val got4 = bfs(edges, seeds, 10).as[(Long, Long)].collect().toMap
+        assert(got4 === Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 3L),
+          path)
+    }
   }
 
   test("priority sample equals the single-window reference") {
@@ -154,8 +158,6 @@ class AnalyticsSpec extends AnyFunSuite {
     // two triangles bridged by one edge + an isolated self-community seed
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L), (4L, 5L),
       (5L, 3L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
-    val got = graft.graph.LabelPropagation.run(edges, iters = 3)
-      .as[(Long, Long)].collect().toMap
     // naive synchronous reference: same vote count + min-label tie rule
     val und = edges.as[(Long, Long)].collect().toSeq
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }
@@ -169,13 +171,18 @@ class AnalyticsSpec extends AnyFunSuite {
       }
       lab = nodes.map(n => n -> votes.getOrElse(n, n)).toMap
     }
-    assert(got === lab)
-    // the triangle collapses to one label; the isolated 2-node pair
-    // OSCILLATES under synchronous rounds (the classic bipartite
-    // label-swap) — pin the odd-round state so a silent switch to
-    // async/converged semantics (which the oracle can't mirror) fails
-    assert(got(0L) === got(1L) && got(1L) === got(2L))
-    assert(got(7L) === 8L && got(8L) === 7L)
+    Seq("local" -> graft.graph.LabelPropagation.run _,
+      "distributed" -> graft.graph.LabelPropagation.runDistributed _).foreach {
+      case (path, lp) =>
+        val got = lp(edges, 3).as[(Long, Long)].collect().toMap
+        assert(got === lab, path)
+        // the triangle collapses to one label; the isolated 2-node pair
+        // OSCILLATES under synchronous rounds (the classic bipartite
+        // label-swap) — pin the odd-round state so a silent switch to
+        // async/converged semantics (which the oracle can't mirror) fails
+        assert(got(0L) === got(1L) && got(1L) === got(2L), path)
+        assert(got(7L) === 8L && got(8L) === 7L, path)
+    }
   }
 
   test("bitmap overlap equals naive distinct intersection") {
@@ -231,8 +238,6 @@ class AnalyticsSpec extends AnyFunSuite {
     // and 4's death must NOT unseat the clique (its degree stays 3)
     val edges = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L),
       (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("src", "dst")
-    val got = graft.graph.KCore.peel(edges, k = 3, rounds = 3)
-      .as[(Long, Long)].collect().toMap
     // naive synchronous reference
     val und = edges.as[(Long, Long)].collect().toSeq
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct
@@ -243,12 +248,18 @@ class AnalyticsSpec extends AnyFunSuite {
         .groupBy(_._1).view.mapValues(_.size).toMap
       alive = deg.filter(_._2 >= 3).keySet
     }
-    assert(got === deg.filter(_._2 >= 3).map { case (n, c) => n -> c.toLong })
-    // the 3-core is exactly the K4 clique; node 3 keeps degree 4 judged
-    // by the round BEFORE 4 died? no — rounds are synchronous: 5 and 6
-    // die round 1, 4 dies round 2, so round 3 judges 3 by deg 3
-    assert(got.keySet === Set(0L, 1L, 2L, 3L))
-    assert(got(3L) === 3L && got(0L) === 3L)
+    Seq("local" -> graft.graph.KCore.peel _,
+      "distributed" -> graft.graph.KCore.peelDistributed _).foreach {
+      case (path, peel) =>
+        val got = peel(edges, 3, 3).as[(Long, Long)].collect().toMap
+        assert(got === deg.filter(_._2 >= 3).map { case (n, c) => n -> c.toLong },
+          path)
+        // the 3-core is exactly the K4 clique; rounds are synchronous:
+        // 5 and 6 die round 1, 4 dies round 2, so round 3 judges 3 by
+        // deg 3
+        assert(got.keySet === Set(0L, 1L, 2L, 3L), path)
+        assert(got(3L) === 3L && got(0L) === 3L, path)
+    }
   }
 
   test("bm25 scores: rare term outranks common term at equal tf and len") {

@@ -17,8 +17,6 @@ class GraphRegSpec extends AnyFunSuite {
     // (pure authorities); 4 points only at the isolated 20.
     val edges = Seq(1 -> 10, 1 -> 11, 2 -> 10, 2 -> 11, 3 -> 10, 3 -> 11,
       4 -> 20, 1 -> 10 /* duplicate must collapse */).toDF("src", "dst")
-    val got = graft.graph.Hits.run(edges, iters = 2).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     // naive unnormalized HITS from h0=1 on the deduped edge set
     val e = Set(1 -> 10, 1 -> 11, 2 -> 10, 2 -> 11, 3 -> 10, 3 -> 11, 4 -> 20)
     val nodes = e.flatMap(p => Set(p._1, p._2))
@@ -30,13 +28,19 @@ class GraphRegSpec extends AnyFunSuite {
       hub = nodes.map(u => u -> e.filter(_._1 == u).toSeq
         .map(p => auth(p._2)).sum).toMap
     }
-    nodes.foreach { v =>
-      assert(got(v.toLong) === ((hub(v), auth(v))), s"node $v")
+    Seq("local" -> graft.graph.Hits.run _,
+      "distributed" -> graft.graph.Hits.runDistributed _).foreach {
+      case (path, hits) =>
+        val got = hits(edges, 2).collect()
+          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+        nodes.foreach { v =>
+          assert(got(v.toLong) === ((hub(v), auth(v))), s"$path: node $v")
+        }
+        // the asymmetry HITS exists for: 1 is a top hub with zero
+        // authority, 10 a top authority with zero hubness
+        assert(got(1L)._1 > got(4L)._1 && got(1L)._2 === 0L, path)
+        assert(got(10L)._2 > got(20L)._2 && got(10L)._1 === 0L, path)
     }
-    // the asymmetry HITS exists for: 1 is a top hub with zero authority,
-    // 10 a top authority with zero hubness
-    assert(got(1L)._1 > got(4L)._1 && got(1L)._2 === 0L)
-    assert(got(10L)._2 > got(20L)._2 && got(10L)._1 === 0L)
   }
 
   test("bounded shortest paths pick the cheap 2-hop route over the expensive direct edge") {
@@ -47,13 +51,17 @@ class GraphRegSpec extends AnyFunSuite {
       (5, 0, 1), (0, 1, 7) /* parallel edge, min wins */)
       .toDF("src", "dst", "w")
     val seeds = Seq(0).toDF("node")
-    def run(h: Int) = graft.graph.ShortestPaths
-      .boundedDistances(edges, seeds, maxHops = h).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(run(3) === Map(0L -> 0L, 1L -> 2L, 2L -> 3L, 3L -> 5L, 4L -> 4L))
-    // at 1 hop the expensive direct edge is the only route to 3
-    assert(run(1) === Map(0L -> 0L, 1L -> 2L, 3L -> 10L))
-    assert(run(0) === Map(0L -> 0L))
+    Seq("local" -> graft.graph.ShortestPaths.boundedDistances _,
+      "distributed" -> graft.graph.ShortestPaths.boundedDistancesDistributed _)
+      .foreach { case (path, sp) =>
+        def run(h: Int) = sp(edges, seeds, h).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(run(3) === Map(0L -> 0L, 1L -> 2L, 2L -> 3L, 3L -> 5L, 4L -> 4L),
+          path)
+        // at 1 hop the expensive direct edge is the only route to 3
+        assert(run(1) === Map(0L -> 0L, 1L -> 2L, 3L -> 10L), path)
+        assert(run(0) === Map(0L -> 0L), path)
+      }
   }
 
   test("group regression recovers an exact linear law and drops degenerate groups") {
