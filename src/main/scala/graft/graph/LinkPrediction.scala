@@ -1,7 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.functions.StatCols.pln
 
 /** Neighborhood-overlap link prediction (Adamic–Adar / common-neighbor
   * scores) over a bipartite edge list — the classic "predict missing KG
@@ -29,15 +31,13 @@ import org.apache.spark.sql.functions._
   * EXACTNESS: per-pair weights fold over the SORTED degree list
   * (`sort_array` + HOF `aggregate`), so the float additions happen in one
   * defined order — bit-identical to an oracle that mirrors the fold (the
-  * q138/q139/q143 contract). ln is `portable_ln` (Math.log ≡ libm) —
-  * register [[graft.functions.GraftFunctions]] first.
+  * q138/q139/q143 contract). ln is `portable_ln` (Math.log ≡ libm).
   */
 object LinkPrediction {
 
   /** (s1, s2, common, aa_score) for every left-node pair sharing ≥
     * `minCommon` right-neighbors of degree ≤ `maxDegree`. `edges` columns:
     * `left`, `right` (any equatable types); duplicates are collapsed.
-    * Requires `GraftFunctions.register` on the session (portable_ln).
     *
     * PLAN SHAPE (r06): pair generation runs as a bounded array HOF over
     * each right-node's CAPPED neighbor list instead of an ed⋈ed self-join.
@@ -52,7 +52,6 @@ object LinkPrediction {
   def adamicAdar(spark: SparkSession, edges: DataFrame, minCommon: Int,
       maxDegree: Int): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    def pln(c: Column) = call_function("portable_ln", c)
     val e = edges.select(col("left"), col("right")).distinct()
     val deg = e.groupBy("right").agg(count(lit(1)).as("deg"))
     // hub cap BEFORE any pair expansion — the degree filter is the whole

@@ -3,6 +3,8 @@ package graft.quality
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.StatCols.pln
+
 /** Interpolated bigram language-model scoring — the step up from
   * [[UnigramLm]] toward the KenLM-style quality gate (CCNet, Gopher):
   * per-document mean log-probability under
@@ -46,12 +48,10 @@ object BigramLm {
   /** Per-doc (id, n_bigrams, logprob = mean interpolated log-prob).
     * `lambda` is the bigram weight in [0, 1). Trains on `docs` itself
     * (self-scoring, the CCNet in-domain setup); to score against a
-    * reference corpus, join pre-trained count tables instead. Requires
-    * `GraftFunctions.register` (portable_ln). */
+    * reference corpus, join pre-trained count tables instead. */
   def score(spark: SparkSession, docs: DataFrame, idCol: String,
       toks: Column, lambda: Double): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    def pln(c: Column) = call_function("portable_ln", c)
     val bg = bigrams(docs, idCol, toks)
     val tk = docs.select(explode(toks).as("tok"))
     val uni = tk.groupBy("tok").agg(count(lit(1)).as("c1"))

@@ -3,6 +3,8 @@ package graft.quality
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.StatCols.pln
+
 /** Normalized pointwise mutual information over document co-occurrence
   * (Bouma, GSCL 2009) — the collocation/term-association score behind
   * phrase mining and distributional term similarity:
@@ -45,12 +47,12 @@ object Npmi {
 
   /** `presence`: rows (doc, term) — duplicates collapse. Returns
     * (term_a, term_b, co, npmi) for pairs with co ≥ minCo, term_a <
-    * term_b. Callers must have registered `portable_ln`
-    * (`GraftFunctions.register`). */
+    * term_b. */
   def pairAssociation(presence: DataFrame, maxTermsPerDoc: Int,
       minDf: Long, minCo: Long): DataFrame = {
     require(maxTermsPerDoc >= 2, s"maxTermsPerDoc ≥ 2, got $maxTermsPerDoc")
     require(minDf >= 1 && minCo >= 1, s"minDf/minCo ≥ 1")
+    graft.functions.GraftFunctions.register(presence.sparkSession)
     val p = presence.select(col("doc"), col("term")).distinct()
     val vocab = p.groupBy("term").agg(count(lit(1)).as("df"))
       .where(col("df") >= minDf).select("term")
@@ -63,7 +65,6 @@ object Npmi {
     // whole score stays one lazy plan
     val nDocs = broadcast(kept.agg(countDistinct("doc").as("nd")))
     val cnt = kept.groupBy("term").agg(count(lit(1)).as("c"))
-    def pln(c: org.apache.spark.sql.Column) = call_function("portable_ln", c)
     // pair generation as a bounded array HOF over each doc's SORTED term
     // list (r06, the q313/q147 F3 shape) instead of a kept⋈kept self-join
     // on doc: one exchange of the kept table, per-group state ≤

@@ -3,13 +3,18 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import QueryDef.t
+import graft.functions.StatCols.{dbl, pln, sumInOrder}
+
+import QueryDef.{dailyEvents, docNodes, kmRiskSets, t}
 
 /** OLAP reshaping and sequence/statistics analytics added in round 5 —
   * pivot/unpivot, exact-moment bivariate statistics, and Markov-style
   * session transitions. Every operator keeps its arithmetic exact
   * (integer moments, IEEE-correctly-rounded final ops only) so the DuckDB
-  * oracle hash-matches bit-for-bit.
+  * oracle hash-matches bit-for-bit. `dbl`, `pln` (logarithms through
+  * `portable_ln`) and `sumInOrder` (fixed-order float sums) come from
+  * [[graft.functions.StatCols]]; shared fixture frames from the
+  * [[QueryDef]] companion.
   */
 object Analytics {
 
@@ -754,8 +759,6 @@ object Analytics {
     // exhaustively over 1..2000; counts here are ≤ 29).
     QueryDef("q138_group_entropy", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: org.apache.spark.sql.Column) =
-        call_function("portable_ln", c)
       val c = t(s, d, "events")
         .groupBy(col("user_id"), col("event_type"))
         .agg(count(lit(1)).as("c"))
@@ -823,8 +826,7 @@ object Analytics {
     // grouped count + one rank-1 pick — so any divergence in the vote
     // count, the tie rule, or the isolated-node fallback hash-mismatches.
     QueryDef("q140_label_prop", (s, d) => {
-      val nodes = t(s, d, "documents")
-        .select((col("doc_id") % 389).as("x")).distinct()
+      val nodes = docNodes(s, d)
       val edges = nodes
         .select(col("x").as("src"), ((col("x") * 3 + 2) % 389).as("dst"))
         .unionByName(nodes.select(col("x").as("src"),
@@ -992,8 +994,6 @@ object Analytics {
     // and q06/q20's top-k patterns.
     QueryDef("q145_bm25", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: org.apache.spark.sql.Column) =
-        call_function("portable_ln", c)
       val tk = t(s, d, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       val len = tk.groupBy("doc_id").agg(count(lit(1)).as("len"))
@@ -1258,8 +1258,7 @@ object Analytics {
     // doc graph with overlapping hub structure. The oracle unrolls the
     // same two auth-then-hub iterations.
     QueryDef("q152_hits", (s, d) => {
-      val x = (col("doc_id") % 389).as("x")
-      val nodes = t(s, d, "documents").select(x).distinct()
+      val nodes = docNodes(s, d)
       val edges = nodes
         .select(col("x").as("src"), ((col("x") * 7 + 5) % 389).as("dst"))
         .unionByName(nodes.select(col("x").as("src"),
@@ -1524,8 +1523,7 @@ object Analytics {
     // an affine (bijective) one: the six moment sums are exact BIGINT,
     // r is one IEEE tree — the single-number hub-wiring health check.
     QueryDef("q161_assortativity", (s, d) => {
-      val x = (col("doc_id") % 389).as("x")
-      val nodes = t(s, d, "documents").select(x).distinct()
+      val nodes = docNodes(s, d)
       val edges = nodes
         .select(col("x").as("src"), ((col("x") * col("x") + 1) % 389).as("dst"))
         .unionByName(nodes.select(col("x").as("src"),
@@ -1889,8 +1887,6 @@ object Analytics {
     // order over the dimension-sized degree list (the q138 pattern).
     QueryDef("q177_powerlaw", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: org.apache.spark.sql.Column) =
-        call_function("portable_ln", c)
       val x = (col("doc_id") % 2003).as("x")
       val dst = t(s, d, "documents").select(x).distinct()
         .select(((col("x") * 3 + 1) % 211).as("dst"))
@@ -1925,8 +1921,6 @@ object Analytics {
     // portable_ln on INTEGERS only (the libm-parity domain).
     QueryDef("q179_benford", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: org.apache.spark.sql.Column) =
-        call_function("portable_ln", c)
       val digit = substring(
         floor(col("o_totalprice")).cast("long").cast("string"), 1, 1)
         .cast("int").as("digit")
@@ -2008,8 +2002,6 @@ object Analytics {
     // H = Σ n_cn·(ln n_c − ln n_cn) / N is exact-integer fed.
     QueryDef("q181_cond_entropy", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: org.apache.spark.sql.Column) =
-        call_function("portable_ln", c)
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val tr = t(s, d, "events")
         .withColumn("nxt", lead("event_type", 1).over(w))
@@ -2444,8 +2436,6 @@ object Analytics {
     // user_id; per-user state is bounded by k, never by history length.
     QueryDef("q191_ndcg", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: org.apache.spark.sql.Column) =
-        call_function("portable_ln", c)
       val ev = t(s, d, "events")
         .select(col("user_id"), col("event_id"), col("value"),
           when(col("event_type") === "purchase", 7L)
@@ -2514,31 +2504,7 @@ object Analytics {
     // rows before the first death (1.0·x == x in IEEE, so it is a true
     // no-op in both engines).
     QueryDef("q192_kaplan_meier", (s, d) => {
-      val per = t(s, d, "events")
-        .groupBy("user_id")
-        .agg(
-          (datediff(max(col("ts")).cast("date"),
-            min(col("ts")).cast("date")) + 1).cast("long").as("t"),
-          max_by(col("event_type"), struct(col("ts"), col("event_id")))
-            .as("last_type"))
-        .select(col("t"),
-          when(col("last_type") === "error", 1L).otherwise(0L)
-            .as("died"))
-      val cells = per.groupBy("t")
-        .agg(sum("died").as("d"), sum(lit(1L) - col("died")).as("c"))
-        .withColumn("n", col("d") + col("c"))
-      val tot = cells.agg(sum("n").as("tot"))
-      val enr = graft.operators.PrefixSum
-        .withRunningTotals(cells, "t", Seq("n"))
-        .crossJoin(broadcast(tot))
-        .select(col("t"), col("d"), col("c"),
-          (col("tot") - col("n_cum") + col("n")).as("at_risk"))
-      val b = enr.select(col("t").as("bt"), col("d").as("bd"),
-        col("at_risk").as("bar")).where(col("bd") > 0)
-      enr.join(b, col("bt") <= col("t"), "left")
-        .groupBy("t", "at_risk", "d", "c")
-        .agg(sort_array(collect_list(struct(col("bt"), col("bd"),
-          col("bar")))).as("fs"))
+      kmRiskSets(s, d)
         .select(col("t"), col("at_risk"), col("d"), col("c"),
           aggregate(col("fs"), lit(1.0), (acc, f) =>
             acc * coalesce(lit(1.0) - f.getField("bd").cast("double") /
@@ -2873,24 +2839,20 @@ object Analytics {
     // dayofweek is Sunday=0, shifted by one in the oracle).
     QueryDef("q199_mutual_info", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: org.apache.spark.sql.Column) =
-        call_function("portable_ln", c)
-      def foldClnC(cs: org.apache.spark.sql.Column) =
-        aggregate(cs, lit(0.0), (acc, x) =>
-          acc + x.cast("double") * pln(x.cast("double")))
       val ev = t(s, d, "events").select(col("event_type").as("x"),
         dayofweek(col("ts").cast("date")).as("y"))
       val cells = ev.groupBy("x", "y").agg(count(lit(1)).as("c"))
       val sxy = cells.agg(
         sort_array(collect_list(col("c"))).as("cs"),
         sum("c").as("n"))
-        .select(foldClnC(col("cs")).as("sxy"), col("n"))
+        .select(sumInOrder(col("cs"))(c => dbl(c) * pln(c)).as("sxy"),
+          col("n"))
       val sx = cells.groupBy("x").agg(sum("c").as("cx"))
         .agg(sort_array(collect_list(col("cx"))).as("cs"))
-        .select(foldClnC(col("cs")).as("sx"))
+        .select(sumInOrder(col("cs"))(c => dbl(c) * pln(c)).as("sx"))
       val sy = cells.groupBy("y").agg(sum("c").as("cy"))
         .agg(sort_array(collect_list(col("cy"))).as("cs"))
-        .select(foldClnC(col("cs")).as("sy"))
+        .select(sumInOrder(col("cs"))(c => dbl(c) * pln(c)).as("sy"))
       sxy.crossJoin(sx).crossJoin(sy)
         .select(col("n"),
           (pln(col("n").cast("double"))
@@ -3160,8 +3122,6 @@ object Analytics {
     // dimension-bounded cell list, so the doubles are fixed IEEE trees.
     QueryDef("q204_jsd_drift", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: org.apache.spark.sql.Column) =
-        call_function("portable_ln", c)
       val ev = t(s, d, "events").select(col("event_type").as("x"),
         when(dayofweek(col("ts").cast("date")).isin(1, 7), 0L)
           .otherwise(1L).as("wd"))
@@ -3425,9 +3385,7 @@ object Analytics {
     // 7-row lag frame, and each lag's Pearson r comes from exact BIGINT
     // moments (counts are integers) with the q119 fixed IEEE tree.
     QueryDef("q209_acf", (s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val lags = s.range(1, 8).select(col("id").as("lag"))
       val pairs = daily.select(col("day"), col("c").as("x"))
         .crossJoin(broadcast(lags))

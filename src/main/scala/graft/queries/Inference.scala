@@ -4,7 +4,10 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import QueryDef.t
+import graft.functions.StatCols.{dbl, pln, sumInOrder}
+
+import QueryDef.{dailyEvents, docGraph, docNodes, kmRiskSets, lifetimes,
+  returnFlagQuantities, t}
 
 /** Statistical-inference and drift-detection analytics (round 5, batch
   * "inference"): rank-correlation, rank-sum testing, changepoint
@@ -14,9 +17,14 @@ import QueryDef.t
   * row-scale steps are the initial aggregations), and every
   * floating-point step is a fixed-shape IEEE tree mirrored verbatim in
   * the DuckDB oracle so the driver's hash gate sees bit-identical
-  * doubles. Logarithms go through `portable_ln`
-  * ([[graft.functions.PortableLn]]) — the q204 pattern: ln of exactly
-  * representable integer-valued doubles, identical in both engines.
+  * doubles. The column vocabulary is [[graft.functions.StatCols]]:
+  * `dbl` widens, `pln` takes every logarithm through `portable_ln` on a
+  * DOUBLE — the q204 pattern: ln of exactly representable integer-valued
+  * doubles, identical in both engines — and `sumInOrder` folds a sorted
+  * list left to right. Frames shared by several queries (daily event
+  * counts, the document graph, user lifetimes, the Kaplan–Meier risk
+  * set, the A/R lineitem quantities) come from the [[QueryDef]]
+  * companion.
   */
 object Inference {
 
@@ -236,7 +244,6 @@ object Inference {
     // counted in zero_bins instead of fabricating an epsilon.
     QueryDef("q216_psi", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: Column) = call_function("portable_ln", c)
       def cellsOf(status: String) = t(s, d, "orders")
         .where(col("o_orderstatus") === status)
         .groupBy(col("o_totalprice").as("v"))
@@ -479,7 +486,6 @@ object Inference {
           sum((lit(1L) - col("e")) * col("o")).as("dc"),
           sum((lit(1L) - col("e")) * (lit(1L) - col("o"))).as("dd"))
         .withColumn("nn", col("da") + col("db") + col("dc") + col("dd"))
-      def dbl(c: Column) = c.cast("double")
       val terms = strata.select(col("rk"), col("da"), col("db"),
         col("dc"), col("dd"), col("nn"),
         (dbl(col("da")) * dbl(col("dd")) / dbl(col("nn"))).as("ad_n"),
@@ -492,17 +498,15 @@ object Inference {
             * dbl(col("nn") - 1))).as("vr"))
       // cross-stratum double sums in ascending-stratum order: both
       // engines fold the ≤K terms in the same IEEE sequence
-      def fold(f: Column => Column, cs: Column) =
-        aggregate(cs, lit(0.0), (acc, e) => acc + f(e))
       terms
         .agg(sort_array(collect_list(struct(col("rk"), col("ad_n"),
           col("bc_n"), col("dev"), col("vr")))).as("cs"),
           count(lit(1)).as("k"))
         .select(col("k"),
-          fold(_.getField("ad_n"), col("cs")).as("s_ad"),
-          fold(_.getField("bc_n"), col("cs")).as("s_bc"),
-          fold(_.getField("dev"), col("cs")).as("s_dev"),
-          fold(_.getField("vr"), col("cs")).as("s_var"))
+          sumInOrder(col("cs"))(_.getField("ad_n")).as("s_ad"),
+          sumInOrder(col("cs"))(_.getField("bc_n")).as("s_bc"),
+          sumInOrder(col("cs"))(_.getField("dev")).as("s_dev"),
+          sumInOrder(col("cs"))(_.getField("vr")).as("s_var"))
         .select(col("k"), col("s_ad"), col("s_bc"), col("s_dev"),
           col("s_var"), (col("s_ad") / col("s_bc")).as("or_mh"),
           (col("s_dev") * col("s_dev") / col("s_var")).as("chi2_cmh"))
@@ -1003,7 +1007,6 @@ object Inference {
         .agg(m("R", lit(1L)).as("n1"), m("R", x).as("s1"),
           m("R", x * x).as("q1"), m("A", lit(1L)).as("n2"),
           m("A", x).as("s2"), m("A", x * x).as("q2"))
-      def dbl(c: Column) = c.cast("double")
       def mean(sc: Column, n: Column) = dbl(sc) / dbl(n)
       def variance(q: Column, sc: Column, n: Column) =
         (dbl(q) - dbl(sc) * dbl(sc) / dbl(n)) / (dbl(n) - 1.0)
@@ -1193,7 +1196,6 @@ object Inference {
           .as("c1"),
           max(when(col("event_type") === "view", 1L).otherwise(0L))
             .as("c2"))
-      def dbl(c: Column) = c.cast("double")
       u.agg(sum("c1").as("n1"), sum("c2").as("n2"),
           sum(col("c1") * col("c2")).as("m"))
         .select(col("n1"), col("n2"), col("m"),
@@ -1287,7 +1289,6 @@ object Inference {
         .groupBy(col("o_custkey").as("ck"))
         .agg(sum(coalesce(col("qty"), lit(0L))).as("x"),
           count(lit(1)).as("y"))
-      def dbl(c: Column) = c.cast("double")
       val mom = cl.agg(count(lit(1)).as("n"), sum("x").as("sx"),
         sum("y").as("sy"), sum(col("x") * col("x")).as("sxx"),
         sum(col("y") * col("y")).as("syy"),
@@ -1364,8 +1365,6 @@ object Inference {
         col("o"),
         (col("ta").cast("double") / col("tn").cast("double")).as("p_g"),
         (col("o").cast("double") / col("m").cast("double")).as("o_g"))
-      def fold(f: Column => Column, cs: Column) =
-        aggregate(cs, lit(0.0), (acc, e) => acc + f(e))
       val dec = g
         .agg(sort_array(collect_list(struct(col("g"), col("m"),
           col("o"), col("p_g"), col("o_g")))).as("cs"),
@@ -1373,19 +1372,19 @@ object Inference {
         .withColumn("obar",
           col("oo").cast("double") / col("mm").cast("double"))
         .select(col("mm"), col("obar"),
-          (fold(e => e.getField("o").cast("double")
+          (sumInOrder(col("cs"))(e => e.getField("o").cast("double")
             * (lit(1.0) - e.getField("p_g"))
             * (lit(1.0) - e.getField("p_g"))
             + (e.getField("m") - e.getField("o")).cast("double")
-            * e.getField("p_g") * e.getField("p_g"), col("cs"))
+            * e.getField("p_g") * e.getField("p_g"))
             / col("mm").cast("double")).as("brier"),
-          (fold(e => e.getField("m").cast("double")
+          (sumInOrder(col("cs"))(e => e.getField("m").cast("double")
             * (e.getField("p_g") - e.getField("o_g"))
-            * (e.getField("p_g") - e.getField("o_g")), col("cs"))
+            * (e.getField("p_g") - e.getField("o_g")))
             / col("mm").cast("double")).as("rel"),
-          (fold(e => e.getField("m").cast("double")
+          (sumInOrder(col("cs"))(e => e.getField("m").cast("double")
             * (e.getField("o_g") - col("obar"))
-            * (e.getField("o_g") - col("obar")), col("cs"))
+            * (e.getField("o_g") - col("obar")))
             / col("mm").cast("double")).as("res"))
         .withColumn("unc", col("obar") * (lit(1.0) - col("obar")))
       g.crossJoin(broadcast(dec))
@@ -1493,7 +1492,6 @@ object Inference {
     // reported at the same winning split.
     QueryDef("q233_decision_stump", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val cells = t(s, d, "orders")
         .groupBy(col("o_totalprice").as("v"))
         .agg(count(lit(1)).as("n"),
@@ -1597,7 +1595,6 @@ object Inference {
     // segment terms in sorted order.
     QueryDef("q234_woe_iv", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val outcome = t(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment").as("seg"))
         .join(t(s, d, "orders")
@@ -1770,7 +1767,6 @@ object Inference {
     // released key.
     QueryDef("q236_dp_counts", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val k = 4294967296L // 2^32
       val counts = t(s, d, "events")
         .groupBy(col("event_type").as("et"))
@@ -1983,7 +1979,6 @@ object Inference {
         .agg(count(lit(1)).as("ns"), sum("tr").as("nt"),
           sum(col("tr") * col("y")).as("a"),
           sum((lit(1L) - col("tr")) * col("y")).as("cc"))
-      def dbl(c: Column) = c.cast("double")
       val terms = strata.select(col("seg"), col("ns"), col("nt"),
         col("a"), col("cc"),
         (dbl(col("nt")) / dbl(col("ns"))).as("e_s"),
@@ -2261,7 +2256,6 @@ object Inference {
           sum((lit(1L) - col("y")) * col("p")).as("fp"),
           sum(col("y") * (lit(1L) - col("p"))).as("fn"),
           sum((lit(1L) - col("y")) * (lit(1L) - col("p"))).as("tn"))
-      def dbl(c: Column) = c.cast("double")
       cells.select(col("tp"), col("fp"), col("fn"), col("tn"),
         (dbl(col("tp")) / dbl(col("tp") + col("fp"))).as("precision"),
         (dbl(col("tp")) / dbl(col("tp") + col("fn"))).as("recall"),
@@ -2316,7 +2310,6 @@ object Inference {
     // never a global sort.
     QueryDef("q245_log_odds", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val terms = t(s, d, "documents")
         .select((col("source") === "src0").cast("long").as("w"),
           explode(regexp_extract_all(lower(col("text")),
@@ -2526,9 +2519,7 @@ object Inference {
     // products with ONE division; the only row-scale step is the daily
     // count aggregation (calendar-bounded cells after that).
     QueryDef("q248_seasonality_index", (s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
         .withColumn("dow", dayofweek(col("day")).cast("long"))
       val per = daily.groupBy("dow")
         .agg(count(lit(1)).as("n_days"), sum("c").as("s"))
@@ -2580,7 +2571,6 @@ object Inference {
       val cells = base.groupBy("nk")
         .agg(count(lit(1)).as("n"), sum("e").as("nt"),
           sum(col("e") * col("y")).as("a1"), sum("y").as("aa"))
-      def dbl(c: Column) = c.cast("double")
       def gap(s1: Column, n1: Column, sa: Column, n: Column) =
         when(n1 > 0 && n - n1 > 0,
           dbl(s1) / dbl(n1) - dbl(sa - s1) / dbl(n - n1))
@@ -2739,7 +2729,6 @@ object Inference {
             .otherwise(0L)).as("x"),
           sum(when(col("o_orderdate") >= lit("1998-01-01"), 1L)
             .otherwise(0L)).as("y"))
-      def dbl(c: Column) = c.cast("double")
       val mom = cl.agg(count(lit(1)).as("n"), sum("x").as("sx"),
         sum("y").as("sy"), sum(col("x") * col("x")).as("sxx"),
         sum(col("y") * col("y")).as("syy"),
@@ -2938,7 +2927,6 @@ object Inference {
         // the lineitem-per-order aggregation + orders join otherwise
         // replans once per smdOf leg.
         .localCheckpoint(true)
-      def dbl(c: Column) = c.cast("double")
       def smdOf(cn: String) = {
         val g = base.groupBy("tr")
           .agg(count(lit(1)).as("n"), sum(cn).as("sx"),
@@ -3144,15 +3132,7 @@ object Inference {
     // lesson). χ² = (O₁−E₁)²/V, V=0 guarded to NaN.
     QueryDef("q256_logrank", (s, d) => {
       import graft.functions.TextFunctions
-      val per = t(s, d, "events")
-        .groupBy("user_id")
-        .agg((datediff(max(col("ts")).cast("date"),
-            min(col("ts")).cast("date")) + 1).cast("long").as("t"),
-          max_by(col("event_type"), struct(col("ts"), col("event_id")))
-            .as("last_type"))
-        .select(col("user_id"), col("t"),
-          when(col("last_type") === "error", 1L).otherwise(0L)
-            .as("died"))
+      val per = lifetimes(s, d)
         .withColumn("g", TextFunctions.hashBucket(col("user_id"), 2))
       val cells = per.groupBy("g", "t")
         .agg(sum("died").as("d"), count(lit(1)).as("n"))
@@ -3289,7 +3269,6 @@ object Inference {
         sum("x2").as("s2"), sum(col("x2") * col("x2")).as("q2"),
         sum("x3").as("s3"), sum(col("x3") * col("x3")).as("q3"),
         sum("tt").as("st"), sum(col("tt") * col("tt")).as("qt"))
-      def dbl(c: Column) = c.cast("double")
       def ss(q: Column, sc: Column) =
         dbl(col("n")) * dbl(q) - dbl(sc) * dbl(sc)
       m.select(col("n"),
@@ -3353,7 +3332,6 @@ object Inference {
       val cm = cells.groupBy("st").agg(sum("obs").as("ct"))
       val tot = cells.agg(sum("obs").as("nn"),
         countDistinct("p").as("r"), countDistinct("st").as("c"))
-      def dbl(c: Column) = c.cast("double")
       // χ² sums over the FULL r×c grid, not just observed cells: an
       // empty cell still contributes (0−e)²/e = e (the spec's diagonal
       // 2×2 caught the observed-only fold reading N/2 instead of N).
@@ -3474,7 +3452,6 @@ object Inference {
           sum(when(col("o_orderkey") % 2 === 0
             && col("o_orderstatus") === "F", 1L).otherwise(0L))
             .as("o"))
-      def dbl(c: Column) = c.cast("double")
       val g = cells.select(col("g"), col("tn"), col("m"), col("o"),
         when(col("tn") > 0, dbl(col("ta")) / dbl(col("tn")))
           .otherwise(lit(Double.NaN)).as("p_g"))
@@ -3609,7 +3586,6 @@ object Inference {
         sum(col("x") * col("x")).as("qx"),
         sum(col("y") * col("y")).as("qy"),
         sum(col("x") * col("y")).as("sxy"))
-      def dbl(c: Column) = c.cast("double")
       val num = lit(2.0) * (dbl(col("n")) * dbl(col("sxy"))
         - dbl(col("sx")) * dbl(col("sy")))
       val den = (dbl(col("n")) * dbl(col("qx"))
@@ -3670,7 +3646,6 @@ object Inference {
         .agg(coalesce(sum(col("r") * col("r")), lit(0L)).as("sum_r2"))
       val sc2 = pres.groupBy("event_type").agg(count(lit(1)).as("c"))
         .agg(coalesce(sum(col("c") * col("c")), lit(0L)).as("sum_c2"))
-      def dbl(c: Column) = c.cast("double")
       kk.crossJoin(broadcast(nTot)).crossJoin(broadcast(sr2))
         .crossJoin(broadcast(sc2))
         .select(col("k"), col("nn"), col("sum_r2"), col("sum_c2"),
@@ -3726,7 +3701,6 @@ object Inference {
       val cats = m1.join(m2, Seq("cat"), "full_outer")
         .select(col("cat"), coalesce(col("c1"), lit(0L)).as("c1"),
           coalesce(col("c2"), lit(0L)).as("c2"))
-      def dbl(c: Column) = c.cast("double")
       val folded = cats.crossJoin(broadcast(tot))
         .withColumn("pi", (dbl(col("c1")) / dbl(col("n"))
           + dbl(col("c2")) / dbl(col("n"))) / 2.0)
@@ -3833,7 +3807,6 @@ object Inference {
             .as("tied"))
         .withColumn("r", col("less").cast("double")
           + (col("tied").cast("double") + 1.0) / 2.0)
-      def dbl(c: Column) = c.cast("double")
       val dims = ranked.agg(
         countDistinct("b").as("n"), countDistinct("tr").as("k"))
       val wd = ranked.crossJoin(broadcast(dims))
@@ -3914,7 +3887,6 @@ object Inference {
         sum(col("x") * col("y")).as("sxy"),
         sum(col("x") * col("z")).as("sxz"),
         sum(col("y") * col("z")).as("syz"))
-      def dbl(c: Column) = c.cast("double")
       def cov(sab: Column, sa: Column, sb: Column) =
         dbl(col("n")) * dbl(sab) - dbl(sa) * dbl(sb)
       def varOf(q: Column, sc: Column) =
@@ -4015,7 +3987,6 @@ object Inference {
           sum(when(col("o_orderstatus") === "O", 1L).otherwise(0L))
             .as("co"))
       val tot = cells.agg(sum("cf").as("nf"), sum("co").as("no"))
-      def dbl(c: Column) = c.cast("double")
       val folded = cells.crossJoin(broadcast(tot))
         .withColumn("pp", dbl(col("cf")) / dbl(col("nf")))
         .withColumn("qq", dbl(col("co")) / dbl(col("no")))
@@ -4075,23 +4046,20 @@ object Inference {
     // NaN.
     QueryDef("q267_theils_u", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: Column) = call_function("portable_ln", c)
-      def foldClnC(cs: Column) = aggregate(cs, lit(0.0), (acc, x) =>
-        acc + x.cast("double") * pln(x.cast("double")))
       val cells = t(s, d, "orders")
         .select(col("o_orderpriority").as("x"),
           col("o_orderstatus").as("y"))
         .groupBy("x", "y").agg(count(lit(1)).as("c"))
       val sxy = cells.agg(sort_array(collect_list(col("c"))).as("cs"),
           sum("c").as("n"))
-        .select(foldClnC(col("cs")).as("sxy"), col("n"))
+        .select(sumInOrder(col("cs"))(c => dbl(c) * pln(c)).as("sxy"),
+          col("n"))
       val sx = cells.groupBy("x").agg(sum("c").as("cx"))
         .agg(sort_array(collect_list(col("cx"))).as("cs"))
-        .select(foldClnC(col("cs")).as("sx"))
+        .select(sumInOrder(col("cs"))(c => dbl(c) * pln(c)).as("sx"))
       val sy = cells.groupBy("y").agg(sum("c").as("cy"))
         .agg(sort_array(collect_list(col("cy"))).as("cs"))
-        .select(foldClnC(col("cs")).as("sy"))
-      def dbl(c: Column) = c.cast("double")
+        .select(sumInOrder(col("cs"))(c => dbl(c) * pln(c)).as("sy"))
       sxy.crossJoin(sx).crossJoin(sy)
         .select(col("n"),
           (pln(dbl(col("n"))) - col("sx") / dbl(col("n"))).as("h_x"),
@@ -4174,7 +4142,6 @@ object Inference {
       val t2 = treats.select(col("tr").as("tr2"))
       val pos = treats.join(t2, col("tr2") <= col("tr"))
         .groupBy("tr").agg(count(lit(1)).as("pos"))
-      def dbl(c: Column) = c.cast("double")
       val dims = ranked.agg(countDistinct("b").as("n"),
         countDistinct("tr").as("k"))
       val l = ranked.join(broadcast(pos), "tr")
@@ -4251,7 +4218,6 @@ object Inference {
       val margX = cells.groupBy("x").agg(sum("c").as("cx"))
         .agg(max("cx").as("max_x"))
       val n = cells.agg(sum("c").as("n"))
-      def dbl(c: Column) = c.cast("double")
       n.crossJoin(broadcast(sxmax)).crossJoin(broadcast(symax))
         .crossJoin(broadcast(margY)).crossJoin(broadcast(margX))
         .select(col("n"), col("sum_max_y_given_x"),
@@ -4313,7 +4279,6 @@ object Inference {
             col("an") * col("bn")).otherwise(0L)), lit(0L)).as("nd"))
       val dims = cells.agg(sum("cn").as("n"),
         countDistinct("x").as("r"), countDistinct("y").as("c"))
-      def dbl(c: Column) = c.cast("double")
       pairs.crossJoin(broadcast(dims))
         .withColumn("m", least(col("r"), col("c")))
         .select(col("n"), col("nc"), col("nd"), col("m"),
@@ -4381,7 +4346,6 @@ object Inference {
           sum(when(col("o_orderpriority") =!= "1-URGENT"
             && col("o_orderstatus") =!= "F", 1L).otherwise(0L))
             .as("dd"))
-      def dbl(c: Column) = c.cast("double")
       val withN = cells.withColumn("nn",
         col("a") + col("b") + col("c") + col("dd"))
       val psi = withN
@@ -4552,7 +4516,6 @@ object Inference {
             .as("tied"))
         .withColumn("r", col("less").cast("double")
           + (col("tied").cast("double") + 1.0) / 2.0)
-      def dbl(c: Column) = c.cast("double")
       val dims = ranked.agg(countDistinct("b").as("n"),
         countDistinct("tr").as("k"))
       val wd = ranked.crossJoin(broadcast(dims))
@@ -4682,7 +4645,6 @@ object Inference {
             + (lit(3L) - col("e")) * (lit(2L) - col("e"))).as("pairs"))
       val m = perDoc.agg(count(lit(1)).as("n"), sum("e").as("ev"),
         sum("pairs").as("sp"))
-      def dbl(c: Column) = c.cast("double")
       m.select(col("n"), col("ev"), col("sp"),
           (dbl(col("sp")) / (lit(6.0) * dbl(col("n")))).as("p_bar"),
           ((dbl(col("ev")) * dbl(col("ev"))
@@ -4745,7 +4707,6 @@ object Inference {
       val cum = cells.join(c2, col("l2") <= col("lvl"))
         .groupBy(col("lvl"))
         .agg(sum("p2").as("cpos"), sum("n2").as("cneg"))
-      def dbl(c: Column) = c.cast("double")
       val rates = cum.crossJoin(broadcast(tot))
         .withColumn("tpr", when(col("p") > 0,
           dbl(col("cpos")) / dbl(col("p"))).otherwise(lit(Double.NaN)))
@@ -4817,7 +4778,6 @@ object Inference {
           coalesce(col("tn"), lit(0L)).as("tn"))
       val diag = conf.where(col("pred") === col("truth"))
         .select(col("pred").as("label"), col("cnt").as("tp"))
-      def dbl(c: Column) = c.cast("double")
       val per = labels.join(diag, Seq("label"), "left")
         .withColumn("tp", coalesce(col("tp"), lit(0L)))
         .withColumn("precision", when(col("pn") > 0,
@@ -4966,7 +4926,6 @@ object Inference {
         .select(col("i"), col("j"),
           coalesce(col("nij"), lit(0L)).as("nij"),
           coalesce(col("nji"), lit(0L)).as("nji"))
-      def dbl(c: Column) = c.cast("double")
       pairs
         .withColumn("term",
           dbl((col("nij") - col("nji")) * (col("nij") - col("nji")))
@@ -5023,7 +4982,6 @@ object Inference {
     // correction — 0.5 args would break the integer-ln contract).
     QueryDef("q278_woolf_ci", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def pln(c: Column) = call_function("portable_ln", c)
       val cells = t(s, d, "orders").agg(
         sum(when(col("o_orderpriority") === "1-URGENT"
           && col("o_orderstatus") === "F", 1L).otherwise(0L)).as("a"),
@@ -5033,7 +4991,6 @@ object Inference {
           && col("o_orderstatus") === "F", 1L).otherwise(0L)).as("c"),
         sum(when(col("o_orderpriority") =!= "1-URGENT"
           && col("o_orderstatus") =!= "F", 1L).otherwise(0L)).as("dd"))
-      def dbl(c: Column) = c.cast("double")
       val ok = col("a") > 0 && col("b") > 0 && col("c") > 0 &&
         col("dd") > 0
       cells.select(col("a"), col("b"), col("c"), col("dd"),
@@ -5084,9 +5041,7 @@ object Inference {
     // with n−k ≤ 0 are excluded and counted; Σu² = 0 (constant
     // series) guards to NaN.
     QueryDef("q279_ljung_box", (s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val tot = daily.agg(count(lit(1)).as("n"), sum("c").as("ss"))
       val u = daily.crossJoin(broadcast(tot))
         .select(col("day"), col("n"),
@@ -5099,7 +5054,6 @@ object Inference {
         .join(u.select(col("day").as("day_b"), col("u").as("ub")),
           col("day_b") === date_add(col("day"), col("lag").cast("int")))
         .groupBy("lag").agg(sum(col("ua") * col("ub")).as("suu"))
-      def dbl(c: Column) = c.cast("double")
       pairs.crossJoin(broadcast(den))
         .withColumn("rho", when(col("su2") > 0,
           dbl(col("suu")) / dbl(col("su2")))
@@ -5166,9 +5120,7 @@ object Inference {
     // correction. Everything after the daily aggregation runs on the
     // calendar-bounded cell pair join; Var ≤ 0 guards to NaN.
     QueryDef("q280_mann_kendall", (s, d) => {
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val b = daily.select(col("day").as("day_b"), col("c").as("cb"))
       val sAgg = daily.join(b, col("day") < col("day_b"))
         .agg(coalesce(sum(
@@ -5179,7 +5131,6 @@ object Inference {
       val ties = daily.groupBy("c").agg(count(lit(1)).as("tsz"))
         .agg(coalesce(sum(col("tsz") * (col("tsz") - 1L)
           * (lit(2L) * col("tsz") + 5L)), lit(0L)).as("tie_term"))
-      def dbl(c: Column) = c.cast("double")
       sAgg.crossJoin(broadcast(nn)).crossJoin(broadcast(ties))
         .withColumn("var18", col("n") * (col("n") - 1L)
           * (lit(2L) * col("n") + 5L) - col("tie_term"))
@@ -5237,7 +5188,6 @@ object Inference {
           && col("o_orderstatus") === "F", 1L).otherwise(0L)).as("c"),
         sum(when(col("o_orderpriority") =!= "1-URGENT"
           && col("o_orderstatus") =!= "F", 1L).otherwise(0L)).as("dd"))
-      def dbl(c: Column) = c.cast("double")
       val n1 = col("a") + col("b")
       val n0 = col("c") + col("dd")
       val armsOk = n1 > 0 && n0 > 0
@@ -5331,7 +5281,6 @@ object Inference {
         sum(col("x") * col("x")).as("sxx"),
         sum(col("x") * col("y")).as("sxy"),
         sum(col("y") * col("y")).as("syy"))
-      def dbl(c: Column) = c.cast("double")
       def sse(n: Column, sx: Column, sy: Column, sxx: Column,
           sxy: Column, syy: Column) = {
         val vx = dbl(n) * dbl(sxx) - dbl(sx) * dbl(sx)
@@ -5461,7 +5410,6 @@ object Inference {
     // IEEE-exact division/sqrt on integer-valued doubles — the
     // cross-engine-stable shape of the whole batch.
     QueryDef("q283_chao1", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("term"))
         .where(length(col("term")) > 0)
@@ -5528,10 +5476,7 @@ object Inference {
     // same IEEE literal both engines expose; √6 via exact sqrt). A
     // single block or an all-equal block set guards variance/z to NaN.
     QueryDef("q284_gumbel_fit", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      dailyEvents(s, d)
         .groupBy(date_trunc("month", col("day")).as("m"))
         .agg(max(col("c")).as("mx"))
         .agg(
@@ -5605,7 +5550,6 @@ object Inference {
     // slightly conservative, stated here rather than hidden. A
     // single-priority input has zero variance and guards z to NaN.
     QueryDef("q285_jonckheere", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val v = t(s, d, "lineitem").groupBy(col("l_orderkey"))
         .agg(count(lit(1)).as("v"))
       val cells = t(s, d, "orders")
@@ -5689,10 +5633,7 @@ object Inference {
     // BIGINT and the z = (R − μ)/σ chain is one fixed double tree.
     // A one-sided (n1 or n2 = 0) or sub-2-day sequence guards to NaN.
     QueryDef("q286_runs_test", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val tot = daily.agg(
         coalesce(sum(col("c")), lit(0L)).as("s_tot"),
         count(lit(1)).as("n_days"))
@@ -5771,7 +5712,6 @@ object Inference {
     // grids are cell joins, nothing row-scale past the per-customer
     // aggregation. A degenerate expected grid (Σv·r·c = 0) guards NaN.
     QueryDef("q287_weighted_kappa", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val per = t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("cnt"), max(col("o_totalprice")).as("mx"))
         // eager cut (r06): both quintile cell tables + the rated join
@@ -5863,7 +5803,6 @@ object Inference {
     // division, determinant ≤ 0 guarded to NaN.
     QueryDef("q288_stuart_maxwell", (s, d) => {
       import graft.functions.TextFunctions
-      def dbl(c: Column) = c.cast("double")
       def idx(c: Column) = when(c === "en", 1)
         .when(c === "es", 2).otherwise(3)
       val cells = t(s, d, "documents")
@@ -5972,7 +5911,6 @@ object Inference {
     // (E² = AB) guards to NaN. The only row-scale work is the
     // orders⋈lineitem⋈customer⋈supplier chain feeding one cell count.
     QueryDef("q289_attr_assortativity", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val cells = t(s, d, "lineitem")
         .join(t(s, d, "orders").select(col("o_orderkey"),
           col("o_custkey")), col("l_orderkey") === col("o_orderkey"))
@@ -6046,15 +5984,7 @@ object Inference {
     // φ = E_k/(n_k(n_k−1)), guarded NaN when fewer than 2 rich nodes.
     QueryDef("q290_rich_club", (s, d) => {
       import s.implicits._
-      def dbl(c: Column) = c.cast("double")
-      val nodes = t(s, d, "documents")
-        .select((col("doc_id") % 389).as("x")).distinct()
-      val edges = nodes
-        .select(col("x").as("src"),
-          ((col("x") * col("x") + 1) % 389).as("dst"))
-        .unionByName(nodes.select(col("x").as("src"),
-          ((col("x") * 7 + 5) % 389).as("dst")))
-        .where(col("src") =!= col("dst")).distinct()
+      val edges = docGraph(s, d)
       val deg = edges.select(col("src").as("node"))
         .unionByName(edges.select(col("dst").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -6113,15 +6043,8 @@ object Inference {
     // propagation is one shuffle on dst; at web scale the same plan
     // runs per-iteration like the PageRank leg.
     QueryDef("q291_katz3", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val nodes = t(s, d, "documents")
-        .select((col("doc_id") % 389).as("x")).distinct()
-      val edges = nodes
-        .select(col("x").as("src"),
-          ((col("x") * col("x") + 1) % 389).as("dst"))
-        .unionByName(nodes.select(col("x").as("src"),
-          ((col("x") * 7 + 5) % 389).as("dst")))
-        .where(col("src") =!= col("dst")).distinct()
+      val nodes = docNodes(s, d)
+      val edges = docGraph(s, d)
         // eager cut (r06): the ≤2·389-row edge list feeds w1 and both
         // push steps — the documents scan + distinct replans ~7× across
         // the katz chain without it; the w shells are cut for the same
@@ -6187,10 +6110,7 @@ object Inference {
     // the earliest day in both engines). Zero-variance series guards
     // to NaN.
     QueryDef("q292_grubbs", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val tot = daily.agg(
           count(lit(1)).as("n"),
           coalesce(sum(col("c")), lit(0L)).as("s_tot"),
@@ -6250,8 +6170,6 @@ object Inference {
     // needed at k=3). Degenerate groups (nᵢ ≤ 1 or Mᵢ ≤ 0) guard NaN.
     QueryDef("q293_bartlett", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val x = t(s, d, "lineitem")
         .where(col("l_orderkey") % 101 === 0)
         .select(col("l_returnflag").as("g"),
@@ -6353,7 +6271,6 @@ object Inference {
     // margins. A degenerate column margin (everything on one side of
     // the median) guards to NaN.
     QueryDef("q294_mood_median", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val cells = t(s, d, "orders")
         .groupBy(col("o_totalprice").as("v"))
         .agg(count(lit(1)).as("c"))
@@ -6464,7 +6381,6 @@ object Inference {
     // z_wilcoxon with the Σ(t³−t)/48 tie correction, each one
     // fixed-shape IEEE tree; a degenerate variance guards NaN.
     QueryDef("q295_sign_wilcoxon", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val diffs = t(s, d, "orders")
         .groupBy(col("o_custkey"))
         .agg((coalesce(sum(when(col("o_orderstatus") === "O", 1L)
@@ -6548,11 +6464,7 @@ object Inference {
     // exact BIGINT pair counts, δ = (gt−lt)/(n₁n₂) and
     // A₁₂ = (2·gt+eq)/(2·n₁n₂) are each ONE double division.
     QueryDef("q296_cliffs_delta", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val q = t(s, d, "lineitem")
-        .where(col("l_returnflag").isin("A", "R"))
-        .select(col("l_returnflag").as("g"),
-          col("l_quantity").cast("long").as("v"))
+      val q = returnFlagQuantities(s, d)
       val ca = q.where(col("g") === "A").groupBy("v")
         .agg(count(lit(1)).as("a"))
       val cr = q.where(col("g") === "R")
@@ -6612,10 +6524,7 @@ object Inference {
     // adjacency from a lag over the ≤day-count frame. Days are
     // unique, so the x-ordering is deterministic in both engines.
     QueryDef("q297_chatterjee_xi", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val cells = daily.groupBy(col("c").as("cv"))
         .agg(count(lit(1)).as("t"))
       val cum = graft.operators.PrefixSum
@@ -6683,10 +6592,7 @@ object Inference {
     // would reintroduce the libm divergence portable_ln avoids) is
     // ONE double division.
     QueryDef("q298_pettitt", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val cells = daily.groupBy(col("c").as("cv"))
         .agg(count(lit(1)).as("t"))
       val cum = graft.operators.PrefixSum
@@ -6754,10 +6660,7 @@ object Inference {
     // IEEE tree of integer-derived doubles. Constant series
     // (den₄ = 0) guards NaN.
     QueryDef("q299_bartels_rvn", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val cells = daily.groupBy(col("c").as("cv"))
         .agg(count(lit(1)).as("t"))
       val cum = graft.operators.PrefixSum
@@ -6832,10 +6735,7 @@ object Inference {
     // integer, zero differences drop, and the only floating-point
     // op is z = (n⁺−n⁻)/√(n⁺+n⁻), NaN when no pair survives.
     QueryDef("q300_cox_stuart", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val nn = daily.agg(count(lit(1)).as("n"))
         .select(col("n"), expr("(n + 1) DIV 2").as("off"))
       val w = Window.orderBy("day")
@@ -6900,8 +6800,6 @@ object Inference {
     // (the q138 pattern). Degenerate N = 0 or S = 0 guards NaN.
     QueryDef("q301_theil_inequality", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val cells = t(s, d, "orders")
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("x"))
         .groupBy(col("x")).agg(count(lit(1)).as("m"))
@@ -6969,7 +6867,6 @@ object Inference {
     // from the ≤source×lang cell table; two divisions per source
     // row. Single-doc sources (N ≤ 1) guard NaN.
     QueryDef("q302_simpson_diversity", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       t(s, d, "documents")
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n"))
@@ -7023,7 +6920,6 @@ object Inference {
     // 2Σn₁n₂·N₁N₂/(Σn₁²·N₂² + Σn₂²·N₁²) is assembled in DOUBLE (the
     // four-factor products overflow BIGINT at web scale — q228 rule).
     QueryDef("q303_bray_curtis", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val cells = t(s, d, "documents")
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n"))
@@ -7109,7 +7005,6 @@ object Inference {
     // (single category) guards NaN.
     QueryDef("q304_krippendorff", (s, d) => {
       import graft.functions.TextFunctions
-      def dbl(c: Column) = c.cast("double")
       val rated = t(s, d, "documents")
         .select(TextFunctions.langId(col("text")).as("pred"),
           col("lang").as("truth"))
@@ -7171,7 +7066,6 @@ object Inference {
     // cell list (q138 pattern), and MSB/MSW/ICC are a fixed IEEE
     // tree. Degenerate designs (g ≤ 1 or N ≤ g) guard NaN.
     QueryDef("q305_icc1", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val per = t(s, d, "orders")
         .join(broadcast(t(s, d, "customer")
           .select(col("c_custkey"), col("c_nationkey").as("nk"))),
@@ -7276,31 +7170,7 @@ object Inference {
     // SUMS d/n in duration-sorted order with a left-join identity of
     // exactly 0.0 (a true IEEE no-op, as 1.0 is for the product).
     QueryDef("q306_nelson_aalen", (s, d) => {
-      val per = t(s, d, "events")
-        .groupBy("user_id")
-        .agg(
-          (datediff(max(col("ts")).cast("date"),
-            min(col("ts")).cast("date")) + 1).cast("long").as("t"),
-          max_by(col("event_type"), struct(col("ts"), col("event_id")))
-            .as("last_type"))
-        .select(col("t"),
-          when(col("last_type") === "error", 1L).otherwise(0L)
-            .as("died"))
-      val cells = per.groupBy("t")
-        .agg(sum("died").as("d"), sum(lit(1L) - col("died")).as("c"))
-        .withColumn("n", col("d") + col("c"))
-      val tot = cells.agg(sum("n").as("tot"))
-      val enr = graft.operators.PrefixSum
-        .withRunningTotals(cells, "t", Seq("n"))
-        .crossJoin(broadcast(tot))
-        .select(col("t"), col("d"), col("c"),
-          (col("tot") - col("n_cum") + col("n")).as("at_risk"))
-      val b = enr.select(col("t").as("bt"), col("d").as("bd"),
-        col("at_risk").as("bar")).where(col("bd") > 0)
-      enr.join(b, col("bt") <= col("t"), "left")
-        .groupBy("t", "at_risk", "d", "c")
-        .agg(sort_array(collect_list(struct(col("bt"), col("bd"),
-          col("bar")))).as("fs"))
+      kmRiskSets(s, d)
         .select(col("t"), col("at_risk"), col("d"), col("c"),
           aggregate(col("fs"), lit(0.0), (acc, f) =>
             acc + coalesce(f.getField("bd").cast("double") /
@@ -7359,11 +7229,8 @@ object Inference {
     // the homoskedastic z = (VR−1)/√(2(2q−1)(q−1)/(3qn)) a fixed
     // tree. Constant series (B = 0) or n ≤ q guard NaN.
     QueryDef("q307_variance_ratio", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val q = 5
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val tot = daily.agg(count(lit(1)).as("n"),
         coalesce(sum(col("c")), lit(0L)).as("s_tot"))
       val w = Window.orderBy("day")
@@ -7436,8 +7303,6 @@ object Inference {
     // to NaN.
     QueryDef("q308_yule_k", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("term"))
         .where(length(col("term")) > 0)
@@ -7505,8 +7370,6 @@ object Inference {
     // Q > 0, τ² on a positive DL denominator.
     QueryDef("q309_meta_fixed", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val cells = t(s, d, "orders")
         .join(broadcast(t(s, d, "customer")
           .select(col("c_custkey"), col("c_nationkey").as("nk"))),
@@ -7627,9 +7490,7 @@ object Inference {
     // NaN for degree < 2. Every step is a keyed equi-join — the
     // same plan runs on a billion-edge graph.
     QueryDef("q310_local_clustering", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val nodes = t(s, d, "documents")
-        .select((col("doc_id") % 389).as("x")).distinct()
+      val nodes = docNodes(s, d)
       val dir = nodes
         .select(col("x").as("src"),
           ((col("x") * col("x") + 1) % 389).as("dst"))
@@ -7689,15 +7550,7 @@ object Inference {
     // and G = (2W − (n+1)S)/(nS) is exact BIGINT until ONE double
     // division. Zero total degree guards NaN.
     QueryDef("q311_degree_gini", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val nodes = t(s, d, "documents")
-        .select((col("doc_id") % 389).as("x")).distinct()
-      val edges = nodes
-        .select(col("x").as("src"),
-          ((col("x") * col("x") + 1) % 389).as("dst"))
-        .unionByName(nodes.select(col("x").as("src"),
-          ((col("x") * 7 + 5) % 389).as("dst")))
-        .where(col("src") =!= col("dst")).distinct()
+      val edges = docGraph(s, d)
       val deg = edges.select(col("src").as("node"))
         .unionByName(edges.select(col("dst").as("node")))
         .groupBy("node").agg(count(lit(1)).as("dg"))
@@ -7756,15 +7609,8 @@ object Inference {
     // scales like the BFS/PageRank legs. H = |D₁| + |D₂|/2 + |D₃|/3
     // is one fixed tree per node.
     QueryDef("q312_harmonic", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val nodes = t(s, d, "documents")
-        .select((col("doc_id") % 389).as("x")).distinct()
-      val edges = nodes
-        .select(col("x").as("src"),
-          ((col("x") * col("x") + 1) % 389).as("dst"))
-        .unionByName(nodes.select(col("x").as("src"),
-          ((col("x") * 7 + 5) % 389).as("dst")))
-        .where(col("src") =!= col("dst")).distinct()
+      val nodes = docNodes(s, d)
+      val edges = docGraph(s, d)
         // eager cut (r06): the ≤2·389-row edge list feeds d1/d2/d3 —
         // the documents scan + distinct replans ~6× without it.
         .localCheckpoint(true)
@@ -7845,7 +7691,6 @@ object Inference {
     // A perfect rule (conf = 1) sends conviction to NaN explicitly
     // rather than +Inf.
     QueryDef("q313_rule_metrics", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       // PLAN SHAPE (r06): the distinct basket-item table fed FOUR
       // consumers (nb, supp, both self-join sides), each replanning the
       // distinct; pairs now come from each basket's sorted item set via
@@ -7936,7 +7781,6 @@ object Inference {
     // cancels in F = (n−1)·ΣS'ⱼ² / (n·ΣS'ᵢⱼ² − ΣS'ⱼ²) — ONE double
     // division. A zero denominator (all blocks tie) guards NaN.
     QueryDef("q314_quade", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val counts = t(s, d, "orders")
         .join(broadcast(t(s, d, "customer")
           .select(col("c_custkey"), col("c_nationkey").as("nk"))),
@@ -8041,7 +7885,6 @@ object Inference {
     // self-join on the k-row group table. Degenerate variance
     // guards NaN.
     QueryDef("q315_dunn", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val etv = t(s, d, "events")
         .groupBy(col("value").as("v"), col("event_type").as("et"))
         .agg(count(lit(1)).as("c"))
@@ -8124,7 +7967,6 @@ object Inference {
     // z = β√n are one IEEE tree from four BIGINT quadrant counts.
     // An empty off-median population guards NaN.
     QueryDef("q316_blomqvist", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val per = t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("cnt"), max(col("o_totalprice")).as("mx"))
         // eager cut (r06): per feeds both medianOf legs AND the final
@@ -8211,10 +8053,7 @@ object Inference {
     // floating point anywhere. Empty groups emit no row (the
     // defined-on-data contract).
     QueryDef("q317_hodges_lehmann", (s, d) => {
-      val q = t(s, d, "lineitem")
-        .where(col("l_returnflag").isin("A", "R"))
-        .select(col("l_returnflag").as("g"),
-          col("l_quantity").cast("long").as("v"))
+      val q = returnFlagQuantities(s, d)
       val ca = q.where(col("g") === "A").groupBy("v")
         .agg(count(lit(1)).as("a"))
       val cr = q.where(col("g") === "R")
@@ -8260,11 +8099,7 @@ object Inference {
     // folds of per-cell doubles (S_v² would overflow BIGINT at web
     // scale — the q228 rule). Degenerate variance guards z to NaN.
     QueryDef("q318_ansari_bradley", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val q = t(s, d, "lineitem")
-        .where(col("l_returnflag").isin("A", "R"))
-        .select(col("l_returnflag").as("g"),
-          col("l_quantity").cast("long").as("v"))
+      val q = returnFlagQuantities(s, d)
       val cells = q.groupBy("v")
         .agg(count(lit(1)).as("t"),
           coalesce(sum(when(col("g") === "A", 1L).otherwise(0L)),
@@ -8378,10 +8213,7 @@ object Inference {
     // max(max Mᵢ − Mₜ) (level-down) divide by n only at the end —
     // two double divisions total. n = 0 guards NaN.
     QueryDef("q319_page_hinkley", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val tot = daily.agg(count(lit(1)).as("n"),
         coalesce(sum(col("c")), lit(0L)).as("s_tot"))
       val w = Window.orderBy("day")
@@ -8442,8 +8274,6 @@ object Inference {
     // (k = 1) guard J to NaN.
     QueryDef("q320_evenness", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       t(s, d, "documents")
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n"))
@@ -8503,16 +8333,7 @@ object Inference {
     // arms and cell machinery as q256; χ² = U²/V, V = 0 NaN.
     QueryDef("q321_gehan", (s, d) => {
       import graft.functions.TextFunctions
-      def dbl(c: Column) = c.cast("double")
-      val per = t(s, d, "events")
-        .groupBy("user_id")
-        .agg((datediff(max(col("ts")).cast("date"),
-            min(col("ts")).cast("date")) + 1).cast("long").as("t"),
-          max_by(col("event_type"), struct(col("ts"), col("event_id")))
-            .as("last_type"))
-        .select(col("user_id"), col("t"),
-          when(col("last_type") === "error", 1L).otherwise(0L)
-            .as("died"))
+      val per = lifetimes(s, d)
         .withColumn("g", TextFunctions.hashBucket(col("user_id"), 2))
       val cells = per.groupBy("g", "t")
         .agg(sum("died").as("d"), count(lit(1)).as("n"))
@@ -8601,7 +8422,6 @@ object Inference {
     // margins and N² assemble in DOUBLE (q228). Degenerate margins
     // (one category holds everything) guard NaN.
     QueryDef("q322_gk_tau", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val cells = t(s, d, "events")
         .select(col("event_type").as("x"),
           expr("CAST(hour(ts) div 6 AS INT)").as("y"))
@@ -8688,11 +8508,7 @@ object Inference {
     // the one cell aggregation; folds run v-sorted; either
     // degenerate variance sends L to NaN.
     QueryDef("q323_lepage", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val q = t(s, d, "lineitem")
-        .where(col("l_returnflag").isin("A", "R"))
-        .select(col("l_returnflag").as("g"),
-          col("l_quantity").cast("long").as("v"))
+      val q = returnFlagQuantities(s, d)
       val cells = q.groupBy("v")
         .agg(count(lit(1)).as("t"),
           coalesce(sum(when(col("g") === "A", 1L).otherwise(0L)),
@@ -8850,9 +8666,7 @@ object Inference {
     // C = (n−1)·num_C/(2W·den) are each ONE double division.
     // Degenerate variance (all degrees equal) guards both to NaN.
     QueryDef("q324_moran_geary", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val nodes = t(s, d, "documents")
-        .select((col("doc_id") % 389).as("x")).distinct()
+      val nodes = docNodes(s, d)
       val dir = nodes
         .select(col("x").as("src"),
           ((col("x") * col("x") + 1) % 389).as("dst"))
@@ -8940,10 +8754,7 @@ object Inference {
     // g₂ = m₄/m₂², and JB = n(g₁²/6 + (g₂−3)²/24) are one fixed
     // IEEE tree from those integers. Zero variance guards NaN.
     QueryDef("q325_jarque_bera", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      dailyEvents(s, d)
         .agg(count(lit(1)).as("n"),
           coalesce(sum(col("c")), lit(0L)).as("s1"),
           coalesce(sum(col("c") * col("c")), lit(0L)).as("s2"),
@@ -9022,16 +8833,7 @@ object Inference {
     // IEEE tree in the same order); nₜ = 1 guarded to 0, V = 0 NaN.
     QueryDef("q326_tarone_ware", (s, d) => {
       import graft.functions.TextFunctions
-      def dbl(c: Column) = c.cast("double")
-      val per = t(s, d, "events")
-        .groupBy("user_id")
-        .agg((datediff(max(col("ts")).cast("date"),
-            min(col("ts")).cast("date")) + 1).cast("long").as("t"),
-          max_by(col("event_type"), struct(col("ts"), col("event_id")))
-            .as("last_type"))
-        .select(col("user_id"), col("t"),
-          when(col("last_type") === "error", 1L).otherwise(0L)
-            .as("died"))
+      val per = lifetimes(s, d)
         .withColumn("g", TextFunctions.hashBucket(col("user_id"), 2))
       val cells = per.groupBy("g", "t")
         .agg(sum("died").as("d"), count(lit(1)).as("n"))
@@ -9127,11 +8929,7 @@ object Inference {
     // denominators assemble in DOUBLE (five-factor products — q228).
     // Degenerate ρ² = 1 or empty groups guard NaN.
     QueryDef("q327_cucconi", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val q = t(s, d, "lineitem")
-        .where(col("l_returnflag").isin("A", "R"))
-        .select(col("l_returnflag").as("g"),
-          col("l_quantity").cast("long").as("v"))
+      val q = returnFlagQuantities(s, d)
       val cells = q.groupBy("v")
         .agg(count(lit(1)).as("t"),
           coalesce(sum(when(col("g") === "A", 1L).otherwise(0L)),
@@ -9235,10 +9033,7 @@ object Inference {
     // M2n/((n−1)S); the Wilson–Hilferty normal approximation
     // z = √(2D) − √(2(n−1)−1) is two sqrts. S = 0 guards NaN.
     QueryDef("q328_poisson_dispersion", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      dailyEvents(s, d)
         .agg(count(lit(1)).as("n"),
           coalesce(sum(col("c")), lit(0L)).as("s_tot"),
           coalesce(sum(col("c") * col("c")), lit(0L)).as("q_tot"))
@@ -9290,7 +9085,6 @@ object Inference {
     // guards NaN.
     QueryDef("q329_adjusted_rand", (s, d) => {
       import graft.functions.TextFunctions
-      def dbl(c: Column) = c.cast("double")
       // DOUBLED pair counts x(x−1) = 2·C(x,2): the common factor 2
       // cancels in every ratio below, so no halving division ever
       // happens (Spark's `/` on longs is double division — avoided)
@@ -9379,7 +9173,6 @@ object Inference {
     // partitions (no same-cluster pairs) guard NaN.
     QueryDef("q330_fowlkes_bcubed", (s, d) => {
       import graft.functions.TextFunctions
-      def dbl(c: Column) = c.cast("double")
       // doubled pair counts (q329 note) — the factor cancels in FM
       def c22(c: Column) = c * (c - 1L)
       val cells = t(s, d, "documents")
@@ -9479,7 +9272,6 @@ object Inference {
     // √-scaled SS), one fixed IEEE tree; a singular pair (rₐᵦ² = 1)
     // or R²ⱼ = 1 guards that VIF to NaN.
     QueryDef("q331_vif", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val txt = col("text")
       val x1 = length(txt).cast("long")
       val x2 = (length(txt) - length(regexp_replace(txt,
@@ -9596,7 +9388,6 @@ object Inference {
     // with a deterministic (d² DESC, doc_id) TakeOrderedAndProject.
     // A singular covariance (det = 0) yields no rows by the guard.
     QueryDef("q332_mahalanobis", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val txt = col("text")
       val x1 = length(txt).cast("long")
       val x2 = (length(txt) - length(regexp_replace(txt,
@@ -9736,7 +9527,6 @@ object Inference {
     // BIGINT; the eigen tree is fixed IEEE; a zero-trace covariance
     // guards the ratio to NaN.
     QueryDef("q333_pca2", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val txt = col("text")
       val x1 = length(txt).cast("long")
       val x3 = size(regexp_extract_all(lower(txt),
@@ -9809,10 +9599,7 @@ object Inference {
     // hull, so exact ties collapse the gap to 0 — the standard
     // reading); each Q is ONE double division, range 0 guards NaN.
     QueryDef("q334_dixon_q", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val ext = daily.agg(max(col("c")).as("mx"), min(col("c")).as("mn"),
         count(lit(1)).as("n"))
       daily.crossJoin(broadcast(ext))
@@ -9863,11 +9650,7 @@ object Inference {
     // G² = 2·(that sum). S = 0 guards NaN.
     QueryDef("q335_poisson_gof", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       daily
         .select(struct(col("day"), col("c")).as("cell"))
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
@@ -9918,8 +9701,6 @@ object Inference {
     // sorted (q138). T = 0 guards NaN.
     QueryDef("q336_entropy_rate", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val w = Window.partitionBy("user_id")
         .orderBy(col("ts"), col("event_id"))
       val big = t(s, d, "events")
@@ -9989,7 +9770,6 @@ object Inference {
     // (3(n+1)) DIV 4 (clamped to [1,n]) from ONE PrefixSum CDF
     // pass; QCD = (Q3−Q1)/(Q3+Q1). Degenerate spread guards NaN.
     QueryDef("q337_cv_qcd", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val per = t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("x"))
       val cells = per.groupBy(col("x").as("v"))
@@ -10063,7 +9843,6 @@ object Inference {
     // so F(μ) and L(μ) are two BIGINT cell sums over the value-cell
     // table with two final divisions. Empty input guards NaN.
     QueryDef("q338_lorenz_asymmetry", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val cells = t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("x"))
         .groupBy(col("x").as("v")).agg(count(lit(1)).as("c"))
@@ -10115,8 +9894,6 @@ object Inference {
     // input guards NaN.
     QueryDef("q339_atkinson_log", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("x"))
         .groupBy(col("x").as("v")).agg(count(lit(1)).as("m"))
@@ -10173,11 +9950,7 @@ object Inference {
     // W = n₁n₂(R̄₂−R̄₁)/(N√(n₁v₁+n₂v₂))). Degenerate variance
     // guards W to NaN; p̂ always reports.
     QueryDef("q340_brunner_munzel", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val q = t(s, d, "lineitem")
-        .where(col("l_returnflag").isin("A", "R"))
-        .select(col("l_returnflag").as("g"),
-          col("l_quantity").cast("long").as("v"))
+      val q = returnFlagQuantities(s, d)
       val cells = q.groupBy("v")
         .agg(count(lit(1)).as("t"),
           coalesce(sum(when(col("g") === "A", 1L).otherwise(0L)),
@@ -10301,7 +10074,6 @@ object Inference {
     // the three √ divisions. A saturated control (τxz² or τyz² = 1)
     // guards NaN.
     QueryDef("q341_partial_tau", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val priced = {
         val cellsP = t(s, d, "orders")
           .groupBy(col("o_totalprice").as("pv"))
@@ -10474,7 +10246,6 @@ object Inference {
     // fixed tree from per-group (Σz, Σz²) pairs folded in flag
     // order. Degenerate SSW = 0 guards NaN.
     QueryDef("q342_levene_mean", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val cells = t(s, d, "lineitem")
         .select(col("l_returnflag").as("g"),
           col("l_quantity").cast("long").as("v"))
@@ -10584,10 +10355,7 @@ object Inference {
     // dayofweek (1=Sun) minus 1 equals DuckDB's dow (0=Sun).
     // Degenerate variance guards NaN.
     QueryDef("q343_seasonal_mk", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
         .withColumn("wd", (dayofweek(col("day")) - 1).cast("int"))
       val b = daily.select(col("wd"), col("day").as("day_b"),
         col("c").as("cb"))
@@ -10657,7 +10425,6 @@ object Inference {
     // normalization divides by the permutation-reversal maximum
     // ⌊n²/2⌋ once. Empty catalogs guard NaN.
     QueryDef("q344_footrule", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val items = t(s, d, "lineitem")
         .select((col("l_partkey") % 199).as("item"),
           year(col("l_shipdate")).as("y"))
@@ -10729,9 +10496,7 @@ object Inference {
     // ≤4-row community table carries per-community e_c, d_c,
     // q_contrib, and the folded total. m = 0 guards NaN.
     QueryDef("q345_modularity", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val nodes = t(s, d, "documents")
-        .select((col("doc_id") % 389).as("x")).distinct()
+      val nodes = docNodes(s, d)
       val dir = nodes
         .select(col("x").as("src"),
           ((col("x") * col("x") + 1) % 389).as("dst"))
@@ -10813,7 +10578,6 @@ object Inference {
     // is identically 0 by the guard, the degenerate-marker
     // convention).
     QueryDef("q346_burrows_delta", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val toks = t(s, d, "documents")
         .select(col("source"),
           explode(split(col("text"), " ")).as("term"))
@@ -10935,7 +10699,6 @@ object Inference {
     // TakeOrderedAndProject: χ² desc, term asc. Degenerate margins
     // guard to 0 so constants never rank.
     QueryDef("q347_chi2_terms", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val docs = t(s, d, "documents")
         .select(col("doc_id"),
           (col("lang") === "en").cast("long").as("y"), col("text"))
@@ -11013,8 +10776,6 @@ object Inference {
     // deterministic TakeOrderedAndProject (G² desc, term asc).
     QueryDef("q348_llr_keyness", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       def xlx(c: Column) =
         when(c > 0, dbl(c) * pln(c)).otherwise(lit(0.0))
       val toks = t(s, d, "documents")
@@ -11094,7 +10855,6 @@ object Inference {
     // 20·cum ≥ 16·total etc. (no percentage doubles until the final
     // shares), and the ≤3-row class table divides twice per row.
     QueryDef("q349_abc_analysis", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val vols = t(s, d, "lineitem")
         .groupBy(col("l_partkey")).agg(count(lit(1)).as("v"))
       // unique order key for the CDF: (-v, partkey) ascending = volume
@@ -11153,10 +10913,7 @@ object Inference {
     // comparisons run in doubles on the fixed tree, and the breach
     // counts are exact. Fewer than 2 days guards the limits to NaN.
     QueryDef("q350_xmr_control", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val w = Window.orderBy("day")
       val mr = daily
         .withColumn("prev", lag(col("c"), 1).over(w))
@@ -11230,10 +10987,7 @@ object Inference {
     // so each rₖ is one division and the recursion a fixed tree.
     // Degenerate denominators guard NaN.
     QueryDef("q351_pacf", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val tot = daily.agg(count(lit(1)).as("n"),
         coalesce(sum(col("c")), lit(0L)).as("s_tot"))
       val w = Window.orderBy("day")
@@ -11332,7 +11086,6 @@ object Inference {
     // axis's direction documented here. Output is the ≤5³-segment
     // count table with each segment's share.
     QueryDef("q352_rfm_segments", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val maxd = t(s, d, "orders")
         .agg(max(col("o_orderdate").cast("date")).as("dmax"))
       val per = t(s, d, "orders").crossJoin(broadcast(maxd))
@@ -11419,31 +11172,7 @@ object Inference {
     // is a filtered deterministic ordered LIMIT 1 — never a
     // driver-side scan.
     QueryDef("q353_km_quantile", (s, d) => {
-      val per = t(s, d, "events")
-        .groupBy("user_id")
-        .agg(
-          (datediff(max(col("ts")).cast("date"),
-            min(col("ts")).cast("date")) + 1).cast("long").as("t"),
-          max_by(col("event_type"), struct(col("ts"), col("event_id")))
-            .as("last_type"))
-        .select(col("t"),
-          when(col("last_type") === "error", 1L).otherwise(0L)
-            .as("died"))
-      val cells = per.groupBy("t")
-        .agg(sum("died").as("d"), sum(lit(1L) - col("died")).as("c"))
-        .withColumn("n", col("d") + col("c"))
-      val tot = cells.agg(sum("n").as("tot"))
-      val enr = graft.operators.PrefixSum
-        .withRunningTotals(cells, "t", Seq("n"))
-        .crossJoin(broadcast(tot))
-        .select(col("t"), col("d"), col("c"),
-          (col("tot") - col("n_cum") + col("n")).as("at_risk"))
-      val b = enr.select(col("t").as("bt"), col("d").as("bd"),
-        col("at_risk").as("bar")).where(col("bd") > 0)
-      enr.join(b, col("bt") <= col("t"), "left")
-        .groupBy("t", "at_risk", "d", "c")
-        .agg(sort_array(collect_list(struct(col("bt"), col("bd"),
-          col("bar")))).as("fs"))
+      kmRiskSets(s, d)
         .select(col("t"),
           aggregate(col("fs"), lit(1.0), (acc, f) =>
             acc * coalesce(lit(1.0) - f.getField("bd").cast("double") /
@@ -11496,17 +11225,7 @@ object Inference {
     // the form a capacity model actually consumes. Zero-exposure
     // bands guard NaN.
     QueryDef("q354_piecewise_hazard", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val per = t(s, d, "events")
-        .groupBy("user_id")
-        .agg(
-          (datediff(max(col("ts")).cast("date"),
-            min(col("ts")).cast("date")) + 1).cast("long").as("t"),
-          max_by(col("event_type"), struct(col("ts"), col("event_id")))
-            .as("last_type"))
-        .select(col("t"),
-          when(col("last_type") === "error", 1L).otherwise(0L)
-            .as("died"))
+      val per = lifetimes(s, d)
       val cells = per.groupBy("t")
         .agg(coalesce(sum(col("died")), lit(0L)).as("d"),
           count(lit(1)).as("n"))
@@ -11573,8 +11292,6 @@ object Inference {
     // construction; empty sources guard NaN.
     QueryDef("q355_kl_per_source", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val cells = t(s, d, "documents")
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n"))
@@ -11637,7 +11354,6 @@ object Inference {
     // each block's contribution is one rational; the fold runs
     // block-sorted. No positives guards NaN.
     QueryDef("q356_average_precision", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val docs = t(s, d, "documents")
         .select(col("n_chars").as("sc"),
           (col("lang") === "en").cast("long").as("y"))
@@ -11698,7 +11414,6 @@ object Inference {
     // folds bin-sorted and MCE is the max gap over the same ≤10
     // cells. Empty input guards NaN.
     QueryDef("q357_ece", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val txt = col("text")
       val hits = size(regexp_extract_all(lower(txt),
         lit("\\b(the|a|and|of|to|in|is|that)\\b"), lit(0))).cast("long")
@@ -11776,10 +11491,7 @@ object Inference {
     // long-run variance, the textbook short-run form, stated
     // explicitly). Constant series guards NaN.
     QueryDef("q358_kpss", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val tot = daily.agg(count(lit(1)).as("n"),
         coalesce(sum(col("c")), lit(0L)).as("s_tot"))
       val w = Window.orderBy("day")
@@ -11825,10 +11537,7 @@ object Inference {
     // counts and the moment numerators stay BIGINT; the z is one
     // fixed tree. n < 3 guards NaN.
     QueryDef("q359_turning_points", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val w = Window.orderBy("day")
       daily
         .withColumn("pv", lag(col("c"), 1).over(w))
@@ -11878,8 +11587,6 @@ object Inference {
     // points or zero x-variance guards NaN.
     QueryDef("q360_lotka", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val spec = t(s, d, "events")
         .groupBy(col("user_id")).agg(count(lit(1)).as("k"))
         .groupBy(col("k")).agg(count(lit(1)).as("fk"))
@@ -11968,11 +11675,8 @@ object Inference {
     // σ̂² = Σd²/n³ reduces to |G|max·√n/(√w·√Σd²) — one fixed tree.
     // Degenerate variance guards NaN.
     QueryDef("q361_mosum", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val wBand = 7
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
       val tot = daily.agg(count(lit(1)).as("n"),
         coalesce(sum(col("c")), lit(0L)).as("s_tot"))
       val w = Window.orderBy("day")
@@ -12025,7 +11729,6 @@ object Inference {
     // once each per nation row; nations with no 1997 base report
     // NaN expectations (their whole delta is shift by convention).
     QueryDef("q362_shift_share", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val per = t(s, d, "orders")
         .join(broadcast(t(s, d, "customer")
           .select(col("c_custkey"), col("c_nationkey").as("nk"))),
@@ -12086,7 +11789,6 @@ object Inference {
     // P* = Σ(aᵢ/A)(aᵢ/(aᵢ+bᵢ)) rides along from the same cells.
     // Empty classes guard NaN.
     QueryDef("q363_duncan_d", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val cells = t(s, d, "orders")
         .join(broadcast(t(s, d, "customer")
           .select(col("c_custkey"), col("c_nationkey").as("nk"))),
@@ -12163,7 +11865,6 @@ object Inference {
     // cell folded segment-sorted per nation; nations missing a
     // stratum contribute that stratum's 0 (documented convention).
     QueryDef("q364_std_rates", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val base = t(s, d, "orders")
         .join(broadcast(t(s, d, "customer")
           .select(col("c_custkey"), col("c_nationkey").as("nk"),
@@ -12238,7 +11939,6 @@ object Inference {
     // sums are exact BIGINT from one cell theta-join, and C is ONE
     // double division. No usable pairs guards NaN.
     QueryDef("q365_harrell_c", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val per = t(s, d, "events")
         .groupBy("user_id")
         .agg(
@@ -12334,7 +12034,6 @@ object Inference {
     // novelty share divides once per ≤|sources| row. All counts
     // exact BIGINT.
     QueryDef("q366_vocab_accumulation", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val firsts = t(s, d, "documents")
         .select(col("source"),
           explode(split(col("text"), " ")).as("term"))
@@ -12394,7 +12093,6 @@ object Inference {
     // moments of the 29-row lagged frame (lag via a dimension-sized
     // day window); one fixed IEEE tree. Singular designs guard NaN.
     QueryDef("q367_granger_f", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val daily = t(s, d, "events")
         .groupBy(col("ts").cast("date").as("day"))
         .agg(
@@ -12505,7 +12203,6 @@ object Inference {
     // through a day-shifted self-join of the dimension-sized daily
     // table. Degenerate variance guards NaN.
     QueryDef("q368_ccf", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val daily = t(s, d, "events")
         .groupBy(col("ts").cast("date").as("day"))
         .agg(
@@ -12590,8 +12287,6 @@ object Inference {
     // guards NaN.
     QueryDef("q369_benford2", (s, d) => {
       graft.functions.GraftFunctions.register(s)
-      def dbl(c: Column) = c.cast("double")
-      def pln(c: Column) = call_function("portable_ln", c.cast("double"))
       val digits = t(s, d, "orders")
         .select((round(col("o_totalprice") * 100).cast("long"))
           .as("cents"))
@@ -12678,7 +12373,6 @@ object Inference {
     // tree is fixed IEEE. A hapax-only rare tail (Ĉ = 0) guards
     // ACE to NaN.
     QueryDef("q370_richness_estimators", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val tc = t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("term"))
         .where(length(col("term")) > 0)
@@ -12763,10 +12457,7 @@ object Inference {
     // folded wd-sorted; total variance from global BIGINT moments.
     // Constant series guards NaN.
     QueryDef("q371_seasonal_strength", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
-      val daily = t(s, d, "events")
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyEvents(s, d)
         .withColumn("wd", (dayofweek(col("day")) - 1).cast("int"))
       val wdm = daily.groupBy("wd")
         .agg(count(lit(1)).as("nwd"),
@@ -12837,7 +12528,6 @@ object Inference {
     // lower median from the PrefixSum CDF at rank (n+1) DIV 2 —
     // one fixed tree, zero variance guards NaN.
     QueryDef("q372_pearson_skew", (s, d) => {
-      def dbl(c: Column) = c.cast("double")
       val cells = t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("x"))
         .groupBy(col("x").as("v")).agg(count(lit(1)).as("c"))

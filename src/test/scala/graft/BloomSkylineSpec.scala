@@ -4,12 +4,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extract.PageSynth.splitmix64
+import graft.functions.StatCols.{pln, sumInOrder}
 import graft.operators.{BloomSemiJoin, Skyline}
 
 /** Round-5 operator batch: the Bloom-pruned semi-join's superset +
   * broadcast contracts, the two-phase skyline's exact equivalence to the
-  * naive quadratic definition, and portable_ln's codegen + Math.log
-  * identity. */
+  * naive quadratic definition, portable_ln's codegen + Math.log
+  * identity, and the StatCols `pln` / `sumInOrder` bit contracts. */
 class BloomSkylineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -118,6 +119,21 @@ class BloomSkylineSpec extends AnyFunSuite {
     val got = spark.sql("SELECT portable_ln(CAST(7 AS DOUBLE))")
       .first().getDouble(0)
     assert(got == java.lang.Math.log(7.0))
+    // the column vocabulary's pln: a LONG argument is widened to DOUBLE
+    // first, the result is Math.log of that double bit for bit, and a
+    // null stays null
+    val in = Seq[Option[Long]](Some(1L), Some(2L), Some(7L), Some(9169L),
+      Some(1L << 40), Some(0L), None)
+    val lns = in.toDF("n").select(col("n"), pln(col("n")).as("ln"))
+      .as[(Option[Long], Option[Double])].collect().toMap
+    assert(lns.keySet == in.toSet)
+    in.foreach {
+      case Some(n) =>
+        assert(lns(Some(n)).map(java.lang.Double.doubleToRawLongBits) ==
+          Some(java.lang.Double.doubleToRawLongBits(
+            java.lang.Math.log(n.toDouble))), s"pln($n)")
+      case None => assert(lns(None).isEmpty, "pln(null) must stay null")
+    }
   }
 
   // ---- sorted-fold determinism -------------------------------------------
@@ -140,9 +156,44 @@ class BloomSkylineSpec extends AnyFunSuite {
           g -> java.lang.Double.doubleToRawLongBits(e)
         }.toMap
     }
+    // sumInOrder over the sorted list == Scala's left fold over the same
+    // list, bit for bit. The extra groups carry NaN, ±0.0, ±∞, subnormals,
+    // overflow and a sum whose rounding depends on the order
+    // (1+1+1+1e16 left to right is 1e16+4, right to left 1e16).
+    val specials = Seq(
+      100L -> Seq(1.0, 1.0, 1.0, 1e16),
+      101L -> Seq(-0.0, -0.0, 0.0),
+      102L -> Seq(-0.0, -0.0),
+      103L -> Seq(Double.MinPositiveValue, -3 * Double.MinPositiveValue,
+        java.lang.Double.MIN_NORMAL, -java.lang.Double.MIN_NORMAL / 3),
+      104L -> Seq(Double.PositiveInfinity, 1.0, Double.NegativeInfinity),
+      105L -> Seq(Double.NaN, 2.0, -0.0),
+      106L -> Seq(Double.MaxValue, Double.MaxValue, -1.0),
+      107L -> Seq(Double.NegativeInfinity, -5.0))
+    val extra = specials.zipWithIndex.flatMap { case ((g, vs), i) =>
+      vs.zipWithIndex.map { case (v, j) => (g, v, 10000L + 10L * i + j) }
+    }
+    def sums(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+      val got = df.groupBy("g")
+        .agg(sort_array(collect_list(col("v"))).as("vs"))
+        .select(col("g"), col("vs"), sumInOrder(col("vs"))(v => v).as("s"))
+        .as[(Long, Seq[Double], Double)].collect()
+      got.foreach { case (g, vs, s) =>
+        assert(java.lang.Double.doubleToRawLongBits(s) ==
+          java.lang.Double.doubleToRawLongBits(vs.foldLeft(0.0)(_ + _)),
+          s"group $g: sumInOrder($vs) = $s")
+      }
+      got.map { case (g, _, s) =>
+        g -> java.lang.Double.doubleToRawLongBits(s) }.toMap
+    }
     val df = rows.toDF("g", "v", "ord")
     val a = ema(df.repartition(1))
     val b = ema(df.repartition(17, col("ord")))
     assert(a == b, "fold result depends on partitioning")
+    val all = (rows ++ extra).toDF("g", "v", "ord")
+    val s1 = sums(all.repartition(1))
+    assert(s1.keySet == (rows.map(_._1) ++ specials.map(_._1)).toSet)
+    assert(s1 == sums(all.repartition(17, col("ord"))),
+      "sumInOrder depends on partitioning")
   }
 }

@@ -119,21 +119,26 @@ class TemporalAllocSpec extends AnyFunSuite {
     //    and exactly 0.0 bitwise, because ln4 − ln2 − ln2 is exact in
     //    doubles (ln4's double is 2× ln2's, so each subtraction is exact);
     //  (u,v): co=1, cu=3, cv=2 → co·N < cu·cv, repulsion < 0.
-    val presence = Seq(
+    val docs = Seq(
       1 -> "p", 1 -> "q", 1 -> "x", 1 -> "u",
       2 -> "p", 2 -> "q", 2 -> "x", 2 -> "y", 2 -> "u",
       3 -> "y", 3 -> "u", 3 -> "v",
-      4 -> "v"
-    ).toDF("doc", "term")
-    val got = graft.quality.Npmi
+      4 -> "v")
+    def npmi(presence: org.apache.spark.sql.DataFrame) = graft.quality.Npmi
       .pairAssociation(presence, maxTermsPerDoc = 10, minDf = 1, minCo = 1)
-      .collect()
+      .collect().sortBy(_.mkString("|")).toSeq
+    val rows = npmi(docs.toDF("doc", "term"))
+    val got = rows
       .map(r => (r.getString(r.fieldIndex("term_a")),
         r.getString(r.fieldIndex("term_b"))) ->
         r.getDouble(r.fieldIndex("npmi"))).toMap
     assert(math.abs(got(("p", "q")) - 1.0) < 1e-12)
     assert(got(("x", "y")) === 0.0)
     assert(got(("u", "v")) < 0.0)
+    // Npmi registers portable_ln itself: a new session, whose function
+    // registry has nothing registered, returns the same rows
+    val fresh = spark.newSession()
+    assert(npmi(fresh.createDataFrame(docs).toDF("doc", "term")) === rows)
   }
 
   test("NPMI df gate and whole-doc cap shape the kept set") {
