@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.graph.LocalGraph
+import graft.operators.Cut
 
 /** Connected components via alternating large-star / small-star rounds —
   * the iterative-DataFrame-joins realization of the label-merge transitive
@@ -82,7 +83,7 @@ object ConnectedComponents {
     // self-join pair graphs) — without the cut each consumer would
     // re-execute that whole upstream plan. The pair list itself is
     // sparse-graph-sized, so the extra materialization is cheap.
-    val ein = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    val ein = edges.select(col("src"), col("dst")).transform(Cut.large)
     val (base, small) = LocalGraph.cut(symmetrize(ein))
     // base is symmetric + lineage-cut, as loop requires
     val core = small.fold(loop(base, maxIter))(runLocal(base, _))
@@ -150,9 +151,9 @@ object ConnectedComponents {
     * lineage once, then iterates. */
   def runDistributed(edges: DataFrame, maxIter: Int = 25): DataFrame = {
     // same single-execution contract as run(): see the comment there
-    val ein = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    val ein = edges.select(col("src"), col("dst")).transform(Cut.large)
     withSelfLoopOnly(ein,
-      loop(symmetrize(ein).localCheckpoint(true), maxIter))
+      loop(symmetrize(ein).transform(Cut.large), maxIter))
   }
 
   /** Iteration core. `base` MUST be symmetric and lineage-cut — callers
@@ -167,7 +168,7 @@ object ConnectedComponents {
     var converged = false
     def round(): Unit = {
       val in = if (eIsSymmetric) e else symmetrize(e)
-      val next = smallStar(largeStar(in)).localCheckpoint(true)
+      val next = smallStar(largeStar(in)).transform(Cut.large)
       eIsSymmetric = false
       val cs = checksum(next)
       converged = cs == prev

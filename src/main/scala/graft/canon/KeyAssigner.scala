@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** Deterministic dense key assignment: key = rank of the natural id in
   * sort order, 1..N — globally, or within each group of `groupCols`.
   *
@@ -19,7 +21,7 @@ import org.apache.spark.sql.functions._
   * rows, since a group covers a contiguous run of partitions). One eager
   * cut remains, for every group at once: the positioned rows feed both the
   * output and the run counts, and the two must see the same sampled range
-  * boundaries (see the localCheckpoint note in [[assign]]).
+  * boundaries (see the cut note in [[assign]]).
   *
   * NOT `monotonically_increasing_id()` as the key — that is
   * non-deterministic across runs/partitionings; these keys must be stable
@@ -44,7 +46,7 @@ object KeyAssigner {
     // The range partitioner assigns ascending (group…, id) ranges to
     // ascending partition ids, so within a group (partition id, position
     // in the sorted partition) is the id order.
-    // localCheckpoint: the positioned frame feeds BOTH the output rows and
+    // Cut: the positioned frame feeds BOTH the output rows and
     // the run counts below, and key correctness requires the two to see
     // the SAME range-partition boundaries and positions. Without
     // materialization that is guaranteed only by exchange reuse —
@@ -56,7 +58,7 @@ object KeyAssigner {
     val positioned = ranged.sortWithinPartitions(order: _*)
       .withColumn("_pid", spark_partition_id())
       .withColumn("_pos", monotonically_increasing_id())
-      .localCheckpoint(true)
+      .transform(Cut.large)
     // one row per (partition, group) run: its size and first position
     val runs = positioned.groupBy((col("_pid") +: groupCols.map(col)): _*)
       .agg(count(lit(1)).as("_n"), min("_pos").as("_first"))

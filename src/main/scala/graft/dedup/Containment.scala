@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** Asymmetric shingle-CONTAINMENT near-duplicate detection — the
   * doc-inside-doc relation Jaccard misses. A quote page that embeds a full
   * article, or a boilerplate wrapper around copied content, has
@@ -66,7 +68,7 @@ object Containment {
     // output is already partitioned by s, so the groupBy adds no exchange
     val grouped = sh.join(df.where(col("c") <= maxDf), Seq("s"))
       .groupBy("s").agg(sort_array(collect_list(col("doc"))).as("docs"))
-      .localCheckpoint(true)
+      .transform(Cut.large)
     val sz = grouped.select(explode(col("docs")).as("doc"))
       .groupBy("doc").agg(count(lit(1)).as("n"))
     // ascending-ordered pairs from each sorted ≤ maxDf list: element i

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.canon.ConnectedComponents
+import graft.operators.{Cut, Spread}
 
 /** Large-scale document deduplication suite — exact, MinHash+LSH, SimHash,
   * and n-gram Jaccard. All pure DataFrame/built-in-function pipelines
@@ -239,7 +240,7 @@ object Dedup {
       min(col("doc_id")).as("rep"), count(lit(1)).as("n"),
       min_by(col("_text"), col("doc_id")).as("_text"),
       min(col("_h2")).as("_a"), max(col("_h2")).as("_b"))
-      .localCheckpoint(true)
+      .transform(Cut.large)
     val collided = agg.where(col("_a") =!= col("_b")).select(col("_h"))
     val cleanGroups = agg.where(col("_a") === col("_b"))
       .select(col("_h"), col("rep"), col("n"), col("_text"))
@@ -257,10 +258,8 @@ object Dedup {
         .join(broadcast(collided), Seq("_h"), "left_semi")
         .join(collGroups, Seq("_h", "_text"))
         .select(col("doc_id"), col("rep"), col("n")))
-      // LAZY cut (r06): every consumer of members is downstream of other
-      // materializations — the first consuming job materializes it once
-      // (PrefixSum precedent); the dedicated blocking job disappears.
-      .localCheckpoint(eager = false)
+      // every consumer of members runs after other materializations
+      .transform(Cut.deferred)
     // repartition before the cut (r06): the aggregate's AQE-coalesced
     // output is 1-2 partitions at fixture scale, and the checkpoint
     // inherits them — the downstream per-rep HOF work (64 minhash
@@ -270,11 +269,10 @@ object Dedup {
     // and one extra exchange of the distinct-text table is noise.
     val repDocs = cleanGroups.select(col("rep").as("doc_id"), col("_text"))
       .unionByName(collGroups.select(col("rep").as("doc_id"), col("_text")))
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      // LAZY cut (r06): the signature/shingle jobs that consume repDocs
-      // run strictly after this frame is built — first consumer
-      // materializes, later consumers read the cached blocks.
-      .localCheckpoint(eager = false)
+      .transform(Spread.orderFree)
+      // the signature/shingle jobs that consume repDocs run one after
+      // another
+      .transform(Cut.deferred)
     (members, repDocs)
   }
 
@@ -289,13 +287,13 @@ object Dedup {
     // consumer (O(64×) recompute per row). At cluster scale these cuts are
     // persisted checkpoint tables (the pipeline's stage commits).
     val sigs = minhashSignatures(repDocs, "doc_id", "_text", k, numHashes)
-      // LAZY (r06): the overflow-count action below materializes it; the
-      // candidate job then reads the cached blocks.
-      .localCheckpoint(eager = false)
+      // the overflow-count action below materializes it; the candidate
+      // job then reads the blocks
+      .transform(Cut.deferred)
     val buckets = lshBuckets(sigs, numHashes, bands)
     logBucketOverflow(buckets, bucketCap, "lsh")
     val cands = pairsFromBuckets(buckets, bucketCap)
-      .localCheckpoint(eager = false) // LAZY (r06): single downstream consumer
+      .transform(Cut.deferred) // single downstream consumer
     val verified = jaccardOnPairs(repDocs, cands, "doc_id", "_text", k)
       .where(col("jaccard") >= threshold)
     val comps = ConnectedComponents.run(
@@ -324,7 +322,7 @@ object Dedup {
       textCol: String, k: Int): DataFrame = {
     val sh = docs.select(col(idCol).as("doc_id"),
       explode(shingles(col(textCol), k)).as("shingle")).distinct()
-      .localCheckpoint(true)
+      .transform(Cut.large)
     jaccardOnShingles(sh, pairs)
   }
 
@@ -368,7 +366,7 @@ object Dedup {
     // exact Jaccard. Output identical to the naive all-pairs run.
     val (members, repDocs) = exactCollapse(docs, idCol, textCol)
     val repPairs = ngramJaccardPairsDistinct(repDocs, "doc_id", "_text", k,
-      threshold).localCheckpoint(eager = false) // LAZY (r06): one consumer
+      threshold).transform(Cut.deferred) // one consumer
     val m = members.select(col("doc_id"), col("rep"))
     val within = m.select(col("rep"), col("doc_id").as("id_a"))
       .join(m.select(col("rep"), col("doc_id").as("id_b")), "rep")
@@ -404,7 +402,7 @@ object Dedup {
     // jaccardOnPairs (sizes / freq / ranked each re-ran the explode)
     val sh = docs.select(col(idCol).as("doc_id"),
       explode(shingles(col(textCol), k)).as("shingle")).distinct()
-      .localCheckpoint(true)
+      .transform(Cut.large)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val ranked = sh.join(freq, "shingle")

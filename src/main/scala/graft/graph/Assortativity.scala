@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** Degree assortativity (Newman, PRL 2002) — the Pearson correlation of
   * endpoint degrees over the edge list: r > 0 means hubs link to hubs
   * (social-network shape), r < 0 means hubs link to leaves (the
@@ -36,7 +38,7 @@ object Assortativity {
   def degreeAssortativity(edges: DataFrame): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst")).distinct()
-      .localCheckpoint(true) // feeds the degree agg and the edge scan
+      .transform(Cut.large) // feeds the degree agg and the edge scan
     val deg = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))

@@ -6,24 +6,25 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Cut
+
 /** Bounded-depth BFS (multi-source shortest hop count) over an edge list
   * — the KG "n-hop neighborhood with distance" primitive (the unbounded
   * sibling of PathTools' fixed 2-hop expansions).
   *
   * Scale shape: the (src, dst) projection is cut once ([[LocalGraph.cut]]).
-  * When ids are integers and the cut holds at most
-  * [[LocalGraph.MaxEdges]] rows, it and the seeds are collected and the
-  * rounds run on the driver over adjacency arrays: a fixed job count at
-  * any `maxHops`. Above the gate each round joins ONLY the current
-  * frontier (shrinking, never the visited set) against the cut edges on
-  * the src key, then anti-joins the visited set so a node's distance is
-  * assigned exactly once — min-distance semantics without a min
-  * aggregate. Cost is O(maxHops) keyed shuffles; at web scale the
-  * frontier join partitions on src like any edge-keyed join (AQE handles
-  * hub skew), and the anti-join is a semi-shuffle on the (small) frontier
-  * side. Each round's frontier is localCheckpointed: BFS lineage
-  * otherwise doubles per round and re-executes every prior join on each
-  * action.
+  * When ids are integers and the cut holds at most [[LocalGraph.MaxEdges]]
+  * rows, the job that cuts it also collects it, the seeds are collected,
+  * and the rounds run on the driver over adjacency arrays: a fixed job
+  * count at any `maxHops`. Above the gate each round joins ONLY the current
+  * frontier (shrinking, never the visited set) against the cut edges on the
+  * src key, then anti-joins the visited set so a node's distance is
+  * assigned exactly once — min-distance semantics without a min aggregate.
+  * Cost is O(maxHops) keyed shuffles; at web scale the frontier join
+  * partitions on src like any edge-keyed join (AQE handles hub skew), and
+  * the anti-join is a semi-shuffle on the (small) frontier side. Each
+  * round's frontier is cut (Cut.large): BFS lineage otherwise doubles per
+  * round and re-executes every prior join on each action.
   *
   * Determinism: distances are pure graph properties (no tie-breaking
   * needed), so the output is engine-independent — the DuckDB oracle
@@ -52,7 +53,7 @@ object Bfs {
   private[graft] def hopsDistributed(edges: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be ≥ 0, got $maxHops")
-    loop(edges.select(col("src"), col("dst")).localCheckpoint(true), seeds,
+    loop(edges.select(col("src"), col("dst")).transform(Cut.large), seeds,
       maxHops)
   }
 
@@ -63,7 +64,7 @@ object Bfs {
 
   private def loop(e: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     var visited = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
+      .withColumn("dist", lit(0L)).transform(Cut.large)
     var frontier = visited
     var h = 1L
     while (h <= maxHops && !frontier.isEmpty) {
@@ -71,7 +72,7 @@ object Bfs {
         .select(e("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
         .withColumn("dist", lit(h))
-        .localCheckpoint()
+        .transform(Cut.large)
       visited = visited.unionByName(next)
       frontier = next
       h += 1

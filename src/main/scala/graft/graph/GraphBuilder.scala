@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.canon.KeyAssigner
 import graft.link.Gazetteer
 import graft.model.RawTriple
+import graft.operators.Cut
 
 /** Materializes the property graph from extracted triples.
   *
@@ -121,7 +122,7 @@ object GraphBuilder {
     val claims = stats.join(evidence, Seq("subj", "pred", "obj"))
       .withColumn("strength_score",
         least(lit(1.0), col("frequency").cast("double") / 10.0))
-      .localCheckpoint(true)
+      .transform(Cut.large)
     // claim-key separator is U+0001 -- written as the ESCAPE \u0001, not a
     // literal control byte that renders invisibly (one control-stripping
     // editor/linter pass would silently turn it into concat_ws("") and

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Cut
+
 /** Hub/authority scoring (Kleinberg's HITS, SIAM J. Comput. 1999) over a
   * directed edge list — the second classic link-analysis signal beside
   * [[PageRank]]: a good HUB points at many good authorities, a good
@@ -26,15 +28,16 @@ import org.apache.spark.sql.types._
   *
   * Scale shape (10¹²-page web graph): the deduplicated edge list
   * materializes ONCE behind a lineage cut ([[LocalGraph.cut]]). At most
-  * [[LocalGraph.MaxEdges]] edges are collected and iterated on the driver
-  * over adjacency arrays — a fixed job count at any `iters`, with every
-  * addition a `Math.addExact` so an overflow throws as Spark's ANSI `sum`
-  * does. Above the gate each half-step is one node-sized join (score
-  * table onto edges by one endpoint — AQE decides broadcast vs shuffle at
-  * its true size) and one groupBy on the other endpoint whose partial
-  * aggregation absorbs hub skew map-side (a 10⁸-degree hub reaches the
-  * reducer as one partial sum per map partition). Scores are lineage-cut
-  * per iteration, so plan depth is constant at any iteration count.
+  * [[LocalGraph.MaxEdges]] edges are collected, by the same job that makes
+  * the cut, and iterated on the driver over adjacency arrays — a fixed job
+  * count at any `iters`, with every addition a `Math.addExact` so an
+  * overflow throws as Spark's ANSI `sum` does. Above the gate each
+  * half-step is one node-sized join (score table onto edges by one endpoint
+  * — AQE decides broadcast vs shuffle at its true size) and one groupBy on
+  * the other endpoint whose partial aggregation absorbs hub skew map-side
+  * (a 10⁸-degree hub reaches the reducer as one partial sum per map
+  * partition). Scores are lineage-cut per iteration, so plan depth is
+  * constant at any iteration count.
   */
 object Hits {
 
@@ -52,7 +55,7 @@ object Hits {
   /** The distributed loop alone, at any input size. */
   private[graft] def runDistributed(edges: DataFrame, iters: Int = 2): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    loop(prepare(edges).localCheckpoint(true), iters)
+    loop(prepare(edges).transform(Cut.large), iters)
   }
 
   private def prepare(edges: DataFrame): DataFrame = edges
@@ -64,7 +67,7 @@ object Hits {
   private def loop(e: DataFrame, iters: Int): DataFrame = {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Cut.large)
     var hub = nodes.withColumn("hub", lit(1L))
     var auth: DataFrame = null
     (1 to iters).foreach { _ =>
@@ -73,13 +76,13 @@ object Hits {
         .groupBy("dst").agg(sum("hub").as("auth"))
       auth = nodes.join(a, col("node") === col("dst"), "left")
         .select(col("node"), coalesce(col("auth"), lit(0L)).as("auth"))
-        .localCheckpoint(true)
+        .transform(Cut.large)
       // hub(u) = Σ_{u→v} auth(v): join on dst, partial-agg groupBy src
       val h = e.join(auth, col("dst") === col("node"))
         .groupBy("src").agg(sum("auth").as("hub"))
       hub = nodes.join(h, col("node") === col("src"), "left")
         .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub"))
-        .localCheckpoint(true)
+        .transform(Cut.large)
     }
     hub.join(auth, "node")
       .select(col("node"), col("hub"), col("auth"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Cut
+
 /** Bounded-round k-core peeling (Matula & Beck 1983 / Batagelj–Zaveršnik
   * semantics, synchronous variant): each round simultaneously removes
   * EVERY node whose degree among still-alive nodes is < k. Synchronous
@@ -20,13 +22,13 @@ import org.apache.spark.sql.types._
   * Scale shape (same contract as [[LabelPropagation]]): the symmetrized,
   * deduplicated edge list materializes ONCE behind a lineage cut
   * ([[LocalGraph.cut]]). At most [[LocalGraph.MaxEdges]] rows are
-  * collected and peeled on the driver over adjacency arrays — a fixed job
-  * count at any `rounds`. Above the gate each round is two semi-joins
-  * (alive filter on both endpoints — broadcast once the survivor set
-  * shrinks, AQE decides) and one hash aggregate. Degree counting absorbs
-  * hub skew map-side (partial counts per partition); alive sets are
-  * lineage-cut per round, so the plan depth is constant at any round
-  * count.
+  * collected, by the same job that makes the cut, and peeled on the driver
+  * over adjacency arrays — a fixed job count at any `rounds`. Above the
+  * gate each round is two semi-joins (alive filter on both endpoints —
+  * broadcast once the survivor set shrinks, AQE decides) and one hash
+  * aggregate. Degree counting absorbs hub skew map-side (partial counts per
+  * partition); alive sets are lineage-cut per round, so the plan depth is
+  * constant at any round count.
   */
 object KCore {
 
@@ -47,7 +49,7 @@ object KCore {
       rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    loop(prepare(edges).localCheckpoint(true), k, rounds)
+    loop(prepare(edges).transform(Cut.large), k, rounds)
   }
 
   private def prepare(edges: DataFrame): DataFrame = {
@@ -67,7 +69,7 @@ object KCore {
         .join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(alive.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      out = deg.where(col("deg") >= k).localCheckpoint(true)
+      out = deg.where(col("deg") >= k).transform(Cut.large)
       alive = out.select("node")
     }
     out

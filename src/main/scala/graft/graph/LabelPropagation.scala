@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Cut
+
 /** Community detection by synchronous label propagation (Raghavan et al.
   * 2007) over an undirected edge list: every node starts labeled with its
   * own id; each round it adopts the most frequent label among its
@@ -16,18 +18,18 @@ import org.apache.spark.sql.types._
   * bit-identical in any engine under any partitioning — an external
   * oracle can unroll the same rounds in SQL and hash-match.
   *
-  * Scale shape (10¹²-page web graph, same contract as [[PageRank]]):
-  * the symmetrized edge list materializes ONCE behind a lineage cut
+  * Scale shape (10¹²-page web graph, same contract as [[PageRank]]): the
+  * symmetrized edge list materializes ONCE behind a lineage cut
   * ([[LocalGraph.cut]]). At most [[LocalGraph.MaxEdges]] rows are
-  * collected and the rounds run on the driver over adjacency arrays — a
-  * fixed job count at any `iters`. Above the gate each round is one
-  * |V|-sized join (labels onto edges by dst) and two hash aggregates. The
-  * per-(node, label) count absorbs hub skew in the partial aggregate (a
-  * 10⁸-degree hub's neighbors arrive as one partial count per map
-  * partition per label), and the argmax is `min_by` over a (−count,
-  * label) struct — a hash aggregate, NOT a per-node sort window, so a hot
-  * node never serializes on one reducer's sort. Labels are lineage-cut
-  * per round: constant-depth plan at any round count.
+  * collected, by the same job that makes the cut, and the rounds run on the
+  * driver over adjacency arrays — a fixed job count at any `iters`. Above
+  * the gate each round is one |V|-sized join (labels onto edges by dst) and
+  * two hash aggregates. The per-(node, label) count absorbs hub skew in the
+  * partial aggregate (a 10⁸-degree hub's neighbors arrive as one partial
+  * count per map partition per label), and the argmax is `min_by` over a
+  * (−count, label) struct — a hash aggregate, NOT a per-node sort window,
+  * so a hot node never serializes on one reducer's sort. Labels are
+  * lineage-cut per round: constant-depth plan at any round count.
   */
 object LabelPropagation {
 
@@ -45,7 +47,7 @@ object LabelPropagation {
   /** The distributed loop alone, at any input size. */
   private[graft] def runDistributed(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    loop(prepare(edges).localCheckpoint(true), iters)
+    loop(prepare(edges).transform(Cut.large), iters)
   }
 
   private def prepare(edges: DataFrame): DataFrame = {
@@ -58,7 +60,7 @@ object LabelPropagation {
 
   private def loop(und: DataFrame, iters: Int): DataFrame = {
     val nodes = und.select(col("src").as("node")).distinct()
-      .localCheckpoint(true)
+      .transform(Cut.large)
     var labels = nodes.withColumn("label", col("node"))
     (1 to iters).foreach { _ =>
       val votes = und.join(labels, col("dst") === col("node"))
@@ -72,7 +74,7 @@ object LabelPropagation {
       labels = nodes.join(next, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("label"), col("node")).as("label"))
-        .localCheckpoint(true) // constant-depth plan at any iters
+        .transform(Cut.large) // constant-depth plan at any iters
     }
     labels
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.StatCols.pln
+import graft.operators.Spread
 
 /** Neighborhood-overlap link prediction (Adamic–Adar / common-neighbor
   * scores) over a bipartite edge list — the classic "predict missing KG
@@ -77,7 +78,7 @@ object LinkPrediction {
     // width-of-the-cluster repartition is exempt from AQE coalescing and
     // spreads the quadratic stage; one extra exchange of the (small)
     // capped neighbor lists pays for it.
-    grouped.repartition(spark.sparkContext.defaultParallelism)
+    grouped.transform(Spread.orderFree)
       .select(col("ls"), col("deg"), posexplode(col("ls")).as(Seq("i", "s1")))
       .select(col("s1"), col("deg"),
         explode(slice(col("ls"), col("i") + lit(2), size(col("ls"))))

@@ -5,13 +5,15 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.Cut
+
 /** The size gate and driver engine shared by the iterative graph operators
   * ([[Bfs]], [[Hits]], [[KCore]], [[LabelPropagation]], [[ShortestPaths]])
   * and [[graft.canon.ConnectedComponents]].
   *
   * Each operator prepares its edge table as a Spark plan (casts, null and
-  * self-loop filters, dedup, symmetrize) and hands it to [[cut]]: one eager
-  * lineage cut, then one read of the cut that counts it and, at or below
+  * self-loop filters, dedup, symmetrize) and hands it to [[cut]]: one job
+  * cuts the lineage and, in the same pass, counts the cut and, at or below
   * [[MaxEdges]] rows, collects it. The rounds then run in plain Scala over
   * [[Adjacency]] arrays, and the result goes back as a local table, so a
   * small graph costs a fixed number of Spark jobs at any round count.
@@ -24,21 +26,21 @@ object LocalGraph {
     * graphs of this size are a few tens of MB of primitive arrays. */
   val MaxEdges: Long = 2000000L
 
-  /** Cuts `table`'s lineage (one job), then reads the cut back in one more:
-    * each partition returns its row count, and its rows while they fit its
-    * share of [[MaxEdges]], so the driver never holds more than the gate.
-    * Returns the cut, for the distributed path, and its rows when it holds
-    * at most [[MaxEdges]] rows. */
+  /** Cuts `table`'s lineage in one job ([[Cut.materialize]]) that also
+    * reads each partition: it returns its row count, and its rows while
+    * they fit its share of [[MaxEdges]], so the driver never holds more
+    * than the gate. Returns the cut, for the distributed path, and its
+    * rows when it holds at most [[MaxEdges]] rows. */
   def cut(table: DataFrame): (DataFrame, Option[Array[Row]]) = {
-    val c = table.localCheckpoint(true)
-    val rdd = c.rdd
-    val share = MaxEdges / math.max(1, rdd.getNumPartitions)
-    val parts = rdd.mapPartitions { it =>
-      val rows = ArrayBuffer.empty[Row]
-      var n = 0L
-      it.foreach { r => n += 1; if (n <= share) rows += r }
-      Iterator((n, Option.when(n <= share)(rows.toArray)))
-    }.collect()
+    val (c, parts) = Cut.materialize(table) { nParts =>
+      val share = MaxEdges / math.max(1, nParts)
+      it => {
+        val rows = ArrayBuffer.empty[Row]
+        var n = 0L
+        it.foreach { r => n += 1; if (n <= share) rows += r }
+        (n, Option.when(n <= share)(rows.toArray))
+      }
+    }
     val small =
       if (parts.map(_._1).sum > MaxEdges) None
       else if (parts.forall(_._2.isDefined)) Some(parts.flatMap(_._2.get))

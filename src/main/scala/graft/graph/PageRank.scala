@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** Link-graph centrality (PageRank power iteration) over an edge list —
   * the web-graph ranking signal crawl pipelines feed back into harvest
   * scheduling and quality curation.
@@ -59,10 +61,10 @@ object PageRank {
       .where(col("src").isNotNull && col("dst").isNotNull)
     // materialize edges+outdeg once; every iteration consumes this cut
     val deg = e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val e = e0.join(deg, "src").localCheckpoint(true)
+    val e = e0.join(deg, "src").transform(Cut.large)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint(true)
+      .distinct().transform(Cut.large)
     val base = scale * (dampDen - dampNum) / dampDen // truncating, exact
     var pr = nodes.withColumn("score", lit(scale))
     (1 to iters).foreach { _ =>
@@ -73,7 +75,7 @@ object PageRank {
         .select(col("node"),
           (lit(base) + expr(s"coalesce(inb, 0L) * $dampNum div $dampDen"))
             .as("score"))
-        .localCheckpoint(true) // constant-depth plan at any iters
+        .transform(Cut.large) // constant-depth plan at any iters
     }
     pr.select(col("node"), col("score").as("pr_score"))
   }
@@ -100,7 +102,7 @@ object PageRank {
         col("dst").cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
     val deg = e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val e = e0.join(deg, "src").localCheckpoint(true)
+    val e = e0.join(deg, "src").transform(Cut.large)
     val sd = seeds.select(col("node").cast("long").as("node")).distinct()
       .withColumn("is_seed", lit(1L))
     val nodes = e.select(col("src").as("node"))
@@ -108,7 +110,7 @@ object PageRank {
       .distinct()
       .join(sd, Seq("node"), "left")
       .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-      .localCheckpoint(true)
+      .transform(Cut.large)
     val base = scale * (dampDen - dampNum) / dampDen // truncating, exact
     var pr = nodes.withColumn("score", col("is_seed") * scale)
     (1 to iters).foreach { _ =>
@@ -120,7 +122,7 @@ object PageRank {
           (col("is_seed") * base +
             expr(s"coalesce(inb, 0L) * $dampNum div $dampDen"))
             .as("score"))
-        .localCheckpoint(true)
+        .transform(Cut.large)
     }
     pr.select(col("node"), col("score").as("ppr_score"))
   }

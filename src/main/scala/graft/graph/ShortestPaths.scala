@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Cut
+
 /** Bounded-hop WEIGHTED shortest paths (distributed Bellman–Ford /
   * min-plus iteration) over an edge list — the weighted sibling of
   * [[Bfs]]: hop counts answer "how far", weighted distances answer "how
@@ -15,20 +17,20 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: the min-collapsed edge list is cut once
   * ([[LocalGraph.cut]]). At most [[LocalGraph.MaxEdges]] edges are
-  * collected, with the seeds, and relaxed on the driver over adjacency
-  * arrays — a fixed job count at any hop bound, every sum a
-  * `Math.addExact` so an overflow throws as Spark's ANSI `+` does. Above
-  * the gate the rounds run as frontier relaxation: round r relaxes ONLY
-  * edges leaving nodes whose distance improved in round r−1 (the
-  * Bellman–Ford frontier optimization) — after the first rounds the
-  * frontier collapses to the active wavefront, so late rounds join a
-  * small table against the edge list instead of the whole visited set.
-  * Each round is one keyed join (frontier onto edges by src; AQE decides
-  * broadcast once the frontier shrinks) plus one min-aggregate whose
-  * partial aggregation absorbs hub skew map-side. Frontiers and distances
-  * are lineage-cut per round, so plan depth is constant at any hop bound.
-  * The driver rounds relax the same frontier, so both paths compute the
-  * same sums.
+  * collected, by the same job that makes the cut, with the seeds, and
+  * relaxed on the driver over adjacency arrays — a fixed job count at any
+  * hop bound, every sum a `Math.addExact` so an overflow throws as Spark's
+  * ANSI `+` does. Above the gate the rounds run as frontier relaxation:
+  * round r relaxes ONLY edges leaving nodes whose distance improved in
+  * round r−1 (the Bellman–Ford frontier optimization) — after the first
+  * rounds the frontier collapses to the active wavefront, so late rounds
+  * join a small table against the edge list instead of the whole visited
+  * set. Each round is one keyed join (frontier onto edges by src; AQE
+  * decides broadcast once the frontier shrinks) plus one min-aggregate
+  * whose partial aggregation absorbs hub skew map-side. Frontiers and
+  * distances are lineage-cut per round, so plan depth is constant at any
+  * hop bound. The driver rounds relax the same frontier, so both paths
+  * compute the same sums.
   *
   * EXACTNESS: weights cast to BIGINT and distances are exact integer
   * sums/mins — commutative, engine-independent, bit-identical under any
@@ -58,7 +60,7 @@ object ShortestPaths {
   private[graft] def boundedDistancesDistributed(edges: DataFrame,
       seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    loop(prepare(edges).localCheckpoint(true), seeds, maxHops)
+    loop(prepare(edges).transform(Cut.large), seeds, maxHops)
   }
 
   private def prepare(edges: DataFrame): DataFrame = edges
@@ -76,7 +78,7 @@ object ShortestPaths {
 
   private def loop(e: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     var dist = seedNodes(seeds).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
+      .withColumn("dist", lit(0L)).transform(Cut.large)
     var frontier = dist
     var h = 0
     while (h < maxHops && !frontier.isEmpty) {
@@ -86,12 +88,12 @@ object ShortestPaths {
         .groupBy("node").agg(min("dist").as("dist"))
       val next = dist.unionByName(cand)
         .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
+        .transform(Cut.large)
       // a node is frontier iff its distance strictly improved this round
       frontier = next.as("n").join(dist.as("p"), Seq("node"), "left")
         .where(col("p.dist").isNull || col("n.dist") < col("p.dist"))
         .select(col("node"), col("n.dist").as("dist"))
-        .localCheckpoint(true)
+        .transform(Cut.large)
       dist = next
       h += 1
     }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{functions}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** Triangle statistics over an undirected graph — the standard
   * web/social-graph cohesion signals (clustering, spam-farm and
   * link-ring detection on crawl link graphs).
@@ -37,7 +39,7 @@ object Triangles {
     // canonical undirected edge set, materialized once: degree, orient
     // and the closing join all reuse it instead of replaying upstream
     val und = e0.select(least(col("s"), col("d")).as("a"),
-      greatest(col("s"), col("d")).as("b")).distinct().localCheckpoint(true)
+      greatest(col("s"), col("d")).as("b")).distinct().transform(Cut.large)
     val deg = und.select(col("a").as("n"))
       .union(und.select(col("b").as("n")))
       .groupBy("n").agg(functions.count(lit(1)).as("deg"))
@@ -56,7 +58,7 @@ object Triangles {
         // THE SAME total order as the orientation, so the closing edge
         // of a wedge (v, w) is known to be oriented v→w
         when(aLess, key("db", "b")).otherwise(key("da", "a")).as("vkey"))
-      .localCheckpoint(true)
+      .transform(Cut.large)
     val wedges = o.as("x").join(o.as("y"),
         col("x.u") === col("y.u") && col("x.vkey") < col("y.vkey"))
       .select(col("x.u").as("u"), col("x.v").as("p"), col("y.v").as("q"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** Entity-link candidate re-ranking (north star: "batched entity-link
   * scorer — trie/Aho-Corasick gazetteer broadcast + TF-IDF candidate
   * re-ranking"; generalizes the reference's deterministic tie-breaking
@@ -54,7 +56,7 @@ object Linker {
       .join(broadcast(idfT), "token")
     // ONE scan of the mentions input: both consumers below (the semi-join
     // url set and the candidate expansion) read this deduplicated
-    // projection, materialized once (localCheckpoint — the CC pattern).
+    // projection, materialized once (Cut.large — the CC pattern).
     // `mentions` is typically the UNmaterialized MentionDetector.detect
     // plan over the full corpus; two independent consumers would run the
     // whole broadcast-AC scan twice, and the candidate join's null-filter
@@ -62,7 +64,7 @@ object Linker {
     // checkpointed frame is mention-key-sized (distinct url×norm), tiny
     // next to the scan it saves.
     val mentionKeys = mentions.select(col("url"), col("norm")).distinct()
-      .localCheckpoint(true)
+      .transform(Cut.large)
     // prune BEFORE tokenizing: only pages that actually carry an ambiguous
     // mention matter, and the token explode + distinct below is the
     // dominant shuffle — the semi-join shrinks it from corpus-proportional

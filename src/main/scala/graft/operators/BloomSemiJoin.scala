@@ -62,11 +62,9 @@ object BloomSemiJoin {
     pos.groupBy(shiftright(col("p"), 5).as("word"))
       .agg(bit_or(call_function("shiftleft", lit(1L), pmod(col("p"), lit(32L)).cast("int")))
         .as("bits"))
-      // eager cut (r06): the bitmap is broadcast into BOTH position
-      // joins of prune() — each BroadcastExchange otherwise replans the
-      // whole build-side scan + union + aggregation. ≤ mBits/32 rows
-      // (8192 default) by construction, dimension-sized at any scale.
-      .localCheckpoint(true)
+      // one row per 32-bit word; broadcast into both position joins of
+      // prune()
+      .transform(Cut.small((mBits + 31) / 32))
   }
 
   /** Keep only probe rows whose key has BOTH Bloom bits set — a superset

@@ -38,19 +38,17 @@ object PrefixSum {
     val ranged = df
       .repartitionByRange(parts, col(orderCol))
       .withColumn("_pid", spark_partition_id())
-    // localCheckpoint: the ranged frame feeds BOTH the row-level cums and
-    // the per-partition totals; repartitionByRange SAMPLES its child, so
-    // two independent executions could pick different boundaries (the
-    // Packing/KeyAssigner boundary-stability note). LAZY (r06): the first
+    // Cut: the ranged frame feeds BOTH the row-level cums and the
+    // per-partition totals; repartitionByRange SAMPLES its child, so two
+    // independent executions could pick different boundaries (the
+    // Packing/KeyAssigner boundary-stability note). Deferred: the first
     // consuming job materializes the blocks and every later consumer
-    // reads them — boundaries are still fixed exactly once (a lost block
-    // on truncated lineage fails loudly, never resamples), but the
-    // dedicated eager-materialization job disappears. With ~45 PrefixSum
-    // invocations across the suite that job was pure per-call overhead.
+    // reads them, so boundaries are still fixed exactly once with no
+    // dedicated materialization job per call.
     val w = Window.partitionBy("_pid").orderBy(orderCol)
     val local = valueCols.foldLeft(ranged) { (d, v) =>
       d.withColumn(s"${v}_lcum", sum(col(v).cast("long")).over(w))
-    }.localCheckpoint(eager = false)
+    }.transform(Cut.deferred)
     val totals = local.groupBy("_pid")
       .agg(sum(col(valueCols.head).cast("long")).as("_t0"),
         valueCols.drop(1).zipWithIndex.map { case (v, i) =>

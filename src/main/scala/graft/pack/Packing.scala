@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** Sequence packing for LLM pre-training: concatenate documents in a
   * deterministic order (ascending id) into one token stream and chunk it
   * into fixed-size context windows — the concat-then-chunk packing used
@@ -45,7 +47,7 @@ object Packing {
       .select(col(idCol), lenCol.cast("long").as("n_tokens"))
       .repartitionByRange(parts, col(idCol))
       .withColumn("_pid", spark_partition_id())
-    // localCheckpoint for the same boundary-stability reason as
+    // Cut for the same boundary-stability reason as
     // KeyAssigner.assign: the ranged frame feeds BOTH the output rows and
     // the per-partition totals, and repartitionByRange SAMPLES its child —
     // two independent executions could pick different boundaries, pairing
@@ -53,7 +55,7 @@ object Packing {
     val local = ranged
       .withColumn("_cum", sum("n_tokens")
         .over(Window.partitionBy("_pid").orderBy(col(idCol))))
-      .localCheckpoint(true)
+      .transform(Cut.large)
     import spark.implicits._
     // cross-partition offsets: prefix sum over the P-row total vector in
     // an explicit single partition (P = shuffle partitions — trivial at

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.StatCols.pln
+import graft.operators.{Cut, Spread}
 
 /** Normalized pointwise mutual information over document co-occurrence
   * (Bouma, GSCL 2009) — the collocation/term-association score behind
@@ -60,7 +61,7 @@ object Npmi {
     val sizes = inVocab.groupBy("doc").agg(count(lit(1)).as("sz"))
       .where(col("sz") <= maxTermsPerDoc)
     val kept = inVocab.join(sizes.select("doc"), Seq("doc"), "left_semi")
-      .localCheckpoint(true) // feeds N, the term counts, and the pair join
+      .transform(Cut.large) // feeds N, the term counts, and the pair join
     // N as a broadcast 1-row aggregate, not a driver-side collect — the
     // whole score stays one lazy plan
     val nDocs = broadcast(kept.agg(countDistinct("doc").as("nd")))
@@ -75,7 +76,7 @@ object Npmi {
     // explode multiplies work (F2).
     kept.groupBy("doc")
       .agg(sort_array(collect_list(col("term"))).as("ts"))
-      .repartition(presence.sparkSession.sparkContext.defaultParallelism)
+      .transform(Spread.orderFree)
       // two chained codegen Generates instead of a nested-HOF combo
       // build (HOFs are CodegenFallback); identical pair multiset
       .select(col("ts"), posexplode(col("ts")).as(Seq("_i", "term_a")))

@@ -9,6 +9,7 @@ import graft.extract.PageSynth
 import graft.functions.TextFunctions
 import graft.link.{Gazetteer, GazEntry, MentionDetector, TripleExtractor}
 import graft.multimodal.Multimodal
+import graft.operators.{Cut, Spread}
 import graft.similarity.Ann
 
 import QueryDef.t
@@ -37,7 +38,7 @@ object Advanced {
     * materialized. Stale roots from earlier processes are janitored
     * age-based (SourceSynth.cleanStaleRoots — exit hooks would delete the
     * tables before the driver's DuckDB reads them). */
-  private val KgRoot = {
+  private[graft] val KgRoot = {
     graft.sources.SourceSynth.cleanStaleRoots()
     s"/tmp/graft_kg_oracle_${ProcessHandle.current().pid()}"
   }
@@ -45,7 +46,7 @@ object Advanced {
   /** Separate root for the snapshot-CDC query so its v1→v2 flip-flop never
     * perturbs q52's checkpointed pipeline. The pid stays the LAST `_`
     * token — the janitor's owner-liveness check parses it from there. */
-  private val CdcRoot =
+  private[graft] val CdcRoot =
     s"/tmp/graft_kg_oracle_cdc_${ProcessHandle.current().pid()}"
 
   /** documents ∪ shifted copy — guaranteed exact-duplicate clusters for the
@@ -64,12 +65,11 @@ object Advanced {
     // through interpreted HOF shingle work SEVERAL times, and each
     // consumer otherwise runs on the one scan task — profiled at 3×
     // ~2-3 s single-task stages at sf0.1. A 100 TB corpus has thousands
-    // of natural splits (the q83/q86 rationale); every consumer below
-    // groups by content hash / shingle, so row order is irrelevant.
+    // of natural splits (the q83/q86 rationale).
     docs.unionByName(
       docs.crossJoin(broadcast(mx))
         .select((col("doc_id") + col("_mx") + 1L).as("doc_id"), col("text")))
-      .repartition(s.sparkContext.defaultParallelism)
+      .transform(Spread.orderFree)
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -134,7 +134,7 @@ object Advanced {
         .select(col("l_partkey"), col("l_suppkey"))
         .groupBy("l_partkey")
         .agg(sort_array(collect_set(col("l_suppkey"))).as("supps"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Spread.orderFree)
       // two chained codegen Generates instead of the nested-HOF combo
       // build (r06): HOFs are CodegenFallback; identical pair multiset
       val edges = grouped
@@ -272,7 +272,7 @@ object Advanced {
     // xxhash 64-bit simhash stays the scale default (DedupSpec).
     QueryDef("q35_simhash", (s, d) => {
       val sigs = Dedup.simhashPortable(dupDocs(s, d), "doc_id", "text")
-        .localCheckpoint(true) // keep the signature aggregate out of the
+        .transform(Cut.large) // keep the signature aggregate out of the
                                // band projections (plan-fusion recompute)
       Dedup.simhashCandidates(sigs, bands = 2, bitsPerBand = 16,
         bucketCap = 0)
@@ -346,7 +346,7 @@ object Advanced {
       // spread the single-split fixture before the per-row PNG
       // encode/decode/resize (profiled 1.6 s on ONE task) — q75 rationale
       t(s, d, "documents").select(col("doc_id"))
-        .repartition(s.sparkContext.defaultParallelism).as[Long].map { id =>
+        .transform(Spread.orderFree).as[Long].map { id =>
         val w = 8 + (id % 24).toInt
         val h = 8 + (id % 16).toInt
         val png = Multimodal.syntheticPng(id, w, h)
@@ -615,9 +615,9 @@ object Advanced {
       // map work (container mux, ImageIO per frame — by far the
       // heaviest per-row cost in the suite) — on one scan task it all
       // ran on a single core; a real media corpus arrives in thousands
-      // of splits (the q83/q86 rationale). Per-row output → order-free.
+      // of splits (the q83/q86 rationale).
       val media = t(s, d, "documents").select(col("doc_id"))
-        .repartition(s.sparkContext.defaultParallelism).as[Long].map {
+        .transform(Spread.orderFree).as[Long].map {
         id => Multimodal.MediaRow(id, "video", Multimodal.syntheticVideo(id),
           8, 6, 0)
       }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.StatCols.{dbl, pln, sumInOrder}
+import graft.operators.{Cut, PrefixSum, Spread}
 
 import QueryDef.{dailyEvents, docNodes, kmRiskSets, t}
 
@@ -581,10 +582,9 @@ object Analytics {
       val keys = t(s, d, "orders")
         .where(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey").as("k"))
-        // eager cut (r06): keys feeds the bitmap build (twice, one per
-        // bit position) AND the exact-join broadcast — three replans of
-        // the filtered orders scan without it; selective by design.
-        .localCheckpoint(true)
+        // keys feeds the bitmap build (once per bit position) and the
+        // exact-join broadcast
+        .transform(Cut.large)
       val bloom = BloomSemiJoin.build(keys, "k")
       val pruned = BloomSemiJoin.prune(
         t(s, d, "lineitem").select(col("l_returnflag"), col("l_orderkey"),
@@ -900,10 +900,10 @@ object Analytics {
     // that make two engines' sketches mergeable — hash-mismatches.
     QueryDef("q142_cms", (s, d) => {
       // spread the single-split fixture before the per-row md5 fan-out
-      // (F1, the q223 idiom): key-only rows, counts are order-free
+      // (F1, the q223 idiom)
       graft.stats.CountMin.sketch(
         t(s, d, "lineitem").select(col("l_partkey"))
-          .repartition(s.sparkContext.defaultParallelism),
+          .transform(Spread.orderFree),
         col("l_partkey"), depth = 2, width = 1024)
     }, Some("""
       WITH k AS (SELECT CAST(l_partkey AS VARCHAR) AS k FROM lineitem),
@@ -1124,7 +1124,7 @@ object Analytics {
       // the representative shape (the q83/q86 rationale).
       graft.dedup.Containment.containmentPairs(
         t(s, d, "documents")
-          .repartition(s.sparkContext.defaultParallelism),
+          .transform(Spread.orderFree),
         "doc_id", split(col("text"), " "),
         w = 3, maxDf = 20, threshold = 0.2)
     }, Some("""
@@ -1614,7 +1614,8 @@ object Analytics {
         .select(col("x").as("src"), ((col("x") * 5 + 3) % 331).as("dst"))
         .unionByName(nodes.select(col("x").as("src"),
           ((col("x") * 17 + 2) % 331).as("dst")))
-        .distinct().localCheckpoint(true) // feeds both counts + the semi
+        // two out-edges per node; feeds both counts and the semi-join
+        .distinct().transform(Cut.small(2 * 331))
       val rev = e.select(col("dst").as("src"), col("src").as("dst"))
       val recip = e.join(rev, Seq("src", "dst"), "left_semi")
       e.agg(count(lit(1)).as("n_edges"))
@@ -1961,8 +1962,7 @@ object Analytics {
         sum(when(col("t") === "purchase", 1L).otherwise(0L)).as("c1"),
         sum(when(col("t") === "click", 1L).otherwise(0L)).as("c2"))
       val tot = broadcast(c.agg(sum("c1").as("n1"), sum("c2").as("n2")))
-      graft.operators.PrefixSum
-        .withRunningTotals(c, "v", Seq("c1", "c2"))
+      PrefixSum.withRunningTotals(c, "v", Seq("c1", "c2"))
         .withColumnRenamed("c1_cum", "cum1")
         .withColumnRenamed("c2_cum", "cum2")
         .crossJoin(tot)
@@ -2341,7 +2341,7 @@ object Analytics {
             .as("np"),
           sum(when(col("o_orderstatus") === "F", 0L).otherwise(1L))
             .as("nn"))
-      graft.operators.PrefixSum.withRunningTotals(cells, "s", Seq("nn"))
+      PrefixSum.withRunningTotals(cells, "s", Seq("nn"))
         .agg(sum("np").as("n_pos"), sum("nn").as("n_neg"),
           sum(col("np") * (lit(2L) * (col("nn_cum") - col("nn"))
             + col("nn"))).as("u2"))
@@ -2385,8 +2385,7 @@ object Analytics {
       def rankMap(vcol: String): org.apache.spark.sql.DataFrame = {
         val cells = rows.groupBy(col(vcol).as("v"))
           .agg(count(lit(1)).as("cnt"))
-        graft.operators.PrefixSum
-          .withRunningTotals(cells, "v", Seq("cnt"))
+        PrefixSum.withRunningTotals(cells, "v", Seq("cnt"))
           .select(col("v").as(vcol),
             (lit(2L) * col("cnt_cum") - col("cnt") + 1L).as(s"r2$vcol"))
       }
@@ -2568,7 +2567,7 @@ object Analytics {
         // exchange by BYTES, but the pair/triple explode multiplies work —
         // an explicit repartition (exempt from AQE coalescing) runs the
         // expansion at cluster width (profiled: 4 tasks → 32 at sf0.1)
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Spread.orderFree)
       def tail(c: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
         slice(c, i + lit(2), size(c))
       // chained codegen Generates instead of nested-HOF combo builds
@@ -2621,16 +2620,14 @@ object Analytics {
           sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L))
             .as("resp"))
       val tot = cells.agg(sum("n").as("nn"), sum("resp").as("tresp"))
-      val dec = graft.operators.PrefixSum
-        .withRunningTotals(cells, "sc", Seq("n"))
+      val dec = PrefixSum.withRunningTotals(cells, "sc", Seq("n"))
         .crossJoin(broadcast(tot))
         .select(expr("(10 * (nn - n_cum)) DIV nn").as("dec"),
           col("n"), col("resp"), col("nn"), col("tresp"))
         .groupBy("dec", "nn", "tresp")
         .agg(sum("n").as("dn"), sum("resp").as("dresp"))
-        // eager cut (r06): the 10-row decile table self-joins for the
-        // cumulative sums — both sides replanned the whole CDF without it.
-        .localCheckpoint(true)
+        // one row per decile; self-joins for the cumulative sums
+        .transform(Cut.small(10))
       val b = dec.select(col("dec").as("bdec"), col("dn").as("bn"),
         col("dresp").as("bresp"))
       dec.join(b, col("bdec") <= col("dec"))
@@ -2806,8 +2803,7 @@ object Analytics {
       val cells = perDoc.join(firsts, Seq("doc_id"), "left")
         .select(col("doc_id"), col("ntok"),
           coalesce(col("ntype"), lit(0L)).as("ntype"))
-      graft.operators.PrefixSum
-        .withRunningTotals(cells, "doc_id", Seq("ntok", "ntype"))
+      PrefixSum.withRunningTotals(cells, "doc_id", Seq("ntok", "ntype"))
         .select(col("doc_id"), col("ntype").as("new_types"),
           col("ntok_cum").as("toks_cum"), col("ntype_cum").as("vocab"))
     }, Some("""
@@ -3017,8 +3013,8 @@ object Analytics {
       val bought = t(s, d, "lineitem")
         // spread the single-split scan: the broadcast-join probes +
         // distinct partial-agg over the fact rows ran on one task
-        // (profiled ~0.9 s) — q83/q86 rationale, order-free downstream
-        .repartition(s.sparkContext.defaultParallelism)
+        // (profiled ~0.9 s) — q83/q86 rationale
+        .transform(Spread.orderFree)
         .join(t(s, d, "orders"),
           col("l_orderkey") === col("o_orderkey"))
         .join(t(s, d, "part"), col("l_partkey") === col("p_partkey"))
@@ -3026,10 +3022,8 @@ object Analytics {
           col("p_brand").as("brand"), col("p_type").as("ptype"),
           col("p_size").as("psize"))
         .distinct()
-        // eager cut (r06): consumed by the blocks build AND the anti-join
-        // side — the 3-table join + distinct re-executed twice (profiled
-        // 2 × ~1 s exchange-writing stages)
-        .localCheckpoint(true)
+        // feeds the blocks build and the anti-join side
+        .transform(Cut.large)
       val blocks = bought.select("cust", "brand", "ptype", "psize")
         .distinct()
       val cands = blocks.join(
@@ -3201,11 +3195,9 @@ object Analytics {
           .where(col("o_orderstatus") === status)
           .groupBy(col("o_totalprice").as("sc"))
           .agg(count(lit(1)).as("n"))
-          // eager cut (r06): cells feeds the CDF and the decile targets
-          // — two replans of the orders aggregation per side without it
-          .localCheckpoint(true)
-        val cum = graft.operators.PrefixSum
-          .withRunningTotals(cells, "sc", Seq("n"))
+          // cells feeds the CDF and the decile targets
+          .transform(Cut.large)
+        val cum = PrefixSum.withRunningTotals(cells, "sc", Seq("n"))
         val targets = cells.agg(sum("n").as("nn"))
           .select(col("nn"), explode(sequence(lit(1), lit(9))).as("k0"))
           .select(col("k0").cast("long").as("k"),
@@ -3451,7 +3443,7 @@ object Analytics {
         // the reduce (profiled 2 × ~0.4 s single-task).
         .repartition(s.sparkContext.defaultParallelism, col("h"))
         .groupBy("h").agg(max("ia").as("ia"), max("ib").as("ib"))
-        .localCheckpoint(true)
+        .transform(Cut.large)
       val sk = tagged.orderBy("h").limit(64)
       val kk = sk.agg(count(lit(1)).as("k"), max("h").as("hk"),
         sum(col("ia") * col("ib")).as("rho"))

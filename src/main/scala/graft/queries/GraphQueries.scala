@@ -68,7 +68,7 @@ object GraphQueries {
     *
     * Deliberately NOT KeyAssigner.assign (the general dense-key path,
     * identical 1..N-in-sort-order semantics): assign eagerly materializes
-    * its range partitioning (localCheckpoint) to make key boundaries a
+    * its range partitioning (a cut) to make key boundaries a
     * fact, which would launch a job at query-BUILD time for every
     * tpch-graph QueryDef. The ≤-join stays lazy and is bounded by the
     * fixed 6-value p_type domain; use assign for any unbounded domain. */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.StatCols.{dbl, pln, sumInOrder}
+import graft.operators.{Cut, PrefixSum, Spread}
 
 import QueryDef.{dailyEvents, docGraph, docNodes, kmRiskSets, lifetimes,
   returnFlagQuantities, t}
@@ -137,8 +138,7 @@ object Inference {
       val cells = ev.groupBy("v")
         .agg(sum("ia").as("a"), (count(lit(1)) - sum("ia")).as("b"))
         .withColumn("t", col("a") + col("b"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "v", Seq("t"))
+      val cum = PrefixSum.withRunningTotals(cells, "v", Seq("t"))
       val r2a = cum
         .select((col("a") * (lit(2L) * (col("t_cum") - col("t"))
           + col("t") + lit(1L))).as("m"))
@@ -248,22 +248,18 @@ object Inference {
         .where(col("o_orderstatus") === status)
         .groupBy(col("o_totalprice").as("v"))
         .agg(count(lit(1)).as("c"))
-      // eager cut (r06): ref feeds the CDF, the decile targets and its
-      // own binning pass — three replans of the orders aggregation
-      // without it.
-      val ref = cellsOf("F").localCheckpoint(true)
+      // ref feeds the CDF, the decile targets and its own binning pass
+      val ref = cellsOf("F").transform(Cut.large)
       val cmp = cellsOf("O")
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(ref, "v", Seq("c"))
+      val cum = PrefixSum.withRunningTotals(ref, "v", Seq("c"))
       val targets = ref.agg(sum("c").as("nn"))
         .select(col("nn"), explode(sequence(lit(1), lit(9))).as("k0"))
         .select(expr("((nn - 1) * k0) DIV 10 + 1").as("rk"))
       val edges = cum.join(broadcast(targets),
           col("rk") > col("c_cum") - col("c") && col("rk") <= col("c_cum"))
         .agg(sort_array(collect_list(col("v"))).as("es"))
-        // eager cut (r06): 1-row decile-edge list, broadcast into BOTH
-        // binned passes — each broadcast otherwise replans the whole CDF.
-        .localCheckpoint(true)
+        // one row, broadcast into both binned passes
+        .transform(Cut.small(1))
       def binned(cells: org.apache.spark.sql.DataFrame, out: String) =
         cells.crossJoin(broadcast(edges))
           .select(aggregate(col("es"), lit(0L), (acc, e) =>
@@ -275,9 +271,9 @@ object Inference {
       val perBin = binned(ref, "a")
         .join(binned(cmp, "b"), Seq("bin"), "left")
         .select(col("bin"), col("a"), coalesce(col("b"), lit(0L)).as("b"))
-        // eager cut (r06): 10 rows feeding tots, the term rows and the
-        // final fold — two replans of both binning passes without it.
-        .localCheckpoint(true)
+        // one row per decile bin; feeds tots, the term rows and the
+        // final fold
+        .transform(Cut.small(10))
       val tots = perBin.agg(sum("a").as("np"), sum("b").as("nq"),
         sum(when(col("b") === 0, 1L).otherwise(0L)).as("zero_bins"))
       val term = when(col("b") > 0,
@@ -568,20 +564,17 @@ object Inference {
       val etv = t(s, d, "events")
         .groupBy(col("value").as("v"), col("event_type").as("et"))
         .agg(count(lit(1)).as("c"))
-        // eager cut (r06): etv feeds tv (→ cum + tot) and rj — the
-        // events aggregation otherwise replans ~4×. Cell-sized.
-        .localCheckpoint(true)
+        // etv feeds tv (cum and tot) and rj
+        .transform(Cut.large)
       val tv = etv.groupBy("v").agg(sum("c").as("t"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(tv, "v", Seq("t"))
+      val cum = PrefixSum.withRunningTotals(tv, "v", Seq("t"))
         .select(col("v"), col("t"), col("t_cum"))
       val mid2 = lit(2L) * (col("t_cum") - col("t")) + col("t") + lit(1L)
       val rj = etv.join(cum, Seq("v"))
         .groupBy("et")
         .agg(sum(col("c") * mid2).as("r2"), sum("c").as("nj"))
-        // eager cut (r06): rj (k rows) feeds every downstream consumer
-        // — the rank join replans per consumer without it.
-        .localCheckpoint(true)
+        // one row per event type; feeds every downstream consumer
+        .transform(Cut.small(5))
       val tot = tv.agg(sum("t").as("n"),
         sum(col("t") * col("t") * col("t") - col("t")).as("tt"))
       val nD = col("n").cast("double")
@@ -719,10 +712,8 @@ object Inference {
         .groupBy(col("l_returnflag").as("g"),
           col("l_quantity").cast("long").as("q"))
         .agg(count(lit(1)).as("c"))
-        // eager cut (r06): the ≤(flags×quantities) cell grid feeds
-        // several rank/moment consumers — the lineitem aggregation
-        // replans per consumer without it.
-        .localCheckpoint(true)
+        // return flags × quantities; feeds the rank/moment consumers
+        .transform(Cut.small(3 * 50))
       val w = Window.partitionBy("g").orderBy("q")
         .rowsBetween(Window.unboundedPreceding, 0)
       val tot = cells.groupBy("g").agg(sum("c").as("nj"))
@@ -823,13 +814,12 @@ object Inference {
       // (reps/16 digests + 16 nibble decodes per row are the dominant
       // cost and run BEFORE the first exchange — on one scan task they
       // serialize on a single core; a 100 TB scan has thousands of
-      // natural splits, the q83/q86 rationale). Row order is irrelevant:
-      // every aggregate below is an exact integer partial sum.
+      // natural splits, the q83/q86 rationale).
       val rows = t(s, d, "lineitem")
         .select(col("l_quantity").cast("long").as("x"),
           concat_ws(":", col("l_orderkey"), col("l_linenumber"))
             .as("rk"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Spread.orderFree)
       // ONE digest feeds 16 replicates (its 16 hex nibbles), so the
       // row×replicate fan-out computes reps/16 md5 calls per row, not
       // reps — at 32 replicates a 16× cut in the dominant hash cost
@@ -916,14 +906,13 @@ object Inference {
     QueryDef("q224_permutation_test", (s, d) => {
       val perms = 32
       // spread the single-split fixture before the per-row md5 fan-out —
-      // same rationale (and same exact-integer-sum order independence)
-      // as q223 above
+      // same rationale as q223 above
       val rows = t(s, d, "lineitem")
         .select(col("l_quantity").cast("long").as("x"),
           when(col("l_returnflag") === "R", 1L).otherwise(0L).as("r"),
           concat_ws(":", col("l_orderkey"), col("l_linenumber"))
             .as("rk"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Spread.orderFree)
       val obs = rows.agg(count(lit(1)).as("n"), sum("x").as("ss"),
         sum("r").as("n1"), sum(col("r") * col("x")).as("s1"))
       // one digest feeds 16 permutations via its nibbles (the q223
@@ -1497,11 +1486,9 @@ object Inference {
         .agg(count(lit(1)).as("n"),
           sum(when(col("o_orderstatus") === "F", 1L).otherwise(0L))
             .as("a"))
-        // eager cut (r06): cells feeds the CDF and the totals — two
-        // replans of the orders aggregation without it.
-        .localCheckpoint(true)
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "v", Seq("n", "a"))
+        // cells feeds the CDF and the totals
+        .transform(Cut.large)
+      val cum = PrefixSum.withRunningTotals(cells, "v", Seq("n", "a"))
       val tot = cells.agg(sum("n").as("nn"), sum("a").as("aa"))
       // class-entropy mass of a node, times N: Σ_class c·(ln n − ln c)
       def mass(cls: Column, n: Column) =
@@ -1665,10 +1652,8 @@ object Inference {
         .groupBy(col("l_returnflag").as("g"),
           col("l_quantity").cast("long").as("q"))
         .agg(count(lit(1)).as("c"))
-        // eager cut (r06): the ≤(flags×quantities) cell grid feeds
-        // several rank/moment consumers — the lineitem aggregation
-        // replans per consumer without it.
-        .localCheckpoint(true)
+        // return flags × quantities; feeds the rank/moment consumers
+        .transform(Cut.small(3 * 50))
       val w = Window.partitionBy("g").orderBy("q")
         .rowsBetween(Window.unboundedPreceding, 0)
       val tot = cells.groupBy("g").agg(sum("c").as("nj"))
@@ -1916,8 +1901,7 @@ object Inference {
         .select(conv(substring(md5(col("user_id").cast("string")),
           1, 8), 16, 10).cast("long").as("h"))
         .groupBy("h").agg(count(lit(1)).as("c"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "h", Seq("c"))
+      val cum = PrefixSum.withRunningTotals(cells, "h", Seq("c"))
       val tot = cells.agg(sum("c").as("n"))
       cum.crossJoin(broadcast(tot))
         .select(col("n"),
@@ -2194,8 +2178,7 @@ object Inference {
         .groupBy(col("l_quantity").cast("long").as("q"))
         .agg(count(lit(1)).as("c"))
         .withColumn("qs", col("q") * col("c"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "q", Seq("c", "qs"))
+      val cum = PrefixSum.withRunningTotals(cells, "q", Seq("c", "qs"))
       val tot = cells.agg(sum("c").as("n"), sum("qs").as("ts"))
       val targets = tot
         .select(col("n"), col("ts"),
@@ -2435,10 +2418,8 @@ object Inference {
           when(col("o_orderpriority") === "1-URGENT", 1L).otherwise(0L)
             .as("e"),
           when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("o"))
-        // eager cut (r06): base feeds one stratified pass per
-        // stratifier — three replans of the orders⋈customer⋈nation
-        // join without it.
-        .localCheckpoint(true)
+        // base feeds one stratified pass per stratifier
+        .transform(Cut.large)
       def detect(strat: String) = {
         val cells = base.groupBy(col(strat).as("stratum"))
           .agg(sum(col("e") * col("o")).as("a"),
@@ -2599,11 +2580,9 @@ object Inference {
             .otherwise(0L)).as("e_cnt"))
         .withColumn("p_value",
           (col("e_cnt") + 1).cast("double") / lit((perms + 1).toDouble))
-        // eager cut (r06): this 25-row test table feeds FIVE consumers
-        // (rank self-join both sides, m, kstar, the final select) — each
-        // otherwise replans the whole orders⋈customer + ×16 permutation
-        // explode upstream (profiled ~5 re-executions). Dimension-sized.
-        .localCheckpoint(true)
+        // one row per nation; feeds the rank self-join (both sides), m,
+        // kstar and the final select
+        .transform(Cut.small(25))
       // integer rank by (e_cnt, nk) via a bounded m×m self-join
       val rks = tests.select(col("nk").as("nk2"), col("e_cnt").as("e2"))
       val ranked = tests.join(rks,
@@ -2923,10 +2902,8 @@ object Inference {
             .as("tr"),
           coalesce(col("nlines"), lit(0L)).as("nlines"),
           coalesce(col("totqty"), lit(0L)).as("totqty"))
-        // eager cut (r06): base feeds one grouped scan per covariate —
-        // the lineitem-per-order aggregation + orders join otherwise
-        // replans once per smdOf leg.
-        .localCheckpoint(true)
+        // base feeds one grouped scan per covariate
+        .transform(Cut.large)
       def smdOf(cn: String) = {
         val g = base.groupBy("tr")
           .agg(count(lit(1)).as("n"), sum(cn).as("sx"),
@@ -3787,10 +3764,9 @@ object Inference {
         .groupBy(col("c_nationkey").as("b"),
           col("o_orderpriority").as("tr"))
         .agg(count(lit(1)).as("cnt"))
-        // eager cut (r06): this 125-cell count table is re-derived by
-        // blocks/treats/grid and every rank/moment consumer below —
-        // without it the orders⋈customer aggregation replans ~10×.
-        .localCheckpoint(true)
+        // nations × priorities; feeds blocks/treats/grid and every
+        // rank/moment consumer
+        .transform(Cut.small(25 * 5))
       val blocks = counts.select("b").distinct()
       val treats = counts.select("tr").distinct()
       val grid = blocks.crossJoin(treats)
@@ -4118,10 +4094,9 @@ object Inference {
         .groupBy(col("c_nationkey").as("b"),
           col("o_orderpriority").as("tr"))
         .agg(count(lit(1)).as("cnt"))
-        // eager cut (r06): this 125-cell count table is re-derived by
-        // blocks/treats/grid and every rank/moment consumer below —
-        // without it the orders⋈customer aggregation replans ~10×.
-        .localCheckpoint(true)
+        // nations × priorities; feeds blocks/treats/grid and every
+        // rank/moment consumer
+        .transform(Cut.small(25 * 5))
       val blocks = counts.select("b").distinct()
       val treats = counts.select("tr").distinct()
       val grid = blocks.crossJoin(treats)
@@ -4497,10 +4472,9 @@ object Inference {
         .groupBy(col("c_nationkey").as("b"),
           col("o_orderpriority").as("tr"))
         .agg(count(lit(1)).as("cnt"))
-        // eager cut (r06): this 125-cell count table is re-derived by
-        // blocks/treats/grid and every rank/moment consumer below —
-        // without it the orders⋈customer aggregation replans ~10×.
-        .localCheckpoint(true)
+        // nations × priorities; feeds blocks/treats/grid and every
+        // rank/moment consumer
+        .transform(Cut.small(25 * 5))
       val blocks = counts.select("b").distinct()
       val treats = counts.select("tr").distinct()
       val grid = blocks.crossJoin(treats)
@@ -4766,9 +4740,8 @@ object Inference {
           col("lang").as("truth"))
       val conf = scored.groupBy("pred", "truth")
         .agg(count(lit(1)).as("cnt"))
-        // eager cut (r06): the ≤langs² confusion matrix feeds pm/tm/diag
-        // — three replans of the 3-regex langId corpus pass without it
-        .localCheckpoint(true)
+        // langId labels × langs; feeds pm/tm/diag
+        .transform(Cut.small(4 * 5))
       val pm = conf.groupBy(col("pred").as("label"))
         .agg(sum("cnt").as("pn"))
       val tm = conf.groupBy(col("truth").as("label"))
@@ -4913,9 +4886,8 @@ object Inference {
           col("lang").as("truth"))
         .groupBy("pred", "truth").agg(count(lit(1)).as("cnt"))
         .where(col("pred") =!= col("truth"))
-        // eager cut (r06): the ≤langs² confusion cells feed both
-        // triangle halves — the 3-regex langId corpus pass ran twice.
-        .localCheckpoint(true)
+        // langId labels × langs; feeds both triangle halves
+        .transform(Cut.small(4 * 5))
       val up = conf.where(col("pred") < col("truth"))
         .select(col("pred").as("i"), col("truth").as("j"),
           col("cnt").as("nij"))
@@ -5557,10 +5529,9 @@ object Inference {
           substring(col("o_orderpriority"), 1, 1).cast("int").as("g"))
         .join(v, col("o_orderkey") === col("l_orderkey"))
         .groupBy("g", "v").agg(count(lit(1)).as("cnt"))
-        // eager cut (r06): the g×v cell grid feeds the pair self-join
-        // (both sides) and the group sizes — three replans of the
-        // lineitem-per-order + orders join without it.
-        .localCheckpoint(true)
+        // the g×v cells feed the pair self-join (both sides) and the
+        // group sizes
+        .transform(Cut.large)
       val b = cells.select(col("g").as("gb"), col("v").as("vb"),
         col("cnt").as("cb"))
       val pair = cells.join(b, col("g") < col("gb"))
@@ -5714,16 +5685,14 @@ object Inference {
     QueryDef("q287_weighted_kappa", (s, d) => {
       val per = t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("cnt"), max(col("o_totalprice")).as("mx"))
-        // eager cut (r06): both quintile cell tables + the rated join
-        // consume this — q352 rationale
-        .localCheckpoint(true)
+        // per feeds both quintile cell tables and the rated join
+        .transform(Cut.large)
       def quintiles(values: org.apache.spark.sql.DataFrame,
           vc: String, out: String) = {
         val cells = values.groupBy(col(vc).as("sc"))
           .agg(count(lit(1)).as("n"))
         val nn = cells.agg(sum("n").as("nn"))
-        graft.operators.PrefixSum
-          .withRunningTotals(cells, "sc", Seq("n"))
+        PrefixSum.withRunningTotals(cells, "sc", Seq("n"))
           .crossJoin(broadcast(nn))
           .select(col("sc").as(vc),
             expr("(5 * (nn - n_cum)) DIV nn").as(out))
@@ -5921,9 +5890,8 @@ object Inference {
           col("s_nationkey").as("sn"))),
           col("l_suppkey") === col("s_suppkey"))
         .groupBy("cn", "sn").agg(count(lit(1)).as("c"))
-        // eager cut (r06): the 25×25 mixing matrix feeds tot/outs/ins —
-        // three replans of the three-table fact join without it.
-        .localCheckpoint(true)
+        // nations × nations; feeds tot/outs/ins
+        .transform(Cut.small(25 * 25))
       val tot = cells.agg(
         coalesce(sum(col("c")), lit(0L)).as("e_tot"),
         coalesce(sum(when(col("cn") === col("sn"), col("c"))
@@ -6045,19 +6013,18 @@ object Inference {
     QueryDef("q291_katz3", (s, d) => {
       val nodes = docNodes(s, d)
       val edges = docGraph(s, d)
-        // eager cut (r06): the ≤2·389-row edge list feeds w1 and both
-        // push steps — the documents scan + distinct replans ~7× across
-        // the katz chain without it; the w shells are cut for the same
-        // reason (each feeds the next push AND the final join).
-        .localCheckpoint(true)
+        // two out-edges per node; feeds w1 and both push steps
+        .transform(Cut.small(2 * 389))
       val w1 = edges.groupBy(col("dst").as("node"))
         .agg(count(lit(1)).as("w"))
-        .localCheckpoint(true)
+        // one row per node, as is w2; each feeds the next push and the
+        // final join
+        .transform(Cut.small(389))
       def push(w: org.apache.spark.sql.DataFrame) = edges
         .join(w.select(col("node").as("src"), col("w").as("wu")),
           Seq("src"))
         .groupBy(col("dst").as("node")).agg(sum("wu").as("w"))
-      val w2 = push(w1).localCheckpoint(true)
+      val w2 = push(w1).transform(Cut.small(389))
       val w3 = push(w2)
       nodes.select(col("x").as("node"))
         .join(w1.select(col("node"), col("w").as("w1")), Seq("node"),
@@ -6274,8 +6241,7 @@ object Inference {
       val cells = t(s, d, "orders")
         .groupBy(col("o_totalprice").as("v"))
         .agg(count(lit(1)).as("c"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "v", Seq("c"))
+      val cum = PrefixSum.withRunningTotals(cells, "v", Seq("c"))
       val nn = cells.agg(coalesce(sum(col("c")), lit(0L)).as("nn"))
         .select(col("nn"), expr("(nn + 1) DIV 2").as("rk"))
       val med = cum.crossJoin(broadcast(nn))
@@ -6292,10 +6258,9 @@ object Inference {
         .groupBy("g", "med", "nn")
         .agg(coalesce(sum(col("above")), lit(0L)).as("a"),
           coalesce(sum(lit(1L) - col("above")), lit(0L)).as("b"))
-        // eager cut (r06): the 5-row split table feeds margins AND the
-        // final chi-square join — without it the orders scan + median
-        // machinery upstream replans twice. Dimension-sized.
-        .localCheckpoint(true)
+        // one row per priority; feeds margins and the final chi-square
+        // join
+        .transform(Cut.small(5))
       val margins = split.groupBy("med", "nn").agg(
         coalesce(sum(col("a")), lit(0L)).as("ca"),
         coalesce(sum(col("b")), lit(0L)).as("cb"))
@@ -6393,8 +6358,7 @@ object Inference {
         .agg(count(lit(1)).as("t"),
           coalesce(sum(when(col("diff") > 0, 1L).otherwise(0L)),
             lit(0L)).as("p"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "ad", Seq("t"))
+      val cum = PrefixSum.withRunningTotals(cells, "ad", Seq("t"))
       cum.agg(
           coalesce(sum(col("t")), lit(0L)).as("n"),
           coalesce(sum(col("p")), lit(0L)).as("n_pos"),
@@ -6527,8 +6491,7 @@ object Inference {
       val daily = dailyEvents(s, d)
       val cells = daily.groupBy(col("c").as("cv"))
         .agg(count(lit(1)).as("t"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "cv", Seq("t"))
+      val cum = PrefixSum.withRunningTotals(cells, "cv", Seq("t"))
       val nn = cells.agg(coalesce(sum(col("t")), lit(0L)).as("n"))
       val ranked = daily
         .join(cum.select(col("cv").as("c"), col("t"), col("t_cum")),
@@ -6595,8 +6558,7 @@ object Inference {
       val daily = dailyEvents(s, d)
       val cells = daily.groupBy(col("c").as("cv"))
         .agg(count(lit(1)).as("t"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "cv", Seq("t"))
+      val cum = PrefixSum.withRunningTotals(cells, "cv", Seq("t"))
         .select(col("cv").as("c"),
           (lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
             .as("r2"))
@@ -6663,8 +6625,7 @@ object Inference {
       val daily = dailyEvents(s, d)
       val cells = daily.groupBy(col("c").as("cv"))
         .agg(count(lit(1)).as("t"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "cv", Seq("t"))
+      val cum = PrefixSum.withRunningTotals(cells, "cv", Seq("t"))
         .select(col("cv").as("c"),
           (lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
             .as("r2"))
@@ -7556,8 +7517,7 @@ object Inference {
         .groupBy("node").agg(count(lit(1)).as("dg"))
       val cells = deg.groupBy(col("dg").as("v"))
         .agg(count(lit(1)).as("m"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "v", Seq("m"))
+      val cum = PrefixSum.withRunningTotals(cells, "v", Seq("m"))
       cum.agg(
           coalesce(sum(col("m")), lit(0L)).as("n"),
           coalesce(sum(col("v") * col("m")), lit(0L)).as("s_deg"),
@@ -7611,13 +7571,13 @@ object Inference {
     QueryDef("q312_harmonic", (s, d) => {
       val nodes = docNodes(s, d)
       val edges = docGraph(s, d)
-        // eager cut (r06): the ≤2·389-row edge list feeds d1/d2/d3 —
-        // the documents scan + distinct replans ~6× without it.
-        .localCheckpoint(true)
+        // two out-edges per node; feeds d1/d2/d3
+        .transform(Cut.small(2 * 389))
       // distance-1 shell: direct predecessors of v
       val d1 = edges.select(col("dst").as("v"), col("src").as("u"))
         .distinct()
-        .localCheckpoint(true) // feeds d2, d3's anti-joins and its count
+        // feeds d2, d3's anti-joins and its count
+        .transform(Cut.small(2 * 389))
       // distance-2: predecessors of the d1 shell, minus d1 and self
       val d2 = d1.select(col("v"), col("u").as("mid"))
         .join(edges.select(col("dst").as("mid"), col("src").as("u")),
@@ -7625,7 +7585,7 @@ object Inference {
         .select(col("v"), col("u")).distinct()
         .where(col("u") =!= col("v"))
         .join(d1, Seq("v", "u"), "left_anti")
-        .localCheckpoint(true) // feeds d3 (join + anti) and its count
+        .transform(Cut.small(389 * 389)) // feeds d3 and its count
       val d3 = d2.select(col("v"), col("u").as("mid"))
         .join(edges.select(col("dst").as("mid"), col("src").as("u")),
           Seq("mid"))
@@ -7704,8 +7664,8 @@ object Inference {
           col("l_partkey").as("item"))
         .groupBy("basket")
         .agg(sort_array(collect_set(col("item"))).as("items"))
-        .repartition(s.sparkContext.defaultParallelism)
-        .localCheckpoint(true)
+        .transform(Spread.orderFree)
+        .transform(Cut.large)
       val nb = g.agg(count(lit(1)).as("n"))
       val supp = g.select(explode(col("items")).as("item"))
         .groupBy("item").agg(count(lit(1)).as("s"))
@@ -7795,10 +7755,9 @@ object Inference {
         .join(counts, Seq("nk", "g"), "left")
         .select(col("nk"), col("g"),
           coalesce(col("x0"), lit(0L)).as("x"))
-        // eager cut (r06): the 125-cell grid feeds r2 (both self-join
-        // sides) and rng, and through sp/a4/b4/n the orders⋈customer
-        // aggregation upstream otherwise replans ~7× (dimension-sized).
-        .localCheckpoint(true)
+        // nations × priorities; feeds r2 (both self-join sides), rng and
+        // sp/a4/b4/n
+        .transform(Cut.small(25 * 5))
       val r2 = grid
         .join(grid.select(col("nk"), col("x").as("xb")), Seq("nk"))
         .groupBy("nk", "g", "x")
@@ -7810,8 +7769,7 @@ object Inference {
         .agg((max(col("x")) - min(col("x"))).as("rng"))
       val rcells = rng.groupBy(col("rng").as("rv"))
         .agg(count(lit(1)).as("m"))
-      val q2 = graft.operators.PrefixSum
-        .withRunningTotals(rcells, "rv", Seq("m"))
+      val q2 = PrefixSum.withRunningTotals(rcells, "rv", Seq("m"))
         .select(col("rv").as("rng"),
           (lit(2L) * (col("m_cum") - col("m")) + col("m") + 1L)
             .as("q2"))
@@ -7888,20 +7846,17 @@ object Inference {
       val etv = t(s, d, "events")
         .groupBy(col("value").as("v"), col("event_type").as("et"))
         .agg(count(lit(1)).as("c"))
-        // eager cut (r06): etv feeds tv (→ cum + tot) and rj — the
-        // events aggregation otherwise replans ~4×. Cell-sized.
-        .localCheckpoint(true)
+        // etv feeds tv (cum and tot) and rj
+        .transform(Cut.large)
       val tv = etv.groupBy("v").agg(sum("c").as("t"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(tv, "v", Seq("t"))
+      val cum = PrefixSum.withRunningTotals(tv, "v", Seq("t"))
         .select(col("v"), col("t"), col("t_cum"))
       val mid2 = lit(2L) * (col("t_cum") - col("t")) + col("t") + lit(1L)
       val rj = etv.join(cum, Seq("v"))
         .groupBy("et")
         .agg(sum(col("c") * mid2).as("r2"), sum("c").as("nj"))
-        // eager cut (r06): rj (k rows) feeds every downstream consumer
-        // — the rank join replans per consumer without it.
-        .localCheckpoint(true)
+        // one row per event type; feeds every downstream consumer
+        .transform(Cut.small(5))
       val tot = tv.agg(sum(col("t")).as("n"),
         sum(col("t") * col("t") * col("t") - col("t")).as("tt"))
       val prs = rj.select(col("et").as("g1"), col("r2").as("ra"),
@@ -7969,16 +7924,14 @@ object Inference {
     QueryDef("q316_blomqvist", (s, d) => {
       val per = t(s, d, "orders").groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("cnt"), max(col("o_totalprice")).as("mx"))
-        // eager cut (r06): per feeds both medianOf legs AND the final
-        // agreement scan — three replans of the orders aggregation
-        // without it (the q352/q287 `per` cut).
-        .localCheckpoint(true)
+        // per feeds both medianOf legs and the final agreement scan
+        .transform(Cut.large)
       def medianOf(vc: String) = {
         val cells = per.groupBy(col(vc).as("v"))
           .agg(count(lit(1)).as("c"))
         val nn = cells.agg(coalesce(sum(col("c")), lit(0L)).as("nn"))
           .select(col("nn"), expr("(nn + 1) DIV 2").as("rk"))
-        graft.operators.PrefixSum.withRunningTotals(cells, "v", Seq("c"))
+        PrefixSum.withRunningTotals(cells, "v", Seq("c"))
           .crossJoin(broadcast(nn))
           .where(col("rk") > col("c_cum") - col("c")
             && col("rk") <= col("c_cum"))
@@ -8063,7 +8016,7 @@ object Inference {
         .agg(coalesce(sum(col("a") * col("b")), lit(0L)).as("w"))
       val tot = dcells.agg(coalesce(sum(col("w")), lit(0L)).as("tw"))
         .select(col("tw"), expr("(tw + 1) DIV 2").as("rk"))
-      graft.operators.PrefixSum.withRunningTotals(dcells, "dv", Seq("w"))
+      PrefixSum.withRunningTotals(dcells, "dv", Seq("w"))
         .crossJoin(broadcast(tot))
         .where(col("rk") > col("w_cum") - col("w")
           && col("rk") <= col("w_cum"))
@@ -8106,8 +8059,7 @@ object Inference {
             lit(0L)).as("a"))
       val nn = cells.agg(coalesce(sum(col("t")), lit(0L)).as("n"),
         coalesce(sum(col("a")), lit(0L)).as("n1"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "v", Seq("t"))
+      val cum = PrefixSum.withRunningTotals(cells, "v", Seq("t"))
         .crossJoin(broadcast(nn))
       // score sum over positions lo..hi: Σ i for i ≤ m plus
       // Σ (N+1−i) for i > m, m = (N+1) DIV 2; tri(x,y) = Σ_{x..y} i
@@ -8517,8 +8469,7 @@ object Inference {
         coalesce(sum(col("a")), lit(0L)).as("n1"),
         coalesce(sum(col("t") * col("t") * col("t") - col("t")),
           lit(0L)).as("tt"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "v", Seq("t"))
+      val cum = PrefixSum.withRunningTotals(cells, "v", Seq("t"))
         .crossJoin(broadcast(nn))
       val scored = cum
         .withColumn("mid2",
@@ -8936,8 +8887,7 @@ object Inference {
             lit(0L)).as("a"))
       val nn = cells.agg(coalesce(sum(col("t")), lit(0L)).as("n"),
         coalesce(sum(col("a")), lit(0L)).as("n1"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "v", Seq("t"))
+      val cum = PrefixSum.withRunningTotals(cells, "v", Seq("t"))
         .crossJoin(broadcast(nn))
         .withColumn("mid2",
           lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
@@ -9785,8 +9735,7 @@ object Inference {
           greatest(lit(1L), expr("(n + 1) DIV 4")))
         .withColumn("rk3",
           least(col("n"), expr("(3 * (n + 1)) DIV 4")))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "v", Seq("c"))
+      val cum = PrefixSum.withRunningTotals(cells, "v", Seq("c"))
         .crossJoin(broadcast(tot))
       val q1 = cum.where(col("rk1") > col("c_cum") - col("c")
           && col("rk1") <= col("c_cum"))
@@ -9956,8 +9905,7 @@ object Inference {
           coalesce(sum(when(col("g") === "A", 1L).otherwise(0L)),
             lit(0L)).as("a"))
         .withColumn("r", col("t") - col("a"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "v", Seq("t", "a", "r"))
+      val cum = PrefixSum.withRunningTotals(cells, "v", Seq("t", "a", "r"))
         .withColumn("m2",
           lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
         .withColumn("ma2",
@@ -10079,8 +10027,7 @@ object Inference {
           .groupBy(col("o_totalprice").as("pv"))
           .agg(count(lit(1)).as("pc"))
         val nn = cellsP.agg(coalesce(sum(col("pc")), lit(0L)).as("nn"))
-        val zq = graft.operators.PrefixSum
-          .withRunningTotals(cellsP, "pv", Seq("pc"))
+        val zq = PrefixSum.withRunningTotals(cellsP, "pv", Seq("pc"))
           .crossJoin(broadcast(nn))
           .select(col("pv").as("o_totalprice"),
             expr("(5 * (nn - pc_cum)) DIV nn").as("z"))
@@ -10092,12 +10039,8 @@ object Inference {
               .when(col("o_orderstatus") === "O", 2).otherwise(3)
               .as("y"),
             col("z").cast("int").as("z"))
-          // eager cut (r06): the three pairwise tau-b legs below each
-          // consume this frame through their own aggregation trees — the
-          // orders scan + quintile join re-executed 4+ times (profiled
-          // 59 stages, 4 × ~0.4 s rescans). One materialization of the
-          // narrow (x, y, z) triple serves all three legs.
-          .localCheckpoint(true)
+          // the (x, y, z) triple feeds the three pairwise tau-b legs
+          .transform(Cut.large)
       }
       def taub(u: String, w: String): org.apache.spark.sql.DataFrame = {
         val cells = priced.groupBy(col(u).as("u"), col(w).as("w"))
@@ -10433,14 +10376,13 @@ object Inference {
             lit(0L)).as("c1"),
           coalesce(sum(when(col("y") >= 1998, 1L).otherwise(0L)),
             lit(0L)).as("c2"))
-        // eager cut (r06): the 199-item table feeds both rank CDFs and
-        // the final join — three replans of the lineitem aggregation
-        // without it.
-        .localCheckpoint(true)
+        // one row per item (l_partkey % 199); feeds both rank CDFs and
+        // the final join
+        .transform(Cut.small(199))
       def mid2Of(vc: String, out: String) = {
         val cells = items.groupBy(col(vc).as("v"))
           .agg(count(lit(1)).as("t"))
-        graft.operators.PrefixSum.withRunningTotals(cells, "v", Seq("t"))
+        PrefixSum.withRunningTotals(cells, "v", Seq("t"))
           .select(col("v").as(vc),
             (lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
               .as(out))
@@ -10582,16 +10524,12 @@ object Inference {
         .select(col("source"),
           explode(split(col("text"), " ")).as("term"))
         .where(length(col("term")) > 0)
-        // eager cut (r06): the token explode feeds top/stot/cells —
-        // three replans of the corpus pass without it (the token stage
-        // table). Unlike the other r06 cuts, which are dimension- or
-        // cell-sized, this one pins the whole fact-sized token stream in
-        // block storage: re-measure it before any scale-up.
-        .localCheckpoint(true)
+        // the token stream (fact-sized) feeds top/stot/cells
+        .transform(Cut.large)
       val top = toks.groupBy("term").agg(count(lit(1)).as("tc"))
         .orderBy(col("tc").desc, col("term")).limit(20)
         .select(col("term"))
-        .localCheckpoint(true) // 20 rows, broadcast into cells AND grid
+        .transform(Cut.small(20)) // broadcast into cells and grid
       val stot = toks.groupBy("source").agg(count(lit(1)).as("nt"))
       val cells = toks.join(broadcast(top), Seq("term"))
         .groupBy("source", "term").agg(count(lit(1)).as("c"))
@@ -10602,9 +10540,8 @@ object Inference {
         .select(col("source"), col("term"),
           (dbl(coalesce(col("c"), lit(0L))) / dbl(col("nt")))
             .as("f"))
-        // eager cut (r06): the sources×20 grid feeds the marker stats
-        // AND the z-scores — two replans of the cells chain without it.
-        .localCheckpoint(true)
+        // sources × top terms; feeds the marker stats and the z-scores
+        .transform(Cut.small(20 * 20))
       val stats = grid
         .select(col("term"), struct(col("source"), col("f")).as("sf"))
         .groupBy("term")
@@ -10862,7 +10799,7 @@ object Inference {
       val keyed = vols.select(col("l_partkey"), col("v"),
         struct((-col("v")).as("nv"), col("l_partkey").as("pk"))
           .as("ok"))
-      val cum = graft.operators.PrefixSum
+      val cum = PrefixSum
         .withRunningTotals(keyed.select(col("ok"), col("v")), "ok",
           Seq("v"))
       val tot = vols.agg(coalesce(sum(col("v")), lit(0L)).as("tv"),
@@ -11093,17 +11030,14 @@ object Inference {
         .agg(min(datediff(col("dmax"),
             col("o_orderdate").cast("date"))).cast("long").as("r"),
           count(lit(1)).as("f"), max(col("o_totalprice")).as("m"))
-        // eager cut (r06): five consumers (three quintile cell tables,
-        // tot, the final join) each replanned the orders aggregation —
-        // profiled 60 stages; the customer-dimension frame is cheap to
-        // materialize once
-        .localCheckpoint(true)
+        // per feeds the three quintile cell tables, tot and the final
+        // join
+        .transform(Cut.large)
       def quintile(vc: String, out: String) = {
         val cells = per.groupBy(col(vc).as("sc"))
           .agg(count(lit(1)).as("n"))
         val nn = cells.agg(coalesce(sum(col("n")), lit(0L)).as("nn"))
-        graft.operators.PrefixSum
-          .withRunningTotals(cells, "sc", Seq("n"))
+        PrefixSum.withRunningTotals(cells, "sc", Seq("n"))
           .crossJoin(broadcast(nn))
           .select(col("sc").as(vc),
             expr("(5 * (nn - n_cum)) DIV nn").as(out))
@@ -11360,8 +11294,7 @@ object Inference {
       val cells = docs.groupBy((-col("sc")).as("ns"))
         .agg(count(lit(1)).as("cnt"),
           coalesce(sum(col("y")), lit(0L)).as("pos"))
-      val cum = graft.operators.PrefixSum
-        .withRunningTotals(cells, "ns", Seq("cnt", "pos"))
+      val cum = PrefixSum.withRunningTotals(cells, "ns", Seq("cnt", "pos"))
       val tot = cells.agg(coalesce(sum(col("cnt")), lit(0L)).as("n"),
         coalesce(sum(col("pos")), lit(0L)).as("p"))
       cum
@@ -11953,8 +11886,7 @@ object Inference {
       val acells = per.groupBy(col("activity").as("av"))
         .agg(count(lit(1)).as("n"))
       val nn = acells.agg(coalesce(sum(col("n")), lit(0L)).as("nn"))
-      val dec = graft.operators.PrefixSum
-        .withRunningTotals(acells, "av", Seq("n"))
+      val dec = PrefixSum.withRunningTotals(acells, "av", Seq("n"))
         .crossJoin(broadcast(nn))
         .select(col("av").as("activity"),
           expr("(10 * (nn - n_cum)) DIV nn").as("q"))
@@ -12045,13 +11977,11 @@ object Inference {
         .join(firsts, Seq("source"), "left")
         .select(col("source"), coalesce(col("novel"), lit(0L))
           .as("novel"))
-        // eager cut (r06): the per-source table feeds the total AND the
-        // CDF — two replans of the first-occurrence chain without it.
-        .localCheckpoint(true)
+        // one row per source; feeds the total and the CDF
+        .transform(Cut.small(20))
       val tot = allSrc.agg(coalesce(sum(col("novel")), lit(0L))
         .as("v_total"))
-      graft.operators.PrefixSum
-        .withRunningTotals(allSrc, "source", Seq("novel"))
+      PrefixSum.withRunningTotals(allSrc, "source", Seq("novel"))
         .crossJoin(broadcast(tot))
         .select(col("source"), col("novel"),
           col("novel_cum").as("vocab_cum"),
@@ -12539,8 +12469,7 @@ object Inference {
         .withColumn("m2n",
           col("n") * col("q_tot") - col("s_tot") * col("s_tot"))
         .withColumn("rk", expr("(n + 1) DIV 2"))
-      val med = graft.operators.PrefixSum
-        .withRunningTotals(cells, "v", Seq("c"))
+      val med = PrefixSum.withRunningTotals(cells, "v", Seq("c"))
         .crossJoin(broadcast(tot))
         .where(col("rk") > col("c_cum") - col("c")
           && col("rk") <= col("c_cum"))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import QueryDef.t
 
+import graft.operators.Spread
+
 /** Relational operator coverage (SURVEY §2.2–§2.6) over the TPC-H-ish
   * testdata tables, each with a DuckDB oracle.
   *
@@ -263,7 +265,7 @@ object Relational {
         .select(col("l_partkey"), col("l_suppkey"))
         .groupBy("l_partkey")
         .agg(sort_array(collect_set(col("l_suppkey"))).as("supps"))
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Spread.orderFree)
       // two chained codegen Generates instead of the nested-HOF combo
       // build (r06): HOFs are CodegenFallback; identical pair multiset
       grouped

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.canon.KeyAssigner
 import graft.extract.TextExtractor
 import graft.functions.TextFunctions
+import graft.operators.Spread
 import graft.stats.Disproportionality
 import graft.streaming.StreamOps
 
@@ -259,7 +260,7 @@ object TextStats {
       // on one core — a 100 TB corpus scan has thousands of natural
       // splits, so spreading the fixture is the representative shape.
       t(s, d, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Spread.orderFree)
         .select(
         col("doc_id"),
         TextFunctions.dupTokenFrac(toks).as("dup_token_frac"),
@@ -366,7 +367,7 @@ object TextStats {
       // spread the single-split fixture: the n-gram build is interpreted
       // HOF work (CodegenFallback) — same rationale as q83
       val docs = t(s, d, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Spread.orderFree)
       graft.dedup.Decontaminate.flag(
         docs.where(col("doc_id") % 50 =!= 0),
         docs.where(col("doc_id") % 50 === 0),

@@ -3,6 +3,8 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** Mechanistic-path, DDI, mechanism-expansion, profile and subgraph tools —
   * the DataFrame recast of the reference's remaining tool layer
   * (reference:src/kg_ae/tools/{paths,adverse_events,mechanism,subgraph,
@@ -238,10 +240,9 @@ object PathTools {
       .join(typed(vertices, "Gene", "key", "label"), "key")
       .select(lit("target").as("kind"), col("key"), col("label"),
         col("n_claims"))
-      // eager cut (r06): one drug's target list (bounded) feeds the
-      // output union AND the pathway semi-probe — the edge aggregation
-      // replans twice without it.
-      .localCheckpoint(true)
+      // one drug's target list feeds the output union and the pathway
+      // semi-probe; its size follows the graph
+      .transform(Cut.large)
     val pathways = edges.where(col("src_type") === "Gene"
         && col("dst_type") === "Pathway")
       .select(col("src_key").as("key"), col("dst_key").as("pw_key"))

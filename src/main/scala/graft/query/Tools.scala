@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** Deterministic query tools over the materialized graph — the engine
   * equivalent of the reference's tool layer (reference:src/kg_ae/tools/),
   * each a parameterized DataFrame query compiled by Catalyst.
@@ -138,8 +140,7 @@ object Tools {
       // next hop's join replans this hop's whole subtree (for a derived
       // edges input like the tpch graph that re-ran every edge-building
       // aggregation; profiled 3 evaluations at hops=2). The cut is the
-      // seed's ≤hop neighborhood — bounded, the same stage-cut contract
-      // as the Dedup pipeline cuts.
+      // seed's ≤hop neighborhood, whose size follows the graph.
       //
       // Hop 1 is a LITERAL filter, not a join against a 1-row frame
       // (r06): the seed is statically known, and the literal predicate
@@ -154,7 +155,7 @@ object Tools {
               .withColumnRenamed("node_type", "src_type")
               .withColumnRenamed("key", "src_key"),
             Seq("src_type", "src_key")))
-        .localCheckpoint(true)
+        .transform(Cut.large)
       // dropDuplicates on the claim identity (map-typed payload columns
       // cannot participate in set ops)
       acc = if (acc == null) out

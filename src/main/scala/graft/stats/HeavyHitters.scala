@@ -5,6 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** Exact frequent-item ("heavy hitter") detection at corpus scale: every
   * token whose global count reaches `minFrac` of the total token count,
   * with its EXACT count — without ever shuffling the long tail.
@@ -84,7 +86,7 @@ object HeavyHitters {
       // ≤ (k+1)·P rows; materialize once — consumed by BOTH the total-count
       // aggregate and the candidate broadcast below (without the cut the
       // full MG scan would run twice, once per consumer)
-      .localCheckpoint(true)
+      .transform(Cut.large)
 
     val totals = summary.where(col("is_marker"))
       .agg(sum(col("n")).as("n_total"))

@@ -3,6 +3,8 @@ package graft.stats
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.{Cut, Spread}
+
 /** Frequent 2-itemset mining (market-basket co-occurrence with a support
   * threshold) — the A-priori first rung: a pair can only reach support s
   * if BOTH items individually reach s, so the basket table is semi-join
@@ -57,7 +59,7 @@ object Itemsets {
     // unchanged). Pair multiset identical → output unchanged.
     val grouped = pruned.groupBy("basket")
       .agg(sort_array(collect_list(col("item"))).as("items"))
-      .repartition(baskets.sparkSession.sparkContext.defaultParallelism)
+      .transform(Spread.orderFree)
     // two chained codegen Generates instead of the nested-HOF combo
     // build (r06): HOFs are CodegenFallback — identical pair multiset
     grouped
@@ -112,8 +114,8 @@ object Itemsets {
     val grouped = b.groupBy("basket")
       .agg(sort_array(collect_list(col("item"))).as("items"))
       .where(size(col("items")) <= maxBasket)
-      .repartition(baskets.sparkSession.sparkContext.defaultParallelism)
-      .localCheckpoint(true)
+      .transform(Spread.orderFree)
+      .transform(Cut.large)
     val occ = grouped.select(explode(col("items")).as("item"))
       .groupBy("item").agg(count(lit(1)).as("occ"))
     // two chained codegen Generates instead of the nested-HOF combo

@@ -231,7 +231,7 @@ class FunctionsSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val events = spark.read.parquet(s"$dir/events.parquet")
     // file stream source needs a directory, not a single file
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val streamDir = TestSpark.scratch("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -254,7 +254,7 @@ class FunctionsSpec extends AnyFunSuite {
     import spark.implicits._
     // two micro-batch files with duplicates inside AND across batches;
     // the streaming dedup must keep exactly one row per distinct text
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup")
+    val dir = TestSpark.scratch("graft_sdedup")
     def row(id: Long, text: String) =
       (id, text, java.sql.Timestamp.valueOf(s"2024-01-01 10:0${id % 10}:00"))
     val b1 = Seq(row(0, "alpha"), row(1, "beta"), row(2, "alpha"))
@@ -274,7 +274,7 @@ class FunctionsSpec extends AnyFunSuite {
     import graft.extract.PageSynth
     // two micro-batch files: pages arrive in waves; complete-mode counts
     // must equal the one-shot batch job over the union
-    val pagesDir = java.nio.file.Files.createTempDirectory("graft_pages")
+    val pagesDir = TestSpark.scratch("graft_pages")
     val p1 = PageSynth.pages(spark, 150).toDF()
     val p2 = spark.range(150, 300).map(i => PageSynth.page(i))(
       org.apache.spark.sql.Encoders.product[graft.model.Page]).toDF()
@@ -297,9 +297,9 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("streaming incremental claims (foreachBatch exactly-once) == batch extraction") {
     import graft.extract.PageSynth
-    val pagesDir = java.nio.file.Files.createTempDirectory("graft_incp")
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_inct").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_incc").toString
+    val pagesDir = TestSpark.scratch("graft_incp")
+    val tableDir = TestSpark.scratch("graft_inct").toString
+    val ckpt = TestSpark.scratch("graft_incc").toString
     val p1 = PageSynth.pages(spark, 150).toDF()
     p1.write.parquet(pagesDir.resolve("b1").toString)
     val schema = spark.read.parquet(pagesDir.resolve("b1").toString).schema
@@ -343,7 +343,7 @@ class FunctionsSpec extends AnyFunSuite {
   test("claims sink: atomic batch-id commit, snapshots, crash restore, rollback") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
-    val tableDir = Files.createTempDirectory("graft_claims_snap").toString
+    val tableDir = TestSpark.scratch("graft_claims_snap").toString
     def merge(id: Long, rows: Seq[(String, String, String)]): Unit =
       StreamOps.mergeClaimsBatch(
         rows.map { case (s1, p1, o1) => (s1, p1, o1, "u", "s") }
@@ -392,7 +392,7 @@ class FunctionsSpec extends AnyFunSuite {
   test("claims sink: vocabulary bound is ENFORCED, rejected batch leaves table intact") {
     import java.nio.file.{Files, Paths}
     import spark.implicits._
-    val tableDir = Files.createTempDirectory("graft_claims_bound").toString
+    val tableDir = TestSpark.scratch("graft_claims_bound").toString
     def merge(id: Long, rows: Seq[(String, String, String)],
         bound: Long): Unit =
       StreamOps.mergeClaimsBatch(
@@ -422,7 +422,7 @@ class FunctionsSpec extends AnyFunSuite {
   test("claims sink: checkpoint-identity guard fails loudly on a reset checkpoint") {
     import java.nio.file.{Files, Paths}
     import spark.implicits._
-    val tableDir = Files.createTempDirectory("graft_claims_ckpt").toString
+    val tableDir = TestSpark.scratch("graft_claims_ckpt").toString
     def merge(id: Long, rows: Seq[(String, String, String)],
         ckpt: String): Unit =
       StreamOps.mergeClaimsBatch(
@@ -444,7 +444,7 @@ class FunctionsSpec extends AnyFunSuite {
   test("claims sink: crash-truncated snapshot is refused and never restored") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
-    val tableDir = Files.createTempDirectory("graft_claims_trunc").toString
+    val tableDir = TestSpark.scratch("graft_claims_trunc").toString
     def merge(id: Long, rows: Seq[(String, String, String)]): Unit =
       StreamOps.mergeClaimsBatch(
         rows.map { case (s1, p1, o1) => (s1, p1, o1, "u", "s") }
@@ -474,7 +474,7 @@ class FunctionsSpec extends AnyFunSuite {
   test("claims sink: interrupted rollback completes instead of being undone") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
-    val tableDir = Files.createTempDirectory("graft_claims_rbint").toString
+    val tableDir = TestSpark.scratch("graft_claims_rbint").toString
     val root = Paths.get(tableDir)
     def merge(id: Long, rows: Seq[(String, String, String)]): Unit =
       StreamOps.mergeClaimsBatch(
@@ -509,7 +509,7 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("update-mode windowed counts: watermark drops later-than-watermark events") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_upd")
+    val dir = TestSpark.scratch("graft_upd")
     def write(name: String, rows: Seq[(String, String)]): Unit =
       rows.toDF("ts_s", "event_type")
         .select(col("ts_s").cast("timestamp").as("ts"), col("event_type"))
@@ -542,7 +542,7 @@ class FunctionsSpec extends AnyFunSuite {
   test("streaming sessionization (flatMapGroupsWithState) == batch window sessionize") {
     val dir = "/root/testdata/sf0.001"
     val events = spark.read.parquet(s"$dir/events.parquet")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_sess")
+    val streamDir = TestSpark.scratch("graft_sess")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       streamDir.resolve("events.parquet"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +15,7 @@ class InferenceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def fixture(tables: (String, DataFrame)*): String = {
-    val dir = Files.createTempDirectory("graft_inf_fix").toString
+    val dir = TestSpark.scratch("graft_inf_fix").toString
     tables.foreach { case (n, df) =>
       df.write.mode("overwrite").parquet(s"$dir/$n.parquet") }
     dir

@@ -18,7 +18,7 @@ class KeyedClaimsSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted.toSeq
 
   test("read before any commit (and after an empty-delta commit) has the claims schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kc0").toString
+    val dir = TestSpark.scratch("graft_kc0").toString
     val pre = KeyedClaims.read(spark, dir)
     assert(pre.columns.toSeq == Seq("subj", "pred", "obj", "frequency"))
     assert(pre.count() == 0)
@@ -32,7 +32,7 @@ class KeyedClaimsSpec extends AnyFunSuite {
   }
 
   test("keyed merge: frequencies accumulate, replay is a no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kc1").toString
+    val dir = TestSpark.scratch("graft_kc1").toString
     KeyedClaims.merge(triples(Seq(("a", "R", "b"), ("a", "R", "b"),
       ("c", "R", "d"))), 0L, dir)
     KeyedClaims.merge(triples(Seq(("a", "R", "b"))), 1L, dir)
@@ -47,7 +47,7 @@ class KeyedClaimsSpec extends AnyFunSuite {
   }
 
   test("a delta rewrites ONLY the buckets it touches") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kc2").toString
+    val dir = TestSpark.scratch("graft_kc2").toString
     // batch 0 spreads keys over many buckets; batch 1 touches one key
     val keys = (0 until 200).map(i => (s"s$i", "R", s"o$i"))
     KeyedClaims.merge(triples(keys), 0L, dir)
@@ -70,7 +70,7 @@ class KeyedClaimsSpec extends AnyFunSuite {
   }
 
   test("time-travel, rollback as pointer swap, retention prune") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kc3").toString
+    val dir = TestSpark.scratch("graft_kc3").toString
     KeyedClaims.merge(triples(Seq(("a", "R", "b"))), 0L, dir)
     val snap0 = table(dir)
     KeyedClaims.merge(triples(Seq(("a", "R", "b"), ("e", "R", "f"))), 1L, dir)
@@ -98,7 +98,7 @@ class KeyedClaimsSpec extends AnyFunSuite {
   }
 
   test("retention reclaims crash-orphaned data dirs (no manifest ever)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kc4").toString
+    val dir = TestSpark.scratch("graft_kc4").toString
     val root = java.nio.file.Paths.get(dir)
     // simulate a crash mid data write: a bucket dir exists, no manifest
     // references it, _HEAD never advanced
@@ -113,7 +113,7 @@ class KeyedClaimsSpec extends AnyFunSuite {
   }
 
   test("checkpoint-identity and bucket-function guards fail loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kc5").toString
+    val dir = TestSpark.scratch("graft_kc5").toString
     KeyedClaims.merge(triples(Seq(("a", "R", "b"))), 0L, dir,
       ckptId = Some("ckpt-A"))
     val e1 = intercept[IllegalStateException] {
@@ -137,7 +137,7 @@ class KeyedClaimsSpec extends AnyFunSuite {
     // SAME committed operations, whatever interleaving of new batches,
     // replays of stale ids, and rollbacks occurs. Seeded for determinism.
     val rnd = new scala.util.Random(20260818L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_kcf").toString
+    val dir = TestSpark.scratch("graft_kcf").toString
     type Model = Map[(String, String, String), Long]
     var model: Model = Map.empty
     // every manifest's batchId is some merge's batchId (rollback manifests
@@ -181,8 +181,8 @@ class KeyedClaimsSpec extends AnyFunSuite {
   test("keyed sink and rewrite sink agree on identical batch sequences") {
     // differential: both sinks fold the same deltas, modulo their storage
     // protocol — frequencies and key sets must be identical
-    val kDir = java.nio.file.Files.createTempDirectory("graft_kcd1").toString
-    val rDir = java.nio.file.Files.createTempDirectory("graft_kcd2").toString
+    val kDir = TestSpark.scratch("graft_kcd1").toString
+    val rDir = TestSpark.scratch("graft_kcd2").toString
     val rnd = new scala.util.Random(42L)
     (0L until 5L).foreach { id =>
       val rows = Seq.fill(1 + rnd.nextInt(10))(
@@ -218,7 +218,7 @@ class KeyedClaimsSpec extends AnyFunSuite {
   }
 
   test("lookup: single-bucket scan, absent keys, time-travel") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kcl").toString
+    val dir = TestSpark.scratch("graft_kcl").toString
     val keys = (0 until 300).map(i => (s"s$i", "R", s"o${i % 7}"))
     KeyedClaims.merge(triples(keys ++ keys.take(50)), 0L, dir)
     val hit = KeyedClaims.lookup(spark, dir, "s7", "R", "o0")
@@ -239,7 +239,7 @@ class KeyedClaimsSpec extends AnyFunSuite {
       assert(viaLookup == viaScan, s"key=($s0,$p,$o)")
     }
     // a key whose bucket was never written answers empty with ZERO files
-    val small = java.nio.file.Files.createTempDirectory("graft_kcl2").toString
+    val small = TestSpark.scratch("graft_kcl2").toString
     KeyedClaims.merge(triples(Seq(("a", "R", "b"))), 0L, small,
       nBuckets = 4096)
     val occupied = KeyedClaims.head(small).get.buckets.keySet
@@ -258,9 +258,9 @@ class KeyedClaimsSpec extends AnyFunSuite {
 
   test("streaming incrementalClaimsKeyed == batch extraction, resume + replay") {
     import graft.extract.PageSynth
-    val pagesDir = java.nio.file.Files.createTempDirectory("graft_kcp")
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_kct").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_kcc").toString
+    val pagesDir = TestSpark.scratch("graft_kcp")
+    val tableDir = TestSpark.scratch("graft_kct").toString
+    val ckpt = TestSpark.scratch("graft_kcc").toString
     val p1 = PageSynth.pages(spark, 150).toDF()
     p1.write.parquet(pagesDir.resolve("b1").toString)
     val schema = spark.read.parquet(pagesDir.resolve("b1").toString).schema

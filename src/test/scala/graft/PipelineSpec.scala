@@ -12,7 +12,7 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("full run → rerun skips all stages; outputs identical") {
-    val root = Files.createTempDirectory("graft_pipe").toString
+    val root = TestSpark.scratch("graft_pipe").toString
     val r1 = Pipeline.run(spark, root, nPages = 200, partitions = 8)
     assert(r1.forall(!_.skipped))
     val edges1 = spark.read.parquet(s"$root/edges")
@@ -26,8 +26,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("mid-pipeline kill: downstream stages recompute, upstream skipped, result identical") {
-    val rootA = Files.createTempDirectory("graft_pipeA").toString
-    val rootB = Files.createTempDirectory("graft_pipeB").toString
+    val rootA = TestSpark.scratch("graft_pipeA").toString
+    val rootB = TestSpark.scratch("graft_pipeB").toString
     Pipeline.run(spark, rootA, nPages = 150, partitions = 8)
 
     // simulate a job killed after 'triples': only run the first two stages
@@ -55,7 +55,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("version bump invalidates: changed code version recomputes") {
-    val root = Files.createTempDirectory("graft_pipeC").toString
+    val root = TestSpark.scratch("graft_pipeC").toString
     val a = Pipeline.runStage(spark, root, "pages", "v1", "n=50") {
       graft.extract.PageSynth.pages(spark, 50, 4).toDF()
     }
@@ -71,7 +71,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("page canonicalization stage: boilerplate clusters collapse") {
-    val root = Files.createTempDirectory("graft_pipeE").toString
+    val root = TestSpark.scratch("graft_pipeE").toString
     val res = Pipeline.run(spark, root, nPages = 400, partitions = 8,
       dedupPages = true)
     assert(res.map(_.stage).contains("pages_canonical"))
@@ -79,7 +79,7 @@ class PipelineSpec extends AnyFunSuite {
     val canon = spark.read.parquet(s"$root/pages_canonical").count()
     assert(canon < full, s"expected dedup to drop pages: $canon vs $full")
     // triples from the deduped corpus are a subset of the full corpus run
-    val rootFull = Files.createTempDirectory("graft_pipeF").toString
+    val rootFull = TestSpark.scratch("graft_pipeF").toString
     Pipeline.run(spark, rootFull, nPages = 400, partitions = 8)
     val tFull = spark.read.parquet(s"$rootFull/triples")
       .select("subj", "pred", "obj", "url").collect().map(_.toString).toSet
@@ -93,7 +93,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("snapshots: recompute archives the old table; time-travel reads it") {
-    val root = Files.createTempDirectory("graft_snap").toString
+    val root = TestSpark.scratch("graft_snap").toString
     def pages(n: Long) = graft.extract.PageSynth.pages(spark, n, 4).toDF()
     Pipeline.runStage(spark, root, "pages", "v1", "n=50")(pages(50))
     assert(Pipeline.snapshots(root, "pages").isEmpty) // first commit: no history
@@ -113,7 +113,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("rollback restores a snapshot, keeps history, invalidates downstream") {
-    val root = Files.createTempDirectory("graft_rb").toString
+    val root = TestSpark.scratch("graft_rb").toString
     def pages(n: Long) = graft.extract.PageSynth.pages(spark, n, 4).toDF()
     Pipeline.runStage(spark, root, "pages", "v1", "n=50")(pages(50))
     Pipeline.runStage(spark, root, "pages", "v2", "n=80")(pages(80))
@@ -137,7 +137,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("crash-truncated snapshot (marker deleted first) is refused, not served") {
-    val root = Files.createTempDirectory("graft_trunc").toString
+    val root = TestSpark.scratch("graft_trunc").toString
     def pages(n: Long) = graft.extract.PageSynth.pages(spark, n, 4).toDF()
     Pipeline.runStage(spark, root, "pages", "v1", "n=50")(pages(50))
     Pipeline.runStage(spark, root, "pages", "v2", "n=80")(pages(80))
@@ -157,7 +157,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("interrupted rollback (no current table) completes from the intent") {
-    val root = Files.createTempDirectory("graft_rbint").toString
+    val root = TestSpark.scratch("graft_rbint").toString
     def pages(n: Long) = graft.extract.PageSynth.pages(spark, n, 4).toDF()
     Pipeline.runStage(spark, root, "pages", "v1", "n=50")(pages(50))
     Pipeline.runStage(spark, root, "pages", "v2", "n=80")(pages(80))
@@ -186,7 +186,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("rollback commits atomically: a crash after the rename cannot undo it") {
-    val root = Files.createTempDirectory("graft_rbatomic").toString
+    val root = TestSpark.scratch("graft_rbatomic").toString
     def pages(n: Long) = graft.extract.PageSynth.pages(spark, n, 4).toDF()
     // two snapshots of the SAME stage spec (the realistic rollback-after-
     // bad-data case: spec unchanged, content rolled back)
@@ -213,7 +213,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("crash mid-rollback-copy cannot commit a truncated restore") {
-    val root = Files.createTempDirectory("graft_rbcopy").toString
+    val root = TestSpark.scratch("graft_rbcopy").toString
     def pages(n: Long) = graft.extract.PageSynth.pages(spark, n, 4).toDF()
     Pipeline.runStage(spark, root, "pages", "v1", "n=50")(pages(50))
     Pipeline.runStage(spark, root, "pages", "v2", "n=80")(pages(80))
@@ -247,11 +247,11 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("copyTree excludes a directory's whole subtree, not just the entry") {
-    val src = Files.createTempDirectory("graft_ct_src")
+    val src = TestSpark.scratch("graft_ct_src")
     Files.createDirectories(src.resolve("logs"))
     Files.writeString(src.resolve("logs").resolve("x"), "1")
     Files.writeString(src.resolve("keep"), "2")
-    val dst = Files.createTempDirectory("graft_ct").resolve("out")
+    val dst = TestSpark.scratch("graft_ct").resolve("out")
     graft.util.Fs.copyTree(src, dst, exclude = Set("logs"))
     assert(java.nio.file.Files.exists(dst.resolve("keep")))
     assert(!java.nio.file.Files.exists(dst.resolve("logs")),
@@ -261,7 +261,7 @@ class PipelineSpec extends AnyFunSuite {
   test("diffSnapshots classifies added/removed/changed with null-safe " +
       "compares and drops identical rows") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_cdc").toString
+    val root = TestSpark.scratch("graft_cdc").toString
     // v1: keys 1..4; key 3 carries a NULL value
     Pipeline.runStage(spark, root, "t", "v1", "u") {
       Seq((1L, Some(10L)), (2L, Some(20L)), (3L, None), (4L, Some(40L)))
@@ -287,7 +287,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("a fresh commit is one job; manifests count exactly the written rows") {
     import org.apache.spark.sql.functions.lit
-    val root = Files.createTempDirectory("graft_commit").toString
+    val root = TestSpark.scratch("graft_commit").toString
     def pages(n: Long) = graft.extract.PageSynth.pages(spark, n, 4).toDF()
     def manifestRows(stage: String): Long = Files.readString(
       java.nio.file.Paths.get(root, stage, "_MANIFEST")).split("\n")(2).toLong
@@ -312,7 +312,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("counters table records per-stage lineage") {
-    val root = Files.createTempDirectory("graft_pipeD").toString
+    val root = TestSpark.scratch("graft_pipeD").toString
     Pipeline.run(spark, root, nPages = 100, partitions = 4)
     val counters = spark.read.parquet(s"$root/_counters").collect()
     assert(counters.map(_.getAs[String]("stage")).toSet ==

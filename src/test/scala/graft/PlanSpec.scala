@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,7 +45,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("hive-partitioned edges table prunes partitions on claim_type") {
-    val root = Files.createTempDirectory("graft_prune").toString
+    val root = TestSpark.scratch("graft_prune").toString
     graft.pipeline.Pipeline.run(spark, root, nPages = 150, partitions = 4)
     val edges = spark.read.parquet(s"$root/edges")
     val filtered = edges.where(col("claim_type") === "DRUG_AE")
@@ -68,7 +66,7 @@ class PlanSpec extends AnyFunSuite {
     // double explode — at rest the edges table is hive-partitioned on
     // claim_type, so the serving-path scan must read exactly one partition
     // even though the consumer is an explode, not a plain projection.
-    val root = Files.createTempDirectory("graft_prune2").toString
+    val root = TestSpark.scratch("graft_prune2").toString
     graft.pipeline.Pipeline.run(spark, root, nPages = 150, partitions = 4)
     val sections = graft.query.PathTools.allDrugLabelSections(
       spark.read.parquet(s"$root/edges"))

@@ -62,8 +62,7 @@ class ServingIndexSpec extends AnyFunSuite {
   }
 
   test("load: round-trips pipeline-style parquet artifacts") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_serving").toString
+    val root = TestSpark.scratch("graft_serving").toString
     vertices.write.mode("overwrite").parquet(s"$root/vertices")
     edges.write.mode("overwrite").parquet(s"$root/edges")
     val idx = ServingIndex.load(spark, root)
@@ -74,8 +73,7 @@ class ServingIndexSpec extends AnyFunSuite {
   }
 
   test("loadOrGet: one cached index per artifact root per session") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_serving_once").toString
+    val root = TestSpark.scratch("graft_serving_once").toString
     vertices.write.mode("overwrite").parquet(s"$root/vertices")
     edges.write.mode("overwrite").parquet(s"$root/edges")
     val a = ServingIndex.loadOrGet(spark, root)

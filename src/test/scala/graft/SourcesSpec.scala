@@ -17,7 +17,7 @@ class SourcesSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmpFile(name: String, content: String): String = {
-    val dir = Files.createTempDirectory("graft_src")
+    val dir = TestSpark.scratch("graft_src")
     val p = dir.resolve(name)
     Files.writeString(p, content)
     p.toString
@@ -54,7 +54,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("S6: gzipped CSV reads transparently") {
-    val dir = Files.createTempDirectory("graft_gz")
+    val dir = TestSpark.scratch("graft_gz")
     val p = dir.resolve("e.csv.gz")
     val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(p))
     out.write("k,v\n1,a\n2,b\n".getBytes(StandardCharsets.UTF_8))
@@ -94,7 +94,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("S9: zip-of-JSON explodes members on executors") {
-    val dir = Files.createTempDirectory("graft_zip")
+    val dir = TestSpark.scratch("graft_zip")
     val p = dir.resolve("docs.zip")
     val zos = new ZipOutputStream(Files.newOutputStream(p))
     Seq("r1.json" -> """{"results":[{"id":"a"}]}""",
@@ -118,7 +118,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("S13: JSON artifact sink round-trips") {
-    val dir = Files.createTempDirectory("graft_meta").toString + "/meta"
+    val dir = TestSpark.scratch("graft_meta").toString + "/meta"
     Readers.writeJsonArtifact(
       Seq(("edges", 100L), ("vertices", 10L)).toDF("table", "rows"), dir)
     val back = spark.read.json(dir)
@@ -166,7 +166,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("ORC roundtrip preserves types, values, and nulls exactly") {
-    val dir = Files.createTempDirectory("graft_orc").toString + "/t"
+    val dir = TestSpark.scratch("graft_orc").toString + "/t"
     val src = Seq(
       (1L, Some("a"), Some(1.5), Some(java.sql.Timestamp.valueOf("2024-01-02 03:04:05"))),
       (2L, None, None, None),
