@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Cut
+import graft.operators.{Cut, Pairs}
 
 /** Asymmetric shingle-CONTAINMENT near-duplicate detection — the
   * doc-inside-doc relation Jaccard misses. A quote page that embeds a full
@@ -45,20 +45,13 @@ object Containment {
     * dropped on BOTH the numerator and denominator side, so the ratio
     * stays a true containment over the kept-shingle sets.
     *
-    * PLAN SHAPE (r06): the shingle stream is computed ONCE. The old shape
-    * (df-count join + kept⋈kept self-join) re-evaluated the interpreted
-    * shingle Generate under every broadcast branch — six scans of the
-    * corpus through the w-shingle HOF. Now both consumers of the shingle
-    * stream (the df count and the kept join) hash-partition it by shingle
-    * with IDENTICAL subtrees, so ReuseExchange materializes the shingle
-    * shuffle once; the per-shingle doc list is collected AFTER the df cap
-    * (aggregation state ≤ maxDf ids — never a hot-shingle buffer) on the
-    * join's existing partitioning (no extra exchange), and is lineage-cut
-    * eagerly (the Dedup stage-cut pattern: at cluster scale this cut is a
-    * persisted checkpoint table) because BOTH the pair expansion and the
-    * size table derive from it. Pairs come from a bounded array HOF
-    * (≤ maxDf(maxDf−1)/2 per shingle) instead of a self-join — the
-    * candidate multiset is identical, so the output is unchanged. */
+    * The shingle stream is computed once: its two consumers (the df count
+    * and the kept join) hash-partition it by shingle with identical
+    * subtrees, so ReuseExchange shuffles it once. The per-shingle doc list
+    * is collected after the df cap (state ≤ maxDf ids) on the join's
+    * partitioning, and cut eagerly because both the pair expansion
+    * ([[Pairs]], ≤ maxDf(maxDf−1)/2 pairs per shingle) and the size table
+    * read it. */
   def containmentPairs(docs: DataFrame, idCol: String, toks: Column,
       w: Int, maxDf: Int, threshold: Double): DataFrame = {
     val sh = docs
@@ -71,17 +64,8 @@ object Containment {
       .transform(Cut.large)
     val sz = grouped.select(explode(col("docs")).as("doc"))
       .groupBy("doc").agg(count(lit(1)).as("n"))
-    // ascending-ordered pairs from each sorted ≤ maxDf list: element i
-    // with every later element — exactly the a.doc < b.doc self-join
-    // rows. Two chained codegen Generates instead of the nested-HOF
-    // combo build (r06): HOFs are CodegenFallback; identical multiset.
-    val pr = grouped
-      .select(col("docs"), posexplode(col("docs")).as(Seq("_i", "d1")))
-      .select(col("d1"), explode(slice(col("docs"),
-        col("_i") + lit(2), size(col("docs")))).as("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("inter"))
-    pr.join(sz.select(col("doc").as("d1"), col("n").as("n1")), Seq("d1"))
+    Pairs(grouped, "docs", "d1", "d2", "inter")
+      .join(sz.select(col("doc").as("d1"), col("n").as("n1")), Seq("d1"))
       .join(sz.select(col("doc").as("d2"), col("n").as("n2")), Seq("d2"))
       .select(col("d1"), col("d2"), col("inter"),
         (col("inter").cast("double") / col("n1").cast("double")).as("c_in_1"),

@@ -118,7 +118,7 @@ object GraphBuilder {
     // consumed by KeyAssigner's eager keying job AND the final edge plan;
     // without the cut the fact-sized groupBys + window ranks above execute
     // twice, once per consumer. Same discipline as Disproportionality's
-    // persisted pair aggregate.
+    // cut pair aggregate.
     val claims = stats.join(evidence, Seq("subj", "pred", "obj"))
       .withColumn("strength_score",
         least(lit(1.0), col("frequency").cast("double") / 10.0))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.StatCols.pln
-import graft.operators.Spread
+import graft.operators.{Pairs, Spread}
 
 /** Neighborhood-overlap link prediction (Adamic–Adar / common-neighbor
   * scores) over a bipartite edge list — the classic "predict missing KG
@@ -40,16 +40,10 @@ object LinkPrediction {
     * `minCommon` right-neighbors of degree ≤ `maxDegree`. `edges` columns:
     * `left`, `right` (any equatable types); duplicates are collapsed.
     *
-    * PLAN SHAPE (r06): pair generation runs as a bounded array HOF over
-    * each right-node's CAPPED neighbor list instead of an ed⋈ed self-join.
-    * The old self-join planned its b-side as a BroadcastExchange of the
-    * whole (distinct + degree-join) subtree, re-running the edge scan and
-    * both aggregations a second time; now the degree-capped join output —
-    * already hash-partitioned by `right` — is grouped in place (no new
-    * exchange, aggregation state ≤ maxDegree ids) and each sorted list
-    * emits its ≤ maxDegree(maxDegree−1)/2 ascending pairs map-side. The
-    * pair multiset entering the (s1, s2) aggregate is identical, so the
-    * output (and the sorted-fold aa_score) is unchanged. */
+    * Pairs come from each right-node's capped, sorted neighbor list
+    * ([[graft.operators.Pairs]]), grouped in place on the degree join's
+    * `right` partitioning: no new exchange, state ≤ maxDegree ids, and
+    * ≤ maxDegree(maxDegree−1)/2 pairs per list. */
   def adamicAdar(spark: SparkSession, edges: DataFrame, minCommon: Int,
       maxDegree: Int): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
@@ -61,31 +55,10 @@ object LinkPrediction {
       .groupBy("right")
       .agg(sort_array(collect_list(col("left"))).as("ls"),
         first(col("deg")).as("deg"))
-    // ascending pairs of the sorted neighbor list: element i with every
-    // later element — exactly the a.left < b.left self-join rows, each
-    // carrying this right-node's degree.
-    //
-    // TWO chained Generates (posexplode, then explode over the ascending
-    // slice) instead of one nested transform/flatten HOF (r06): higher-
-    // order functions are CodegenFallback — the nested lambda built an
-    // array-of-struct-arrays per row in the interpreted evaluator —
-    // while explode/posexplode run inside whole-stage codegen. Identical
-    // pair multiset, same ascending order per element.
-    //
-    // The pair expansion multiplies WORK, not bytes — AQE sizes the
-    // upstream exchange by bytes and would run the explode on a handful
-    // of coalesced partitions (profiled: 4 tasks at sf0.1). An explicit
-    // width-of-the-cluster repartition is exempt from AQE coalescing and
-    // spreads the quadratic stage; one extra exchange of the (small)
-    // capped neighbor lists pays for it.
-    grouped.transform(Spread.orderFree)
-      .select(col("ls"), col("deg"), posexplode(col("ls")).as(Seq("i", "s1")))
-      .select(col("s1"), col("deg"),
-        explode(slice(col("ls"), col("i") + lit(2), size(col("ls"))))
-          .as("s2"))
-      .groupBy(col("s1"), col("s2"))
-      .agg(count(lit(1)).as("common"),
-        sort_array(collect_list(col("deg"))).as("ds"))
+    // pairs of the capped neighbor lists, each carrying its right-node's
+    // degree; the lists are spread at cluster width first (see Pairs)
+    Pairs(grouped.transform(Spread.orderFree), "ls", "s1", "s2", "common",
+      "deg" -> "ds")
       .where(col("common") >= minCommon)
       .select(col("s1"), col("s2"), col("common"),
         aggregate(col("ds"), lit(0.0),

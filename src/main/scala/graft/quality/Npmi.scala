@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.StatCols.pln
-import graft.operators.{Cut, Spread}
+import graft.operators.{Cut, Pairs, Spread}
 
 /** Normalized pointwise mutual information over document co-occurrence
   * (Bouma, GSCL 2009) — the collocation/term-association score behind
@@ -26,7 +26,7 @@ import graft.operators.{Cut, Spread}
   * vocab terms contributes 5·10⁵ pairs of pure noise). All counts (cₐ,
   * c_b, co, N) come from the SAME kept set, so the probabilities are
   * internally consistent. One dimension-sized df aggregate, one semi-join
-  * gate, one keyed self-join, two broadcastable count joins.
+  * gate, one per-doc pair expansion, two broadcastable count joins.
   *
   * EXACTNESS: counts exact BIGINT, and the score is computed as
   *
@@ -66,24 +66,12 @@ object Npmi {
     // whole score stays one lazy plan
     val nDocs = broadcast(kept.agg(countDistinct("doc").as("nd")))
     val cnt = kept.groupBy("term").agg(count(lit(1)).as("c"))
-    // pair generation as a bounded array HOF over each doc's SORTED term
-    // list (r06, the q313/q147 F3 shape) instead of a kept⋈kept self-join
-    // on doc: one exchange of the kept table, per-group state ≤
-    // maxTermsPerDoc, and the ascending (term_a < term_b) pair multiset
-    // is identical (terms are distinct per doc; string sort order and the
-    // `<` comparison are the same binary collation). The expansion is
-    // spread at cluster width — AQE sizes the exchange by bytes while the
-    // explode multiplies work (F2).
-    kept.groupBy("doc")
+    // each doc's sorted term list (terms are distinct per doc), spread
+    // at cluster width before the pair expansion
+    val lists = kept.groupBy("doc")
       .agg(sort_array(collect_list(col("term"))).as("ts"))
       .transform(Spread.orderFree)
-      // two chained codegen Generates instead of a nested-HOF combo
-      // build (HOFs are CodegenFallback); identical pair multiset
-      .select(col("ts"), posexplode(col("ts")).as(Seq("_i", "term_a")))
-      .select(col("term_a"), explode(slice(col("ts"),
-        col("_i") + lit(2), size(col("ts")))).as("term_b"))
-      .groupBy(col("term_a"), col("term_b"))
-      .agg(count(lit(1)).as("co"))
+    Pairs(lists, "ts", "term_a", "term_b", "co")
       .crossJoin(nDocs)
       .where(col("co") >= minCo && col("co") < col("nd"))
       .join(cnt.select(col("term").as("term_a"), col("c").as("ca")),

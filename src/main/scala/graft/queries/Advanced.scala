@@ -9,7 +9,7 @@ import graft.extract.PageSynth
 import graft.functions.TextFunctions
 import graft.link.{Gazetteer, GazEntry, MentionDetector, TripleExtractor}
 import graft.multimodal.Multimodal
-import graft.operators.{Cut, Spread}
+import graft.operators.{Cut, Pairs, Spread}
 import graft.similarity.Ann
 
 import QueryDef.t
@@ -126,24 +126,14 @@ object Advanced {
 
     // Connected components (large-star/small-star) vs recursive-CTE oracle.
     QueryDef("q30_connected_components", (s, d) => {
-      // PLAN SHAPE (r06): same bounded-HOF pair expansion as q23 — the
-      // old ps⋈ps self-join broadcast-duplicated the distinct subtree
-      // and ran the expansion on AQE-byte-coalesced partitions; the pair
-      // multiset (and so the n ≥ 3 edge set fed to CC) is identical.
+      // the q23 pair expansion; its n ≥ 3 pairs are the edges fed to CC
       val grouped = t(s, d, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"))
         .groupBy("l_partkey")
         .agg(sort_array(collect_set(col("l_suppkey"))).as("supps"))
         .transform(Spread.orderFree)
-      // two chained codegen Generates instead of the nested-HOF combo
-      // build (r06): HOFs are CodegenFallback; identical pair multiset
-      val edges = grouped
-        .select(col("supps"),
-          posexplode(col("supps")).as(Seq("_i", "supp_a")))
-        .select(col("supp_a"), explode(slice(col("supps"),
-          col("_i") + lit(2), size(col("supps")))).as("supp_b"))
-        .groupBy(col("supp_a"), col("supp_b"))
-        .agg(count(lit(1)).as("n")).where(col("n") >= 3)
+      val edges = Pairs(grouped, "supps", "supp_a", "supp_b", "n")
+        .where(col("n") >= 3)
         .select(col("supp_a").as("src"), col("supp_b").as("dst"))
       ConnectedComponents.run(edges)
     }, Some("""

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.StatCols.{dbl, pln, sumInOrder}
-import graft.operators.{Cut, PrefixSum, Spread}
+import graft.operators.{Cut, Pairs, PrefixSum, Spread}
 
 import QueryDef.{dailyEvents, docNodes, kmRiskSets, t}
 
@@ -2550,43 +2550,26 @@ object Analytics {
     // is equi-joins + one hash aggregate — no driver-side candidate set.
     QueryDef("q193_apriori_triples", (s, d) => {
       val minsup = 3L
-      // PLAN SHAPE (r06): each order's distinct supplier set is collected
-      // ONCE (state bounded by basket size — ≤ 7 lineitems per order at
-      // every sf, and real baskets are naturally bounded; the Itemsets
-      // scaladoc cap pattern applies when they are not), then pairs and
-      // triples are emitted map-side by bounded array HOFs. The old shape
-      // self-joined the (o, sv) table twice (pairs, then ×it for s3),
-      // shuffling the basket table four times; now there is ONE basket
-      // exchange, and the a-priori prune survives as three broadcast
-      // semi-joins against the frequent-pair set — output-lossless as
-      // before (a support ≥ 3 triple has all pairs support ≥ 3).
+      // each order's distinct supplier set is collected once (state
+      // bounded by basket size) and spread before the pair and triple
+      // expansions; the a-priori prune stays as three broadcast semi-joins
+      // against the frequent-pair set, lossless as before (a support ≥ 3
+      // triple has all pairs support ≥ 3)
       val g = t(s, d, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_suppkey").as("sv"))
         .groupBy("o").agg(sort_array(collect_set(col("sv"))).as("items"))
-        // spread the combination expansion: AQE coalesces the basket
-        // exchange by BYTES, but the pair/triple explode multiplies work —
-        // an explicit repartition (exempt from AQE coalescing) runs the
-        // expansion at cluster width (profiled: 4 tasks → 32 at sf0.1)
         .transform(Spread.orderFree)
-      def tail(c: org.apache.spark.sql.Column, i: org.apache.spark.sql.Column) =
-        slice(c, i + lit(2), size(c))
-      // chained codegen Generates instead of nested-HOF combo builds
-      // (r06): HOFs are CodegenFallback; pair/triple multisets identical
-      val fp = g
-        .select(col("items"), posexplode(col("items")).as(Seq("_i", "s1")))
-        .select(col("s1"),
-          explode(tail(col("items"), col("_i"))).as("s2"))
-        .groupBy(col("s1"), col("s2"))
-        .agg(count(lit(1)).as("n"))
+      val fp = Pairs(g, "items", "s1", "s2", "n")
         .where(col("n") >= minsup).select("s1", "s2")
       // all i < j < k triples of the sorted basket: s1 at index i, s2 at
       // slice-local index j (absolute i+1+j), s3 strictly after s2
       val tri = g
         .select(col("items"), posexplode(col("items")).as(Seq("_i", "s1")))
         .select(col("items"), col("_i"), col("s1"),
-          posexplode(tail(col("items"), col("_i"))).as(Seq("_j", "s2")))
+          posexplode(Pairs.tail(col("items"), col("_i")))
+            .as(Seq("_j", "s2")))
         .select(col("s1"), col("s2"),
-          explode(tail(col("items"), col("_i") + col("_j") + lit(1)))
+          explode(Pairs.tail(col("items"), col("_i") + col("_j") + lit(1)))
             .as("s3"))
         .join(fp, Seq("s1", "s2"), "left_semi")
         .join(fp.select(col("s1"), col("s2").as("s3")),

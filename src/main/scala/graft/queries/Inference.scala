@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.StatCols.{dbl, pln, sumInOrder}
-import graft.operators.{Cut, PrefixSum, Spread}
+import graft.operators.{Cut, Pairs, PrefixSum, Spread}
 
 import QueryDef.{dailyEvents, docGraph, docNodes, kmRiskSets, lifetimes,
   returnFlagQuantities, t}
@@ -7651,14 +7651,8 @@ object Inference {
     // A perfect rule (conf = 1) sends conviction to NaN explicitly
     // rather than +Inf.
     QueryDef("q313_rule_metrics", (s, d) => {
-      // PLAN SHAPE (r06): the distinct basket-item table fed FOUR
-      // consumers (nb, supp, both self-join sides), each replanning the
-      // distinct; pairs now come from each basket's sorted item set via
-      // a bounded array HOF (state = items-per-basket, the same per-key
-      // dimension the self-join expanded), cut eagerly and spread at
-      // cluster width before the expansion (AQE sizes by bytes, the
-      // explode multiplies work). Pair multiset and all supports are
-      // unchanged — the oracle stays the naive self-join.
+      // each basket's sorted item set is collected once (state = items
+      // per basket), spread and cut: nb, supp and the pair expansion read it
       val g = t(s, d, "lineitem")
         .select(col("l_orderkey").as("basket"),
           col("l_partkey").as("item"))
@@ -7669,14 +7663,7 @@ object Inference {
       val nb = g.agg(count(lit(1)).as("n"))
       val supp = g.select(explode(col("items")).as("item"))
         .groupBy("item").agg(count(lit(1)).as("s"))
-      // two chained codegen Generates instead of the nested-HOF combo
-      // build (r06): HOFs are CodegenFallback; identical pair multiset
-      val pairs = g
-        .select(col("items"), posexplode(col("items")).as(Seq("_i", "ia")))
-        .select(col("ia"), explode(slice(col("items"),
-          col("_i") + lit(2), size(col("items")))).as("ib"))
-        .groupBy(col("ia"), col("ib"))
-        .agg(count(lit(1)).as("sab"))
+      val pairs = Pairs(g, "items", "ia", "ib", "sab")
         .where(col("sab") >= 3L)
       val rules = pairs
         .select(col("ia").as("ante"), col("ib").as("cons"), col("sab"))

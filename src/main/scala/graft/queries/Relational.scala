@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import QueryDef.t
 
-import graft.operators.Spread
+import graft.operators.{Pairs, Spread}
 
 /** Relational operator coverage (SURVEY §2.2–§2.6) over the TPC-H-ish
   * testdata tables, each with a DuckDB oracle.
@@ -252,29 +252,16 @@ object Relational {
       FROM orders""")),
 
     // J7/U2: self-join set intersection (DDI analogue on suppliers/parts).
-    // PLAN SHAPE (r06): the ps⋈ps self-join planned its b-side as a
-    // BroadcastExchange re-running the distinct subtree, and the pair
-    // expansion ran on AQE-byte-coalesced partitions. Now each part's
-    // sorted distinct supplier set is collected once (state bounded by
-    // suppliers-per-part, the same per-key dimension the old join
-    // expanded quadratically) and pairs are emitted by a bounded array
-    // HOF at cluster width. Pair multiset identical → output unchanged
-    // (the oracle stays the naive self-join).
+    // Each part's sorted distinct supplier set is collected once (state
+    // bounded by suppliers per part) and spread before the pair expansion;
+    // the pair rows are the naive self-join's, which the oracle keeps.
     QueryDef("q23_shared_parts", (s, d) => {
       val grouped = t(s, d, "lineitem")
         .select(col("l_partkey"), col("l_suppkey"))
         .groupBy("l_partkey")
         .agg(sort_array(collect_set(col("l_suppkey"))).as("supps"))
         .transform(Spread.orderFree)
-      // two chained codegen Generates instead of the nested-HOF combo
-      // build (r06): HOFs are CodegenFallback; identical pair multiset
-      grouped
-        .select(col("supps"),
-          posexplode(col("supps")).as(Seq("_i", "supp_a")))
-        .select(col("supp_a"), explode(slice(col("supps"),
-          col("_i") + lit(2), size(col("supps")))).as("supp_b"))
-        .groupBy(col("supp_a"), col("supp_b"))
-        .agg(count(lit(1)).as("n_shared"))
+      Pairs(grouped, "supps", "supp_a", "supp_b", "n_shared")
         .where(col("n_shared") >= 2)
     }, Some("""
       WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Cut
+
 /** FAERS-style co-occurrence disproportionality statistics (2×2 PRR / ROR /
   * chi²) over (report, exposure, outcome) data.
   *
@@ -21,10 +23,9 @@ import org.apache.spark.sql.functions._
   * aggregation is the only fact-sized work; the exposure margin, outcome
   * margin and total N are all derivable FROM the pair-count aggregate
   * (exposure_n = Σ over outcomes of a, n = Σ a), so they re-aggregate the
-  * distinct-pair-sized persisted frame instead of rescanning facts
-  * (PlanSpec asserts the sharing). N joins in as a 1-row
-  * aggregate cross-join (the Linker.idf pattern), NOT a driver-side
-  * `count()` — building `signals` launches no job. Hot-key skew on the
+  * distinct-pair-sized cut instead of rescanning facts (PlanSpec asserts
+  * the sharing). N joins in as a 1-row aggregate cross-join (the
+  * Linker.idf pattern), NOT a driver-side `count()`. Hot-key skew on the
   * PAIR aggregation is handled natively by Spark's partial aggregation;
   * the optional `saltBuckets` two-phase path demonstrates explicit salting
   * for extreme skew (SURVEY.md §7.4): stage 1 groups on (exposure,
@@ -33,41 +34,12 @@ import org.apache.spark.sql.functions._
   */
 object Disproportionality {
 
-  /** Serializes the check-then-persist in signalsWithHandle so exactly
-    * one concurrent first caller becomes the owning handle. */
-  private val persistLock = new Object
-
   /** pairs: DataFrame with columns (exposure, outcome), one row per
     * co-occurrence event (already distinct per report if desired).
     * Returns per-(exposure, outcome): a, exposure_n, outcome_n, n, prr,
-    * ror, chi2 — gated like the reference.
-    *
-    * `cachePairs = false` opts out of persisting the pair aggregate for
-    * callers that manage their own caching or run once-and-discard — at
-    * the cost of re-scanning the fact table per consumer (the cache entry
-    * otherwise lives until session end or CacheManager eviction; Spark
-    * dedupes identical plans, so repeated calls over the same input share
-    * one entry rather than accumulating). */
+    * ror, chi2 — gated like the reference. */
   def signals(pairs: DataFrame, exposureCol: String, outcomeCol: String,
-      minA: Long = 3, saltBuckets: Int = 0,
-      cachePairs: Boolean = true): DataFrame =
-    signalsWithHandle(pairs, exposureCol, outcomeCol, minA, saltBuckets,
-      cachePairs).signals
-
-  /** `signals` plus its cached pair aggregate, so long-lived sessions that
-    * scan MANY DISTINCT fact tables can release each table's cache entry
-    * when done (`result.unpersistPairs()`). Plain `signals` has no handle:
-    * its entry lives until session end or CacheManager eviction — fine for
-    * the common one-fact-table session (identical plans dedupe to one
-    * entry), unbounded for a many-distinct-input session, which should use
-    * this method or pass `cachePairs = false`. The handle is OWNING: it is
-    * returned only when this call performed the persist — a call that
-    * finds the aggregate already cached (repeated identical input) gets
-    * `pairAggregate = None`, so releasing one result can never yank the
-    * shared entry from under an earlier live result. */
-  def signalsWithHandle(pairs: DataFrame, exposureCol: String,
-      outcomeCol: String, minA: Long = 3, saltBuckets: Int = 0,
-      cachePairs: Boolean = true): SignalsResult = {
+      minA: Long = 3, saltBuckets: Int = 0): DataFrame = {
     val e = col(exposureCol)
     val o = col(outcomeCol)
 
@@ -93,38 +65,16 @@ object Disproportionality {
     // margins + N derive from the pair-count aggregate itself (every fact
     // row lands in exactly one (exposure, outcome) cell, so the exposure
     // margin = Σ over outcomes of a): distinct-pair-sized re-aggregations,
-    // never a second fact scan. The pair aggregate is persisted because
-    // its four consumers are NOT identical subplans (each join pushes a
-    // different isnotnull() into its branch, defeating exchange reuse) —
-    // without the cache the FACT TABLE would be scanned four times, the
-    // exact cost this shape exists to avoid at 100 TB. The cached frame is
-    // distinct-pair-sized (≤ vocabulary², ≪ facts); persistence is lazy,
-    // so building `signals` still launches no job (PlanSpec pins this),
-    // and Spark's CacheManager dedupes repeated identical plans. N is a
-    // 1-row aggregate cross-joined into the plan — no eager driver
-    // count().
-    // storageLevel consults the CacheManager by canonicalized plan, so a
-    // repeated identical signals() call reuses the existing cache entry
-    // instead of re-persisting (and logging "already cached") every run
-    // `owns` = THIS call performed the persist. A handle is only returned
-    // for owned entries: when an earlier caller's cache is found (already
-    // non-NONE), handing out a second owning handle would let one
-    // result's unpersistPairs() yank the shared CacheManager entry from
-    // under the other live result — re-opening the four-fact-scan cost.
-    // check+persist under one lock: two concurrent first calls would
-    // otherwise BOTH observe NONE and both receive owning handles
-    // (the guarantee only covers persists routed through this method).
-    val (aCached, owns) = Disproportionality.persistLock.synchronized {
-      val alreadyCached =
-        a.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-      if (cachePairs && !alreadyCached)
-        (a.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-          true)
-      else (a, false)
-    }
-    val em = aCached.groupBy(col("exposure")).agg(sum("a").as("exposure_n"))
-    val om = aCached.groupBy(col("outcome")).agg(sum("a").as("outcome_n"))
-    val nRow = aCached.agg(sum("a").as("n"))
+    // never a second fact scan. The aggregate is cut because its four
+    // consumers are NOT identical subplans (each join pushes a different
+    // isnotnull() into its branch, defeating exchange reuse): uncut, the
+    // FACT TABLE would be scanned four times. The cut is distinct-pair-
+    // sized (≤ vocabulary², ≪ facts). N is a 1-row aggregate cross-joined
+    // into the plan — no driver-side count().
+    val ac = Cut.large(a)
+    val em = ac.groupBy(col("exposure")).agg(sum("a").as("exposure_n"))
+    val om = ac.groupBy(col("outcome")).agg(sum("a").as("outcome_n"))
+    val nRow = ac.agg(sum("a").as("n"))
 
     // no static broadcast hints on the margin joins: margins are
     // vocabulary-proportional, and an open web-scale exposure vocabulary
@@ -132,12 +82,11 @@ object Disproportionality {
     // when a margin actually fits (same policy as GraphBuilder /
     // KeyAssigner; PlanSpec pins the absence of compile-time hints). The
     // 1-row N side always broadcasts at runtime.
-    val joined = aCached
+    val joined = ac
       .join(em, "exposure")
       .join(om, "outcome")
       .crossJoin(nRow)
-    SignalsResult(withStats(joined, minA),
-      if (owns) Some(aCached) else None)
+    withStats(joined, minA)
   }
 
   /** 2×2 stats + gates on a frame carrying (a, exposure_n, outcome_n, n). */
@@ -191,15 +140,4 @@ object Disproportionality {
       .orderBy(col("prr").desc, col("outcome").asc)
       .limit(topK)
   }
-}
-
-/** [[Disproportionality.signalsWithHandle]] result: the gated signal frame
-  * plus the persisted pair aggregate (None when `cachePairs = false` OR
-  * when the entry was already cached by an earlier call — only the call
-  * that persisted owns the release) so callers can free the cache entry
-  * per input instead of leaving it to session teardown. */
-final case class SignalsResult(signals: DataFrame,
-    pairAggregate: Option[DataFrame]) {
-  /** Release the pair-aggregate cache entry (no-op when uncached). */
-  def unpersistPairs(): Unit = pairAggregate.foreach(_.unpersist())
 }

@@ -3,7 +3,7 @@ package graft.stats
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cut, Spread}
+import graft.operators.{Cut, Pairs, Spread}
 
 /** Frequent 2-itemset mining (market-basket co-occurrence with a support
   * threshold) — the A-priori first rung: a pair can only reach support s
@@ -15,7 +15,7 @@ import graft.operators.{Cut, Spread}
   *
   * Shuffle shape: distinct (basket, item) → one keyed aggregate for item
   * support (dimension-sized) → semi join (broadcastable when the
-  * frequent-item set is small) → self equi-join on basket (pairs expand
+  * frequent-item set is small) → per-basket item lists (pairs expand
   * quadratically in PER-BASKET size, which real baskets bound; a
   * web-scale guard would cap basket size with counted drops, the q26 LSH
   * pattern) → one pair aggregate with map-side partials.
@@ -25,49 +25,26 @@ object Itemsets {
   /** Pairs of items co-occurring in ≥ `minSupport` distinct baskets.
     * Output: (item_a, item_b, support) with item_a < item_b.
     *
-    * The deduped basket frame feeds THREE consumers (the support
-    * aggregate and both self-join sides), whose subplans are not
-    * identical after per-branch filter pushdown — without the persist the
-    * fact table is scanned four times, the Disproportionality.signals
-    * four-scan cost. It is persisted lazily (building the frame launches
-    * no job) when `cacheBaskets`; the entry is deduped by the
-    * CacheManager for repeated identical inputs. Long-lived sessions
-    * mining MANY distinct basket tables should pass `cacheBaskets =
-    * false` (or adopt the owning-handle pattern of
-    * [[Disproportionality.signalsWithHandle]]) to bound cache
-    * residency. */
+    * The deduped basket frame is cut ([[Cut.large]]): it feeds the item
+    * support aggregate and the prune semi-join, whose subplans differ after
+    * per-branch filter pushdown, so without the cut the fact table is
+    * scanned twice. Pairs come from each pruned basket's sorted item list
+    * ([[Pairs]]); state per group is the pruned basket size, the same
+    * per-basket dimension as the scale note above. */
   def frequentPairs(baskets: DataFrame, basketCol: String, itemCol: String,
-      minSupport: Long, cacheBaskets: Boolean = true): DataFrame = {
+      minSupport: Long): DataFrame = {
     require(minSupport >= 1, s"minSupport must be ≥ 1, got $minSupport")
-    val b0 = baskets
+    val b = baskets
       .select(col(basketCol).as("basket"), col(itemCol).as("item"))
       .distinct()
-    val b =
-      if (cacheBaskets &&
-        b0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        b0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else b0
+      .transform(Cut.large)
     val frequent = b.groupBy("item").agg(count(lit(1)).as("sup"))
       .where(col("sup") >= minSupport).select("item")
     val pruned = b.join(frequent, Seq("item"), "left_semi")
-    // r06: pairs from each pruned basket's sorted item list via a bounded
-    // array HOF instead of a pruned⋈pruned self-join — the join planned
-    // its b-side as a broadcast re-running the prune subtree, and AQE
-    // byte-sized the quadratic expansion onto a few partitions. State per
-    // group = pruned basket size (the same per-basket dimension the join
-    // expanded quadratically; the scaladoc's web-scale cap note applies
-    // unchanged). Pair multiset identical → output unchanged.
     val grouped = pruned.groupBy("basket")
       .agg(sort_array(collect_list(col("item"))).as("items"))
       .transform(Spread.orderFree)
-    // two chained codegen Generates instead of the nested-HOF combo
-    // build (r06): HOFs are CodegenFallback — identical pair multiset
-    grouped
-      .select(col("items"), posexplode(col("items")).as(Seq("_i", "item_a")))
-      .select(col("item_a"), explode(slice(col("items"),
-        col("_i") + lit(2), size(col("items")))).as("item_b"))
-      .groupBy(col("item_a"), col("item_b"))
-      .agg(count(lit(1)).as("support"))
+    Pairs(grouped, "items", "item_a", "item_b", "support")
       .where(col("support") >= minSupport)
   }
 
@@ -102,15 +79,9 @@ object Itemsets {
     val b = baskets
       .select(col(basketCol).as("basket"), col(itemCol).as("item"))
       .distinct()
-    // r06: one aggregation replaces the size-filter semi-join + kept⋈kept
-    // self-join — each basket's sorted item list is collected (state
-    // bounded by basket size BEFORE the cap filter is applied to the
-    // aggregated row, i.e. a 10⁴-item crawl session still buffers its own
-    // list once, exactly as the old size aggregate did), oversize baskets
-    // are dropped whole as before, and pairs are emitted by a bounded
-    // array HOF at cluster width (AQE sizes exchanges by bytes; the
-    // expansion multiplies work). Cut eagerly: occ and the pair expansion
-    // both consume it. Pair multiset and occ counts unchanged.
+    // each basket's sorted item list is collected once (state bounded by
+    // basket size before the cap drops oversize baskets whole), spread at
+    // cluster width and cut: occ and the pair expansion both read it
     val grouped = b.groupBy("basket")
       .agg(sort_array(collect_list(col("item"))).as("items"))
       .where(size(col("items")) <= maxBasket)
@@ -118,14 +89,7 @@ object Itemsets {
       .transform(Cut.large)
     val occ = grouped.select(explode(col("items")).as("item"))
       .groupBy("item").agg(count(lit(1)).as("occ"))
-    // two chained codegen Generates instead of the nested-HOF combo
-    // build (r06, same rationale as frequentPairs)
-    grouped
-      .select(col("items"), posexplode(col("items")).as(Seq("_i", "item_a")))
-      .select(col("item_a"), explode(slice(col("items"),
-        col("_i") + lit(2), size(col("items")))).as("item_b"))
-      .groupBy(col("item_a"), col("item_b"))
-      .agg(count(lit(1)).as("co"))
+    Pairs(grouped, "items", "item_a", "item_b", "co")
       .where(col("co") >= minCo)
       .join(occ.select(col("item").as("item_a"), col("occ").as("occ_a")),
         Seq("item_a"))

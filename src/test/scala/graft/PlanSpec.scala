@@ -121,15 +121,13 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("disproportionality: one fact scan, margins from the pair aggregate") {
-    // margins + N must derive from the PERSISTED pair-count aggregate —
-    // its four consumers carry different pushed null-filters, so exchange
-    // reuse can't share them and an uncached plan would scan the fact
-    // table four times. And N must come from a cross-joined 1-row
-    // aggregate, NOT an eager driver count(): the old count() planted the
-    // materialized total as an integer LITERAL aliased to n, so its
-    // absence from the optimized plan is a deterministic proxy for "no
-    // job at construction time" (listener-based job counting is
-    // async-flaky on a shared session).
+    // margins + N must derive from the CUT pair-count aggregate — its four
+    // consumers carry different pushed null-filters, so exchange reuse
+    // can't share them and an uncut plan would scan the fact table four
+    // times. And N must come from a cross-joined 1-row aggregate, NOT an
+    // eager driver count(): the old count() planted the materialized
+    // total as an integer LITERAL aliased to n, so its absence from the
+    // optimized plan is a deterministic proxy for "no driver-side count".
     val pairs = spark.read.parquet(s"$sf/lineitem.parquet")
       .select(col("l_suppkey").as("exposure"),
         col("l_returnflag").as("outcome"))
@@ -140,15 +138,19 @@ class PlanSpec extends AnyFunSuite {
       "n must be an aggregate output, not an eagerly-counted literal:\n" +
         optimized.take(1000))
     assert(optimized.contains("sum(a"), optimized.take(1000))
-    // all four consumers read the cached pair aggregate
-    val physical = planOf(sig)
-    val cacheReads = "InMemoryTableScan".r.findAllIn(physical).size
-    assert(cacheReads >= 4, s"expected ≥4 cached reads, got $cacheReads\n" +
-      physical.take(1500))
-    // salted two-phase path: same sharing contract
+    // every leaf, in the plain and the salted two-phase path, is a read
+    // of the one cut RDD: no scan of the fact parquet, ≥4 cut reads
     val salted = graft.stats.Disproportionality.signals(pairs, "exposure",
       "outcome", saltBuckets = 8)
-    assert("InMemoryTableScan".r.findAllIn(planOf(salted)).size >= 4)
+    for (df <- Seq(sig, salted)) {
+      val plan = df.queryExecution.optimizedPlan
+      val leaves = plan.collectLeaves()
+      val rdds = leaves.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }
+      assert(rdds.size == leaves.size && rdds.size >= 4 &&
+        rdds.distinct.size == 1, plan.toString.take(1500))
+    }
   }
 
   test("ordered limits compile to TakeOrderedAndProject, not a global sort (q79)") {

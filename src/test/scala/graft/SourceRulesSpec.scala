@@ -12,12 +12,17 @@ import org.scalatest.funsuite.AnyFunSuite
   *     local copy or calls `portable_ln` by name;
   *   - every lineage cut and round-robin spread goes through
   *     `graft/operators/Cut.scala`;
+  *   - the ascending-pair expansion lives once, in
+  *     `graft/operators/Pairs.scala`;
+  *   - no main source but `KeyedClaims.scala` (a scoped persist, released
+  *     in a `finally`) keeps frames in the CacheManager;
   *   - test fixtures are written under `TestSpark.root`. */
 class SourceRulesSpec extends AnyFunSuite {
 
   private val mainRoot = Paths.get("src/main/scala")
   private val home = mainRoot.resolve("graft/functions/StatCols.scala")
   private val cutHome = mainRoot.resolve("graft/operators/Cut.scala")
+  private val pairsHome = mainRoot.resolve("graft/operators/Pairs.scala")
   private val testRoot = Paths.get("src/test/scala")
 
   private def sources(root: Path): Seq[Path] = {
@@ -54,6 +59,29 @@ class SourceRulesSpec extends AnyFunSuite {
     }
     assert(found.isEmpty,
       "use graft.operators.Cut / Spread instead:\n" + found.mkString("\n"))
+  }
+
+  test("the ascending tail slice lives only in Pairs") {
+    assert(Files.isRegularFile(pairsHome), s"$pairsHome is missing")
+    // slice(list, i + lit(2), size(list)), possibly over several lines
+    val tail = """slice\(\s*[\w.]+(?:\([^()]*\))?\s*,[^,]*?\+\s*lit\(2\)\s*,\s*size\(""".r
+    val found = for {
+      p <- mainSources if p != pairsHome
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      m <- tail.findAllMatchIn(text)
+    } yield s"$p:${text.take(m.start).count(_ == '\n') + 1}: " +
+      m.matched.replaceAll("\\s+", " ")
+    assert(found.isEmpty,
+      "use graft.operators.Pairs instead:\n" + found.mkString("\n"))
+  }
+
+  test("only KeyedClaims persists or caches a frame") {
+    val keyedClaims = mainRoot.resolve("graft/streaming/KeyedClaims.scala")
+    val found = hits(mainSources.filter(_ != keyedClaims)) { line =>
+      line.contains(".persist(") || line.contains(".cache()")
+    }
+    assert(found.isEmpty,
+      "cut with graft.operators.Cut instead:\n" + found.mkString("\n"))
   }
 
   test("test fixtures are written under TestSpark.root") {

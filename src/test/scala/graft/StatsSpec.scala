@@ -48,15 +48,6 @@ class StatsSpec extends AnyFunSuite {
     assert(plain == salted)
   }
 
-  test("cachePairs=false (uncached path) ≡ cached output") {
-    val cached = Disproportionality.signals(pairs, "drug", "ae")
-      .collect().map(_.toString).sorted.toSeq
-    val uncached = Disproportionality.signals(pairs, "drug", "ae",
-        cachePairs = false)
-      .collect().map(_.toString).sorted.toSeq
-    assert(cached == uncached)
-  }
-
   test("topKPerExposure bounds outcomes per exposure deterministically") {
     val sig = Disproportionality.signals(pairs, "drug", "ae", minA = 1)
     val topk = Disproportionality.topKPerExposure(sig, 1).collect()
@@ -87,31 +78,6 @@ class StatsSpec extends AnyFunSuite {
     assert(top1.length == math.min(1, rows.length))
     assert(top1.head.getAs[String]("outcome") ==
       rows.head.getAs[String]("outcome"))
-  }
-
-  test("signalsWithHandle exposes the pair cache for release") {
-    import org.apache.spark.storage.StorageLevel
-    // a fresh analyzed plan (not shared with other tests' signals calls)
-    // so THIS call performs the persist and owns the handle
-    val fresh = pairs.where(col("drug").isNotNull)
-    val res = Disproportionality.signalsWithHandle(fresh, "drug", "ae")
-    assert(res.pairAggregate.isDefined)
-    res.signals.count() // materializes the lazy persist
-    assert(res.pairAggregate.get.storageLevel != StorageLevel.NONE)
-    // a SECOND call over the same input finds the entry already cached:
-    // non-owning, no handle — releasing it must not be able to yank the
-    // first result's live cache entry
-    val second = Disproportionality.signalsWithHandle(fresh, "drug", "ae")
-    assert(second.pairAggregate.isEmpty)
-    second.unpersistPairs() // no-op
-    assert(res.pairAggregate.get.storageLevel != StorageLevel.NONE)
-    res.unpersistPairs()
-    assert(res.pairAggregate.get.storageLevel == StorageLevel.NONE)
-    // uncached mode returns no handle; unpersistPairs is a safe no-op
-    val un = Disproportionality.signalsWithHandle(fresh, "drug", "ae",
-      cachePairs = false)
-    assert(un.pairAggregate.isEmpty)
-    un.unpersistPairs()
   }
 
   test("approx_percentile (the 100 TB sketch path) tracks exact percentile") {
