@@ -68,26 +68,19 @@ object ConnectedComponents {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Size-aware dispatch through the shared gate ([[LocalGraph.cut]]): at
-    * most [[LocalGraph.MaxEdges]] symmetric edges the component graph fits
-    * trivially in driver memory (near-dup graphs are sparse — a few edges
-    * per duplicate cluster — even when the corpus is 100 TB), so a driver
-    * union-find avoids ~5 shuffle stages × O(log n) rounds of fixed job
-    * overhead. Above it, the distributed large-star/small-star loop runs
-    * over the same cut. Both paths produce identical output (CanonSpec
-    * pins this). */
+  /** Size-aware dispatch through the shared gate ([[LocalGraph.cut]]): one
+    * cut of the raw (src, dst) projection. At most [[LocalGraph.MaxEdges]]
+    * rows, the component graph fits trivially in driver memory (near-dup
+    * graphs are sparse — a few edges per duplicate cluster — even when the
+    * corpus is 100 TB), so a driver union-find avoids ~5 shuffle stages ×
+    * O(log n) rounds of fixed job overhead. Above it, the distributed
+    * large-star/small-star loop runs over the same cut. Both paths produce
+    * identical rows (CanonSpec and IterativeGraphPropertySpec pin this). */
   def run(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    // Materialize the raw pair projection ONCE: symmetrize AND the
-    // degenerate-endpoint probe below both consume it, and callers pass
-    // arbitrarily expensive plans as `edges` (minhash verify joins,
-    // self-join pair graphs) — without the cut each consumer would
-    // re-execute that whole upstream plan. The pair list itself is
-    // sparse-graph-sized, so the extra materialization is cheap.
-    val ein = edges.select(col("src"), col("dst")).transform(Cut.large)
-    val (base, small) = LocalGraph.cut(symmetrize(ein))
-    // base is symmetric + lineage-cut, as loop requires
-    val core = small.fold(loop(base, maxIter))(runLocal(base, _))
-    withSelfLoopOnly(ein, core)
+    // callers pass arbitrarily expensive plans as `edges` (minhash verify
+    // joins, self-join pair graphs): the cut runs that plan once
+    val (ein, small) = LocalGraph.cut(edges.select(col("src"), col("dst")))
+    small.fold(distributed(ein, maxIter))(runLocal(ein, _))
   }
 
   /** Nodes whose ONLY edges are degenerate (self-loops, or a null partner)
@@ -120,9 +113,11 @@ object ConnectedComponents {
     }
   }
 
-  /** Driver union-find over the collected rows of the (small) symmetric
-    * edge list `base`. */
-  private def runLocal(base: DataFrame, rows: Array[Row]): DataFrame = {
+  /** Driver union-find over the collected raw (src, dst) rows of the cut
+    * `ein`. Every non-null endpoint is a node, so a self-loop or a null
+    * partner leaves its endpoint a singleton, as [[withSelfLoopOnly]] does
+    * on the distributed path. */
+  private def runLocal(ein: DataFrame, rows: Array[Row]): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -132,15 +127,15 @@ object ConnectedComponents {
       r
     }
     rows.foreach { row =>
-      val (ra, rb) = (find(row.getAs[Number](0).longValue),
-        find(row.getAs[Number](1).longValue))
-      if (ra != rb) {
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      val ends = (0 to 1).filterNot(row.isNullAt)
+        .map(i => find(row.getAs[Number](i).longValue))
+      if (ends.size == 2 && ends(0) != ends(1)) {
+        parent(ends.max) = ends.min
       }
     }
     // root = min id of component: union-by-min above keeps roots minimal
     val out = parent.keys.toSeq.map(id => (id, find(id)))
-    base.sparkSession.createDataFrame(out).toDF("id", "component")
+    ein.sparkSession.createDataFrame(out).toDF("id", "component")
   }
 
   /** Rounds taken by the last distributed run — test introspection only. */
@@ -149,12 +144,13 @@ object ConnectedComponents {
   /** The scale path: alternating star rounds, O(log n) iterations.
     * Accepts arbitrary (possibly oriented) edges; symmetrizes + cuts
     * lineage once, then iterates. */
-  def runDistributed(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    // same single-execution contract as run(): see the comment there
-    val ein = edges.select(col("src"), col("dst")).transform(Cut.large)
-    withSelfLoopOnly(ein,
-      loop(symmetrize(ein).transform(Cut.large), maxIter))
-  }
+  def runDistributed(edges: DataFrame, maxIter: Int = 25): DataFrame =
+    distributed(edges.select(col("src"), col("dst")).transform(Cut.large),
+      maxIter)
+
+  /** The distributed loop over the cut raw projection `ein`. */
+  private def distributed(ein: DataFrame, maxIter: Int): DataFrame =
+    withSelfLoopOnly(ein, loop(symmetrize(ein).transform(Cut.large), maxIter))
 
   /** Iteration core. `base` MUST be symmetric and lineage-cut — callers
     * guarantee it, so round 1 skips the redundant symmetrize+distinct that

@@ -1,8 +1,9 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.canon.ConnectedComponents
 import graft.operators.{Cut, Spread}
@@ -16,40 +17,111 @@ import graft.operators.{Cut, Spread}
   */
 object Dedup {
 
-  /** Exact dedup: canonical row per identical `textCol` = min idCol.
-    * Hash-first grouping: the shuffle key is xxhash64(text) — 8 bytes
-    * instead of the document body — with a collision re-check. Groups whose
-    * members disagree on a second, independent hash contain ≥2 distinct
-    * texts; ONLY those rare rows are re-grouped on the full text (broadcast
-    * semi-join of the collided hash set, then an agg over a near-empty
-    * input). Two texts colliding on BOTH 64-bit hashes (~2⁻¹²⁸) are
-    * accepted as equal — the standard content-hash dedup contract. */
+  /** Exact dedup: canonical row per identical `textCol` = min idCol, with
+    * the group size. Hash-first (see [[textGroups]]): the shuffle key is
+    * xxhash64(text), 8 bytes instead of the document body. */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    exactWithHashes(docs, idCol, textCol,
-      t => xxhash64(t), t => xxhash64(t, lit(7)))
+    exactWithHashes(docs, idCol, textCol, keyHash, checkHash)
+
+  /** The shuffle key of the hash-first grouping and the independent second
+    * hash that checks it for collisions. */
+  private val keyHash: Column => Column = t => xxhash64(t)
+  private val checkHash: Column => Column = t => xxhash64(t, lit(7))
 
   /** [[exact]] with injectable hash functions (tests force collisions to
     * pin the full-text fallback path). */
   private[graft] def exactWithHashes(docs: DataFrame, idCol: String,
-      textCol: String, h1: Column => Column, h2: Column => Column): DataFrame = {
-    val hashed = docs.select(col(idCol).as("_id"), col(textCol).as("_text"))
-      .withColumn("_h", h1(col("_text")))
-      .withColumn("_h2", h2(col("_text")))
-    val agg = hashed.groupBy("_h").agg(
-      min(col("_id")).as("canonical_id"),
-      count(lit(1)).as("n_dups"),
-      min(col("_h2")).as("_a"), max(col("_h2")).as("_b"))
-    val clean = agg.where(col("_a") === col("_b"))
-      .select(col("canonical_id"), col("n_dups"))
-    val collidedHashes = agg.where(col("_a") =!= col("_b")).select(col("_h"))
-    // second pass over the source gated by the (near-empty) collided set —
-    // broadcast semi-join filters map-side, so the rescan shuffles ~nothing
-    val resolved = hashed
-      .join(broadcast(collidedHashes), Seq("_h"), "left_semi")
-      .groupBy(col("_text"))
-      .agg(min(col("_id")).as("canonical_id"), count(lit(1)).as("n_dups"))
-      .select(col("canonical_id"), col("n_dups"))
-    clean.unionByName(resolved)
+      textCol: String, h1: Column => Column, h2: Column => Column): DataFrame =
+    textGroups(docs.select(col(idCol).as("doc_id"), col(textCol).as("_text"),
+        h1(col(textCol)).as("_h"), h2(col(textCol)).as("_h2")),
+      keepText = false)._1
+      .select(col("rep").as("canonical_id"), col("n").as("n_dups"))
+
+  /** The one hash-first exact-duplicate grouping, under [[exact]] and the
+    * near-dup pipelines. `hashed` holds (doc_id, _text) and the two text
+    * hashes (_h, _h2). Returns one cut row (_h, rep, n) per distinct text
+    * — rep = min doc_id, n = member count — plus, with `keepText`, the
+    * text itself: min_by carries it as an aggregation VALUE, so partial
+    * aggregation keeps one text per (hash, input partition) and the
+    * shuffle key stays 8 bytes. Also returns the keys that map a doc to
+    * its row: `_h`, or (`_h`, `_text`) when a group collided.
+    *
+    * A group whose members disagree on the second hash holds ≥2 distinct
+    * texts. The job that cuts the groups counts those; only when there are
+    * any does the plan re-group their rows on the full text (broadcast
+    * semi-join of the collided hash set, then an agg over a near-empty
+    * input), so the common plan has no collision branch. Two texts
+    * colliding on BOTH 64-bit hashes (~2⁻¹²⁸) are accepted as equal — the
+    * standard content-hash dedup contract. */
+  private def textGroups(hashed: DataFrame,
+      keepText: Boolean): (DataFrame, Seq[String]) = {
+    val text = if (keepText) Seq("_text") else Nil
+    val (agg, collided) = Cut.materialize(hashed.groupBy("_h").agg(
+      min(col("_h2")).as("_a"), max(col("_h2")).as("_b") +:
+        min(col("doc_id")).as("rep") +: count(lit(1)).as("n") +:
+        text.map(t => min_by(col(t), col("doc_id")).as(t)): _*))(
+      _ => _.count(r => r.get(1) != r.get(2)))
+    val cols = (Seq("_h", "rep", "n") ++ text).map(col)
+    val clean = agg.where(col("_a") === col("_b")).select(cols: _*)
+    if (collided.sum == 0) (clean, Seq("_h"))
+    else {
+      val resolved = hashed
+        .join(broadcast(agg.where(col("_a") =!= col("_b")).select(col("_h"))),
+          Seq("_h"), "left_semi")
+        .groupBy(col("_h"), col("_text"))
+        .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n"))
+        .select(cols: _*)
+      (clean.unionByName(resolved), Seq("_h", "_text"))
+    }
+  }
+
+  /** A corpus collapsed to its distinct texts: `members` (doc_id, rep, n)
+    * maps every doc to its text group's min id and size, `reps`
+    * (doc_id, _text) holds each group's min id and text. */
+  private[graft] final case class Collapse(members: DataFrame, reps: DataFrame)
+
+  /** Exact-duplicate collapse of the near-dup pipelines, over the one
+    * grouping ([[textGroups]]); `h1`/`h2` are the same test seam as
+    * [[exactWithHashes]]'s. The corpus is read once: the hashed rows are
+    * cut, and both the grouping and `members` read the cut. */
+  private[graft] def collapse(docs: DataFrame, idCol: String, textCol: String,
+      h1: Column => Column = keyHash,
+      h2: Column => Column = checkHash): Collapse = {
+    // LOUD contract check: the near-dup pipelines resolve canonical ids
+    // through ConnectedComponents, whose roots are Long — a string/UUID id
+    // would either throw mid-job (ANSI cast) or silently null out every id
+    // (non-ANSI). Fail at plan build with the remedy instead.
+    // resolve through the analyzer (docs.select honors the session's
+    // case-insensitive column resolver; docs.schema(idCol) would throw a
+    // bare 'does not exist' on a case-mismatched name before the
+    // intended message). Scale-0 decimals up to 18 digits cast to Long
+    // exactly (typical JDBC NUMBER ids), so they pass too.
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    val integral = idType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case d: DecimalType => d.scale == 0 && d.precision <= 18
+      case _ => false
+    }
+    require(integral,
+      s"near-dup dedup needs an integral id column, got $idType for " +
+        s"'$idCol' — pre-assign dense long ids (KeyAssigner.assign) or " +
+        "xxhash64 the id first (exact() has no such constraint)")
+    val rows = docs.select(col(idCol).cast("long").as("doc_id"),
+      col(textCol).as("_text"), h1(col(textCol)).as("_h"),
+      h2(col(textCol)).as("_h2")).transform(Cut.large)
+    val (groups, keys) = textGroups(rows, keepText = true)
+    // 8-byte join keys: the text is pruned unless a group collided
+    val members = rows.select(("doc_id" +: keys).map(col): _*)
+      .join(groups.select((keys ++ Seq("rep", "n")).map(col): _*), keys)
+      .select(col("doc_id"), col("rep"), col("n"))
+    // spread the groups: their AQE-coalesced output is 1-2 partitions on a
+    // small corpus, and the per-rep shingle work downstream would run
+    // near-serially. An explicit cluster-width repartition is exempt from
+    // AQE coalescing; at scale the aggregate output is wide anyway and one
+    // extra exchange of the distinct-text table is noise.
+    val reps = groups.select(col("rep").as("doc_id"), col("_text"))
+      .transform(Spread.orderFree)
+    Collapse(members, reps)
   }
 
   /** Word k-gram shingles of a text column as an array column. */
@@ -61,19 +133,26 @@ object Dedup {
         i => concat_ws(" ", slice(toks, i + lit(1), lit(k))))))
   }
 
+  /** The (doc_id, shingle) table of `docs`: one row per distinct word
+    * k-shingle of a doc, cut. The MinHash signatures, the PPJoin ranking
+    * and the exact Jaccard verify all read this one table; its consumers
+    * prune different columns, so their exchanges are not identical
+    * subtrees and ReuseExchange cannot dedupe them — without the cut the
+    * interpreted shingle explode would re-run per consumer. */
+  private def shingleTable(docs: DataFrame, idCol: String, textCol: String,
+      k: Int): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+        explode(shingles(col(textCol), k)).as("shingle"))
+      .distinct().transform(Cut.large)
+
   /** MinHash signatures: n independent 64-bit min-hashes per doc.
     * Hash family: xxhash64(shingle, seed_i).
     *
-    * Computed as explode + n min-AGGREGATES (r06): the former narrow
-    * array-HOF form (`array_min(transform(_sh, s => xxhash64(s, i)))`
-    * × n) ran n interpreted passes per row — higher-order functions are
-    * CodegenFallback — where explode and the n declarative min buffers
-    * whole-stage-codegen. The per-doc partial aggregate collapses
-    * map-side (each doc's shingles live in one partition), so the added
-    * exchange carries exactly one n-long signature row per doc — the
-    * same bytes the signature frame materializes anyway. Signature
-    * values are identical: min over the same hash multiset (shingle
-    * arrays are always non-empty — short docs shingle to [text]).
+    * Computed as explode + n min-AGGREGATES, not as n array-HOF passes per
+    * row: higher-order functions are CodegenFallback, while explode and
+    * the n declarative min buffers whole-stage-codegen. The per-doc
+    * partial aggregate collapses map-side (each doc's shingles live in one
+    * partition), so the exchange carries one n-long signature row per doc.
     *
     * Ids must be unique: the signature is grouped by id, so rows sharing
     * an id merge into ONE signature over the union of their shingles
@@ -81,25 +160,22 @@ object Dedup {
     * signature per row. Pre-assign unique ids (e.g. KeyAssigner.assign)
     * when the input may repeat them. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 5, numHashes: Int = 64): DataFrame = {
+      k: Int = 5, numHashes: Int = 64): DataFrame =
+    signatures(docs.select(col(idCol).as("doc_id"),
+      explode(shingles(col(textCol), k)).as("shingle")), numHashes)
+
+  /** Per-doc min-hashes of a (doc_id, shingle) frame. A min is the same
+    * over a doc's shingle multiset and over its distinct shingles, so the
+    * cut [[shingleTable]] gives the signatures of [[minhashSignatures]]. */
+  private def signatures(sh: DataFrame, numHashes: Int): DataFrame = {
     val sigCols = (0 until numHashes).map(i =>
-      min(xxhash64(col("_s"), lit(i))).as(s"h$i"))
-    docs.select(col(idCol).as("doc_id"),
-        explode(shingles(col(textCol), k)).as("_s"))
-      .groupBy("doc_id")
-      .agg(sigCols.head, sigCols.drop(1): _*)
+      min(xxhash64(col("shingle"), lit(i))).as(s"h$i"))
+    sh.groupBy("doc_id").agg(sigCols.head, sigCols.drop(1): _*)
   }
 
-  /** LSH candidate pairs from signatures: `bands` bands of
-    * numHashes/bands rows; docs sharing any band bucket become candidates.
-    * Bucket fan-out capped at `bucketCap` docs (hot boilerplate buckets are
-    * truncated deterministically by doc id — a documented recall/skew
-    * trade; log the drop in callers if needed). */
-  def lshCandidates(signatures: DataFrame, numHashes: Int = 64,
-      bands: Int = 16, bucketCap: Int = 50): DataFrame =
-    pairsFromBuckets(lshBuckets(signatures, numHashes, bands), bucketCap)
-
-  /** (doc_id, band, sig) bucket assignment from a signature frame. */
+  /** (doc_id, band, sig) LSH bucket assignment from a signature frame:
+    * `bands` bands of numHashes/bands rows; docs sharing any band bucket
+    * become candidates ([[pairsFromBuckets]]). */
   def lshBuckets(signatures: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     require(bands > 0 && bands <= numHashes && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes) — trailing " +
@@ -116,32 +192,35 @@ object Dedup {
   }
 
   /** Σ max(0, bucketSize − cap) over (band, sig) buckets — the candidate
-    * slots a `bucketCap` drops (recall exposure). 0 for capless runs. One
-    * partial-aggregated pass over the bucket rows; launched only when a
-    * cap is actually in force. */
+    * slots a `bucketCap` drops (recall exposure). 0, with no job, for
+    * capless runs. */
   def bucketOverflowCount(buckets: DataFrame, bucketCap: Int): Long =
-    if (bucketCap <= 0) 0L
-    else buckets.groupBy("band", "sig").count()
-      .where(col("count") > bucketCap)
-      .agg(coalesce(sum(col("count") - bucketCap), lit(0L)))
-      .head().getLong(0)
-
-  /** Surface a cap's dropped-slot count on stderr — capped candidate
-    * generation must never truncate silently. No-op (and no job) when
-    * `bucketCap <= 0`. */
-  private def logBucketOverflow(buckets: DataFrame, bucketCap: Int,
-      what: String): Unit = {
-    val dropped = bucketOverflowCount(buckets, bucketCap)
-    if (dropped > 0) System.err.println(
-      s"[dedup] $what dropped $dropped bucket slots over cap=$bucketCap " +
-        "(recall exposure — raise bucketCap or pre-collapse more)")
-  }
+    cappedPairs(buckets, bucketCap)._2
 
   /** Distinct candidate pairs (i < j) within each bucket. `bucketCap > 0`
     * truncates hot buckets to the cap lowest doc ids (deterministic) —
-    * callers must surface the drop via [[bucketOverflowCount]];
+    * callers must surface the drop ([[bucketOverflowCount]]);
     * `bucketCap <= 0` generates pairs capless (no truncation). */
-  def pairsFromBuckets(buckets: DataFrame, bucketCap: Int): DataFrame = {
+  def pairsFromBuckets(buckets: DataFrame, bucketCap: Int): DataFrame =
+    cappedPairs(buckets, bucketCap)._1
+
+  /** [[pairsFromBuckets]], reporting on stderr the slots its cap dropped:
+    * capped candidate generation must never truncate silently. */
+  private def reportedPairs(buckets: DataFrame, bucketCap: Int,
+      what: String): DataFrame = {
+    val (pairs, dropped) = cappedPairs(buckets, bucketCap)
+    if (dropped > 0) System.err.println(
+      s"[dedup] $what dropped $dropped bucket slots over cap=$bucketCap " +
+        "(recall exposure — raise bucketCap or pre-collapse more)")
+    pairs
+  }
+
+  /** The pairs of [[pairsFromBuckets]] and the slots of
+    * [[bucketOverflowCount]]. A capped run cuts the kept bucket rows — both
+    * sides of the pair self-join read them — and the job that cuts them
+    * also counts the drop, bucket rows − kept rows, at no extra job. */
+  private def cappedPairs(buckets: DataFrame,
+      bucketCap: Int): (DataFrame, Long) = {
     // Two-LEVEL rank for the cap (the GraphBuilder evidence-cap shape): a
     // collect_list-then-slice would buffer a hot bucket's ENTIRE member
     // list in one aggregation buffer before truncating — exactly the
@@ -150,28 +229,39 @@ object Dedup {
     // guaranteed superset of the bucket's global first cap (min-k is
     // salt-decomposable); level 2 ranks the ≤ 64×cap survivors. Kept set
     // is identical to the unsalted slice; per-group state is bounded.
-    val capped =
-      if (bucketCap <= 0) buckets
+    val (capped, dropped) =
+      if (bucketCap <= 0) (buckets, 0L)
       else {
-        val w1 = Window
-          .partitionBy(col("band"), col("sig"),
-            pmod(xxhash64(col("doc_id")), lit(64L)))
+        val w1 = Window.partitionBy(col("band"), col("sig"), col("_salt"))
           .orderBy(col("doc_id"))
         val w2 = Window.partitionBy(col("band"), col("sig"))
           .orderBy(col("doc_id"))
-        buckets
+        def whole(w: WindowSpec) =
+          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        // the salt is a column, so both level-1 windows share one exchange
+        val (kept, drops) = Cut.materialize(buckets
+          .withColumn("_salt", pmod(xxhash64(col("doc_id")), lit(64L)))
           .withColumn("_rn1", row_number().over(w1))
+          .withColumn("_n1", count(lit(1)).over(whole(w1)))
           .where(col("_rn1") <= bucketCap)
           .withColumn("_rn2", row_number().over(w2))
+          // Σ _drop = bucket rows − kept rows: every kept row counts −1,
+          // and a bucket's first row adds the bucket's size, the sum of its
+          // salt groups' sizes
+          .withColumn("_drop", coalesce(when(col("_rn2") === 1,
+            sum(when(col("_rn1") === 1, col("_n1"))).over(whole(w2))),
+            lit(0L)) - 1)
           .where(col("_rn2") <= bucketCap)
-          .select("band", "sig", "doc_id")
+          .select("band", "sig", "doc_id", "_drop"))(
+          _ => _.map(_.getLong(3)).sum)
+        (kept, drops.sum)
       }
     // pairs within bucket (i < j), distinct across bands; the self-join is
     // bounded at cap² rows per bucket when capped
     val a = capped.select(col("band"), col("sig"), col("doc_id").as("id_a"))
     val b = capped.select(col("band"), col("sig"), col("doc_id").as("id_b"))
-    a.join(b, Seq("band", "sig")).where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    (a.join(b, Seq("band", "sig")).where(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct(), dropped)
   }
 
   /** MinHash near-dup end-to-end: exact-duplicate pre-collapse → signatures
@@ -182,126 +272,37 @@ object Dedup {
     * byte-identical texts — the bulk of web duplicates (boilerplate) —
     * share identical signatures, so they all land in the SAME buckets and
     * a 10k-copy boilerplate cluster alone blows the per-bucket pair
-    * expansion (and previously overflowed the bucket cap, silently losing
-    * members). Collapsing each distinct text to its min-id representative
-    * first makes LSH see each text once; members rejoin at the end with
-    * their representative's component. Output is identical to running LSH
-    * over the raw corpus (exact dups have Jaccard 1 ≥ any threshold).
+    * expansion (and would overflow the bucket cap, losing members).
+    * Collapsing each distinct text to its min-id representative first
+    * makes LSH see each text once; members rejoin at the end with their
+    * representative's component. Output is identical to running LSH over
+    * the raw corpus (exact dups have Jaccard 1 ≥ any threshold).
     *
     * Hot-bucket truncation among the remaining distinct-text reps is
     * counted and logged (never silent): see the `[dedup] lsh dropped`
     * stderr line. */
-  /** Hash-first exact-duplicate collapse shared by the near-dup pipelines:
-    * returns (members(doc_id, rep, n), repDocs(doc_id, _text)) — both
-    * lineage-cut. The shuffle key is xxhash64(text), never the document
-    * body; min_by carries the representative text as an aggregation VALUE
-    * (partial aggregation keeps one text per (hash, input partition), so
-    * network bytes stay ~one copy per distinct text with 8-byte keys).
-    * Groups whose members disagree on a second hash (real 64-bit
-    * collisions, ~never) are re-resolved on full text via a
-    * broadcast-gated branch — same contract as [[exact]]. */
-  private[graft] def exactCollapse(docs: DataFrame, idCol: String,
-      textCol: String): (DataFrame, DataFrame) = {
-    // LOUD contract check: the near-dup pipelines resolve canonical ids
-    // through ConnectedComponents, whose roots are Long — a string/UUID id
-    // would either throw mid-job (ANSI cast) or silently null out every id
-    // (non-ANSI). Fail at plan build with the remedy instead.
-    import org.apache.spark.sql.types.{ByteType, DecimalType, IntegerType, LongType, ShortType}
-    // resolve through the analyzer (docs.select honors the session's
-    // case-insensitive column resolver; docs.schema(idCol) would throw a
-    // bare 'does not exist' on a case-mismatched name before the
-    // intended message). Scale-0 decimals up to 18 digits cast to Long
-    // exactly (typical JDBC NUMBER ids), so they pass too.
-    val idType = docs.select(col(idCol)).schema.head.dataType
-    val integral = idType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case d: DecimalType => d.scale == 0 && d.precision <= 18
-      case _ => false
-    }
-    require(integral,
-      s"near-dup dedup needs an integral id column, got $idType for " +
-        s"'$idCol' — pre-assign dense long ids (KeyAssigner.assign) or " +
-        "xxhash64 the id first (exact() has no such constraint)")
-    val base = docs.select(col(idCol).cast("long").as("doc_id"),
-      col(textCol).as("_text"))
-    val hashed = base
-      .withColumn("_h", xxhash64(col("_text")))
-      .withColumn("_h2", xxhash64(col("_text"), lit(7)))
-    // eager cut on the per-distinct-text aggregate (r06): FOUR consumers
-    // below (cleanGroups, collided, the members join, repDocs) otherwise
-    // each replan this aggregate with their own column pruning — the
-    // pruned exchanges are no longer identical subtrees, ReuseExchange
-    // cannot dedupe them, and the corpus-text shuffle ran twice at sf0.1
-    // (profiled ~1 s each). The cut materializes the one text shuffle
-    // once; at cluster scale this is the pipeline's persisted stage table
-    // (the Pipeline.runStage commit), same contract as the members /
-    // repDocs cuts below.
-    val agg = hashed.groupBy("_h").agg(
-      min(col("doc_id")).as("rep"), count(lit(1)).as("n"),
-      min_by(col("_text"), col("doc_id")).as("_text"),
-      min(col("_h2")).as("_a"), max(col("_h2")).as("_b"))
-      .transform(Cut.large)
-    val collided = agg.where(col("_a") =!= col("_b")).select(col("_h"))
-    val cleanGroups = agg.where(col("_a") === col("_b"))
-      .select(col("_h"), col("rep"), col("n"), col("_text"))
-    val collGroups = hashed
-      .join(broadcast(collided), Seq("_h"), "left_semi")
-      .groupBy(col("_h"), col("_text"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n"))
-    // member → rep mapping: 8-byte join keys; text pruned from the clean
-    // branch (only collided rows — ~none — join on text)
-    val members = hashed
-      .join(broadcast(collided), Seq("_h"), "left_anti")
-      .join(cleanGroups.select(col("_h"), col("rep"), col("n")), "_h")
-      .select(col("doc_id"), col("rep"), col("n"))
-      .unionByName(hashed
-        .join(broadcast(collided), Seq("_h"), "left_semi")
-        .join(collGroups, Seq("_h", "_text"))
-        .select(col("doc_id"), col("rep"), col("n")))
-      // every consumer of members runs after other materializations
-      .transform(Cut.deferred)
-    // repartition before the cut (r06): the aggregate's AQE-coalesced
-    // output is 1-2 partitions at fixture scale, and the checkpoint
-    // inherits them — the downstream per-rep HOF work (64 minhash
-    // passes, PPJoin shingles) then ran near-serially (profiled 1.5 s on
-    // 2 tasks at sf0.1). An explicit cluster-width repartition is exempt
-    // from AQE coalescing; at scale the aggregate output is wide anyway
-    // and one extra exchange of the distinct-text table is noise.
-    val repDocs = cleanGroups.select(col("rep").as("doc_id"), col("_text"))
-      .unionByName(collGroups.select(col("rep").as("doc_id"), col("_text")))
-      .transform(Spread.orderFree)
-      // the signature/shingle jobs that consume repDocs run one after
-      // another
-      .transform(Cut.deferred)
-    (members, repDocs)
-  }
-
   def minhashDedup(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 5, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8, bucketCap: Int = 50): DataFrame = {
-    // 1. exact pre-collapse (hash-first, see exactCollapse)
-    val (members, repDocs) = exactCollapse(docs, idCol, textCol)
-    // 2. LSH over representatives only. Lineage cuts between stages: fusing
-    // the 64-column signature projection into the band/bucket/verify plan
-    // lets CollapseProject inline the shingle computation into every
-    // consumer (O(64×) recompute per row). At cluster scale these cuts are
-    // persisted checkpoint tables (the pipeline's stage commits).
-    val sigs = minhashSignatures(repDocs, "doc_id", "_text", k, numHashes)
-      // the overflow-count action below materializes it; the candidate
-      // job then reads the blocks
-      .transform(Cut.deferred)
-    val buckets = lshBuckets(sigs, numHashes, bands)
-    logBucketOverflow(buckets, bucketCap, "lsh")
-    val cands = pairsFromBuckets(buckets, bucketCap)
-      .transform(Cut.deferred) // single downstream consumer
-    val verified = jaccardOnPairs(repDocs, cands, "doc_id", "_text", k)
+      threshold: Double = 0.8, bucketCap: Int = 50): DataFrame =
+    minhashDedupOf(collapse(docs, idCol, textCol), k, numHashes, bands,
+      threshold, bucketCap)
+
+  /** [[minhashDedup]] over a collapsed corpus. */
+  private[graft] def minhashDedupOf(c: Collapse, k: Int, numHashes: Int,
+      bands: Int, threshold: Double, bucketCap: Int): DataFrame = {
+    // LSH over representatives only; the signatures and the verify read
+    // one shingle table
+    val sh = shingleTable(c.reps, "doc_id", "_text", k)
+    val cands = reportedPairs(
+      lshBuckets(signatures(sh, numHashes), numHashes, bands), bucketCap, "lsh")
+    val verified = jaccardOnShingles(sh, cands)
       .where(col("jaccard") >= threshold)
     val comps = ConnectedComponents.run(
       verified.select(col("id_a").as("src"), col("id_b").as("dst")))
-    // 3. rejoin members: a doc is a duplicate iff its text group has ≥2
+    // rejoin members: a doc is a duplicate iff its text group has ≥2
     // members or its rep is in a near-dup component. component roots are
     // min rep ids == min member ids (reps are per-group minima).
-    members
+    c.members
       .join(comps.select(col("id").as("rep"), col("component")), Seq("rep"),
         "left")
       .where(col("n") >= 2 || col("component").isNotNull)
@@ -309,28 +310,13 @@ object Dedup {
         coalesce(col("component"), col("rep")).as("canonical_id"))
   }
 
-  /** Exact pairwise Jaccard for given candidate pairs.
-    *
-    * The shingle stream is lineage-cut eagerly (r06): its three consumers
-    * (sizes, both join sides) prune different columns, so their exchanges
-    * are not identical subtrees and ReuseExchange cannot dedupe them —
-    * without the cut the interpreted shingle explode re-ran per consumer
-    * (profiled 3 × ~2.3 s single-task at sf0.1). At cluster scale this
-    * cut is the persisted shingle stage table (the Dedup stage-cut
-    * pattern). */
+  /** Exact pairwise Jaccard for given candidate pairs, over the cut
+    * [[shingleTable]] of `docs`. */
   def jaccardOnPairs(docs: DataFrame, pairs: DataFrame, idCol: String,
-      textCol: String, k: Int): DataFrame = {
-    val sh = docs.select(col(idCol).as("doc_id"),
-      explode(shingles(col(textCol), k)).as("shingle")).distinct()
-      .transform(Cut.large)
-    jaccardOnShingles(sh, pairs)
-  }
+      textCol: String, k: Int): DataFrame =
+    jaccardOnShingles(shingleTable(docs, idCol, textCol, k), pairs)
 
-  /** [[jaccardOnPairs]] over an ALREADY materialized (doc_id, shingle)
-    * stream — callers that have the shingle table in hand (PPJoin built it
-    * for the prefix ranking) verify on it directly instead of re-running
-    * the explode+distinct a second time (profiled: two identical ~0.7 s
-    * shingle stages at sf0.1). */
+  /** [[jaccardOnPairs]] over a cut (doc_id, shingle) table. */
   private def jaccardOnShingles(sh: DataFrame, pairs: DataFrame): DataFrame = {
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val a = sh.select(col("doc_id").as("id_a"), col("shingle"))
@@ -354,20 +340,25 @@ object Dedup {
     * that small, rare-shingle prefix instead of every shingle — killing the
     * frequent-shingle bucket blowup — and the full intersection is computed
     * exactly only for candidates. Output identical to the naive all-pairs
-    * join (oracle-checked in q34 + DedupSpec). */
+    * join (oracle-checked in q34 + DedupSpec).
+    *
+    * Exact-duplicate pre-collapse (same move as [[minhashDedup]]):
+    * identical texts have identical shingle sets, so a boilerplate cluster
+    * of m copies would put m copies of every shingle into the similarity
+    * join (m² blowup per cluster). PPJoin runs over one representative per
+    * distinct text, then expands: within-group pairs are Jaccard 1.0 by
+    * definition; cross-group pairs inherit their representative pair's
+    * exact Jaccard. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, threshold: Double = 0.5): DataFrame = {
-    // Exact-duplicate pre-collapse (same move as minhashDedup): identical
-    // texts have identical shingle sets, so a boilerplate cluster of m
-    // copies would put m copies of every shingle into the similarity join
-    // (m² blowup per cluster). Run PPJoin over one representative per
-    // distinct text, then expand: within-group pairs are Jaccard 1.0 by
-    // definition; cross-group pairs inherit their representative pair's
-    // exact Jaccard. Output identical to the naive all-pairs run.
-    val (members, repDocs) = exactCollapse(docs, idCol, textCol)
-    val repPairs = ngramJaccardPairsDistinct(repDocs, "doc_id", "_text", k,
-      threshold).transform(Cut.deferred) // one consumer
-    val m = members.select(col("doc_id"), col("rep"))
+      k: Int = 3, threshold: Double = 0.5): DataFrame =
+    ngramJaccardPairsOf(collapse(docs, idCol, textCol), k, threshold)
+
+  /** [[ngramJaccardPairs]] over a collapsed corpus. */
+  private[graft] def ngramJaccardPairsOf(c: Collapse, k: Int,
+      threshold: Double): DataFrame = {
+    val repPairs = ppjoin(shingleTable(c.reps, "doc_id", "_text", k),
+      threshold)
+    val m = c.members.select(col("doc_id"), col("rep"))
     val within = m.select(col("rep"), col("doc_id").as("id_a"))
       .join(m.select(col("rep"), col("doc_id").as("id_b")), "rep")
       .where(col("id_a") < col("id_b"))
@@ -380,7 +371,8 @@ object Dedup {
     within.unionByName(cross)
   }
 
-  /** PPJoin core over docs already known to have DISTINCT texts.
+  /** PPJoin core over the cut shingle table `sh` of docs already known to
+    * have DISTINCT texts.
     *
     * Candidate pruning beyond the prefix filter (both from Xiao et al.,
     * WWW'08; neither changes the output — the exact intersection still
@@ -396,18 +388,12 @@ object Dedup {
     *    ⌈t/(1+t)·(|a|+|b|)⌉ are dropped BEFORE the expensive exact
     *    intersection. A 1e-9 slack keeps IEEE rounding of t·x from ever
     *    pruning an exactly-at-threshold pair. */
-  private def ngramJaccardPairsDistinct(docs: DataFrame, idCol: String,
-      textCol: String, k: Int, threshold: Double): DataFrame = {
-    // eager shingle cut — same three-consumer pruning rationale as
-    // jaccardOnPairs (sizes / freq / ranked each re-ran the explode)
-    val sh = docs.select(col(idCol).as("doc_id"),
-      explode(shingles(col(textCol), k)).as("shingle")).distinct()
-      .transform(Cut.large)
+  private def ppjoin(sh: DataFrame, threshold: Double): DataFrame = {
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val ranked = sh.join(freq, "shingle")
       .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
+        Window.partitionBy(col("doc_id"))
           .orderBy(col("df").asc, col("shingle").asc)))
       .join(sizes, "doc_id")
       // same 1e-9 IEEE slack as the length/overlap gates below: a
@@ -436,8 +422,7 @@ object Dedup {
         lit(threshold / (1.0 + threshold))
           * (col("_sa") + col("_sb")).cast("double") - lit(1e-9))
       .select("id_a", "id_b")
-    // verify on the SAME cut shingle stream the prefix ranking was built
-    // from — jaccardOnPairs would recompute an identical explode+distinct
+    // verify on the SAME shingle table the prefix ranking was built from
     jaccardOnShingles(sh, candidates)
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
@@ -490,11 +475,9 @@ object Dedup {
   /** SimHash near-dup candidates: docs whose signatures match on any of the
     * `bands` bands of `bitsPerBand` bits. `bucketCap > 0` truncates hot
     * buckets to the first cap doc ids (id-sorted, deterministic) — the
-    * dropped-slot count is logged here via [[bucketOverflowCount]] (one
-    * extra aggregation pass, capped runs only), never silent. `bucketCap
-    * <= 0` switches to a capless bucket self-join: no truncation, no
-    * overflow pass — the exhaustive (and still bucket-bounded) 100 TB
-    * shape. */
+    * dropped-slot count is logged here, never silent. `bucketCap <= 0`
+    * switches to a capless bucket self-join: no truncation, no cut — the
+    * exhaustive (and still bucket-bounded) 100 TB shape. */
   def simhashCandidates(sigs: DataFrame, bands: Int = 4,
       bitsPerBand: Int = 16, bucketCap: Int = 50): DataFrame = {
     require(bands > 0 && bitsPerBand > 0 && bands * bitsPerBand <= 64,
@@ -514,7 +497,6 @@ object Dedup {
         explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"),
         col("bk.bits").as("sig"))
-    logBucketOverflow(buckets, bucketCap, "simhash")
-    pairsFromBuckets(buckets, bucketCap)
+    reportedPairs(buckets, bucketCap, "simhash")
   }
 }

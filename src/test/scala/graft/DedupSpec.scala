@@ -186,6 +186,21 @@ class DedupSpec extends AnyFunSuite {
     assert(all.size == 36)
   }
 
+  /** Runs `body` with `System.err` captured; returns what it printed. */
+  private def stderrOf(body: => Any): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try body finally System.setErr(err)
+    buf.toString("UTF-8")
+  }
+
+  /** Σ max(0, bucket size − cap), counted on the driver. */
+  private def naiveOverflow(buckets: org.apache.spark.sql.DataFrame,
+      cap: Int): Long =
+    buckets.select("band", "sig").collect().groupBy(identity).values
+      .map(b => math.max(0L, b.length.toLong - cap)).sum
+
   test("bucketOverflowCount counts dropped slots; 0 when capless") {
     val buckets = ((1L to 9L).map(i => (0, 7L, i)) ++
       Seq((1, 8L, 3L), (1, 8L, 5L)))
@@ -193,6 +208,88 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.bucketOverflowCount(buckets, 4) == 5L) // 9 - 4
     assert(Dedup.bucketOverflowCount(buckets, 9) == 0L)
     assert(Dedup.bucketOverflowCount(buckets, 0) == 0L)
+    // one 2000-member bucket: every salt group outgrows the cap, so both
+    // rank levels drop rows
+    val hot = ((1L to 2000L).map(i => (0, 7L, i)) ++
+      Seq((1, 8L, 3L), (1, 8L, 5L))).toDF("band", "sig", "doc_id")
+    assert(Dedup.bucketOverflowCount(hot, 4) == naiveOverflow(hot, 4))
+    assert(Dedup.bucketOverflowCount(hot, 4) == 1996L)
+  }
+
+  test("capped runs report the slots the cap dropped on stderr") {
+    // nine equal signatures share one bucket per band: 4 × (9 − 4)
+    val sigs = (1L to 9L).map(i => (i, 42L)).toDF("doc_id", "simhash")
+    val simErr = stderrOf(Dedup.simhashCandidates(sigs, bands = 4,
+      bitsPerBand = 16, bucketCap = 4).collect())
+    assert(simErr.contains("[dedup] simhash dropped 20 bucket slots over cap=4"),
+      simErr)
+    assert(!stderrOf(Dedup.simhashCandidates(sigs, bands = 4,
+      bitsPerBand = 16, bucketCap = 9).collect()).contains("[dedup]"))
+    // minhash: the buckets of the distinct-text representatives
+    val reps = docs.groupBy("text").agg(min(col("doc_id")).as("doc_id"))
+    val want = naiveOverflow(Dedup.lshBuckets(
+      Dedup.minhashSignatures(reps, "doc_id", "text"), 64, 16), 1)
+    assert(want > 0)
+    val lshErr = stderrOf(Dedup.minhashDedup(docs, "doc_id", "text",
+      threshold = 0.6, bucketCap = 1).collect())
+    assert(lshErr.contains(s"[dedup] lsh dropped $want bucket slots over cap=1"),
+      lshErr)
+  }
+
+  test("near-dup pipelines: forced collisions give the unforced rows") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    def collisionBranch(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.exists {
+        case j: Join => j.joinType == LeftSemi
+        case _ => false
+      }
+    // every row in one hash group; the second hash tells the texts apart
+    def forced = Dedup.collapse(docs, "doc_id", "text",
+      (_: Column) => lit(1L), t => xxhash64(t))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSet
+    val minhash = Dedup.minhashDedup(docs, "doc_id", "text", threshold = 0.6)
+    val minhashForced = Dedup.minhashDedupOf(forced, k = 5, numHashes = 64,
+      bands = 16, threshold = 0.6, bucketCap = 50)
+    assert(!collisionBranch(minhash) && collisionBranch(minhashForced))
+    assert(rows(minhashForced) == rows(minhash))
+    val ngram = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.8)
+    val ngramForced = Dedup.ngramJaccardPairsOf(forced, 3, 0.8)
+    assert(!collisionBranch(ngram) && collisionBranch(ngramForced))
+    assert(rows(ngramForced) == rows(ngram))
+  }
+
+  test("q26 and q34 keep their job budget and read the corpus once") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val sf = "/root/testdata/sf0.001"
+    Seq("q26_minhash_dedup" -> 24, "q34_ngram_jaccard" -> 25).foreach {
+      case (q, budget) =>
+        val runs = new ConcurrentLinkedQueue[QueryExecution]()
+        val listener = new QueryExecutionListener {
+          override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+            runs.add(qe)
+          override def onFailure(f: String, qe: QueryExecution,
+              e: Exception): Unit = ()
+        }
+        spark.listenerManager.register(listener)
+        val jobs = try JobProbe(spark)(SparkEntry.queries(q)(spark, sf).collect())._2
+          finally spark.listenerManager.unregister(listener)
+        assert(jobs.size == budget, s"$q ran ${jobs.size} jobs")
+        // the executions that read `documents`: the fixture's scans and its
+        // max(doc_id) run in one of them
+        val reads = runs.asScala.count(qe => Plans.collect(qe.executedPlan) {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.getName.startsWith("documents")) &&
+                s.metrics("numOutputRows").value > 0 => s
+        }.nonEmpty)
+        assert(reads == 1, s"$q read documents in $reads executions")
+    }
   }
 
   test("decontaminate ≡ naive distinct-n-gram overlap against the benchmark") {

@@ -7,16 +7,18 @@ import org.scalacheck.rng.Seed
 import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.canon.ConnectedComponents
 import graft.graph.{Bfs, Hits, KCore, LabelPropagation, ShortestPaths}
 
 /** The driver engine of the iterative graph operators ([[Bfs]], [[Hits]],
   * [[KCore]], [[LabelPropagation]], [[ShortestPaths]]) answers exactly as
   * their distributed loops: equal schemas and equal row multisets on random
-  * small graphs with null ids and weights, self-loops, duplicate and
-  * parallel edges, negative weights, seeds absent from the graph or null,
-  * empty edge tables, int or long ids. Beside the properties: the driver
-  * path's job count does not grow with the round count, and a long
-  * overflow throws on both paths. */
+  * small graphs with null ids and weights, self-loops, duplicate, reversed
+  * and parallel edges, negative weights, seeds absent from the graph or
+  * null, empty edge tables, int or long ids. [[ConnectedComponents]]'s
+  * driver union-find gives the distributed loop's rows on the same graphs.
+  * Beside the properties: the driver path's job count does not grow with
+  * the round count, and a long overflow throws on both paths. */
 class IterativeGraphPropertySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -112,6 +114,22 @@ class IterativeGraphPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("ConnectedComponents driver path == distributed loop on random graphs") {
+    // the driver path returns long ids, the distributed loop the input's
+    // id type and a nullable component: compare the rows as longs
+    def rows(df: DataFrame) = df.collect().map(r =>
+      (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+      .groupBy(identity).view.mapValues(_.length).toMap
+    val prop = Prop.forAllNoShrink(genGraph) { g =>
+      assert(rows(ConnectedComponents.run(g.edgeFrame)) ==
+        rows(ConnectedComponents.runDistributed(g.edgeFrame)), s"rows on $g")
+      true
+    }
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(20).withInitialSeed(Seed(17L)), prop)
+    assert(res.passed, Pretty.pretty(res))
+  }
+
   test("driver paths submit the same jobs at any round count") {
     import spark.implicits._
     // a 40-node ring with chords: every bound below is still doing work
@@ -140,6 +158,12 @@ class IterativeGraphPropertySpec extends AnyFunSuite {
       ShortestPaths.boundedDistances(edges, seeds, 6),
       ShortestPaths.boundedDistancesDistributed(edges, seeds, 1),
       ShortestPaths.boundedDistancesDistributed(edges, seeds, 6))
+    // a longer chain takes more star rounds
+    def chain(n: Long) = (0L until n).map(i => (i, i + 1)).toDF("src", "dst")
+    flat("ConnectedComponents", ConnectedComponents.run(chain(4)),
+      ConnectedComponents.run(chain(64)),
+      ConnectedComponents.runDistributed(chain(4)),
+      ConnectedComponents.runDistributed(chain(64)))
   }
 
   test("the gate takes small tables, skewed ones too, and refuses larger ones") {
