@@ -133,17 +133,22 @@ object Dedup {
         i => concat_ws(" ", slice(toks, i + lit(1), lit(k))))))
   }
 
-  /** The (doc_id, shingle) table of `docs`: one row per distinct word
-    * k-shingle of a doc, cut. The MinHash signatures, the PPJoin ranking
-    * and the exact Jaccard verify all read this one table; its consumers
-    * prune different columns, so their exchanges are not identical
-    * subtrees and ReuseExchange cannot dedupe them — without the cut the
-    * interpreted shingle explode would re-run per consumer. */
+  /** The (doc_id, shingle, sz) table of `docs`: one row per distinct word
+    * k-shingle of a doc, sz being the doc's count of them, cut. One
+    * exchange on doc_id serves both the distinct and the count. The
+    * MinHash signatures, the PPJoin ranking and the exact Jaccard verify
+    * all read this one table; its consumers prune different columns, so
+    * their exchanges are not identical subtrees and ReuseExchange cannot
+    * dedupe them — without the cut the interpreted shingle explode would
+    * re-run per consumer. */
   private def shingleTable(docs: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame =
     docs.select(col(idCol).as("doc_id"),
         explode(shingles(col(textCol), k)).as("shingle"))
-      .distinct().transform(Cut.large)
+      .repartition(col("doc_id")).distinct()
+      .withColumn("sz",
+        count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+      .transform(Cut.large)
 
   /** MinHash signatures: n independent 64-bit min-hashes per doc.
     * Hash family: xxhash64(shingle, seed_i).
@@ -316,16 +321,14 @@ object Dedup {
       textCol: String, k: Int): DataFrame =
     jaccardOnShingles(shingleTable(docs, idCol, textCol, k), pairs)
 
-  /** [[jaccardOnPairs]] over a cut (doc_id, shingle) table. */
+  /** [[jaccardOnPairs]] over a [[shingleTable]]. */
   private def jaccardOnShingles(sh: DataFrame, pairs: DataFrame): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val a = sh.select(col("doc_id").as("id_a"), col("shingle"))
-    val b = sh.select(col("doc_id").as("id_b"), col("shingle"))
-    val inter = pairs.join(a, "id_a").join(b, Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), "id_b")
+    val a = sh.select(col("doc_id").as("id_a"), col("shingle"),
+      col("sz").as("sz_a"))
+    val b = sh.select(col("doc_id").as("id_b"), col("shingle"),
+      col("sz").as("sz_b"))
+    pairs.join(a, "id_a").join(b, Seq("id_b", "shingle"))
+      .groupBy("id_a", "id_b", "sz_a", "sz_b").agg(count(lit(1)).as("inter"))
       .withColumn("jaccard",
         col("inter").cast("double") /
           (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
@@ -389,13 +392,11 @@ object Dedup {
     *    intersection. A 1e-9 slack keeps IEEE rounding of t·x from ever
     *    pruning an exactly-at-threshold pair. */
   private def ppjoin(sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val freq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     val ranked = sh.join(freq, "shingle")
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("doc_id"))
           .orderBy(col("df").asc, col("shingle").asc)))
-      .join(sizes, "doc_id")
       // same 1e-9 IEEE slack as the length/overlap gates below: a
       // threshold whose double representation sits just above its
       // rational value can push t·sz over the exact integer, ceil then

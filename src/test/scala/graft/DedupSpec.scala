@@ -268,7 +268,7 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.util.QueryExecutionListener
     object Plans extends AdaptiveSparkPlanHelper
     val sf = "/root/testdata/sf0.001"
-    Seq("q26_minhash_dedup" -> 24, "q34_ngram_jaccard" -> 25).foreach {
+    Seq("q26_minhash_dedup" -> 22, "q34_ngram_jaccard" -> 22).foreach {
       case (q, budget) =>
         val runs = new ConcurrentLinkedQueue[QueryExecution]()
         val listener = new QueryExecutionListener {
