@@ -1,12 +1,12 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.canon.KeyAssigner
 import graft.link.Gazetteer
 import graft.model.RawTriple
-import graft.operators.Cut
 
 /** Materializes the property graph from extracted triples.
   *
@@ -20,10 +20,12 @@ import graft.operators.Cut
   * Construction is pure DataFrame: dedup-by-normalized-label merge (the
   * reference's actual canonicalization rule, build.py:88-119), dense keys
   * per node type from one grouped KeyAssigner pass over every type, then
-  * inner joins of triples against the typed key table — unmatched
+  * inner joins of the keyed claims against the typed key table — unmatched
   * endpoints drop, which IS the reference's dict-lookup drop semantics
-  * (J6). Key tables are small relative to triples → broadcast; the only
-  * large shuffles are the claim groupBy and nothing else.
+  * (J6). Claim edges read the triples once, through one (claim, url)
+  * aggregate, and are keyed in place; the label edges read them a second
+  * time. No join carries a static broadcast hint: AQE broadcasts a side
+  * at runtime only when it is truly small.
   */
 object GraphBuilder {
 
@@ -73,17 +75,26 @@ object GraphBuilder {
     // OCCURRENCES (a page emitting the same triple from two sentences
     // counts twice — the reference's merge counts every emission,
     // build.py:88-119, and the q38/q59 oracles pin COUNT(*); the
-    // distinct-URL support count is what `evidence` carries), evidence =
-    // first EvidenceCap urls in url-sorted order.
+    // distinct-URL support count is what `evidence` carries), statement =
+    // min sentence, evidence = first EvidenceCap urls in url-sorted order,
+    // each with a PAYLOAD (reference build.py:121-167: every evidence item
+    // carries a payload dict): the supporting sentence of that page,
+    // min-per-(claim, url) so repeated mentions stay deterministic.
+    // All three come from ONE read of the triples: the (claim, url)
+    // aggregate of the occurrence count `n` and the min sentence.
+    val claim = Seq($"subj", $"pred", $"obj")
+    val perUrl = triples.toDF()
+      .withColumn("_b", pmod(xxhash64($"url"), lit(64L)))
+      // one exchange serves the aggregate and the level-1 rank below: a
+      // (claim, url) group never spans two (claim, bucket) partitions
+      .repartition(claim :+ $"_b": _*)
+      .groupBy(claim ++ Seq($"_b", $"url"): _*)
+      .agg(count(lit(1)).as("n"), min($"sentence").as("ev_sentence"))
     // Two-phase on purpose: a collect_set would buffer EVERY url of a hot
     // claim in one aggregation buffer before capping (OOM at 100 TB for a
     // boilerplate-hot subject). Instead the cap is enforced by a window
     // rank over a spillable sort BEFORE any list materializes — per-claim
     // state is bounded at EvidenceCap everywhere.
-    val stats = triples.toDF()
-      .groupBy($"subj", $"pred", $"obj")
-      .agg(count(lit(1)).as("frequency"),
-        min($"sentence").as("statement"))
     // Two-LEVEL rank for the evidence cap: a single window partitioned by
     // the claim would send EVERY distinct url of a boilerplate-hot claim to
     // one reducer (a straggler at web scale — billions of urls per hot
@@ -91,38 +102,29 @@ object GraphBuilder {
     // hot claim per group — and keeps each bucket's first EvidenceCap urls,
     // a guaranteed superset of the global first EvidenceCap (min-k is
     // bucket-decomposable). Level 2 ranks the ≤ 64×cap survivors per claim.
-    // Deterministic: both levels order by url.
-    val bucket = pmod(xxhash64($"url"), lit(64L))
-    val w1 = org.apache.spark.sql.expressions.Window
-      .partitionBy($"subj", $"pred", $"obj", $"_b").orderBy($"url")
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy($"subj", $"pred", $"obj").orderBy($"url")
-    // per-evidence PAYLOAD (reference build.py:121-167: every evidence item
-    // carries a payload dict): the supporting sentence of that page,
-    // min-per-(claim, url) so repeated mentions stay deterministic. The
-    // groupBy replaces the old 4-column distinct — same dedup, plus the
-    // payload value.
-    val evidence = triples.toDF()
-      .groupBy($"subj", $"pred", $"obj", $"url")
-      .agg(min($"sentence").as("ev_sentence"))
-      .withColumn("_b", bucket)
+    // Deterministic: both levels order by url. Frequency and statement are
+    // bucket-decomposable too: each bucket's first row carries the
+    // bucket's total `n` and min sentence past the cap, so urls the cap
+    // drops still count.
+    val w1 = Window.partitionBy(claim :+ $"_b": _*).orderBy($"url")
+    val bucket = w1.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val w2 = Window.partitionBy(claim: _*).orderBy($"url")
+    val claims = perUrl
       .withColumn("_rn1", row_number().over(w1))
+      .withColumn("_bn", when($"_rn1" === 1, sum($"n").over(bucket)))
+      .withColumn("_bs", min($"ev_sentence").over(bucket))
       .where($"_rn1" <= EvidenceCap)
       .withColumn("_rn", row_number().over(w2))
-      .where($"_rn" <= EvidenceCap)
-      .groupBy($"subj", $"pred", $"obj")
-      .agg(sort_array(collect_list(struct($"url", $"ev_sentence")))
-        .as("evidence_items"))
-    // materialize ONCE: the claim table (one row per DISTINCT claim — the
-    // dimension of everything downstream, far smaller than raw triples) is
-    // consumed by KeyAssigner's eager keying job AND the final edge plan;
-    // without the cut the fact-sized groupBys + window ranks above execute
-    // twice, once per consumer. Same discipline as Disproportionality's
-    // cut pair aggregate.
-    val claims = stats.join(evidence, Seq("subj", "pred", "obj"))
-      .withColumn("strength_score",
-        least(lit(1.0), col("frequency").cast("double") / 10.0))
-      .transform(Cut.large)
+      .groupBy(claim: _*)
+      // coalesce: non-null, like the count it sums (`frequency` is written
+      // as a required column)
+      .agg(coalesce(sum($"_bn"), lit(0L)).as("frequency"),
+        min($"_bs").as("statement"),
+        sort_array(collect_list(when($"_rn" <= EvidenceCap,
+          struct($"url", $"ev_sentence")))).as("evidence_items"))
+    // Keyed in place: the claim columns ride through KeyAssigner, whose one
+    // cut is the claim table's only materialization (it feeds the key
+    // offsets and the edge rows alike).
     // claim-key separator is U+0001 -- written as the ESCAPE \u0001, not a
     // literal control byte that renders invisibly (one control-stripping
     // editor/linter pass would silently turn it into concat_ws("") and
@@ -130,34 +132,25 @@ object GraphBuilder {
     // must sort below every printable char so claim-key RANK order matches
     // the q59 oracle's chr(1)-separated ordering (DuckDB-verified: the two
     // orderings diverge at 3385/3758 ranks), and never occurs in page text.
-    val claimKeys = KeyAssigner.assign(
-      claims.select(concat_ws("\u0001", $"subj", $"pred", $"obj").as("ck")), "ck")
-      .withColumnRenamed("key", "claim_key")
-    val withClaimKey = claims
-      .withColumn("ck", concat_ws("\u0001", $"subj", $"pred", $"obj"))
-      .join(claimKeys, "ck")
-      .drop("ck")
+    val keyed = KeyAssigner.assign(
+      claims.withColumn("ck", concat_ws("\u0001", $"subj", $"pred", $"obj")),
+      "ck", carry = claims.columns)
     // endpoint resolution: inner join against per-type key tables (J6 drop
-    // semantics). NO broadcast hints here: (a) the claim-key table above is
-    // FACT-proportional (one row per distinct claim, billions at 100 TB) and
-    // broadcasting it would OOM — the shuffle join co-partitions on ck;
-    // (b) the vertex table is gazetteer-bounded in this corpus, but a
-    // web-scale entity vocabulary reaches hundreds of millions of labels —
-    // AQE picks broadcast at runtime only when the build side is truly small.
-    val vk = vertices.select($"node_type", $"label", $"key")
-    val src = vk.select($"node_type".as("src_type"), $"label".as("subj"),
-      $"key".as("src_key"))
-    val dst = vk.select($"node_type".as("dst_type"), $"label".as("obj"),
-      $"key".as("dst_key"))
-    withClaimKey
-      .join(src, Seq("subj"))
-      .join(dst, Seq("obj"))
+    // semantics). NO broadcast hints here: (a) the keyed claim table is
+    // FACT-proportional (one row per distinct claim, billions at 100 TB)
+    // and broadcasting it would OOM; (b) the vertex table is
+    // gazetteer-bounded in this corpus, but a web-scale entity vocabulary
+    // reaches hundreds of millions of labels — AQE picks broadcast at
+    // runtime only when the build side is truly small.
+    def keys(side: String, label: String) = vertices.select(
+      $"node_type".as(s"${side}_type"), $"label".as(label), $"key".as(s"${side}_key"))
+    keyed.join(keys("src", "subj"), Seq("subj")).join(keys("dst", "obj"), Seq("obj"))
       .select(
         $"src_type", $"src_key", $"dst_type", $"dst_key",
         lit("Claim").as("edge"),
-        $"claim_key",
+        $"key".as("claim_key"),
         $"pred".as("claim_type"),
-        $"strength_score",
+        least(lit(1.0), $"frequency".cast("double") / 10.0).as("strength_score"),
         $"frequency".cast("double").as("frequency"),
         $"pred".as("relation"),
         lit("synthetic_web").as("dataset"),

@@ -340,23 +340,23 @@ object Pipeline {
       // switch to a 128-bit id before trillion-page deployments.
       val up = fingerprint(root, Seq("pages"))
       val sd = runStage(spark, root, "pages_canonical", CodeVersion, up) {
-        val pages = spark.read.parquet(s"$root/pages").as[Page]
-        val withText = pages.map(p =>
+        val pages = spark.read.parquet(s"$root/pages")
+        val docId = xxhash64(col("url")).bitwiseAND(lit(Long.MaxValue))
+        val withText = pages.as[Page].map(p =>
             (p.url, graft.link.MentionDetector.extractText(p)))
           .toDF("url", "text")
         val clusters = graft.dedup.Dedup.minhashDedup(
-          withText.withColumn("doc_id",
-            xxhash64(col("url")).bitwiseAND(lit(Long.MaxValue))),
+          withText.withColumn("doc_id", docId),
           "doc_id", "text", k = 5, numHashes = 64, bands = 16,
           threshold = 0.9)
-        val ids = withText.withColumn("doc_id",
-          xxhash64(col("url")).bitwiseAND(lit(Long.MaxValue)))
+        // ids from the url column: a typed map cannot be column-pruned, so
+        // reading `withText` here would extract every page's text again
+        val ids = pages.select(col("url"), docId.as("doc_id"))
         val keep = ids.join(clusters, Seq("doc_id"), "left")
           .where(col("canonical_id").isNull ||
             col("canonical_id") === col("doc_id"))
           .select(col("url"))
-        spark.read.parquet(s"$root/pages")
-          .join(keep, Seq("url"), "left_semi")
+        pages.join(keep, Seq("url"), "left_semi")
       }
       results += sd
       "pages_canonical"

@@ -21,6 +21,13 @@ class KgPipelineSpec extends AnyFunSuite {
 
   val N = 600L
 
+  /** Jobs of the edges stage body (claim and label edges, noop write) over
+    * 300 synthesized pages: the (claim, bucket) and claim shuffles, the
+    * range sample and shuffle of the key assignment, its cut (which also
+    * reads the key runs), the key-offset and vertex broadcasts, the label
+    * edges' aggregate shuffle and drug-key broadcast, the write. */
+  val EdgeStageJobs = 10
+
   /** Expected (subj, pred, obj, url) multiset from the planted structure. */
   def oracleTriples(n: Long): Seq[(String, String, String, String)] = {
     (0L until n).flatMap { i =>
@@ -209,6 +216,47 @@ class KgPipelineSpec extends AnyFunSuite {
     val plans = Seq(g.edges.queryExecution.analyzed.toString,
       g.edges.queryExecution.optimizedPlan.toString)
     plans.foreach(p => assert(!p.toLowerCase.contains("broadcast"), p.take(500)))
+  }
+
+  test("edges stage keeps its job budget; buildEdges reads triples once") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import spark.implicits._
+    object Plans extends AdaptiveSparkPlanHelper
+    // the stage's inputs are tables, as in Pipeline.run
+    val dir = TestSpark.scratch("graft_edges_budget")
+    val gaz = PageSynth.gazetteer
+    TripleExtractor.extract(spark, PageSynth.pages(spark, 300), gaz,
+      PageSynth.RelationRules.toMap).write.parquet(s"$dir/triples")
+    val triples = spark.read.parquet(s"$dir/triples").as[graft.model.RawTriple]
+    GraphBuilder.buildVertices(spark, triples, gaz).write.parquet(s"$dir/vertices")
+    val v = spark.read.parquet(s"$dir/vertices")
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    val (_, jobs) = JobProbe(spark) {
+      noop(GraphBuilder.buildEdges(spark, triples, v, gaz)
+        .unionByName(GraphBuilder.buildLabelEdges(spark, triples, v)))
+    }
+    assert(jobs.size == EdgeStageJobs, s"the edges stage ran ${jobs.size} jobs")
+    // executed scans of the triples table, over every execution the call makes
+    val runs = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        runs.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try JobProbe(spark)(noop(GraphBuilder.buildEdges(spark, triples, v, gaz)))
+    finally spark.listenerManager.unregister(listener)
+    val scans = runs.asScala.toSeq.map(qe => Plans.collect(qe.executedPlan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == "triples") &&
+            s.metrics("numOutputRows").value > 0 => s
+    }.size).sum
+    assert(scans == 1, s"buildEdges scanned triples $scans times")
   }
 
   test("buildVertices keys all node types in one pass: jobs independent of type count") {

@@ -92,6 +92,35 @@ class PipelineSpec extends AnyFunSuite {
     assert(res2.forall(_.skipped))
   }
 
+  test("page canonicalization extracts text once: no typed map outside a cut") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.{MapElementsExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val writes = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed match {
+          case w: InsertIntoHadoopFsRelationCommand
+              if w.outputPath.getName == ".tmp_pages_canonical" => writes.add(qe)
+          case _ =>
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // the marker job of JobProbe flushes the listener bus
+    try JobProbe(spark)(Pipeline.run(spark, TestSpark.scratch("graft_pipeM").toString,
+      nPages = 120, partitions = 4, dedupPages = true))
+    finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1)
+    // a cut reads as an RDD scan, so a map below one does not show here
+    val maps = Plans.collect(writes.peek().executedPlan) { case m: MapElementsExec => m }
+    assert(maps.isEmpty, s"${maps.size} typed maps in the pages_canonical write")
+  }
+
   test("snapshots: recompute archives the old table; time-travel reads it") {
     val root = TestSpark.scratch("graft_snap").toString
     def pages(n: Long) = graft.extract.PageSynth.pages(spark, n, 4).toDF()
