@@ -86,7 +86,9 @@ object GraphBuilder {
     val perUrl = triples.toDF()
       .withColumn("_b", pmod(xxhash64($"url"), lit(64L)))
       // one exchange serves the aggregate and the level-1 rank below: a
-      // (claim, url) group never spans two (claim, bucket) partitions
+      // (claim, url) group never spans two (claim, bucket) partitions.
+      // Raw triples cross it, not map-side partials: a (claim, url) pair
+      // repeats only where one page states a claim twice.
       .repartition(claim :+ $"_b": _*)
       .groupBy(claim ++ Seq($"_b", $"url"): _*)
       .agg(count(lit(1)).as("n"), min($"sentence").as("ev_sentence"))
