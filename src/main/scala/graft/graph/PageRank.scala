@@ -46,39 +46,14 @@ object PageRank {
   /** `edges` needs long-castable (src, dst) columns; multi-edges count
     * double (out-degree and contribution alike — consistent, documented).
     * Returns (node, pr_score) for every distinct endpoint, after `iters`
-    * damped iterations (damping factor dampNum/dampDen, default 85/100).
+    * damped iterations (damping factor dampNum/dampDen, default 85/100):
+    * the [[personalized]] iteration with every node a seed.
     */
   def run(edges: DataFrame, iters: Int = 3,
       dampNum: Long = 85L, dampDen: Long = 100L,
-      scale: Long = Scale): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(dampNum >= 0 && dampDen > 0 && dampNum <= dampDen,
-      s"damping must satisfy 0 <= num <= den, got $dampNum/$dampDen")
-    require(scale > 0, s"scale must be positive, got $scale")
-    val e0 = edges
-      .select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-    // materialize edges+outdeg once; every iteration consumes this cut
-    val deg = e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val e = e0.join(deg, "src").transform(Cut.large)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct().transform(Cut.large)
-    val base = scale * (dampDen - dampNum) / dampDen // truncating, exact
-    var pr = nodes.withColumn("score", lit(scale))
-    (1 to iters).foreach { _ =>
-      val in = e.join(pr, col("src") === col("node"))
-        .select(col("dst"), expr("score div outdeg").as("c"))
-        .groupBy("dst").agg(sum("c").as("inb"))
-      pr = nodes.join(in, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (lit(base) + expr(s"coalesce(inb, 0L) * $dampNum div $dampDen"))
-            .as("score"))
-        .transform(Cut.large) // constant-depth plan at any iters
-    }
-    pr.select(col("node"), col("score").as("pr_score"))
-  }
+      scale: Long = Scale): DataFrame =
+    iterate(edges, None, iters, dampNum, dampDen, scale)
+      .select(col("node"), col("score").as("pr_score"))
 
   /** Personalized PageRank: identical integer-exact iteration, but ALL
     * teleport mass lands on the seed set — initial score `scale` on
@@ -92,7 +67,15 @@ object PageRank {
     * broadcasts it when small, the common case). */
   def personalized(edges: DataFrame, seeds: DataFrame, iters: Int = 2,
       dampNum: Long = 85L, dampDen: Long = 100L,
-      scale: Long = Scale): DataFrame = {
+      scale: Long = Scale): DataFrame =
+    iterate(edges, Some(seeds), iters, dampNum, dampDen, scale)
+      .select(col("node"), col("score").as("ppr_score"))
+
+  /** The one damped iteration behind [[run]] and [[personalized]]:
+    * (node, is_seed, score) after `iters` rounds. With no `seeds` every
+    * node is a seed (`is_seed = 1`, no seed join). */
+  private def iterate(edges: DataFrame, seeds: Option[DataFrame],
+      iters: Int, dampNum: Long, dampDen: Long, scale: Long): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampNum >= 0 && dampDen > 0 && dampNum <= dampDen,
       s"damping must satisfy 0 <= num <= den, got $dampNum/$dampDen")
@@ -101,16 +84,20 @@ object PageRank {
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
+    // materialize edges+outdeg once; every iteration consumes this cut
     val deg = e0.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val e = e0.join(deg, "src").transform(Cut.large)
-    val sd = seeds.select(col("node").cast("long").as("node")).distinct()
-      .withColumn("is_seed", lit(1L))
-    val nodes = e.select(col("src").as("node"))
+    val all = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .join(sd, Seq("node"), "left")
-      .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-      .transform(Cut.large)
+    val nodes = (seeds match {
+      case None => all.withColumn("is_seed", lit(1L))
+      case Some(s) =>
+        val sd = s.select(col("node").cast("long").as("node")).distinct()
+          .withColumn("is_seed", lit(1L))
+        all.join(sd, Seq("node"), "left")
+          .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
+    }).transform(Cut.large)
     val base = scale * (dampDen - dampNum) / dampDen // truncating, exact
     var pr = nodes.withColumn("score", col("is_seed") * scale)
     (1 to iters).foreach { _ =>
@@ -122,8 +109,8 @@ object PageRank {
           (col("is_seed") * base +
             expr(s"coalesce(inb, 0L) * $dampNum div $dampDen"))
             .as("score"))
-        .transform(Cut.large)
+        .transform(Cut.large) // constant-depth plan at any iters
     }
-    pr.select(col("node"), col("score").as("ppr_score"))
+    pr
   }
 }

@@ -11,6 +11,7 @@ import graft.link.{Gazetteer, GazEntry, MentionDetector, TripleExtractor}
 import graft.multimodal.Multimodal
 import graft.operators.{Cut, Pairs, Spread}
 import graft.similarity.Ann
+import graft.streaming.KeyedClaims
 
 import QueryDef.t
 
@@ -627,43 +628,39 @@ object Advanced {
         UNNEST(generate_series(0, 2 + doc_id % 4)) AS f(i)
       WHERE f.i % 2 = 0""")),
 
-    // §2.8's incremental streaming claims sink under the driver: two
-    // deterministic page-file waves stream through incrementalClaims with
-    // a persistent checkpoint — the second run RESUMES from committed
+    // §2.8's incremental streaming claims sink under the driver, in its
+    // one-bucket regime (every micro-batch rewrites the whole table): two
+    // deterministic page-file waves stream through incrementalClaimsKeyed
+    // with a persistent checkpoint — the second run RESUMES from committed
     // offsets and merges only wave 2's delta; later invocations replay
     // nothing (exactly-once). The raw triples of the full corpus are
     // materialized once as a side output and the DuckDB oracle
     // re-aggregates them INDEPENDENTLY, so a dropped or double-merged
-    // delta (the crash windows the atomic in-dir batch-id commit closes)
+    // delta (the crash windows the manifest + _HEAD commit closes)
     // hash-mismatches against the streamed claims table.
     QueryDef("q78_incremental_claims", (s, d) => {
       val root = s"$KgRoot/q78"
-      def drain(): Unit = graft.streaming.StreamOps.incrementalClaims(
-        s, s"$root/pages/*",
-        org.apache.spark.sql.Encoders.product[graft.model.Page].schema,
-        s"$root/claims_table", s"$root/ckpt",
-        PageSynth.gazetteer, PageSynth.RelationRules.toMap)
-      ensureTwoWaveClaimsFixture(s, root)(() => drain())
-      drain() // no new files: exactly-once replay must be a no-op
-      graft.streaming.StreamOps.readClaims(s, root + "/claims_table")
+      ensureTwoWaveClaimsFixture(s, root)(() => drainKeyed(s, root, 1))
+      drainKeyed(s, root, 1) // no new files: exactly-once replay = no-op
+      KeyedClaims.read(s, root + "/claims_table")
     }, Some(s"""
       SELECT subj, pred, obj, COUNT(*) AS frequency
       FROM read_parquet('$KgRoot/q78/triples/*.parquet')
       GROUP BY 1, 2, 3""")),
 
     // The KEYED claims sink (open-vocabulary scale path) under the driver:
-    // same two-wave resume/replay protocol as q78, but each micro-batch
-    // merges via KeyedClaims — bucket-level rewrites published by manifest
-    // + _HEAD pointer swap instead of a whole-table rewrite. The oracle
-    // re-aggregates the independently-materialized raw triples, so a
-    // dropped delta, a double merge, OR a bucket the manifest lost/kept
-    // stale (the failure modes specific to partial rewrites) all
-    // hash-mismatch. KeyedClaimsSpec additionally pins on the manifest
-    // that wave 2 rewrote ONLY its touched buckets.
+    // same two-wave resume/replay protocol as q78, but over 64 buckets —
+    // each micro-batch rewrites only the buckets its delta touches
+    // instead of the whole table. The oracle re-aggregates the
+    // independently-materialized raw triples, so a dropped delta, a
+    // double merge, OR a bucket the manifest lost/kept stale (the failure
+    // modes specific to partial rewrites) all hash-mismatch.
+    // KeyedClaimsSpec additionally pins on the manifest that wave 2
+    // rewrote ONLY its touched buckets.
     QueryDef("q81_keyed_claims", (s, d) => {
       val root = ensureKeyedClaimsFixture(s)
-      drainKeyed(s, root) // no new files: exactly-once replay = no-op
-      graft.streaming.KeyedClaims.read(s, root + "/claims_table")
+      drainKeyed(s, root, KeyedClaims.DefaultBuckets) // replay = no-op
+      KeyedClaims.read(s, root + "/claims_table")
     }, Some(s"""
       SELECT subj, pred, obj, COUNT(*) AS frequency
       FROM read_parquet('$KgRoot/q81/triples/*.parquet')
@@ -683,7 +680,7 @@ object Advanced {
       val k = s.read.parquet(s"$root/triples")
         .select(col("subj"), col("pred"), col("obj"))
         .orderBy("subj", "pred", "obj").limit(1).collect()(0)
-      graft.streaming.KeyedClaims.lookup(s, s"$root/claims_table",
+      KeyedClaims.lookup(s, s"$root/claims_table",
         k.getString(0), k.getString(1), k.getString(2))
     }, Some(s"""
       WITH k AS (
@@ -745,17 +742,21 @@ object Advanced {
          OR v1.flag IS DISTINCT FROM v2.flag"""))
   )
 
-  private def drainKeyed(s: SparkSession, root: String): Unit =
-    graft.streaming.KeyedClaims.incrementalClaimsKeyed(
+  /** Stream every unread page file under `root/pages` into the claims
+    * table at `root/claims_table` (checkpoint `root/ckpt`). */
+  private def drainKeyed(s: SparkSession, root: String,
+      nBuckets: Int): Unit =
+    KeyedClaims.incrementalClaimsKeyed(
       s, s"$root/pages/*",
       org.apache.spark.sql.Encoders.product[graft.model.Page].schema,
       s"$root/claims_table", s"$root/ckpt",
-      PageSynth.gazetteer, PageSynth.RelationRules.toMap)
+      PageSynth.gazetteer, PageSynth.RelationRules.toMap, nBuckets)
 
   /** The shared q81/q82 keyed-claims fixture root (built on demand). */
   private def ensureKeyedClaimsFixture(s: SparkSession): String = {
     val root = s"$KgRoot/q81"
-    ensureTwoWaveClaimsFixture(s, root)(() => drainKeyed(s, root))
+    ensureTwoWaveClaimsFixture(s, root)(
+      () => drainKeyed(s, root, KeyedClaims.DefaultBuckets))
     root
   }
 
@@ -764,9 +765,9 @@ object Advanced {
     * through `drain`, wave 2 (pages 250–399) appended and drained again
     * (the drain RESUMES from the checkpoint's committed offsets), plus
     * the full corpus's raw triples materialized once for the DuckDB
-    * oracle. ONE builder shared by the rewrite (q78) and keyed (q81/q82)
-    * sinks, so the two oracled sinks can never diverge in fixture
-    * semantics.
+    * oracle. ONE builder shared by the one-bucket (q78) and 64-bucket
+    * (q81/q82) claims tables, so the two oracled tables can never diverge
+    * in fixture semantics.
     *
     * Self-healing: a previous PARTIAL attempt (e.g. killed between
     * wave 1's commit and the _READY marker) leaves a checkpoint that

@@ -8,7 +8,6 @@ import graft.extract.TextExtractor
 import graft.functions.TextFunctions
 import graft.operators.Spread
 import graft.stats.Disproportionality
-import graft.streaming.StreamOps
 
 import QueryDef.t
 

@@ -5,16 +5,15 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Keyed (bucket-level) claim merge sink: the open-vocabulary counterpart
-  * of [[StreamOps.mergeClaimsBatch]]'s rewrite-per-batch protocol.
-  *
-  * `mergeClaimsBatch` rewrites the WHOLE claims table each micro-batch —
-  * correct only while claims stay vocabulary-bounded (it enforces that
-  * bound). At web scale the (subj, pred, obj) vocabulary is open and the
-  * merge must be keyed: this sink hash-buckets claims by key and each
-  * micro-batch rewrites ONLY the buckets its delta touches, i.e. a keyed
-  * MERGE INTO expressed on plain parquet — per-batch cost
-  * O(delta + touchedBuckets × table/nBuckets), never O(table).
+/** The incremental claims sink: a persistent (subj, pred, obj, frequency)
+  * table that each streamed micro-batch merges its claim-count delta
+  * into. Claims are hash-bucketed by key and each micro-batch rewrites
+  * ONLY the buckets its delta touches, i.e. a keyed MERGE INTO expressed
+  * on plain parquet — per-batch cost
+  * O(delta + touchedBuckets × table/nBuckets), never O(table) once
+  * nBuckets > 1. `nBuckets = 1` is the rewrite-per-batch regime: every
+  * batch rewrites the one bucket, i.e. the whole table (q78), through the
+  * same commit protocol.
   *
   * Table layout under `tableDir` (an Iceberg-style pointer table — data
   * files are immutable once written, commits are manifest swaps):
@@ -31,12 +30,9 @@ import org.apache.spark.sql.functions._
   * version. Because data files are never modified in place, time-travel is
   * "read an older manifest" and rollback is "commit a new manifest with an
   * old manifest's map" — a pure pointer operation with NO copy, NO
-  * archive/swap window and therefore no intent journal (contrast
-  * [[StreamOps.rollbackClaims]], which must journal its non-atomic
-  * dir swap).
+  * archive/swap window and therefore no intent journal.
   *
-  * Crash windows (single writer — the streaming query — as with the
-  * rewrite sink):
+  * Crash windows (single writer — the streaming query):
   *   - mid data write: orphan dirs under `files/c<seq>`; `_HEAD` is
   *     untouched, replay re-merges the delta and overwrites them.
   *   - between manifest write and `_HEAD` swap: an unreferenced manifest;
@@ -47,10 +43,10 @@ import org.apache.spark.sql.functions._
   *     never a manifest pointing at truncated data.
   *
   * Exactly-once: the committed micro-batch id travels in the manifest the
-  * `_HEAD` swap publishes (same invariant as `_BATCH` INSIDE the swapped
-  * claims dir: the id can never disagree with the data it describes);
-  * replayed ids are skipped, and the checkpoint-identity guard from the
-  * rewrite sink applies unchanged.
+  * `_HEAD` swap publishes, so the id can never disagree with the data it
+  * describes; replayed ids are skipped, and the table is pinned to the
+  * identity of the checkpoint whose batch ids it records
+  * ([[checkpointIdentity]]).
   *
   * 100 TB notes: the manifest is O(nBuckets) driver-side lines — size
   * nBuckets so a bucket holds one healthy parquet file set (thousands of
@@ -114,8 +110,7 @@ object KeyedClaims {
   }
 
   /** Batch id embedded in the current manifest (-1 when absent) — the
-    * replay-skip watermark, same contract as
-    * [[StreamOps.committedBatchId]]. */
+    * replay-skip watermark. */
   def committedBatchId(tableDir: String): Long =
     head(tableDir).map(_.batchId).getOrElse(-1L)
 
@@ -203,8 +198,10 @@ object KeyedClaims {
         s"keyed claims table at $tableDir was committed with nBuckets=" +
           s"${m.nBuckets} but this merge uses $nBuckets — the bucket " +
           "function is pinned at table creation")
-      // checkpoint-identity guard, same rationale as mergeClaimsBatch:
-      // batch ids are only comparable within one checkpoint's id-space
+      // checkpoint-identity guard, checked BEFORE the replay skip: batch
+      // ids are only comparable within one checkpoint's id-space, and a
+      // recreated checkpoint restarts at 0 — the skip would silently
+      // discard its genuinely new waves
       for (id <- ckptId; existing <- m.ckptId; if existing != id)
         throw new IllegalStateException(
           s"keyed claims table at $tableDir was committed under " +
@@ -374,20 +371,49 @@ object KeyedClaims {
     } finally ms.close()
   }
 
-  /** Streaming entry: [[StreamOps.incrementalClaims]] with this keyed sink
-    * — new page files micro-batch in, extract triples with the SAME narrow
-    * per-row code as the batch pipeline, merge each delta keyed. The
-    * deployment shape for an OPEN claim vocabulary, where the rewrite
-    * sink's vocabulary bound would trip. */
+  /** Stable identity of a checkpoint's batch-id space, written once on
+    * first use: batch ids are only comparable within ONE checkpoint, so
+    * [[merge]] pins the table to this identity and a deleted/recreated
+    * checkpoint (whose ids restart at 0) fails loudly against a table
+    * committed under the old one instead of silently skipping new
+    * waves. */
+  private def checkpointIdentity(checkpointDir: String): String = {
+    val idFile = Paths.get(checkpointDir, "_graft_ckpt_id")
+    Files.createDirectories(idFile.getParent)
+    if (!Files.exists(idFile))
+      Files.writeString(idFile, java.util.UUID.randomUUID().toString)
+    Files.readString(idFile).trim
+  }
+
+  /** Streaming entry: new page files micro-batch in, each batch extracts
+    * triples with the SAME narrow per-row code as the batch pipeline and
+    * merges its claim delta keyed, via one checkpointed `foreachBatch`
+    * pass. Source offsets + batch ids persist in `checkpointDir`, so a
+    * restarted job resumes at the next unread file instead of replaying
+    * the whole directory — checkpointed offsets + an idempotent batch
+    * sink = exactly-once. The "pages land continuously in the lake"
+    * deployment shape; the batch pipeline is the backfill. */
   def incrementalClaimsKeyed(spark: SparkSession, pagesDir: String,
       schema: org.apache.spark.sql.types.StructType, tableDir: String,
       checkpointDir: String, gaz: graft.link.Gazetteer,
       rules: graft.link.TripleExtractor.Rules,
       nBuckets: Int = DefaultBuckets): Unit = {
-    val ckptId = StreamOps.checkpointIdentity(checkpointDir)
-    StreamOps.driveClaimsStream(spark, pagesDir, schema, checkpointDir,
-      gaz, rules) { (batch, batchId) =>
-      merge(batch, batchId, tableDir, nBuckets, ckptId = Some(ckptId))
+    val ckptId = Some(checkpointIdentity(checkpointDir))
+    StreamOps.withTripleStream(spark, pagesDir, schema, gaz, rules) {
+      triples =>
+        val q = triples.writeStream.outputMode("append")
+          .option("checkpointLocation", checkpointDir)
+          .foreachBatch {
+            (batch: org.apache.spark.sql.Dataset[graft.model.RawTriple],
+              batchId: Long) =>
+              merge(batch.toDF(), batchId, tableDir, nBuckets,
+                ckptId = ckptId)
+          }
+          .start()
+        // stop in finally: a throwing batch (e.g. a guard) must not leak
+        // an active query holding the checkpoint — a caller that catches
+        // and retries would hit "query already active"
+        try q.processAllAvailable() finally q.stop()
     }
   }
 }

@@ -15,14 +15,6 @@ case class SessOut(user_id: Long, event_id: Long, session_idx: Int)
   */
 object StreamOps {
 
-  /** Ceiling on claims-table rows before [[mergeClaimsBatch]] refuses to
-    * keep rewriting per micro-batch (the sink's scale contract — see the
-    * guard in mergeClaimsBatch). 50M rows of (subj, pred, obj, frequency)
-    * is a few GB of parquet: a per-batch rewrite is still minutes-cheap
-    * there, while anything growing past it is an open vocabulary that
-    * belongs on a row-level-merge table format. */
-  val DefaultVocabularyBound: Long = 50000000L
-
   /** Tumbling-window counts per event_type — batch form (same plan shape
     * Catalyst produces for the streaming variant). */
   def windowedCountsBatch(events: DataFrame, windowLen: String = "1 hour"): DataFrame =
@@ -88,12 +80,13 @@ object StreamOps {
       .start()
   }
 
-  /** The shared front half of every triple-extraction stream: broadcast
+  /** The shared front half of every triple-extraction stream
+    * ([[tripleStream]], [[KeyedClaims.incrementalClaimsKeyed]]): broadcast
     * the gazetteer + rules, stream page files, run the SAME narrow
     * per-row extraction as the batch pipeline, hand the triple stream to
     * `f`, and destroy the broadcasts after the query `f` drives
     * finishes. */
-  private def withTripleStream[A](spark: SparkSession, pagesDir: String,
+  private[streaming] def withTripleStream[A](spark: SparkSession, pagesDir: String,
       schema: org.apache.spark.sql.types.StructType,
       gaz: graft.link.Gazetteer, rules: graft.link.TripleExtractor.Rules)(
       f: org.apache.spark.sql.Dataset[graft.model.RawTriple] => A): A = {
@@ -110,47 +103,6 @@ object StreamOps {
       })
     } finally { bGaz.destroy(); bRules.destroy() }
   }
-
-  /** Stable identity of a checkpoint's batch-id space, written once on
-    * first use: batch ids are only comparable within ONE checkpoint, so
-    * the claims sinks pin the table to this identity and a deleted/
-    * recreated checkpoint (whose ids restart at 0) fails loudly against a
-    * table committed under the old one instead of silently skipping new
-    * waves. */
-  def checkpointIdentity(checkpointDir: String): String = {
-    val idFile = java.nio.file.Paths.get(checkpointDir, "_graft_ckpt_id")
-    java.nio.file.Files.createDirectories(idFile.getParent)
-    if (!java.nio.file.Files.exists(idFile))
-      java.nio.file.Files.writeString(idFile,
-        java.util.UUID.randomUUID().toString)
-    java.nio.file.Files.readString(idFile).trim
-  }
-
-  /** Drive one checkpointed foreachBatch pass over the page stream — the
-    * shared driver of [[incrementalClaims]] and
-    * [[KeyedClaims.incrementalClaimsKeyed]], which differ only in the
-    * merge their `onBatch` performs. Source offsets + batch ids persist
-    * in `checkpointDir`, so a restarted job resumes at the next unread
-    * file instead of replaying the whole directory — checkpointed offsets
-    * + an idempotent batch sink = exactly-once. */
-  private[streaming] def driveClaimsStream(spark: SparkSession,
-      pagesDir: String, schema: org.apache.spark.sql.types.StructType,
-      checkpointDir: String, gaz: graft.link.Gazetteer,
-      rules: graft.link.TripleExtractor.Rules)(
-      onBatch: (DataFrame, Long) => Unit): Unit =
-    withTripleStream(spark, pagesDir, schema, gaz, rules) { triples =>
-      val q = triples.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[graft.model.RawTriple],
-            batchId: Long) => onBatch(batch.toDF(), batchId)
-        }
-        .start()
-      // stop in finally: a throwing batch (e.g. the vocabulary-bound
-      // guard) must not leak an active query holding the checkpoint — a
-      // caller that catches and retries would hit "query already active"
-      try q.processAllAvailable() finally q.stop()
-    }
 
   /** Streaming KG construction: the extract→link→triples stage of the
     * pipeline as a Structured Streaming job — new page files micro-batch
@@ -170,276 +122,6 @@ object StreamOps {
         .format("memory").queryName(queryName).start()
       try q.processAllAvailable() finally q.stop()
     }
-
-  /** Incremental KG claim materialization: new page files micro-batch in,
-    * each batch extracts triples (same narrow per-row code as the batch
-    * pipeline) and MERGES its claim-count delta into a persistent claims
-    * table via `foreachBatch` — the "pages land continuously in the lake"
-    * deployment shape; the batch pipeline is the backfill.
-    *
-    * Exactly-once on a non-transactional sink: the sink embeds the last
-    * committed micro-batch id INSIDE the data directory it publishes with
-    * one atomic rename (see [[mergeClaimsBatch]] for the crash-window
-    * analysis) and SKIPS replayed ids. The merge
-    * rewrites the claims table per batch — claims are VOCABULARY-bounded
-    * (one row per distinct (subj,pred,obj)), so the rewrite is
-    * dimension-sized; for an OPEN vocabulary use [[KeyedClaims]], the
-    * keyed-merge sink that rewrites only delta-touched buckets (the
-    * in-repo expression of Iceberg/Delta MERGE INTO).
-    *
-    * FunctionsSpec drives two waves of page files and pins (a) the final
-    * table equals the one-shot batch extraction over the union and (b)
-    * replaying a committed batch id is a no-op. */
-  def incrementalClaims(spark: SparkSession, pagesDir: String,
-      schema: org.apache.spark.sql.types.StructType, tableDir: String,
-      checkpointDir: String, gaz: graft.link.Gazetteer,
-      rules: graft.link.TripleExtractor.Rules): Unit = {
-    val ckptId = checkpointIdentity(checkpointDir)
-    driveClaimsStream(spark, pagesDir, schema, checkpointDir, gaz, rules) {
-      (batch, batchId) =>
-        mergeClaimsBatch(batch, batchId, tableDir, ckptId = Some(ckptId))
-    }
-  }
-
-  /** One idempotent claims merge (exposed for the replay spec): skips
-    * already-committed batch ids.
-    *
-    * The committed batch id lives in `claims/_BATCH`, INSIDE the data
-    * directory, and the whole directory (data files + id) is swapped in
-    * with ONE atomic rename — so the id can never disagree with the data
-    * it describes. The merge is incremental (re-merging a delta would
-    * double-count frequencies), which is why a marker-written-after-data
-    * protocol is NOT idempotent here and the id must travel with the data.
-    * Crash windows:
-    *   - before the archive move: tmp leftovers only; the committed table
-    *     and its id are untouched, replay re-merges the delta once.
-    *   - between archive and swap: no current `claims` dir — restored from
-    *     the newest snapshot on the next merge ([[restoreClaimsIfMissing]]);
-    *     its embedded id predates the delta, so replay re-merges once.
-    *   - after the swap: data and id committed together; replay is a no-op.
-    *
-    * The replaced table is archived as a numbered snapshot (same
-    * time-travel/rollback story as the batch Pipeline stages —
-    * [[claimsSnapshots]], [[readClaims]], [[rollbackClaims]]), with
-    * retention bounded at `snapshotRetention`. */
-  def mergeClaimsBatch(batch: org.apache.spark.sql.DataFrame, batchId: Long,
-      tableDir: String, snapshotRetention: Int = 3,
-      vocabularyBound: Long = DefaultVocabularyBound,
-      ckptId: Option[String] = None): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val spark = batch.sparkSession
-    val root = Paths.get(tableDir)
-    Files.createDirectories(root)
-    restoreClaimsIfMissing(root)
-    val dataDir = root.resolve("claims")
-    // checkpoint-identity guard, checked BEFORE the replay skip: batch ids
-    // are only comparable within ONE checkpoint's id-space. A deleted/
-    // recreated checkpoint replays the directory as batch 0,1,... and the
-    // `<=` skip would silently DISCARD genuinely new waves against a table
-    // committed under the old checkpoint. Fail loudly instead — the
-    // operator either restores the original checkpoint or starts a fresh
-    // tableDir. (Tables committed before this guard have no _CKPT and are
-    // adopted by the next commit.)
-    val ckptFile = dataDir.resolve("_CKPT")
-    ckptId.foreach { id =>
-      if (Files.exists(ckptFile)) {
-        val existing = Files.readString(ckptFile).trim
-        if (existing != id) throw new IllegalStateException(
-          s"claims table at $tableDir was committed under checkpoint " +
-          s"identity $existing but this stream runs under $id: batch-id " +
-          "replay protection is invalid across checkpoints — restore the " +
-          "original checkpoint directory or materialize into a fresh " +
-          "tableDir")
-      }
-    }
-    if (batchId <= committedBatchId(root)) return // replay: already committed
-    val delta = batch.groupBy(col("subj"), col("pred"), col("obj"))
-      .agg(count(lit(1)).as("frequency"))
-    val merged =
-      if (Files.exists(dataDir)) spark.read.parquet(dataDir.toString)
-        .unionByName(delta)
-        .groupBy(col("subj"), col("pred"), col("obj"))
-        .agg(sum(col("frequency")).as("frequency"))
-      else delta
-    val tmp = root.resolve(".tmp_claims")
-    graft.util.Fs.deleteRec(tmp)
-    merged.write.mode("overwrite").parquet(tmp.toString) // reads old table
-    // ENFORCED scale contract, not just narrated: the per-batch rewrite is
-    // only correct-cost while the claims table stays vocabulary-bounded
-    // (one row per distinct (subj,pred,obj)). An open web-scale vocabulary
-    // grows the table past any rewrite budget — that deployment must swap
-    // this sink for the keyed bucket-merge sink ([[KeyedClaims]]; Iceberg/
-    // Delta MERGE INTO at lake scale). Fail loudly at the threshold
-    // instead of silently degrading into an O(table) rewrite per batch.
-    // The count reads the just-written parquet footers (metadata-cheap),
-    // and the check runs BEFORE archive/swap, so a rejected batch leaves
-    // only tmp leftovers — the committed table and its id are untouched.
-    val mergedRows = spark.read.parquet(tmp.toString).count()
-    if (mergedRows > vocabularyBound) {
-      graft.util.Fs.deleteRec(tmp)
-      throw new IllegalStateException(
-        s"claims table would reach $mergedRows rows > vocabularyBound " +
-        s"$vocabularyBound: the rewrite-per-batch sink is for " +
-        "vocabulary-bounded claims; an open vocabulary needs the keyed " +
-        "merge sink (KeyedClaims.incrementalClaimsKeyed, or Iceberg/" +
-        "Delta MERGE INTO at lake scale) — see StreamOps scale notes")
-    }
-    // the id (and the checkpoint identity it is scoped to) joins the data
-    // INSIDE tmp before the single atomic publish (underscore-prefixed
-    // files are invisible to parquet scans)
-    Files.writeString(tmp.resolve("_BATCH"), batchId.toString)
-    ckptId.foreach(id => Files.writeString(tmp.resolve("_CKPT"), id))
-    archiveClaims(root) // current committed table → next numbered snapshot
-    Files.move(tmp, dataDir, StandardCopyOption.ATOMIC_MOVE)
-    // markers first (Fs.deleteCommitted): a crash mid-prune must leave a
-    // visibly-uncommitted partial, never a _BATCH-bearing truncated
-    // snapshot that readClaims(asOf)/rollbackClaims would trust
-    claimsSnapshots(tableDir).dropRight(snapshotRetention)
-      .foreach(id => graft.util.Fs.deleteCommitted(
-        claimsSnapDir(root, id), Seq("_BATCH", "_CKPT")))
-  }
-
-  /** Batch id embedded in the committed claims table (-1 when absent).
-    * Falls back to the pre-snapshot protocol's root-level `_BATCH` marker
-    * so a table committed by the older code resumes with its real id
-    * instead of -1 (which would re-merge a replayed delta). */
-  def committedBatchId(root: java.nio.file.Path): Long = {
-    val embedded = root.resolve("claims").resolve("_BATCH")
-    val legacy = root.resolve("_BATCH")
-    if (java.nio.file.Files.exists(embedded))
-      java.nio.file.Files.readString(embedded).trim.toLong
-    else if (java.nio.file.Files.exists(legacy))
-      java.nio.file.Files.readString(legacy).trim.toLong
-    else -1L
-  }
-
-  private def claimsSnapRoot(root: java.nio.file.Path) =
-    root.resolve("_snapshots").resolve("claims")
-
-  private def claimsSnapDir(root: java.nio.file.Path, id: Int) =
-    claimsSnapRoot(root).resolve(f"snap-$id%05d")
-
-  /** Retained claims-table snapshot ids, oldest first. */
-  def claimsSnapshots(tableDir: String): Seq[Int] =
-    graft.util.Fs.numberedEntries(
-      claimsSnapRoot(java.nio.file.Paths.get(tableDir)), "snap-")
-
-  /** Read the claims table: current by default, or time-travel to a
-    * retained snapshot. */
-  def readClaims(spark: SparkSession, tableDir: String,
-      asOf: Option[Int] = None): org.apache.spark.sql.DataFrame = asOf match {
-    case None => spark.read.parquet(s"$tableDir/claims")
-    case Some(id) =>
-      val d = claimsSnapDir(java.nio.file.Paths.get(tableDir), id)
-      // the embedded _BATCH doubles as the snapshot's commit marker — a
-      // crash mid-prune deletes it FIRST, so requiring it here refuses
-      // data-truncated leftovers instead of silently serving partial rows
-      require(java.nio.file.Files.exists(d.resolve("_BATCH")),
-        s"claims table has no committed snapshot $id " +
-          s"(retained: ${claimsSnapshots(tableDir).mkString(",")})")
-      spark.read.parquet(d.toString)
-  }
-
-  /** Restore a retained snapshot as the current claims table (the replaced
-    * current is archived first, so rollback is itself in the history and
-    * reversible). The snapshot's embedded `_BATCH` id comes back with it,
-    * so later micro-batches (higher ids) merge normally. */
-  def rollbackClaims(tableDir: String, toSnapshot: Int): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val root = Paths.get(tableDir)
-    settleClaimsRollbackIntent(root)
-    val src = claimsSnapDir(root, toSnapshot)
-    // _BATCH doubles as the commit marker (prune deletes it first), so a
-    // crash-truncated snapshot can never be restored as current
-    require(Files.exists(src.resolve("_BATCH")),
-      s"claims table has no committed snapshot $toSnapshot")
-    // intent journal: between archiveClaims and the swap there is NO
-    // current table, and without the intent the next merge's
-    // restoreClaimsIfMissing would resurrect the NEWEST snapshot — the
-    // just-archived PRE-rollback table — silently undoing the rollback.
-    val intent = claimsIntentPath(root)
-    Files.createDirectories(intent.getParent)
-    Files.writeString(intent, toSnapshot.toString)
-    val tmp = root.resolve(".tmp_claims")
-    graft.util.Fs.deleteRec(tmp)
-    // copy (not move) so the snapshot itself stays retained/immutable
-    graft.util.Fs.copyTree(src, tmp)
-    archiveClaims(root)
-    Files.move(tmp, root.resolve("claims"), StandardCopyOption.ATOMIC_MOVE)
-    Files.deleteIfExists(intent)
-  }
-
-  private def claimsIntentPath(root: java.nio.file.Path) =
-    root.resolve("_intents").resolve("claims")
-
-  /** Complete (or loudly abandon) a claims rollback interrupted mid-swap —
-    * same contract as the batch Pipeline's settleRollbackIntent: finish
-    * the swap when the staged copy exists and the current table is gone;
-    * otherwise drop the intent with a stderr note (the swap either never
-    * started or already completed, and the intent alone cannot tell which
-    * — nothing is corrupted either way, the operator re-runs if still
-    * intended). */
-  private def settleClaimsRollbackIntent(root: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val intent = claimsIntentPath(root)
-    if (Files.exists(intent)) {
-      val dataDir = root.resolve("claims")
-      val tmp = root.resolve(".tmp_claims")
-      if (!Files.exists(dataDir) && Files.exists(tmp)) {
-        Files.move(tmp, dataDir, StandardCopyOption.ATOMIC_MOVE)
-        System.err.println(
-          "[stream] completed interrupted claims rollback to snapshot " +
-          Files.readString(intent).trim)
-      } else {
-        System.err.println(
-          "[stream] dropping stale claims rollback intent (to snapshot " +
-          s"${Files.readString(intent).trim}): the swap did not start or " +
-          "already completed — re-run rollbackClaims if still intended")
-      }
-      Files.deleteIfExists(intent)
-    }
-  }
-
-  /** Archive the current committed claims table as the next snapshot. Any
-    * existing `claims` dir is committed by construction (it only ever
-    * appears via the atomic rename of a fully-written tmp dir). */
-  private def archiveClaims(root: java.nio.file.Path): Unit = {
-    val dataDir = root.resolve("claims")
-    if (java.nio.file.Files.exists(dataDir)) {
-      val next = claimsSnapshots(root.toString).lastOption.getOrElse(0) + 1
-      java.nio.file.Files.createDirectories(claimsSnapRoot(root))
-      java.nio.file.Files.move(dataDir, claimsSnapDir(root, next),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-  }
-
-  /** Crash recovery for the window between archive and swap: the current
-    * table is missing but its predecessor is the newest snapshot — COPY it
-    * back as current (copying, not moving, keeps the snapshot id retained:
-    * a reader holding that id from [[claimsSnapshots]] must not see it
-    * vanish), staged through a tmp dir + atomic rename so a crash
-    * mid-restore never yields a half-copied current table. */
-  private def restoreClaimsIfMissing(root: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    // an interrupted ROLLBACK must complete first: its crash window also
-    // leaves the current table missing, and restoring the newest snapshot
-    // here would resurrect the just-archived PRE-rollback table, silently
-    // undoing what the operator asked for
-    settleClaimsRollbackIntent(root)
-    val dataDir = root.resolve("claims")
-    if (!Files.exists(dataDir)) {
-      // newest COMMITTED snapshot only (_BATCH present) — a crash mid-
-      // prune leaves marker-less partials that must never be restored
-      claimsSnapshots(root.toString).reverse
-        .find(id => Files.exists(claimsSnapDir(root, id).resolve("_BATCH")))
-        .foreach { id =>
-          val tmp = root.resolve(".tmp_restore")
-          graft.util.Fs.deleteRec(tmp)
-          graft.util.Fs.copyTree(claimsSnapDir(root, id), tmp)
-          Files.move(tmp, dataDir, StandardCopyOption.ATOMIC_MOVE)
-        }
-    }
-  }
 
   /** Streaming exact dedup: the streaming leg of [[graft.dedup.Dedup.exact]]
     * — new document files micro-batch in, rows whose content was already

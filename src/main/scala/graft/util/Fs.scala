@@ -27,10 +27,10 @@ object Fs {
     * reverse-lexicographic, which deletes `part-*` data files BEFORE
     * underscore markers — a crash mid-delete would otherwise leave a
     * data-truncated directory whose surviving marker still vouches for
-    * it, and a marker-trusting reader (readStage/readClaims asOf,
-    * rollback) would silently serve or restore truncated data. With the
-    * marker gone first, any partial leftover is visibly uncommitted and
-    * those readers refuse it. */
+    * it, and a marker-trusting reader (readStage asOf, rollback) would
+    * silently serve or restore truncated data. With the marker gone
+    * first, any partial leftover is visibly uncommitted and those readers
+    * refuse it. */
   def deleteCommitted(p: Path, markers: Seq[String]): Unit = {
     if (Files.exists(p)) {
       markers.foreach(m => Files.deleteIfExists(p.resolve(m)))
@@ -40,9 +40,9 @@ object Fs {
 
   /** Ids of `<prefix><N>`-named entries directly under `dir`, sorted
     * ascending; empty when `dir` is absent. The shared listing step of
-    * the three numbered-commit protocols (stage snapshots, claims-table
-    * snapshots, keyed-claims manifests) — one implementation so their
-    * listing semantics can never diverge. Non-numeric suffixes on a
+    * the two numbered-commit protocols (stage snapshots, keyed-claims
+    * manifests) — one implementation so their listing semantics can
+    * never diverge. Non-numeric suffixes on a
     * matching prefix fail loudly: nothing but the protocols' own writers
     * may name entries under these roots. */
   def numberedEntries(dir: Path, prefix: String): Seq[Int] = {

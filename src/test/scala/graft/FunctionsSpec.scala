@@ -295,218 +295,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(streamed == batch && streamed.nonEmpty)
   }
 
-  test("streaming incremental claims (foreachBatch exactly-once) == batch extraction") {
-    import graft.extract.PageSynth
-    val pagesDir = TestSpark.scratch("graft_incp")
-    val tableDir = TestSpark.scratch("graft_inct").toString
-    val ckpt = TestSpark.scratch("graft_incc").toString
-    val p1 = PageSynth.pages(spark, 150).toDF()
-    p1.write.parquet(pagesDir.resolve("b1").toString)
-    val schema = spark.read.parquet(pagesDir.resolve("b1").toString).schema
-
-    def claims() = spark.read.parquet(s"$tableDir/claims")
-      .collect().map(_.toString).sorted.toSeq
-    def batchClaims(n: Long) = {
-      import org.apache.spark.sql.functions._
-      graft.link.TripleExtractor.extract(spark,
-          PageSynth.pages(spark, n), PageSynth.gazetteer,
-          PageSynth.RelationRules.toMap).toDF()
-        .groupBy(col("subj"), col("pred"), col("obj"))
-        .agg(count(lit(1)).as("frequency"))
-        .collect().map(_.toString).sorted.toSeq
-    }
-
-    // wave 1 commits, table == batch job over wave 1
-    StreamOps.incrementalClaims(spark, s"$pagesDir/*", schema, tableDir,
-      ckpt, PageSynth.gazetteer, PageSynth.RelationRules.toMap)
-    assert(claims() == batchClaims(150))
-
-    // wave 2 lands; a RESTARTED job (same checkpoint) merges only the
-    // delta — the final table equals the one-shot batch job over the union
-    spark.range(150, 300).map(i => PageSynth.page(i))(
-        org.apache.spark.sql.Encoders.product[graft.model.Page]).toDF()
-      .write.parquet(pagesDir.resolve("b2").toString)
-    StreamOps.incrementalClaims(spark, s"$pagesDir/*", schema, tableDir,
-      ckpt, PageSynth.gazetteer, PageSynth.RelationRules.toMap)
-    assert(claims() == batchClaims(300))
-
-    // replaying an already-committed batch id is a no-op (idempotent sink)
-    val before = claims()
-    import spark.implicits._
-    StreamOps.mergeClaimsBatch(
-      Seq(("x", "REL", "y", "u", "s")).toDF("subj", "pred", "obj", "url",
-        "sentence"),
-      batchId = 0L, tableDir)
-    assert(claims() == before)
-  }
-
-  test("claims sink: atomic batch-id commit, snapshots, crash restore, rollback") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import spark.implicits._
-    val tableDir = TestSpark.scratch("graft_claims_snap").toString
-    def merge(id: Long, rows: Seq[(String, String, String)]): Unit =
-      StreamOps.mergeClaimsBatch(
-        rows.map { case (s1, p1, o1) => (s1, p1, o1, "u", "s") }
-          .toDF("subj", "pred", "obj", "url", "sentence"), id, tableDir)
-    def table() = spark.read.parquet(s"$tableDir/claims")
-      .collect().map(_.toString).sorted.toSeq
-
-    merge(0, Seq(("a", "R", "b"), ("a", "R", "b"), ("c", "R", "d")))
-    val after0 = table()
-    merge(1, Seq(("a", "R", "b")))
-    val after1 = table()
-    assert(after1 != after0) // frequency merged incrementally (a,R,b → 3)
-
-    // the replaced table is retained as a snapshot, time-travel reads it
-    assert(StreamOps.claimsSnapshots(tableDir) == Seq(1))
-    assert(StreamOps.readClaims(spark, tableDir, asOf = Some(1))
-      .collect().map(_.toString).sorted.toSeq == after0)
-    // the batch id travels inside the data dir
-    assert(StreamOps.committedBatchId(Paths.get(tableDir)) == 1L)
-
-    // crash window between archive and swap: current table missing, its
-    // predecessor is the newest snapshot. A replayed merge must COPY it
-    // back (the snapshot id stays retained) and then SKIP (id is embedded
-    // in the restored data — no double count).
-    Files.move(Paths.get(tableDir, "claims"),
-      Paths.get(tableDir, "_snapshots", "claims", "snap-00002"),
-      StandardCopyOption.ATOMIC_MOVE)
-    merge(1, Seq(("a", "R", "b")))
-    assert(table() == after1)
-    assert(StreamOps.claimsSnapshots(tableDir) == Seq(1, 2))
-    assert(StreamOps.readClaims(spark, tableDir, asOf = Some(2))
-      .collect().map(_.toString).sorted.toSeq == after1)
-
-    // rollback restores a snapshot as current (archiving the replaced
-    // table, so rollback is itself in the history) and reverts the id
-    StreamOps.rollbackClaims(tableDir, toSnapshot = 1)
-    assert(table() == after0)
-    assert(StreamOps.committedBatchId(Paths.get(tableDir)) == 0L)
-    assert(StreamOps.claimsSnapshots(tableDir) == Seq(1, 2, 3))
-
-    // post-rollback merges continue from the reverted id
-    merge(2, Seq(("e", "R", "f")))
-    assert(table().exists(_.contains("e")) && table().size == after0.size + 1)
-  }
-
-  test("claims sink: vocabulary bound is ENFORCED, rejected batch leaves table intact") {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    val tableDir = TestSpark.scratch("graft_claims_bound").toString
-    def merge(id: Long, rows: Seq[(String, String, String)],
-        bound: Long): Unit =
-      StreamOps.mergeClaimsBatch(
-        rows.map { case (s1, p1, o1) => (s1, p1, o1, "u", "s") }
-          .toDF("subj", "pred", "obj", "url", "sentence"), id, tableDir,
-        vocabularyBound = bound)
-    def table() = spark.read.parquet(s"$tableDir/claims")
-      .collect().map(_.toString).sorted.toSeq
-
-    merge(0, Seq(("a", "R", "b"), ("c", "R", "d")), bound = 10)
-    val committed = table()
-    // a batch that would grow the claims table past the bound fails
-    // LOUDLY (the rewrite-per-batch contract — an open vocabulary needs a
-    // keyed MERGE INTO sink; StreamOps scale notes) ...
-    val grow = (0 until 20).map(i => (s"s$i", "R", s"o$i"))
-    val ex = intercept[IllegalStateException](merge(1, grow, bound = 10))
-    assert(ex.getMessage.contains("MERGE INTO"))
-    // ... and BEFORE the swap: committed table, id, and snapshots untouched
-    assert(table() == committed)
-    assert(StreamOps.committedBatchId(Paths.get(tableDir)) == 0L)
-    assert(!Files.exists(Paths.get(tableDir, ".tmp_claims")))
-    // under the bound the same batch id commits normally afterwards
-    merge(1, grow, bound = 1000)
-    assert(table().size == committed.size + 20)
-  }
-
-  test("claims sink: checkpoint-identity guard fails loudly on a reset checkpoint") {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    val tableDir = TestSpark.scratch("graft_claims_ckpt").toString
-    def merge(id: Long, rows: Seq[(String, String, String)],
-        ckpt: String): Unit =
-      StreamOps.mergeClaimsBatch(
-        rows.map { case (s1, p1, o1) => (s1, p1, o1, "u", "s") }
-          .toDF("subj", "pred", "obj", "url", "sentence"), id, tableDir,
-        ckptId = Some(ckpt))
-    merge(0, Seq(("a", "R", "b")), ckpt = "ckpt-A")
-    // same checkpoint: replay skips, new ids merge — normal operation
-    merge(0, Seq(("a", "R", "b")), ckpt = "ckpt-A")
-    merge(1, Seq(("c", "R", "d")), ckpt = "ckpt-A")
-    // a RESET checkpoint restarts batch ids at 0; the <= skip would
-    // silently DISCARD this genuinely new wave — the guard throws instead
-    val ex = intercept[IllegalStateException](
-      merge(0, Seq(("e", "R", "f")), ckpt = "ckpt-B"))
-    assert(ex.getMessage.contains("checkpoint"))
-    assert(StreamOps.committedBatchId(Paths.get(tableDir)) == 1L)
-  }
-
-  test("claims sink: crash-truncated snapshot is refused and never restored") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import spark.implicits._
-    val tableDir = TestSpark.scratch("graft_claims_trunc").toString
-    def merge(id: Long, rows: Seq[(String, String, String)]): Unit =
-      StreamOps.mergeClaimsBatch(
-        rows.map { case (s1, p1, o1) => (s1, p1, o1, "u", "s") }
-          .toDF("subj", "pred", "obj", "url", "sentence"), id, tableDir)
-    def table() = spark.read.parquet(s"$tableDir/claims")
-      .collect().map(_.toString).sorted.toSeq
-    merge(0, Seq(("a", "R", "b")))
-    val after0 = table()
-    merge(1, Seq(("c", "R", "d")))
-    merge(2, Seq(("e", "R", "f")))
-    assert(StreamOps.claimsSnapshots(tableDir) == Seq(1, 2))
-    // prune crashed mid-delete of snap-00002: _BATCH goes FIRST, so the
-    // leftover is visibly uncommitted — readers refuse it
-    Files.delete(Paths.get(tableDir, "_snapshots", "claims", "snap-00002",
-      "_BATCH"))
-    intercept[IllegalArgumentException](
-      StreamOps.readClaims(spark, tableDir, asOf = Some(2)))
-    intercept[IllegalArgumentException](
-      StreamOps.rollbackClaims(tableDir, toSnapshot = 2))
-    // crash window with the current table missing: restore must skip the
-    // truncated newest snapshot and take the newest COMMITTED one
-    graft.util.Fs.deleteRec(Paths.get(tableDir, "claims"))
-    merge(0, Seq(("a", "R", "b"))) // replay vs restored snap-00001 (id 0)
-    assert(table() == after0)
-  }
-
-  test("claims sink: interrupted rollback completes instead of being undone") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import spark.implicits._
-    val tableDir = TestSpark.scratch("graft_claims_rbint").toString
-    val root = Paths.get(tableDir)
-    def merge(id: Long, rows: Seq[(String, String, String)]): Unit =
-      StreamOps.mergeClaimsBatch(
-        rows.map { case (s1, p1, o1) => (s1, p1, o1, "u", "s") }
-          .toDF("subj", "pred", "obj", "url", "sentence"), id, tableDir)
-    def table() = spark.read.parquet(s"$tableDir/claims")
-      .collect().map(_.toString).sorted.toSeq
-    merge(0, Seq(("a", "R", "b")))
-    val after0 = table()
-    merge(1, Seq(("c", "R", "d")))
-    assert(StreamOps.claimsSnapshots(tableDir) == Seq(1))
-    // simulate rollbackClaims(1) crashing in its destructive window:
-    // intent written, restore copy staged, current archived away
-    Files.createDirectories(root.resolve("_intents"))
-    Files.writeString(root.resolve("_intents").resolve("claims"), "1")
-    graft.util.Fs.copyTree(
-      Paths.get(tableDir, "_snapshots", "claims", "snap-00001"),
-      root.resolve(".tmp_claims"))
-    Files.move(root.resolve("claims"),
-      Paths.get(tableDir, "_snapshots", "claims", "snap-00002"),
-      StandardCopyOption.ATOMIC_MOVE)
-    // the next merge settles the intent: the ROLLBACK completes — without
-    // the intent, restore would resurrect snap-00002 (the PRE-rollback
-    // table), silently undoing the operator's rollback
-    merge(0, Seq(("a", "R", "b"))) // replay vs the restored id-0 table
-    assert(table() == after0)
-    assert(!Files.exists(root.resolve("_intents").resolve("claims")))
-    // the pre-rollback table stays in history
-    assert(StreamOps.readClaims(spark, tableDir, asOf = Some(2))
-      .collect().nonEmpty)
-  }
-
   test("update-mode windowed counts: watermark drops later-than-watermark events") {
     import spark.implicits._
     val dir = TestSpark.scratch("graft_upd")

@@ -135,66 +135,54 @@ class KeyedClaimsSpec extends AnyFunSuite {
   test("randomized merge/replay/rollback sequences match an in-memory model") {
     // model-based fuzz: the keyed table must equal a plain Map fold of the
     // SAME committed operations, whatever interleaving of new batches,
-    // replays of stale ids, and rollbacks occurs. Seeded for determinism.
-    val rnd = new scala.util.Random(20260818L)
-    val dir = TestSpark.scratch("graft_kcf").toString
-    type Model = Map[(String, String, String), Long]
-    var model: Model = Map.empty
-    // every manifest's batchId is some merge's batchId (rollback manifests
-    // copy their target's), so batchId → model-at-that-merge replays any
-    // rollback exactly
-    var byBatch = Map.empty[Long, Model]
-    var nextBatch = 0L
-    (0 until 25).foreach { _ =>
-      rnd.nextInt(4) match {
-        case 0 | 1 => // new batch: 1-8 rows over a small hot key space
-          val rows = Seq.fill(1 + rnd.nextInt(8))(
-            (s"s${rnd.nextInt(12)}", "R", s"o${rnd.nextInt(5)}"))
-          KeyedClaims.merge(triples(rows), nextBatch, dir, retention = 50)
-          rows.groupBy(identity).foreach { case (k, g) =>
-            model = model.updated(k, model.getOrElse(k, 0L) + g.size) }
-          byBatch += nextBatch -> model
-          nextBatch += 1
-        case 2 if nextBatch > 0 =>
-          // replay an id at or below the COMMITTED watermark (after a
-          // rollback the watermark drops, and ids above it would merge as
-          // genuinely new — by design): must be a no-op
-          val committed = KeyedClaims.committedBatchId(dir)
-          KeyedClaims.merge(
-            triples(Seq((s"s${rnd.nextInt(12)}", "R", "poison"))),
-            rnd.nextInt(committed.toInt + 1).toLong, dir, retention = 50)
-        case 3 if nextBatch > 1 => // rollback to a random retained seq
-          val seqs = KeyedClaims.manifests(dir)
-          val to = seqs(rnd.nextInt(seqs.size))
-          KeyedClaims.rollback(dir, to)
-          model = byBatch(KeyedClaims.head(dir).get.batchId)
-        case _ => // skipped branch (guard not satisfied)
+    // replays of stale ids, and rollbacks occurs. Seeded for determinism;
+    // nBuckets = 1 is the rewrite-the-whole-table regime q78 runs in.
+    Seq(KeyedClaims.DefaultBuckets, 1).foreach { nBuckets =>
+      val rnd = new scala.util.Random(20260818L)
+      val dir = TestSpark.scratch(s"graft_kcf$nBuckets").toString
+      type Model = Map[(String, String, String), Long]
+      var model: Model = Map.empty
+      // every manifest's batchId is some merge's batchId (rollback
+      // manifests copy their target's), so batchId → model-at-that-merge
+      // replays any rollback exactly
+      var byBatch = Map.empty[Long, Model]
+      var nextBatch = 0L
+      (0 until 25).foreach { _ =>
+        rnd.nextInt(4) match {
+          case 0 | 1 => // new batch: 1-8 rows over a small hot key space
+            val rows = Seq.fill(1 + rnd.nextInt(8))(
+              (s"s${rnd.nextInt(12)}", "R", s"o${rnd.nextInt(5)}"))
+            KeyedClaims.merge(triples(rows), nextBatch, dir, nBuckets,
+              retention = 50)
+            rows.groupBy(identity).foreach { case (k, g) =>
+              model = model.updated(k, model.getOrElse(k, 0L) + g.size) }
+            byBatch += nextBatch -> model
+            nextBatch += 1
+          case 2 if nextBatch > 0 =>
+            // replay an id at or below the COMMITTED watermark (after a
+            // rollback the watermark drops, and ids above it would merge
+            // as genuinely new — by design): must be a no-op
+            val committed = KeyedClaims.committedBatchId(dir)
+            KeyedClaims.merge(
+              triples(Seq((s"s${rnd.nextInt(12)}", "R", "poison"))),
+              rnd.nextInt(committed.toInt + 1).toLong, dir, nBuckets,
+              retention = 50)
+          case 3 if nextBatch > 1 => // rollback to a random retained seq
+            val seqs = KeyedClaims.manifests(dir)
+            val to = seqs(rnd.nextInt(seqs.size))
+            KeyedClaims.rollback(dir, to)
+            model = byBatch(KeyedClaims.head(dir).get.batchId)
+          case _ => // skipped branch (guard not satisfied)
+        }
+        val got = KeyedClaims.read(spark, dir).collect()
+          .map(r => ((r.getString(0), r.getString(1), r.getString(2)),
+            r.getLong(3))).toMap
+        assert(got == model,
+          s"table diverged from model after op (nBuckets=$nBuckets)")
       }
-      val got = KeyedClaims.read(spark, dir).collect()
-        .map(r => ((r.getString(0), r.getString(1), r.getString(2)),
-          r.getLong(3))).toMap
-      assert(got == model, s"table diverged from model after op")
+      assert(model.nonEmpty)
+      assert(KeyedClaims.head(dir).get.buckets.size <= nBuckets)
     }
-    assert(model.nonEmpty)
-  }
-
-  test("keyed sink and rewrite sink agree on identical batch sequences") {
-    // differential: both sinks fold the same deltas, modulo their storage
-    // protocol — frequencies and key sets must be identical
-    val kDir = TestSpark.scratch("graft_kcd1").toString
-    val rDir = TestSpark.scratch("graft_kcd2").toString
-    val rnd = new scala.util.Random(42L)
-    (0L until 5L).foreach { id =>
-      val rows = Seq.fill(1 + rnd.nextInt(10))(
-        (s"s${rnd.nextInt(9)}", "R", s"o${rnd.nextInt(4)}"))
-      KeyedClaims.merge(triples(rows), id, kDir)
-      graft.streaming.StreamOps.mergeClaimsBatch(triples(rows), id, rDir)
-    }
-    val keyed = table(kDir)
-    val rewrite = spark.read.parquet(s"$rDir/claims")
-      .select("subj", "pred", "obj", "frequency")
-      .collect().map(_.toString).sorted.toSeq
-    assert(keyed == rewrite && keyed.nonEmpty)
   }
 
   test("bucketOf matches the table's bucket function over fuzzed keys") {

@@ -16,6 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     `graft/operators/Pairs.scala`;
   *   - no main source but `KeyedClaims.scala` (a scoped persist, released
   *     in a `finally`) keeps frames in the CacheManager;
+  *   - atomic renames (`ATOMIC_MOVE`) live only in the two commit
+  *     protocols, `Pipeline.scala` and `KeyedClaims.scala`;
   *   - test fixtures are written under `TestSpark.root`. */
 class SourceRulesSpec extends AnyFunSuite {
 
@@ -82,6 +84,16 @@ class SourceRulesSpec extends AnyFunSuite {
     }
     assert(found.isEmpty,
       "cut with graft.operators.Cut instead:\n" + found.mkString("\n"))
+  }
+
+  test("ATOMIC_MOVE lives only in the Pipeline and KeyedClaims commits") {
+    val homes = Set("pipeline/Pipeline.scala", "streaming/KeyedClaims.scala")
+      .map(f => mainRoot.resolve(s"graft/$f"))
+    homes.foreach(h => assert(Files.isRegularFile(h), s"$h is missing"))
+    val found = hits(mainSources.filterNot(homes))(_.contains("ATOMIC_MOVE"))
+    assert(found.isEmpty,
+      "commit through Pipeline.runStage or KeyedClaims.merge instead of " +
+        "another rename protocol:\n" + found.mkString("\n"))
   }
 
   test("test fixtures are written under TestSpark.root") {

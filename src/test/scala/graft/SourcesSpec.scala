@@ -153,7 +153,7 @@ class SourcesSpec extends AnyFunSuite {
     val ours = mk(s"graft_sources_${ProcessHandle.current().pid()}_t",
       backdate = true) // suffix avoids clobbering the REAL fixture root
     try {
-      graft.tools.Sweep.main(Array("6")) // the callable sweep entry point
+      graft.sources.SourceSynth.cleanStaleRoots(6)
       assert(!NFiles.exists(deadOwner), "dead-owner aged root reaped")
       assert(!NFiles.exists(legacy), "legacy fixed root reaped by age")
       assert(NFiles.exists(fresh), "fresh root survives the age cutoff")
