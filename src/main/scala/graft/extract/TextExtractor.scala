@@ -12,15 +12,11 @@ import org.apache.spark.sql.functions._
   *
   * The whitespace class is pinned EXPLICITLY to `[ \t\n\x0B\f\r]` because
   * Python's `\s` and Java's `\s` disagree on some Unicode controls
-  * (SURVEY.md §7.5); both the pure-Scala oracle, the Column pipeline, and
+  * (SURVEY.md §7.5); the pure-Scala oracles here, their fast mirrors
+  * (`CleanText.cleanJava`, the `clean_text` expression, [[FastHtml]]) and
   * any SQL oracle use this exact class, so "byte-identical per url" is a
-  * well-defined invariant.
-  *
-  * Two implementations are provided and property-tested for equality:
-  *   - [[clean]] — pure Scala (single-threaded oracle, also used by the
-  *     deterministic corpus generator);
-  *   - [[cleanCol]] — Catalyst Column pipeline (regexp_replace + substring),
-  *     fully codegen'd, runs distributed.
+  * well-defined invariant. [[clean]] and [[htmlToText]] are the
+  * references those mirrors are property-tested against.
   */
 object TextExtractor {
 
@@ -89,20 +85,11 @@ object TextExtractor {
 
   /** Strip leading/trailing runs of the pinned ws class ([[WsClass]]) —
     * the ONE owner of the column-level strip rule (built-in `trim` strips
-    * only ' '); shared by [[cleanCol]] and the token-stat functions. */
+    * only ' '); used by the token-stat functions. */
   def stripCol(text: Column): Column =
     regexp_replace(
       regexp_replace(text, "^" + WsClass + "+", ""),
       WsClass + "+$", "")
-
-  /** Distributed equivalent of [[clean]] as a codegen'd Column pipeline. */
-  def cleanCol(text: Column, max: Int = MaxChars): Column = {
-    val collapsed = regexp_replace(text, WsClass + "+", " ")
-    val stripped = stripCol(collapsed)
-    when(length(stripped) > max,
-      concat(substring(stripped, 1, max), lit("...")))
-      .otherwise(stripped)
-  }
 
   // ----- HTML -> text ------------------------------------------------------
 
@@ -134,20 +121,5 @@ object TextExtractor {
     s = Tags.matcher(s).replaceAll(" ")
     Entities.foreach { case (e, r) => s = s.replace(e, r) }
     clean(s, max)
-  }
-
-  /** Distributed HTML → text as a Column pipeline (codegen'd regexps; same
-    * spec as [[htmlToText]], property-tested byte-equal in ExtractSpec).
-    */
-  def htmlToTextCol(html: Column, max: Int = MaxChars): Column = {
-    val asStr = html.cast("string") // binary holds UTF-8 bytes
-    var s = regexp_replace(asStr, "(?is)<(script|style)\\b[^>]*>.*?</\\1\\s*>", " ")
-    s = regexp_replace(s, "(?s)<!--.*?-->", " ")
-    s = regexp_replace(s, "<[^>]*>", " ")
-    Entities.foreach { case (e, r) =>
-      s = regexp_replace(s, java.util.regex.Pattern.quote(e),
-        java.util.regex.Matcher.quoteReplacement(r))
-    }
-    cleanCol(s, max)
   }
 }

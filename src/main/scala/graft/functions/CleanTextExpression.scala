@@ -12,13 +12,13 @@ import graft.extract.TextExtractor
 /** Native Catalyst expression for the byte-identity text cleaner
   * (SURVEY §2.9: "promote to a Catalyst Expression (codegen) if hot-path
   * profiling demands"). One fused JVM pass — collapse + strip + truncate —
-  * instead of the three regexp_replace passes of
-  * [[TextExtractor.cleanCol]]; participates in WholeStageCodegen via a
-  * static call, no boxing beyond the UTF8String bridge.
+  * instead of three regexp_replace passes; participates in
+  * WholeStageCodegen via a static call, no boxing beyond the UTF8String
+  * bridge.
   *
   * Semantics are EXACTLY [[TextExtractor.clean]] (reference:
   * src/kg_ae/datasets/openfda/parse.py:154-171); CleanTextExprSpec fuzzes
-  * equivalence against both the pure oracle and the regexp pipeline.
+  * equivalence against the pure oracle.
   */
 case class CleanText(child: Expression, maxChars: Int)
     extends UnaryExpression {

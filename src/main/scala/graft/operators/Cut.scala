@@ -16,10 +16,6 @@ import org.apache.spark.sql.{DataFrame, Row}
   *     × 5 priorities, 10 deciles), checked when the cut is made.
   *   - [[large]]: the row count grows with the input (graph state, claims,
   *     keyed rows); no bound.
-  *   - [[deferred]]: its blocks are written by its first consumer, for a
-  *     frame whose consumers run one after another. Under adaptive query
-  *     execution the plan's shuffle stages still run when the cut is made;
-  *     only the job that writes the blocks waits for the first read.
   *
   * [[small]] and [[materialize]] cost the same Spark jobs as an eager
   * `localCheckpoint`: the plan's shuffle stages, then one job that writes
@@ -38,10 +34,6 @@ object Cut {
 
   /** Cuts `df` eagerly, at any size. */
   def large(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
-
-  /** Cuts `df`; the first job that reads the cut writes its blocks. The
-    * shuffle stages below run now, under adaptive query execution. */
-  def deferred(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 
   /** Cuts `df` in one job that also reads each partition's rows with
     * `perPartition(n)`, n being the cut's partition count; returns the cut

@@ -1,10 +1,9 @@
 package graft.pack
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.Cut
+import graft.operators.PrefixSum
 
 /** Sequence packing for LLM pre-training: concatenate documents in a
   * deterministic order (ascending id) into one token stream and chunk it
@@ -13,14 +12,9 @@ import graft.operators.Cut
   * offset + the chunk span the doc lands in) are exactly what a loader
   * needs to materialize window boundaries without re-scanning text.
   *
-  * The start offsets are a GLOBAL prefix sum, computed distributed (the
-  * [[graft.canon.KeyAssigner]] shape): range-partition by the order key,
-  * per-partition running sums under a partition-local Window (never the
-  * single-partition global `Window.orderBy` — a "No Partition Defined"
-  * WindowExec over a data-proportional frame is the exact 100 TB
-  * anti-pattern), then one O(P) pass over the P per-partition totals for
-  * the cross-partition offsets. At cluster scale every data-proportional
-  * step is distributed; the only sequential work is P rows.
+  * The start offsets are a GLOBAL prefix sum over the token counts,
+  * taken by [[PrefixSum.running]] (never the single-partition global
+  * `Window.orderBy`): every data-proportional step is distributed.
   *
   * All chunk arithmetic is integer (SQL DIV), exact at any corpus size —
   * no double rounding at 2^53 tokens.
@@ -39,38 +33,9 @@ object Packing {
   def chunkSpans(docs: DataFrame, idCol: String, lenCol: Column,
       chunkSize: Long, numPartitions: Int = 0): DataFrame = {
     require(chunkSize > 0, s"chunkSize must be positive, got $chunkSize")
-    val spark = docs.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val ranged = docs
-      .select(col(idCol), lenCol.cast("long").as("n_tokens"))
-      .repartitionByRange(parts, col(idCol))
-      .withColumn("_pid", spark_partition_id())
-    // Cut for the same boundary-stability reason as
-    // KeyAssigner.assign: the ranged frame feeds BOTH the output rows and
-    // the per-partition totals, and repartitionByRange SAMPLES its child —
-    // two independent executions could pick different boundaries, pairing
-    // offsets from one partitioning with rows summed under another.
-    val local = ranged
-      .withColumn("_cum", sum("n_tokens")
-        .over(Window.partitionBy("_pid").orderBy(col(idCol))))
-      .transform(Cut.large)
-    import spark.implicits._
-    // cross-partition offsets: prefix sum over the P-row total vector in
-    // an explicit single partition (P = shuffle partitions — trivial at
-    // any realistic cluster size; AQE broadcasts the result back)
-    val offsets = local.groupBy("_pid").agg(sum("n_tokens").as("_total"))
-      .select(col("_pid").cast("int").as("_pid"), col("_total"))
-      .as[(Int, Long)]
-      .repartition(1).sortWithinPartitions("_pid")
-      .mapPartitions { it =>
-        var acc = 0L
-        it.map { case (pid, t) => val off = acc; acc += t; (pid, off) }
-      }
-      .toDF("_pid", "_offset")
-    local.join(offsets, Seq("_pid"))
-      .withColumn("start_offset", col("_cum") - col("n_tokens") + col("_offset"))
+    PrefixSum.running(docs.select(col(idCol), lenCol.cast("long").as("n_tokens")),
+        idCol, Seq("n_tokens"), numPartitions)
+      .withColumn("start_offset", col("n_tokens_cum") - col("n_tokens"))
       .select(col(idCol), col("n_tokens"), col("start_offset"),
         expr(s"start_offset DIV $chunkSize").as("chunk_first"),
         expr(s"(start_offset + greatest(n_tokens, 1L) - 1) DIV $chunkSize")

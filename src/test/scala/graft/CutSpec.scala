@@ -55,18 +55,6 @@ class CutSpec extends AnyFunSuite {
     assert(LocalGraph.cut(edges)._2.map(_.length).contains(50))
   }
 
-  test("Cut.deferred runs the shuffle stages at cut time, the write at first read") {
-    // two shuffles below the cut: the repartition and the groupBy
-    def twoShuffles = spark.range(0, 200, 1, 4).repartition(3)
-      .groupBy((col("id") % 50).as("k")).count()
-    assert(jobs(Cut.large(twoShuffles)) == 3)
-    var c: DataFrame = null
-    assert(jobs { c = Cut.deferred(twoShuffles) } == 2,
-      "adaptive execution runs a deferred cut's shuffle stages when it is made")
-    assert(jobs(c.collect()) == 1, "the first read writes the blocks")
-    assert(jobs(c.collect()) == 1 && c.count() == 50)
-  }
-
   test("consumers of a cut never re-run the plan below it") {
     val evals = spark.sparkContext.longAccumulator("evals")
     val touch = udf((x: Long) => { evals.add(1); x })

@@ -6,8 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.extract.{PageSynth, TextExtractor}
 
 /** Byte-identity of the text-extraction spec: pure-Scala oracle vs the
-  * distributed Column pipeline (the north-rule per-url invariant). Fuzzed
-  * deterministically (splitmix64) over whitespace/markup/unicode pieces.
+  * distributed `clean_text` column (the north-rule per-url invariant).
+  * Fuzzed deterministically (splitmix64) over whitespace/markup/unicode
+  * pieces. The HTML path's mirror, [[graft.extract.FastHtml]], is checked
+  * against the oracle in FastHtmlSpec.
   */
 class ExtractSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -27,7 +29,9 @@ class ExtractSpec extends AnyFunSuite {
 
   test("clean: pure vs Column — byte identical on 500 fuzzed strings") {
     val texts = (0L until 500L).map(fuzz)
-    val got = texts.toDF("t").select(TextExtractor.cleanCol(col("t"), 40))
+    graft.functions.GraftFunctions.register(spark)
+    val got = texts.toDF("t")
+      .select(call_function("clean_text", col("t"), lit(40)))
       .as[String].collect().toSeq
     val want = texts.map(t => TextExtractor.clean(t, 40))
     assert(got == want)
@@ -42,15 +46,6 @@ class ExtractSpec extends AnyFunSuite {
     assert(TextExtractor.clean("ab") == "a b")
     // NBSP is NOT in the pinned class (Python \s parity)
     assert(TextExtractor.clean("a b") == "a b")
-  }
-
-  test("htmlToText: pure vs Column — byte identical on synthesized pages") {
-    val htmls = (0L until 200L).map(i => PageSynth.html(i))
-    val got = htmls.toDF("h").select(col("h").cast("binary").as("h"))
-      .select(TextExtractor.htmlToTextCol(col("h"))).as[String]
-      .collect().toSeq
-    val want = htmls.map(h => TextExtractor.htmlToText(h, TextExtractor.MaxChars))
-    assert(got == want)
   }
 
   test("htmlToText: scripts/styles/comments/entities handled") {

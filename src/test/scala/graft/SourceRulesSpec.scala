@@ -14,6 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     `graft/operators/Cut.scala`;
   *   - the ascending-pair expansion lives once, in
   *     `graft/operators/Pairs.scala`;
+  *   - range partitioning (`repartitionByRange`, outside comments) lives
+  *     once, in the global prefix of `graft/operators/PrefixSum.scala`;
   *   - no main source but `KeyedClaims.scala` (a scoped persist, released
   *     in a `finally`) keeps frames in the CacheManager;
   *   - atomic renames (`ATOMIC_MOVE`) live only in the two commit
@@ -25,6 +27,7 @@ class SourceRulesSpec extends AnyFunSuite {
   private val home = mainRoot.resolve("graft/functions/StatCols.scala")
   private val cutHome = mainRoot.resolve("graft/operators/Cut.scala")
   private val pairsHome = mainRoot.resolve("graft/operators/Pairs.scala")
+  private val prefixHome = mainRoot.resolve("graft/operators/PrefixSum.scala")
   private val testRoot = Paths.get("src/test/scala")
 
   private def sources(root: Path): Seq[Path] = {
@@ -75,6 +78,17 @@ class SourceRulesSpec extends AnyFunSuite {
       m.matched.replaceAll("\\s+", " ")
     assert(found.isEmpty,
       "use graft.operators.Pairs instead:\n" + found.mkString("\n"))
+  }
+
+  test("repartitionByRange lives only in PrefixSum") {
+    assert(Files.isRegularFile(prefixHome), s"$prefixHome is missing")
+    val found = hits(mainSources.filter(_ != prefixHome)) { line =>
+      val code = line.replaceAll("//.*", "").trim
+      !code.startsWith("*") && !code.startsWith("/*") &&
+        code.contains("repartitionByRange")
+    }
+    assert(found.isEmpty,
+      "use graft.operators.PrefixSum instead:\n" + found.mkString("\n"))
   }
 
   test("only KeyedClaims persists or caches a frame") {

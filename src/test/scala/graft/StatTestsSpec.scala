@@ -27,24 +27,6 @@ class StatTestsSpec extends AnyFunSuite {
       .collect()(0).getDouble(0)
   }
 
-  test("PrefixSum running totals equal the single-partition window on many partitions") {
-    import spark.implicits._
-    // 200 distinct keys spread over 32 shuffle partitions; two columns
-    val df = (1L to 200L).map(v => (v * 7 % 201, v % 5, v % 3))
-      .toDF("v", "a", "b")
-    val got = graft.operators.PrefixSum
-      .withRunningTotals(df, "v", Seq("a", "b"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(3), r.getLong(4))))
-      .toMap
-    val w = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val want = df.withColumn("ca", sum("a").over(w))
-      .withColumn("cb", sum("b").over(w))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(3), r.getLong(4))))
-      .toMap
-    assert(got === want)
-  }
-
   test("KS statistic is exactly 0 on identical samples and 1 on disjoint ones") {
     // identical distributions, different sizes — integer gap is 0 at
     // every value, so D = 0 EXACTLY (no float CDF subtraction noise)
