@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import StatCols.sumInOrder
+
 /** Text-analysis column functions for training-data pipelines: token
   * counting, quality scoring, language ID, document fingerprinting. All are
   * pure Column pipelines over built-ins (codegen'd; no UDFs) so they stay
@@ -38,7 +40,7 @@ object TextFunctions {
     val t = trimWs(text)
     val toks = split(t, Ws + "+")
     when(length(t) === 0, lit(0.0)).otherwise(
-      aggregate(toks, lit(0.0), (acc, tk) => acc + length(tk).cast("double"))
+      sumInOrder(toks)(tk => length(tk).cast("double"))
         / size(toks).cast("double"))
   }
 

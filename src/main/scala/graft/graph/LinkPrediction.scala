@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.StatCols.pln
+import graft.functions.StatCols.{pln, sumInOrder}
 import graft.operators.{Pairs, Spread}
 
 /** Neighborhood-overlap link prediction (Adamic–Adar / common-neighbor
@@ -61,8 +61,7 @@ object LinkPrediction {
       "deg" -> "ds")
       .where(col("common") >= minCommon)
       .select(col("s1"), col("s2"), col("common"),
-        aggregate(col("ds"), lit(0.0),
-          (acc, x) => acc + lit(1.0) / pln(x.cast("double")))
+        sumInOrder(col("ds"))(x => lit(1.0) / pln(x.cast("double")))
           .as("aa_score"))
   }
 }

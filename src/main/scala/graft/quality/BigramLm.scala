@@ -3,7 +3,7 @@ package graft.quality
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.StatCols.pln
+import graft.functions.StatCols.{pln, sumInOrder}
 
 /** Interpolated bigram language-model scoring — the step up from
   * [[UnigramLm]] toward the KenLM-style quality gate (CCNet, Gopher):
@@ -75,8 +75,7 @@ object BigramLm {
     scored.groupBy(idCol)
       .agg(sort_array(collect_list(struct(col("pos"), col("lp")))).as("ps"))
       .select(col(idCol), size(col("ps")).cast("long").as("n_bigrams"),
-        (aggregate(transform(col("ps"), p => p.getField("lp")),
-          lit(0.0), (a, x) => a + x)
+        (sumInOrder(transform(col("ps"), p => p.getField("lp")))(identity)
           / size(col("ps")).cast("double")).as("logprob"))
   }
 }

@@ -13,8 +13,8 @@ import QueryDef.{dailyEvents, docNodes, kmRiskSets, t}
   * session transitions. Every operator keeps its arithmetic exact
   * (integer moments, IEEE-correctly-rounded final ops only) so the DuckDB
   * oracle hash-matches bit-for-bit. `dbl`, `pln` (logarithms through
-  * `portable_ln`) and `sumInOrder` (fixed-order float sums) come from
-  * [[graft.functions.StatCols]]; shared fixture frames from the
+  * `portable_ln`) and `sumInOrder` (every fixed-order float sum) come
+  * from [[graft.functions.StatCols]]; shared fixture frames from the
   * [[QueryDef]] companion.
   */
 object Analytics {
@@ -767,8 +767,8 @@ object Analytics {
           sum("c").as("n"))
         .select(col("user_id"), col("n").as("n_events"),
           (pln(col("n").cast("double"))
-            - aggregate(col("cs"), lit(0.0), (acc, x) =>
-                acc + x.cast("double") * pln(x.cast("double")))
+            - sumInOrder(col("cs"))(x =>
+                x.cast("double") * pln(x.cast("double")))
               / col("n").cast("double")).as("entropy"))
     }, Some("""
       WITH c AS (
@@ -928,8 +928,8 @@ object Analytics {
       val c = t(s, d, "documents")
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n_docs"))
-      val z = c.agg(aggregate(sort_array(collect_list(col("n_docs"))),
-        lit(0.0), (a, x) => a + sqrt(x.cast("double"))).as("z"))
+      val z = c.agg(sumInOrder(sort_array(collect_list(col("n_docs"))))(x =>
+        sqrt(x.cast("double"))).as("z"))
       c.crossJoin(z)
         .select(col("source"), col("lang"), col("n_docs"),
           (sqrt(col("n_docs").cast("double")) / col("z")).as("weight"))
@@ -1049,11 +1049,9 @@ object Analytics {
       val em = t(s, d, "embeddings")
       val cents = em.where(col("vec_id") < 4)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      val dist = aggregate(
-        zip_with(col("embedding"), col("cvec"),
-          (a, b) => (a.cast("double") - b.cast("double"))
-            * (a.cast("double") - b.cast("double"))),
-        lit(0.0), (acc, x) => acc + x)
+      val dist = sumInOrder(zip_with(col("embedding"), col("cvec"),
+        (a, b) => (a.cast("double") - b.cast("double"))
+          * (a.cast("double") - b.cast("double"))))(identity)
       em.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("cid"), dist.as("dist"))
         .groupBy("vec_id")
@@ -1170,14 +1168,12 @@ object Analytics {
       val em = t(s, d, "embeddings")
       val qv = em.where(col("vec_id") === 0)
         .select(col("embedding").as("qv"))
-      def ssum(a: org.apache.spark.sql.Column) =
-        aggregate(a, lit(0.0), (acc, x) => acc + x)
-      val dot = ssum(zip_with(col("embedding"), col("qv"),
-        (a, b) => a.cast("double") * b.cast("double")))
-      val na = ssum(transform(col("embedding"),
-        a => a.cast("double") * a.cast("double")))
-      val nb = ssum(transform(col("qv"),
-        a => a.cast("double") * a.cast("double")))
+      val dot = sumInOrder(zip_with(col("embedding"), col("qv"),
+        (a, b) => a.cast("double") * b.cast("double")))(identity)
+      val na = sumInOrder(transform(col("embedding"),
+        a => a.cast("double") * a.cast("double")))(identity)
+      val nb = sumInOrder(transform(col("qv"),
+        a => a.cast("double") * a.cast("double")))(identity)
       val vec = em.crossJoin(broadcast(qv))
         .select(col("vec_id").as("doc_id"),
           (dot / (sqrt(na) * sqrt(nb))).as("cos"))
@@ -1855,8 +1851,7 @@ object Analytics {
       o.join(rt, "t").join(ct, "b").crossJoin(nn)
         .select(struct(col("t"), col("b"), term.as("term")).as("cell"))
         .agg(sort_array(collect_list("cell")).as("cells"))
-        .select(aggregate(col("cells"), lit(0.0),
-          (acc, x) => acc + x.getField("term")).as("chi2"))
+        .select(sumInOrder(col("cells"))(_.getField("term")).as("chi2"))
         .crossJoin(dof)
     }, Some("""
       WITH o AS (SELECT event_type AS t, CAST(hour(ts) // 6 AS INT) AS b,
@@ -1897,8 +1892,7 @@ object Analytics {
           count(lit(1)).as("m"))
         .select(col("m"),
           (lit(1.0) + col("m").cast("double") /
-            (aggregate(col("ds"), lit(0.0),
-              (acc, v) => acc + pln(v.cast("double")))
+            (sumInOrder(col("ds"))(v => pln(v.cast("double")))
               - col("m").cast("double") * pln(lit(2.0)))).as("alpha"))
     }, Some("""
       WITH nodes0 AS (SELECT DISTINCT doc_id % 2003 AS x FROM documents),
@@ -2016,8 +2010,7 @@ object Analytics {
             col("ncn"), col("nc")))).as("cells"),
           sum("ncn").as("n_trans"))
         .select(col("user_id"), col("n_trans"),
-          (aggregate(col("cells"), lit(0.0), (acc, x) =>
-            acc + x.getField("ncn").cast("double") *
+          (sumInOrder(col("cells"))(x => x.getField("ncn").cast("double") *
               (pln(x.getField("nc").cast("double"))
                 - pln(x.getField("ncn").cast("double"))))
             / col("n_trans").cast("double")).as("cond_entropy"))
@@ -2272,8 +2265,7 @@ object Analytics {
           .as("cells"), sum("c").as("n"))
         .select(col("g"), col("n"),
           (col("n").cast("double") /
-            aggregate(col("cells"), lit(0.0), (acc, x) =>
-              acc + x.getField("c").cast("double")
+            sumInOrder(col("cells"))(x => x.getField("c").cast("double")
                 / x.getField("v").cast("double"))).as("hmean"))
     }, Some("""
       WITH c AS (SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS v,
@@ -2448,8 +2440,7 @@ object Analytics {
         .agg(sort_array(collect_list(struct(col("p"), col("g"))))
           .as("cells"))
         .select(col("user_id"),
-          aggregate(col("cells"), lit(0.0), (acc, x) =>
-            acc + x.getField("g").cast("double") /
+          sumInOrder(col("cells"))(x => x.getField("g").cast("double") /
               pln((x.getField("p") + 1).cast("double"))).as(out))
       val byScore = Window.partitionBy("user_id")
         .orderBy(col("value").desc, col("event_id"))
@@ -3114,8 +3105,7 @@ object Analytics {
           nSelf: org.apache.spark.sql.Column,
           nOther: org.apache.spark.sql.Column,
           cs: org.apache.spark.sql.Column) =
-        aggregate(cs, lit(0.0), (acc, e) =>
-          acc + when(cnt(e) > 0,
+        sumInOrder(cs)(e => when(cnt(e) > 0,
             (cnt(e).cast("double") / nSelf.cast("double")) *
               (pln((lit(2L) * cnt(e) * nOther).cast("double")) -
                 pln((e.getField("a") * col("n2")
@@ -3284,11 +3274,10 @@ object Analytics {
         .select(
           element_at(col("ov"), 10).as("ov10"),
           element_at(col("ov"), 20).as("ov20"),
-          aggregate(transform(sequence(lit(1), lit(20)), dd =>
+          sumInOrder(transform(sequence(lit(1), lit(20)), dd =>
             element_at(col("ov"), dd).cast("double") /
-              (dd.cast("long") *
-                call_function("shiftleft", lit(1L), dd)).cast("double")),
-            lit(0.0), (acc, x) => acc + x).as("rbo"))
+              (dd.cast("long") * call_function("shiftleft", lit(1L), dd))
+                .cast("double")))(identity).as("rbo"))
     }, Some("""
       WITH ra AS (SELECT l_partkey AS pk,
           CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
@@ -3554,8 +3543,7 @@ object Analytics {
         .select(col("cust"), col("r_total"), col("hits10"),
           coalesce(lit(1.0) / col("fp").cast("double"), lit(0.0))
             .as("rr"),
-          (aggregate(col("ps"), lit(0.0),
-            (acc, e) => acc + e.getField("contrib")) /
+          (sumInOrder(col("ps"))(_.getField("contrib")) /
             least(col("r_total"), lit(10L)).cast("double")).as("ap10"))
     }, Some("""
       WITH cp AS (SELECT o_custkey AS cust, l_partkey AS pk,

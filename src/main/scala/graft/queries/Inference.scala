@@ -4,7 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.StatCols.{dbl, pln, sumInOrder}
+import graft.functions.StatCols.{coMoment, dbl, doubledMidrank, pln,
+  sumInOrder}
 import graft.operators.{Cut, Pairs, PrefixSum, Spread}
 
 import QueryDef.{dailyEvents, docGraph, docNodes, kmRiskSets, lifetimes,
@@ -21,8 +22,11 @@ import QueryDef.{dailyEvents, docGraph, docNodes, kmRiskSets, lifetimes,
   * doubles. The column vocabulary is [[graft.functions.StatCols]]:
   * `dbl` widens, `pln` takes every logarithm through `portable_ln` on a
   * DOUBLE — the q204 pattern: ln of exactly representable integer-valued
-  * doubles, identical in both engines — and `sumInOrder` folds a sorted
-  * list left to right. Frames shared by several queries (daily event
+  * doubles, identical in both engines — `sumInOrder` folds a sorted
+  * list left to right (from `lit(0L)`: the exact BIGINT list sum),
+  * `coMoment` is the n-scaled co-moment `n·Σab − Σa·Σb` of widened
+  * sums and `doubledMidrank` the BIGINT `2·(t_cum − t) + t + 1` of a
+  * tie run. Frames shared by several queries (daily event
   * counts, the document graph, user lifetimes, the Kaplan–Meier risk
   * set, the A/R lineitem quantities) come from the [[QueryDef]]
   * companion.
@@ -140,8 +144,7 @@ object Inference {
         .withColumn("t", col("a") + col("b"))
       val cum = PrefixSum.withRunningTotals(cells, "v", Seq("t"))
       val r2a = cum
-        .select((col("a") * (lit(2L) * (col("t_cum") - col("t"))
-          + col("t") + lit(1L))).as("m"))
+        .select((col("a") * doubledMidrank("t")).as("m"))
         .agg(sum("m").as("r2a"))
       val tot = cells.agg(sum("a").as("na"), sum("b").as("nb"),
         sum(col("t") * col("t") * col("t") - col("t")).as("tt"))
@@ -262,8 +265,8 @@ object Inference {
         .transform(Cut.small(1))
       def binned(cells: org.apache.spark.sql.DataFrame, out: String) =
         cells.crossJoin(broadcast(edges))
-          .select(aggregate(col("es"), lit(0L), (acc, e) =>
-            acc + when(col("v") > e, 1L).otherwise(0L)).as("bin"),
+          .select(sumInOrder(col("es"), lit(0L))(e =>
+            when(col("v") > e, 1L).otherwise(0L)).as("bin"),
             col("c"))
           .groupBy("bin").agg(sum("c").as(out))
       // reference deciles guarantee every bin 0–9 exists on the a side;
@@ -290,8 +293,7 @@ object Inference {
       val psi = rows
         .agg(sort_array(collect_list(struct(col("bin"), col("term"))))
           .as("ts"))
-        .select(aggregate(col("ts"), lit(0.0),
-          (acc, e) => acc + e.getField("term")).as("psi"))
+        .select(sumInOrder(col("ts"))(_.getField("term")).as("psi"))
       rows.crossJoin(broadcast(psi))
     }, Some("""
       WITH ref AS (SELECT o_totalprice AS v, CAST(count(*) AS BIGINT) AS c
@@ -569,10 +571,9 @@ object Inference {
       val tv = etv.groupBy("v").agg(sum("c").as("t"))
       val cum = PrefixSum.withRunningTotals(tv, "v", Seq("t"))
         .select(col("v"), col("t"), col("t_cum"))
-      val mid2 = lit(2L) * (col("t_cum") - col("t")) + col("t") + lit(1L)
       val rj = etv.join(cum, Seq("v"))
         .groupBy("et")
-        .agg(sum(col("c") * mid2).as("r2"), sum("c").as("nj"))
+        .agg(sum(col("c") * doubledMidrank("t")).as("r2"), sum("c").as("nj"))
         // one row per event type; feeds every downstream consumer
         .transform(Cut.small(5))
       val tot = tv.agg(sum("t").as("n"),
@@ -585,8 +586,7 @@ object Inference {
           col("nj")))).as("gs"), count(lit(1)).as("k"))
         .crossJoin(broadcast(tot))
         .select(col("k"), col("n"), col("tt"),
-          aggregate(col("gs"), lit(0.0), (acc, e) =>
-            acc + e.getField("r2").cast("double")
+          sumInOrder(col("gs"))(e => e.getField("r2").cast("double")
               * e.getField("r2").cast("double")
               / (lit(4.0) * e.getField("nj").cast("double"))).as("s"))
         .select(col("k"), col("n"), col("tt"), h.as("h"))
@@ -649,8 +649,8 @@ object Inference {
         .agg(sort_array(collect_list(struct(col("g"), col("nj"),
           col("sj"), col("qj")))).as("gs"), count(lit(1)).as("k"),
           sum("nj").as("n"), sum("sj").as("ss"), sum("qj").as("qq"))
-        .withColumn("a", aggregate(col("gs"), lit(0.0), (acc, e) =>
-          acc + e.getField("sj").cast("double")
+        .withColumn("a", sumInOrder(col("gs"))(e =>
+          e.getField("sj").cast("double")
             * e.getField("sj").cast("double")
             / e.getField("nj").cast("double")))
         .withColumn("ssb", col("a") - col("ss").cast("double")
@@ -735,8 +735,8 @@ object Inference {
         .agg(sort_array(collect_list(struct(col("g"), col("nj"),
           col("sj"), col("qj")))).as("gs"), count(lit(1)).as("k"),
           sum("nj").as("n"), sum("sj").as("ss"), sum("qj").as("qq"))
-        .withColumn("a", aggregate(col("gs"), lit(0.0), (acc, e) =>
-          acc + e.getField("sj").cast("double")
+        .withColumn("a", sumInOrder(col("gs"))(e =>
+          e.getField("sj").cast("double")
             * e.getField("sj").cast("double")
             / e.getField("nj").cast("double")))
         .withColumn("ssb", col("a") - col("ss").cast("double")
@@ -848,14 +848,14 @@ object Inference {
           e.getField("sb").cast("double")
             / e.getField("nb").cast("double")))
         .withColumn("boot_mean",
-          aggregate(col("ms"), lit(0.0), (acc, m) => acc + m)
+          sumInOrder(col("ms"))(identity)
             / col("nrep").cast("double"))
         .select(col("nrep"), col("n"),
           (col("ss").cast("double") / col("n").cast("double"))
             .as("mean_obs"),
           col("boot_mean"),
-          sqrt(aggregate(col("ms"), lit(0.0), (acc, m) =>
-            acc + (m - col("boot_mean")) * (m - col("boot_mean")))
+          sqrt(sumInOrder(col("ms"))(m =>
+            (m - col("boot_mean")) * (m - col("boot_mean")))
             / (col("nrep").cast("double") - 1.0)).as("boot_se"))
     }, Some("""
       WITH rows_ AS (SELECT CAST(l_quantity AS BIGINT) AS x,
@@ -1067,8 +1067,8 @@ object Inference {
           sum("a").as("sa"), sum("n").as("sn"))
         .withColumn("p_bar",
           col("sa").cast("double") / col("sn").cast("double"))
-        .withColumn("s2", aggregate(col("gs"), lit(0.0), (acc, e) =>
-          acc + (e.getField("a").cast("double")
+        .withColumn("s2", sumInOrder(col("gs"))(e =>
+          (e.getField("a").cast("double")
             / e.getField("n").cast("double") - col("p_bar"))
             * (e.getField("a").cast("double")
               / e.getField("n").cast("double") - col("p_bar")))
@@ -1606,8 +1606,7 @@ object Inference {
           ((col("good").cast("double") / col("gg").cast("double")
             - col("bad").cast("double") / col("bb").cast("double"))
             * col("woe")).as("term")))).as("cs"))
-        .select(aggregate(col("cs"), lit(0.0),
-          (acc, e) => acc + e.getField("term")).as("iv"))
+        .select(sumInOrder(col("cs"))(_.getField("term")).as("iv"))
       per.crossJoin(broadcast(iv))
     }, Some("""
       WITH oc AS (SELECT o_custkey,
@@ -1973,8 +1972,7 @@ object Inference {
         .agg(sort_array(collect_list(struct(col("seg"), col("term"))))
           .as("cs"), sum("ns").as("n"))
         .select(col("n"),
-          (aggregate(col("cs"), lit(0.0), (acc, e) =>
-            acc + e.getField("term")) / col("n").cast("double"))
+          (sumInOrder(col("cs"))(_.getField("term")) / col("n").cast("double"))
             .as("ate"))
       terms.drop("term").crossJoin(broadcast(ate))
     }, Some("""
@@ -2114,8 +2112,7 @@ object Inference {
       val tj = w1.groupBy("j")
         .agg(sort_array(collect_list(struct(col("i"), col("w1"))))
           .as("cs"))
-        .select(col("j"), aggregate(col("cs"), lit(0.0), (acc, e) =>
-          acc + e.getField("w1")).as("tj"))
+        .select(col("j"), sumInOrder(col("cs"))(_.getField("w1")).as("tj"))
       val w2 = w1.join(broadcast(tj), Seq("j"))
         .join(broadcast(colM), Seq("j"))
         .select(col("i"), col("j"), col("m"), col("w1"),
@@ -2124,8 +2121,7 @@ object Inference {
       val rowErr = w2.groupBy("i")
         .agg(sort_array(collect_list(struct(col("j"), col("w2"))))
           .as("cs"))
-        .select(col("i"), aggregate(col("cs"), lit(0.0), (acc, e) =>
-          acc + e.getField("w2")).as("rsum"))
+        .select(col("i"), sumInOrder(col("cs"))(_.getField("w2")).as("rsum"))
         .join(broadcast(rowM), Seq("i"))
         .select(col("i"),
           (abs(col("rsum") - col("ri").cast("double"))
@@ -3039,12 +3035,10 @@ object Inference {
           col("n"), col("phi1"), col("phi2")))).as("cs"),
           sum("n").as("ntot"))
         .select(
-          (aggregate(col("cs"), lit(0.0), (acc, e) =>
-            acc + e.getField("n").cast("double")
+          (sumInOrder(col("cs"))(e => e.getField("n").cast("double")
               * abs(e.getField("phi1"))) / col("ntot").cast("double"))
             .as("importance1"),
-          (aggregate(col("cs"), lit(0.0), (acc, e) =>
-            acc + e.getField("n").cast("double")
+          (sumInOrder(col("cs"))(e => e.getField("n").cast("double")
               * abs(e.getField("phi2"))) / col("ntot").cast("double"))
             .as("importance2"))
       per.crossJoin(broadcast(imp))
@@ -3124,22 +3118,20 @@ object Inference {
       j.agg(sort_array(collect_list(struct(col("dtt"), col("dt"),
           col("n1"), col("n0"), col("d1")))).as("xs"))
         .select(
-          aggregate(col("xs"), lit(0L), (acc, x) =>
-            acc + x.getField("d1")).as("o1"),
-          aggregate(col("xs"), lit(0.0), (acc, x) =>
-            acc + x.getField("dt").cast("double")
+          sumInOrder(col("xs"), lit(0L))(_.getField("d1")).as("o1"),
+          sumInOrder(col("xs"))(x => x.getField("dt").cast("double")
               * x.getField("n1").cast("double")
               / (x.getField("n1") + x.getField("n0")).cast("double"))
             .as("e1"),
-          aggregate(col("xs"), lit(0.0), (acc, x) => {
+          sumInOrder(col("xs")) { x =>
             val nt = (x.getField("n1") + x.getField("n0")).cast("double")
-            acc + when(nt > 1.0,
+            when(nt > 1.0,
               x.getField("dt").cast("double")
                 * (x.getField("n1").cast("double") / nt)
                 * (x.getField("n0").cast("double") / nt)
                 * ((nt - x.getField("dt").cast("double")) / (nt - 1.0)))
               .otherwise(lit(0.0))
-          }).as("v"))
+          }.as("v"))
         .select(col("o1"), col("e1"), col("v"),
           when(col("v") > 0.0,
             (col("o1").cast("double") - col("e1"))
@@ -3246,13 +3238,11 @@ object Inference {
         sum("x2").as("s2"), sum(col("x2") * col("x2")).as("q2"),
         sum("x3").as("s3"), sum(col("x3") * col("x3")).as("q3"),
         sum("tt").as("st"), sum(col("tt") * col("tt")).as("qt"))
-      def ss(q: Column, sc: Column) =
-        dbl(col("n")) * dbl(q) - dbl(sc) * dbl(sc)
       m.select(col("n"),
-          ss(col("q1"), col("s1")).as("ss1"),
-          ss(col("q2"), col("s2")).as("ss2"),
-          ss(col("q3"), col("s3")).as("ss3"),
-          ss(col("qt"), col("st")).as("sst"))
+          coMoment(col("n"), col("q1"), col("s1"), col("s1")).as("ss1"),
+          coMoment(col("n"), col("q2"), col("s2"), col("s2")).as("ss2"),
+          coMoment(col("n"), col("q3"), col("s3"), col("s3")).as("ss3"),
+          coMoment(col("n"), col("qt"), col("st"), col("st")).as("sst"))
         .select(col("n"), col("ss1"), col("ss2"), col("ss3"), col("sst"),
           when(col("sst") > 0.0, lit(1.5) * (lit(1.0)
             - (col("ss1") + col("ss2") + col("ss3")) / col("sst")))
@@ -3328,8 +3318,7 @@ object Inference {
           sort_array(collect_list(struct(col("p"), col("st"),
             col("term")))).as("xs"))
         .select(col("nn"), col("r"), col("c"),
-          aggregate(col("xs"), lit(0.0), (acc, x) =>
-            acc + x.getField("term")).as("chi2"))
+          sumInOrder(col("xs"))(_.getField("term")).as("chi2"))
       val minDim = least(col("r"), col("c")).cast("double") - 1.0
       val nD = dbl(col("nn"))
       val phi2 = col("chi2") / nD
@@ -3444,8 +3433,7 @@ object Inference {
             .as("cs"),
           sum(when(col("usable"), 1L).otherwise(0L)).as("g_used"))
         .select(col("g_used"),
-          aggregate(col("cs"), lit(0.0), (acc, e) =>
-            acc + e.getField("term")).as("chi2_hl"))
+          sumInOrder(col("cs"))(_.getField("term")).as("chi2_hl"))
       g.select("g", "tn", "m", "o", "p_g", "e_g", "term")
         .crossJoin(broadcast(hl))
     }, Some("""
@@ -3563,12 +3551,9 @@ object Inference {
         sum(col("x") * col("x")).as("qx"),
         sum(col("y") * col("y")).as("qy"),
         sum(col("x") * col("y")).as("sxy"))
-      val num = lit(2.0) * (dbl(col("n")) * dbl(col("sxy"))
-        - dbl(col("sx")) * dbl(col("sy")))
-      val den = (dbl(col("n")) * dbl(col("qx"))
-        - dbl(col("sx")) * dbl(col("sx")))
-        .plus(dbl(col("n")) * dbl(col("qy"))
-          - dbl(col("sy")) * dbl(col("sy")))
+      val num = lit(2.0) * coMoment(col("n"), col("sxy"), col("sx"), col("sy"))
+      val den = coMoment(col("n"), col("qx"), col("sx"), col("sx"))
+        .plus(coMoment(col("n"), col("qy"), col("sy"), col("sy")))
         .plus((dbl(col("sx")) - dbl(col("sy")))
           * (dbl(col("sx")) - dbl(col("sy"))))
       m.select(col("n"),
@@ -3628,8 +3613,7 @@ object Inference {
         .select(col("k"), col("nn"), col("sum_r2"), col("sum_c2"),
           when(col("k") * col("nn") - col("sum_r2") > 0,
             (dbl(col("k")) - 1.0)
-              * (dbl(col("k")) * dbl(col("sum_c2"))
-                - dbl(col("nn")) * dbl(col("nn")))
+              * coMoment(col("k"), col("sum_c2"), col("nn"), col("nn"))
               / (dbl(col("k")) * dbl(col("nn")) - dbl(col("sum_r2"))))
             .otherwise(lit(Double.NaN)).as("q_cochran"))
     }, Some("""
@@ -3689,8 +3673,8 @@ object Inference {
         .select(col("n"), col("q"),
           (dbl(col("agree")) / dbl(col("n"))).as("pa"),
           when(col("q") > 1,
-            aggregate(col("cs"), lit(0.0), (acc, e) =>
-              acc + e.getField("pi") * (lit(1.0) - e.getField("pi")))
+            sumInOrder(col("cs"))(e =>
+              e.getField("pi") * (lit(1.0) - e.getField("pi")))
               / (dbl(col("q")) - 1.0))
             .otherwise(lit(Double.NaN)).as("pe"))
         .withColumn("ac1", when(col("pe") < 1.0,
@@ -3863,15 +3847,14 @@ object Inference {
         sum(col("x") * col("y")).as("sxy"),
         sum(col("x") * col("z")).as("sxz"),
         sum(col("y") * col("z")).as("syz"))
-      def cov(sab: Column, sa: Column, sb: Column) =
-        dbl(col("n")) * dbl(sab) - dbl(sa) * dbl(sb)
-      def varOf(q: Column, sc: Column) =
-        dbl(col("n")) * dbl(q) - dbl(sc) * dbl(sc)
       def r(sab: Column, sa: Column, sb: Column, qa: Column,
-          qb: Column) =
-        when(varOf(qa, sa) > 0.0 && varOf(qb, sb) > 0.0,
-          cov(sab, sa, sb) / sqrt(varOf(qa, sa) * varOf(qb, sb)))
+          qb: Column) = {
+        val va = coMoment(col("n"), qa, sa, sa)
+        val vb = coMoment(col("n"), qb, sb, sb)
+        when(va > 0.0 && vb > 0.0,
+          coMoment(col("n"), sab, sa, sb) / sqrt(va * vb))
           .otherwise(lit(Double.NaN))
+      }
       val withR = m.select(col("n"),
         r(col("sxy"), col("sx"), col("sy"), col("qx"), col("qy"))
           .as("r_xy"),
@@ -3971,12 +3954,12 @@ object Inference {
             col("qq")))).as("cs"))
       folded.select(col("nf"), col("no"),
           when(col("nf") > 0 && col("no") > 0,
-            aggregate(col("cs"), lit(0.0), (acc, e) =>
-              acc + sqrt(e.getField("pp") * e.getField("qq"))))
+            sumInOrder(col("cs"))(e =>
+              sqrt(e.getField("pp") * e.getField("qq"))))
             .otherwise(lit(Double.NaN)).as("bc"),
           when(col("nf") > 0 && col("no") > 0,
-            aggregate(col("cs"), lit(0.0), (acc, e) =>
-              acc + abs(e.getField("pp") - e.getField("qq"))) / 2.0)
+            sumInOrder(col("cs"))(e =>
+              abs(e.getField("pp") - e.getField("qq"))) / 2.0)
             .otherwise(lit(Double.NaN)).as("tvd"))
         .withColumn("hellinger",
           when(col("bc").isNaN, lit(Double.NaN))
@@ -4327,11 +4310,10 @@ object Inference {
         .agg(sort_array(collect_list(struct(col("st"), col("a"),
           col("b"), col("c"), col("dd"), col("nn")))).as("cs"))
         .select(col("cs"),
-          aggregate(col("cs"), lit(0.0), (acc, e) =>
-            acc + dbl(e.getField("a")) * dbl(e.getField("dd"))
+          sumInOrder(col("cs"))(e =>
+            dbl(e.getField("a")) * dbl(e.getField("dd"))
               / dbl(e.getField("nn"))).as("sad"),
-          aggregate(col("cs"), lit(0.0), (acc, e) =>
-            acc + dbl(e.getField("b")) * dbl(e.getField("c"))
+          sumInOrder(col("cs"))(e => dbl(e.getField("b")) * dbl(e.getField("c"))
               / dbl(e.getField("nn"))).as("sbc"))
         .select(col("cs"), col("sad"), col("sbc"),
           when(col("sbc") > 0.0, col("sad") / col("sbc"))
@@ -4380,8 +4362,7 @@ object Inference {
           sort_array(collect_list(struct(col("st"), col("term"))))
             .as("ts"))
         .select(col("psi_mh"), col("g_used"),
-          aggregate(col("ts"), lit(0.0), (acc, e) =>
-            acc + e.getField("term")).as("chi2_bd"))
+          sumInOrder(col("ts"))(_.getField("term")).as("chi2_bd"))
     }, Some("""
       WITH cells AS (SELECT c_nationkey AS st,
           CAST(sum(CASE WHEN o_orderpriority = '1-URGENT'
@@ -4770,12 +4751,9 @@ object Inference {
           sort_array(collect_list(struct(col("label"),
             col("precision"), col("recall"), col("f1")))).as("cs"))
         .select(col("c_diag"), col("n"), col("n_labels"),
-          aggregate(col("cs"), lit(0.0), (acc, e) =>
-            acc + e.getField("precision")).as("sum_p"),
-          aggregate(col("cs"), lit(0.0), (acc, e) =>
-            acc + e.getField("recall")).as("sum_r"),
-          aggregate(col("cs"), lit(0.0), (acc, e) =>
-            acc + e.getField("f1")).as("sum_f1"),
+          sumInOrder(col("cs"))(_.getField("precision")).as("sum_p"),
+          sumInOrder(col("cs"))(_.getField("recall")).as("sum_r"),
+          sumInOrder(col("cs"))(_.getField("f1")).as("sum_f1"),
           col("sp2"), col("st2"), col("spt"))
         .select(col("n_labels"),
           (col("sum_p") / dbl(col("n_labels"))).as("macro_precision"),
@@ -4906,8 +4884,7 @@ object Inference {
           sort_array(collect_list(struct(col("i"), col("j"),
             col("term")))).as("cs"))
         .select(col("df"),
-          aggregate(col("cs"), lit(0.0), (acc, e) =>
-            acc + e.getField("term")).as("chi2_bowker"))
+          sumInOrder(col("cs"))(_.getField("term")).as("chi2_bowker"))
     }, Some("""
       WITH conf AS (SELECT (CASE
             WHEN len(regexp_extract_all(lower(text), '\b(the|a|and|of|to|in|is|that)\b')) = 0
@@ -5043,8 +5020,7 @@ object Inference {
         .select(col("n"), col("lags_used"),
           when(col("had_nan") === 0,
             dbl(col("n")) * (dbl(col("n")) + 2.0)
-              * aggregate(col("cs"), lit(0.0), (acc, e) =>
-                acc + e.getField("term")))
+              * sumInOrder(col("cs"))(_.getField("term")))
             .otherwise(lit(Double.NaN)).as("q_lb"))
     }, Some("""
       WITH daily AS (SELECT CAST(ts AS DATE) AS day,
@@ -5255,9 +5231,9 @@ object Inference {
         sum(col("y") * col("y")).as("syy"))
       def sse(n: Column, sx: Column, sy: Column, sxx: Column,
           sxy: Column, syy: Column) = {
-        val vx = dbl(n) * dbl(sxx) - dbl(sx) * dbl(sx)
-        val vy = dbl(n) * dbl(syy) - dbl(sy) * dbl(sy)
-        val cxy = dbl(n) * dbl(sxy) - dbl(sx) * dbl(sy)
+        val vx = coMoment(n, sxx, sx, sx)
+        val vy = coMoment(n, syy, sy, sy)
+        val cxy = coMoment(n, sxy, sx, sy)
         when(vx > 0.0, (vy - cxy * cxy / vx) / dbl(n))
           .otherwise(lit(Double.NaN))
       }
@@ -6278,8 +6254,7 @@ object Inference {
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("med").as("median_price"), col("nn").as("n"),
           when(col("ca") > 0 && col("cb") > 0,
-            aggregate(col("cs"), lit(0.0),
-              (acc, x) => acc + x.getField("term")))
+            sumInOrder(col("cs"))(_.getField("term")))
             .otherwise(lit(Double.NaN)).as("chi2_mood"),
           lit(4L).as("dof"))
     }, Some("""
@@ -6362,8 +6337,7 @@ object Inference {
       cum.agg(
           coalesce(sum(col("t")), lit(0L)).as("n"),
           coalesce(sum(col("p")), lit(0L)).as("n_pos"),
-          coalesce(sum((lit(2L) * (col("t_cum") - col("t"))
-            + col("t") + 1L) * col("p")), lit(0L)).as("w2"),
+          coalesce(sum(doubledMidrank("t") * col("p")), lit(0L)).as("w2"),
           coalesce(sum(col("t") * col("t") * col("t") - col("t")),
             lit(0L)).as("ties"))
         .select(col("n").as("n_pairs"), col("n_pos"), col("w2"),
@@ -6560,8 +6534,7 @@ object Inference {
         .agg(count(lit(1)).as("t"))
       val cum = PrefixSum.withRunningTotals(cells, "cv", Seq("t"))
         .select(col("cv").as("c"),
-          (lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
-            .as("r2"))
+          doubledMidrank("t").as("r2"))
       val nn = daily.agg(count(lit(1)).as("n"))
       val w = Window.orderBy("day")
       val u = daily.join(cum, Seq("c")).crossJoin(broadcast(nn))
@@ -6627,8 +6600,7 @@ object Inference {
         .agg(count(lit(1)).as("t"))
       val cum = PrefixSum.withRunningTotals(cells, "cv", Seq("t"))
         .select(col("cv").as("c"),
-          (lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
-            .as("r2"))
+          doubledMidrank("t").as("r2"))
       val nn = daily.agg(count(lit(1)).as("n"))
       val w = Window.orderBy("day")
       daily.join(cum, Seq("c")).crossJoin(broadcast(nn))
@@ -6768,23 +6740,20 @@ object Inference {
         .select(struct(col("x"), col("m")).as("cell"))
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("cs"),
-          aggregate(col("cs"), lit(0L),
-            (acc, c) => acc + c.getField("m")).as("n"),
-          aggregate(col("cs"), lit(0L),
-            (acc, c) => acc + c.getField("m") * c.getField("x"))
+          sumInOrder(col("cs"), lit(0L))(_.getField("m")).as("n"),
+          sumInOrder(col("cs"), lit(0L))(c => c.getField("m") * c.getField("x"))
             .as("s_tot"))
         .select(col("n"), col("s_tot"),
           when(col("n") > 0 && col("s_tot") > 0,
-            aggregate(col("cs"), lit(0.0), (acc, c) =>
-              acc + dbl(c.getField("m") * c.getField("x"))
+            sumInOrder(col("cs"))(c => dbl(c.getField("m") * c.getField("x"))
                 * pln(c.getField("x")))
               / dbl(col("s_tot"))
               - pln(col("s_tot")) + pln(col("n")))
             .otherwise(lit(Double.NaN)).as("theil_t"),
           when(col("n") > 0 && col("s_tot") > 0,
             pln(col("s_tot")) - pln(col("n"))
-              - aggregate(col("cs"), lit(0.0), (acc, c) =>
-                acc + dbl(c.getField("m")) * pln(c.getField("x")))
+              - sumInOrder(col("cs"))(c =>
+                dbl(c.getField("m")) * pln(c.getField("x")))
                 / dbl(col("n")))
             .otherwise(lit(Double.NaN)).as("theil_l"))
     }, Some("""
@@ -7041,19 +7010,14 @@ object Inference {
           .as("cell"))
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + lit(1L)).as("g"),
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + c.getField("ni")).as("n"),
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + c.getField("si")).as("s_tot"),
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + c.getField("qi")).as("q_tot"),
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + c.getField("ni") * c.getField("ni"))
+          sumInOrder(col("cs"), lit(0L))(_ => lit(1L)).as("g"),
+          sumInOrder(col("cs"), lit(0L))(_.getField("ni")).as("n"),
+          sumInOrder(col("cs"), lit(0L))(_.getField("si")).as("s_tot"),
+          sumInOrder(col("cs"), lit(0L))(_.getField("qi")).as("q_tot"),
+          sumInOrder(col("cs"), lit(0L))(c =>
+            c.getField("ni") * c.getField("ni"))
             .as("sn2"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + dbl(c.getField("si") * c.getField("si"))
+          sumInOrder(col("cs"))(c => dbl(c.getField("si") * c.getField("si"))
               / dbl(c.getField("ni"))).as("sb"))
         .withColumn("ssb", col("sb")
           - dbl(col("s_tot") * col("s_tot")) / dbl(col("n")))
@@ -7133,12 +7097,10 @@ object Inference {
     QueryDef("q306_nelson_aalen", (s, d) => {
       kmRiskSets(s, d)
         .select(col("t"), col("at_risk"), col("d"), col("c"),
-          aggregate(col("fs"), lit(0.0), (acc, f) =>
-            acc + coalesce(f.getField("bd").cast("double") /
+          sumInOrder(col("fs"))(f => coalesce(f.getField("bd").cast("double") /
               f.getField("bar").cast("double"), lit(0.0)))
             .as("cum_hazard"),
-          aggregate(col("fs"), lit(0.0), (acc, f) =>
-            acc + coalesce(f.getField("bd").cast("double") /
+          sumInOrder(col("fs"))(f => coalesce(f.getField("bd").cast("double") /
               (f.getField("bar").cast("double")
                 * f.getField("bar").cast("double")), lit(0.0)))
             .as("var_na"))
@@ -7362,19 +7324,15 @@ object Inference {
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("cs"),
           size(col("cs")).cast("long").as("k"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + c.getField("wt")).as("sw"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + c.getField("wt") * c.getField("theta"))
+          sumInOrder(col("cs"))(_.getField("wt")).as("sw"),
+          sumInOrder(col("cs"))(c => c.getField("wt") * c.getField("theta"))
             .as("swt"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + c.getField("wt") * c.getField("wt"))
+          sumInOrder(col("cs"))(c => c.getField("wt") * c.getField("wt"))
             .as("sw2"))
         .withColumn("theta_fixed",
           when(col("sw") > 0, col("swt") / col("sw")))
         .withColumn("q_het",
-          aggregate(col("cs"), lit(0.0), (a, c) =>
-            a + c.getField("wt")
+          sumInOrder(col("cs"))(c => c.getField("wt")
               * (c.getField("theta") - col("theta_fixed"))
               * (c.getField("theta") - col("theta_fixed"))))
         .select(col("k").as("k_studies"), col("theta_fixed"),
@@ -7758,8 +7716,7 @@ object Inference {
         .agg(count(lit(1)).as("m"))
       val q2 = PrefixSum.withRunningTotals(rcells, "rv", Seq("m"))
         .select(col("rv").as("rng"),
-          (lit(2L) * (col("m_cum") - col("m")) + col("m") + 1L)
-            .as("q2"))
+          doubledMidrank("m").as("q2"))
       val sp = r2.join(rng, Seq("nk")).join(broadcast(q2), Seq("rng"))
         .select(col("nk"), col("g"),
           (col("q2") * (col("r2") - 6L)).as("sp"))
@@ -7838,10 +7795,9 @@ object Inference {
       val tv = etv.groupBy("v").agg(sum("c").as("t"))
       val cum = PrefixSum.withRunningTotals(tv, "v", Seq("t"))
         .select(col("v"), col("t"), col("t_cum"))
-      val mid2 = lit(2L) * (col("t_cum") - col("t")) + col("t") + lit(1L)
       val rj = etv.join(cum, Seq("v"))
         .groupBy("et")
-        .agg(sum(col("c") * mid2).as("r2"), sum("c").as("nj"))
+        .agg(sum(col("c") * doubledMidrank("t")).as("r2"), sum("c").as("nj"))
         // one row per event type; feeds every downstream consumer
         .transform(Cut.small(5))
       val tot = tv.agg(sum(col("t")).as("n"),
@@ -8070,13 +8026,10 @@ object Inference {
         .groupBy("n", "n1")
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("n"), col("n1"),
-          aggregate(col("cs"), lit(0L),
-            (acc, c) => acc + c.getField("s_v")).as("ss"),
-          aggregate(col("cs"), lit(0.0),
-            (acc, c) => acc + dbl(c.getField("a") * c.getField("s_v"))
+          sumInOrder(col("cs"), lit(0L))(_.getField("s_v")).as("ss"),
+          sumInOrder(col("cs"))(c => dbl(c.getField("a") * c.getField("s_v"))
               / dbl(c.getField("t"))).as("ab"),
-          aggregate(col("cs"), lit(0.0),
-            (acc, c) => acc + dbl(c.getField("s_v"))
+          sumInOrder(col("cs"))(c => dbl(c.getField("s_v"))
               * dbl(c.getField("s_v")) / dbl(c.getField("t")))
             .as("ss2"))
         .select(col("n1"), (col("n") - col("n1")).as("n2"), col("ab"),
@@ -8220,15 +8173,14 @@ object Inference {
         .agg(sort_array(collect_list(struct(col("lang"), col("n"))))
           .as("cs"))
         .select(col("source"),
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + c.getField("n")).as("n_docs"),
+          sumInOrder(col("cs"), lit(0L))(_.getField("n")).as("n_docs"),
           size(col("cs")).cast("long").as("k_langs"),
           col("cs"))
         .withColumn("shannon_h",
           when(col("n_docs") > 0,
             pln(col("n_docs"))
-              - aggregate(col("cs"), lit(0.0), (a, c) =>
-                a + dbl(c.getField("n")) * pln(c.getField("n")))
+              - sumInOrder(col("cs"))(c =>
+                dbl(c.getField("n")) * pln(c.getField("n")))
                 / dbl(col("n_docs")))
             .otherwise(lit(Double.NaN)))
         .select(col("source"), col("n_docs"), col("k_langs"),
@@ -8290,15 +8242,15 @@ object Inference {
           sort_array(collect_list(struct(col("dtt"), col("dt"),
             col("n1"), col("n0")))).as("xs"))
         .select(col("u"),
-          aggregate(col("xs"), lit(0.0), (acc, x) => {
+          sumInOrder(col("xs")) { x =>
             val nt = (x.getField("n1") + x.getField("n0")).cast("double")
-            acc + when(nt > 1.0,
+            when(nt > 1.0,
               x.getField("dt").cast("double")
                 * x.getField("n1").cast("double")
                 * x.getField("n0").cast("double")
                 * ((nt - x.getField("dt").cast("double")) / (nt - 1.0)))
               .otherwise(lit(0.0))
-          }).as("v"))
+          }.as("v"))
         .select(col("u"), col("v"),
           when(col("v") > 0.0,
             dbl(col("u")) * dbl(col("u")) / col("v"))
@@ -8377,11 +8329,9 @@ object Inference {
           col("ny")).as("cell"))
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(
-          aggregate(col("cs"), lit(0.0), (a, c) =>
-            a + dbl(c.getField("n") * c.getField("n"))
+          sumInOrder(col("cs"))(c => dbl(c.getField("n") * c.getField("n"))
               / dbl(c.getField("nx"))).as("qx"),
-          aggregate(col("cs"), lit(0.0), (a, c) =>
-            a + dbl(c.getField("n") * c.getField("n"))
+          sumInOrder(col("cs"))(c => dbl(c.getField("n") * c.getField("n"))
               / dbl(c.getField("ny"))).as("qy"))
       folds.crossJoin(broadcast(tot)).crossJoin(broadcast(sx))
         .crossJoin(broadcast(sy))
@@ -8459,8 +8409,7 @@ object Inference {
       val cum = PrefixSum.withRunningTotals(cells, "v", Seq("t"))
         .crossJoin(broadcast(nn))
       val scored = cum
-        .withColumn("mid2",
-          lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
+        .withColumn("mid2", doubledMidrank("t"))
         .withColumn("lo", col("t_cum") - col("t") + 1L)
         .withColumn("hi", col("t_cum"))
         .withColumn("m", expr("(n + 1) DIV 2"))
@@ -8481,16 +8430,13 @@ object Inference {
         .groupBy("n", "n1", "tt")
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("n"), col("n1"), col("tt"),
-          aggregate(col("cs"), lit(0L),
-            (acc, c) => acc + c.getField("a") * c.getField("mid2"))
+          sumInOrder(col("cs"), lit(0L))(c =>
+            c.getField("a") * c.getField("mid2"))
             .as("w2"),
-          aggregate(col("cs"), lit(0L),
-            (acc, c) => acc + c.getField("s_v")).as("ss"),
-          aggregate(col("cs"), lit(0.0),
-            (acc, c) => acc + dbl(c.getField("a") * c.getField("s_v"))
+          sumInOrder(col("cs"), lit(0L))(_.getField("s_v")).as("ss"),
+          sumInOrder(col("cs"))(c => dbl(c.getField("a") * c.getField("s_v"))
               / dbl(c.getField("t"))).as("ab"),
-          aggregate(col("cs"), lit(0.0),
-            (acc, c) => acc + dbl(c.getField("s_v"))
+          sumInOrder(col("cs"))(c => dbl(c.getField("s_v"))
               * dbl(c.getField("s_v")) / dbl(c.getField("t")))
             .as("ss2"))
         .withColumn("n2", col("n") - col("n1"))
@@ -8786,22 +8732,22 @@ object Inference {
       j.agg(sort_array(collect_list(struct(col("dtt"), col("dt"),
           col("n1"), col("n0"), col("d1")))).as("xs"))
         .select(
-          aggregate(col("xs"), lit(0.0), (acc, x) => {
+          sumInOrder(col("xs")) { x =>
             val nt = (x.getField("n1") + x.getField("n0")).cast("double")
-            acc + sqrt(nt) * (x.getField("d1").cast("double")
+            sqrt(nt) * (x.getField("d1").cast("double")
               - x.getField("dt").cast("double")
                 * x.getField("n1").cast("double") / nt)
-          }).as("u"),
-          aggregate(col("xs"), lit(0.0), (acc, x) => {
+          }.as("u"),
+          sumInOrder(col("xs")) { x =>
             val nt = (x.getField("n1") + x.getField("n0")).cast("double")
-            acc + when(nt > 1.0,
+            when(nt > 1.0,
               nt * (x.getField("dt").cast("double")
                 * (x.getField("n1").cast("double") / nt)
                 * (x.getField("n0").cast("double") / nt)
                 * ((nt - x.getField("dt").cast("double"))
                   / (nt - 1.0))))
               .otherwise(lit(0.0))
-          }).as("v"))
+          }.as("v"))
         .select(col("u"), col("v"),
           when(col("v") > 0.0, col("u") * col("u") / col("v"))
             .otherwise(lit(Double.NaN)).as("chi2_tarone_ware"))
@@ -8876,8 +8822,7 @@ object Inference {
         coalesce(sum(col("a")), lit(0L)).as("n1"))
       val cum = PrefixSum.withRunningTotals(cells, "v", Seq("t"))
         .crossJoin(broadcast(nn))
-        .withColumn("mid2",
-          lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
+        .withColumn("mid2", doubledMidrank("t"))
         .withColumn("rev2", lit(2L) * (col("n") + 1L) - col("mid2"))
       val agg = cum.agg(
         max(col("n")).as("n"), max(col("n1")).as("n1"),
@@ -9129,11 +9074,9 @@ object Inference {
           col("bj")).as("cell"))
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(
-          aggregate(col("cs"), lit(0.0), (a, c) =>
-            a + dbl(c.getField("nij") * c.getField("nij"))
+          sumInOrder(col("cs"))(c => dbl(c.getField("nij") * c.getField("nij"))
               / dbl(c.getField("ai"))).as("bp"),
-          aggregate(col("cs"), lit(0.0), (a, c) =>
-            a + dbl(c.getField("nij") * c.getField("nij"))
+          sumInOrder(col("cs"))(c => dbl(c.getField("nij") * c.getField("nij"))
               / dbl(c.getField("bj"))).as("br"))
       tp.crossJoin(broadcast(pa2)).crossJoin(broadcast(pb2))
         .crossJoin(broadcast(folds))
@@ -9224,18 +9167,17 @@ object Inference {
           sum(col("x1") * col("x2")).as("p12"),
           sum(col("x1") * col("x3")).as("p13"),
           sum(col("x2") * col("x3")).as("p23"))
-      def ssx(q: String, sc: String) =
-        dbl(col("n")) * dbl(col(q)) - dbl(col(sc)) * dbl(col(sc))
-      def cov(p: String, sa: String, sb: String) =
-        dbl(col("n")) * dbl(col(p)) - dbl(col(sa)) * dbl(col(sb))
       // a CONSTANT item (zero SS — the synthetic corpus really has
       // one if the item is chosen badly, e.g. punctuation) must read
       // NaN, not trip ANSI's double divide-by-zero
       def corr(p: String, sa: String, qa: String, sb: String,
-          qb: String) =
-        when(ssx(qa, sa) * ssx(qb, sb) > 0.0,
-          cov(p, sa, sb) / sqrt(ssx(qa, sa) * ssx(qb, sb)))
+          qb: String) = {
+        val vv = (coMoment(col("n"), col(qa), col(sa), col(sa))
+          * coMoment(col("n"), col(qb), col(sb), col(sb)))
+        when(vv > 0.0,
+          coMoment(col("n"), col(p), col(sa), col(sb)) / sqrt(vv))
           .otherwise(lit(Double.NaN))
+      }
       val withR = m
         .withColumn("r12", corr("p12", "s1", "q1", "s2", "q2"))
         .withColumn("r13", corr("p13", "s1", "q1", "s3", "q3"))
@@ -9342,18 +9284,18 @@ object Inference {
           sum(col("x1") * col("x3")).as("p13"),
           sum(col("x2") * col("x3")).as("p23"))
         .withColumn("dn", dbl(col("n")) * dbl(col("n") - 1L))
-        .withColumn("c11", (dbl(col("n")) * dbl(col("q1"))
-          - dbl(col("s1")) * dbl(col("s1"))) / col("dn"))
-        .withColumn("c22", (dbl(col("n")) * dbl(col("q2"))
-          - dbl(col("s2")) * dbl(col("s2"))) / col("dn"))
-        .withColumn("c33", (dbl(col("n")) * dbl(col("q3"))
-          - dbl(col("s3")) * dbl(col("s3"))) / col("dn"))
-        .withColumn("c12", (dbl(col("n")) * dbl(col("p12"))
-          - dbl(col("s1")) * dbl(col("s2"))) / col("dn"))
-        .withColumn("c13", (dbl(col("n")) * dbl(col("p13"))
-          - dbl(col("s1")) * dbl(col("s3"))) / col("dn"))
-        .withColumn("c23", (dbl(col("n")) * dbl(col("p23"))
-          - dbl(col("s2")) * dbl(col("s3"))) / col("dn"))
+        .withColumn("c11",
+          coMoment(col("n"), col("q1"), col("s1"), col("s1")) / col("dn"))
+        .withColumn("c22",
+          coMoment(col("n"), col("q2"), col("s2"), col("s2")) / col("dn"))
+        .withColumn("c33",
+          coMoment(col("n"), col("q3"), col("s3"), col("s3")) / col("dn"))
+        .withColumn("c12",
+          coMoment(col("n"), col("p12"), col("s1"), col("s2")) / col("dn"))
+        .withColumn("c13",
+          coMoment(col("n"), col("p13"), col("s1"), col("s3")) / col("dn"))
+        .withColumn("c23",
+          coMoment(col("n"), col("p23"), col("s2"), col("s3")) / col("dn"))
         .withColumn("det",
           col("c11") * (col("c22") * col("c33")
             - col("c23") * col("c23"))
@@ -9475,12 +9417,12 @@ object Inference {
           sum("x3").as("s3"), sum(col("x3") * col("x3")).as("q3"),
           sum(col("x1") * col("x3")).as("p13"))
         .withColumn("dn", dbl(col("n")) * dbl(col("n") - 1L))
-        .withColumn("a", (dbl(col("n")) * dbl(col("q1"))
-          - dbl(col("s1")) * dbl(col("s1"))) / col("dn"))
-        .withColumn("c", (dbl(col("n")) * dbl(col("q3"))
-          - dbl(col("s3")) * dbl(col("s3"))) / col("dn"))
-        .withColumn("b", (dbl(col("n")) * dbl(col("p13"))
-          - dbl(col("s1")) * dbl(col("s3"))) / col("dn"))
+        .withColumn("a",
+          coMoment(col("n"), col("q1"), col("s1"), col("s1")) / col("dn"))
+        .withColumn("c",
+          coMoment(col("n"), col("q3"), col("s3"), col("s3")) / col("dn"))
+        .withColumn("b",
+          coMoment(col("n"), col("p13"), col("s1"), col("s3")) / col("dn"))
         .withColumn("disc",
           sqrt((col("a") - col("c")) * (col("a") - col("c"))
             + lit(4.0) * col("b") * col("b")))
@@ -9593,12 +9535,10 @@ object Inference {
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("cs"),
           size(col("cs")).cast("long").as("n"),
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + c.getField("c")).as("s_tot"))
+          sumInOrder(col("cs"), lit(0L))(_.getField("c")).as("s_tot"))
         .select(col("n").as("n_days"), col("s_tot"),
           when(col("s_tot") > 0 && col("n") > 0,
-            lit(2.0) * (aggregate(col("cs"), lit(0.0), (a, c) =>
-              a + when(c.getField("c") > 0,
+            lit(2.0) * (sumInOrder(col("cs"))(c => when(c.getField("c") > 0,
                 dbl(c.getField("c")) * pln(c.getField("c")))
                 .otherwise(lit(0.0)))
               + dbl(col("s_tot")) * pln(col("n"))
@@ -9650,16 +9590,15 @@ object Inference {
         .select(struct(col("a"), col("b"), col("nij")).as("cell"))
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(
-          aggregate(col("cs"), lit(0L),
-            (x, c) => x + c.getField("nij")).as("t_tot"),
-          aggregate(col("cs"), lit(0.0), (x, c) =>
-            x + dbl(c.getField("nij")) * pln(c.getField("nij")))
+          sumInOrder(col("cs"), lit(0L))(_.getField("nij")).as("t_tot"),
+          sumInOrder(col("cs"))(c =>
+            dbl(c.getField("nij")) * pln(c.getField("nij")))
             .as("sij"))
       val si = big.groupBy("a").agg(sum("nij").as("ni"))
         .select(struct(col("a"), col("ni")).as("cell"))
         .agg(sort_array(collect_list(col("cell"))).as("ms"))
-        .select(aggregate(col("ms"), lit(0.0), (x, c) =>
-          x + dbl(c.getField("ni")) * pln(c.getField("ni")))
+        .select(sumInOrder(col("ms"))(c =>
+          dbl(c.getField("ni")) * pln(c.getField("ni")))
           .as("si"))
       sij.crossJoin(broadcast(si))
         .select(col("t_tot").as("n_transitions"),
@@ -9836,13 +9775,11 @@ object Inference {
         .select(struct(col("v"), col("m")).as("cell"))
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + c.getField("m")).as("n"),
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + c.getField("m") * c.getField("v"))
+          sumInOrder(col("cs"), lit(0L))(_.getField("m")).as("n"),
+          sumInOrder(col("cs"), lit(0L))(c => c.getField("m") * c.getField("v"))
             .as("s_tot"),
-          aggregate(col("cs"), lit(0.0), (a, c) =>
-            a + dbl(c.getField("m")) * pln(c.getField("v")))
+          sumInOrder(col("cs"))(c =>
+            dbl(c.getField("m")) * pln(c.getField("v")))
             .as("slnx"))
         .select(col("n").as("n_customers"), col("s_tot"),
           when(col("n") > 0 && col("s_tot") > 0,
@@ -9893,12 +9830,9 @@ object Inference {
             lit(0L)).as("a"))
         .withColumn("r", col("t") - col("a"))
       val cum = PrefixSum.withRunningTotals(cells, "v", Seq("t", "a", "r"))
-        .withColumn("m2",
-          lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
-        .withColumn("ma2",
-          lit(2L) * (col("a_cum") - col("a")) + col("a") + 1L)
-        .withColumn("mr2",
-          lit(2L) * (col("r_cum") - col("r")) + col("r") + 1L)
+        .withColumn("m2", doubledMidrank("t"))
+        .withColumn("ma2", doubledMidrank("a"))
+        .withColumn("mr2", doubledMidrank("r"))
       cum.agg(
           coalesce(sum(col("a")), lit(0L)).as("n1"),
           coalesce(sum(col("r")), lit(0L)).as("n2"),
@@ -10201,25 +10135,19 @@ object Inference {
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("cs"),
           size(col("cs")).cast("long").as("k"),
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + c.getField("ng")).as("n"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + c.getField("szd")).as("sza"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + c.getField("qzd")).as("qza"))
+          sumInOrder(col("cs"), lit(0L))(_.getField("ng")).as("n"),
+          sumInOrder(col("cs"))(_.getField("szd")).as("sza"),
+          sumInOrder(col("cs"))(_.getField("qzd")).as("qza"))
         .withColumn("zbar",
-          aggregate(col("cs"), lit(0.0), (a, c) =>
-            a + c.getField("szd")) / dbl(col("n")))
+          sumInOrder(col("cs"))(_.getField("szd")) / dbl(col("n")))
         .withColumn("ssb",
-          aggregate(col("cs"), lit(0.0), (a, c) =>
-            a + dbl(c.getField("ng"))
+          sumInOrder(col("cs"))(c => dbl(c.getField("ng"))
               * (c.getField("szd") / dbl(c.getField("ng"))
                 - col("zbar"))
               * (c.getField("szd") / dbl(c.getField("ng"))
                 - col("zbar"))))
         .withColumn("ssw",
-          aggregate(col("cs"), lit(0.0), (a, c) =>
-            a + (c.getField("qzd")
+          sumInOrder(col("cs"))(c => (c.getField("qzd")
               - c.getField("szd") * c.getField("szd")
                 / dbl(c.getField("ng")))))
         .select(col("k"), col("n"),
@@ -10371,8 +10299,7 @@ object Inference {
           .agg(count(lit(1)).as("t"))
         PrefixSum.withRunningTotals(cells, "v", Seq("t"))
           .select(col("v").as(vc),
-            (lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L)
-              .as(out))
+            doubledMidrank("t").as(out))
       }
       val ranked = items
         .join(broadcast(mid2Of("c1", "m2a")), Seq("c1"))
@@ -10458,8 +10385,7 @@ object Inference {
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("m").as("m2"),
           when(col("m") > 0,
-            dbl(aggregate(col("cs"), lit(0L),
-              (a, c) => a + c.getField("num")))
+            dbl(sumInOrder(col("cs"), lit(0L))(_.getField("num")))
               / (lit(4.0) * dbl(col("m")) * dbl(col("m"))))
             .otherwise(lit(Double.NaN)).as("q_mod"))
       per.select(col("com"), col("e_c"), col("d_c"), col("q_contrib"))
@@ -10535,10 +10461,8 @@ object Inference {
         .agg(sort_array(collect_list(col("sf"))).as("fs"))
         .select(col("term"),
           size(col("fs")).cast("long").as("ns"),
-          aggregate(col("fs"), lit(0.0),
-            (a, c) => a + c.getField("f")).as("sf1"),
-          aggregate(col("fs"), lit(0.0),
-            (a, c) => a + c.getField("f") * c.getField("f"))
+          sumInOrder(col("fs"))(_.getField("f")).as("sf1"),
+          sumInOrder(col("fs"))(c => c.getField("f") * c.getField("f"))
             .as("sf2"))
         .withColumn("mu", col("sf1") / dbl(col("ns")))
         .withColumn("sd",
@@ -10559,8 +10483,7 @@ object Inference {
         .groupBy("s1", "s2")
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("s1"), col("s2"),
-          (aggregate(col("cs"), lit(0.0),
-            (a, c) => a + c.getField("az"))
+          (sumInOrder(col("cs"))(_.getField("az"))
             / dbl(size(col("cs")))).as("burrows_delta"))
     }, Some("""
       WITH toks AS (SELECT source,
@@ -11226,13 +11149,11 @@ object Inference {
         .groupBy("source")
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("source"),
-          aggregate(col("cs"), lit(0L),
-            (a, c) => a + c.getField("n")).as("n_docs"),
+          sumInOrder(col("cs"), lit(0L))(_.getField("n")).as("n_docs"),
           col("cs"))
         .select(col("source"), col("n_docs"),
           when(col("n_docs") > 0,
-            aggregate(col("cs"), lit(0.0), (a, c) =>
-              a + dbl(c.getField("n"))
+            sumInOrder(col("cs"))(c => dbl(c.getField("n"))
                 * (pln(c.getField("n")) + pln(c.getField("nt"))
                   - pln(col("n_docs")) - pln(c.getField("m"))))
               / dbl(col("n_docs")))
@@ -11291,8 +11212,7 @@ object Inference {
         .crossJoin(broadcast(tot))
         .select(col("n").as("n_docs"), col("p").as("total_pos"),
           when(col("p") > 0,
-            aggregate(col("cs"), lit(0.0), (a, c) =>
-              a + dbl(c.getField("pos"))
+            sumInOrder(col("cs"))(c => dbl(c.getField("pos"))
                 * (dbl(c.getField("pos_cum"))
                   / dbl(c.getField("cnt_cum"))))
               / dbl(col("p")))
@@ -11354,8 +11274,7 @@ object Inference {
         .crossJoin(broadcast(tot))
         .select(col("n").as("n_docs"),
           when(col("n") > 0,
-            aggregate(col("cs"), lit(0.0), (a, c) =>
-              a + dbl(c.getField("nb")) / dbl(col("n"))
+            sumInOrder(col("cs"))(c => dbl(c.getField("nb")) / dbl(col("n"))
                 * abs(dbl(c.getField("pb")) / dbl(c.getField("nb"))
                   - (dbl(c.getField("bin")) + lit(0.5)) / lit(10.0))))
             .otherwise(lit(Double.NaN)).as("ece"),
@@ -11514,18 +11433,15 @@ object Inference {
         .select(struct(col("k"), col("fk")).as("cell"))
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(size(col("cs")).cast("long").as("m"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + pln(c.getField("k"))).as("sx"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + pln(c.getField("fk"))).as("sy"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + pln(c.getField("k")) * pln(c.getField("k")))
+          sumInOrder(col("cs"))(c => pln(c.getField("k"))).as("sx"),
+          sumInOrder(col("cs"))(c => pln(c.getField("fk"))).as("sy"),
+          sumInOrder(col("cs"))(c =>
+            pln(c.getField("k")) * pln(c.getField("k")))
             .as("sxx"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + pln(c.getField("k")) * pln(c.getField("fk")))
+          sumInOrder(col("cs"))(c =>
+            pln(c.getField("k")) * pln(c.getField("fk")))
             .as("sxy"),
-          aggregate(col("cs"), lit(0.0),
-            (a, c) => a + pln(c.getField("fk"))
+          sumInOrder(col("cs"))(c => pln(c.getField("fk"))
               * pln(c.getField("fk"))).as("syy"))
         .withColumn("vx",
           dbl(col("m")) * col("sxx") - col("sx") * col("sx"))
@@ -11730,14 +11646,13 @@ object Inference {
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("ta").as("n_urgent"), col("tb").as("n_other"),
           when(col("ta") > 0 && col("tb") > 0,
-            aggregate(col("cs"), lit(0.0), (x, c) =>
-              x + abs(dbl(c.getField("a")) / dbl(col("ta"))
+            sumInOrder(col("cs"))(c => abs(dbl(c.getField("a")) / dbl(col("ta"))
                 - dbl(c.getField("b")) / dbl(col("tb"))))
               / lit(2.0))
             .otherwise(lit(Double.NaN)).as("duncan_d"),
           when(col("ta") > 0,
-            aggregate(col("cs"), lit(0.0), (x, c) =>
-              x + when(c.getField("a") + c.getField("b") > 0,
+            sumInOrder(col("cs"))(c =>
+              when(c.getField("a") + c.getField("b") > 0,
                 (dbl(c.getField("a")) / dbl(col("ta")))
                   * (dbl(c.getField("a"))
                     / dbl(c.getField("a") + c.getField("b"))))
@@ -11810,8 +11725,7 @@ object Inference {
         .join(crude, Seq("nk"))
         .select(col("nk"), col("n_g"),
           (dbl(col("f_g")) / dbl(col("n_g"))).as("crude_rate"),
-          aggregate(col("cs"), lit(0.0), (a, c) =>
-            a + when(c.getField("n_gs") > 0,
+          sumInOrder(col("cs"))(c => when(c.getField("n_gs") > 0,
               dbl(c.getField("w_s")) * dbl(c.getField("f_gs"))
                 / (dbl(c.getField("w")) * dbl(c.getField("n_gs"))))
               .otherwise(lit(0.0))).as("std_rate"))
@@ -12031,15 +11945,13 @@ object Inference {
         sum(col("x1") * col("y")).as("s1y"),
         sum(col("x2") * col("y")).as("s2y"),
         sum(col("x1") * col("x2")).as("s12"))
-      def cc(spq: Column, sp: Column, sq: Column) =
-        dbl(col("n")) * dbl(spq) - dbl(sp) * dbl(sq)
       m
-        .withColumn("cyy", cc(col("syy"), col("sy"), col("sy")))
-        .withColumn("c11", cc(col("s11"), col("s1"), col("s1")))
-        .withColumn("c22", cc(col("s22"), col("s2"), col("s2")))
-        .withColumn("c1y", cc(col("s1y"), col("s1"), col("sy")))
-        .withColumn("c2y", cc(col("s2y"), col("s2"), col("sy")))
-        .withColumn("c12", cc(col("s12"), col("s1"), col("s2")))
+        .withColumn("cyy", coMoment(col("n"), col("syy"), col("sy"), col("sy")))
+        .withColumn("c11", coMoment(col("n"), col("s11"), col("s1"), col("s1")))
+        .withColumn("c22", coMoment(col("n"), col("s22"), col("s2"), col("s2")))
+        .withColumn("c1y", coMoment(col("n"), col("s1y"), col("s1"), col("sy")))
+        .withColumn("c2y", coMoment(col("n"), col("s2y"), col("s2"), col("sy")))
+        .withColumn("c12", coMoment(col("n"), col("s12"), col("s1"), col("s2")))
         .withColumn("sse_r",
           when(col("c11") > 0.0,
             col("cyy") - col("c1y") * col("c1y") / col("c11")))
@@ -12231,11 +12143,11 @@ object Inference {
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
         .select(col("n").as("n_orders"),
           when(col("n") > 0,
-            aggregate(col("cs"), lit(0.0), (a, c) => {
+            sumInOrder(col("cs")) { c =>
               val eCnt = c.getField("pexp") * dbl(col("n"))
-              a + ((dbl(c.getField("o")) - eCnt)
+              ((dbl(c.getField("o")) - eCnt)
                 * (dbl(c.getField("o")) - eCnt) / eCnt)
-            }))
+            })
             .otherwise(lit(Double.NaN)).as("chi2_benford2"),
           lit(9L).as("dof"))
     }, Some("""
@@ -12385,8 +12297,7 @@ object Inference {
           * (col("nwd") * col("c") - col("swd"))), lit(0L)).as("rq"))
         .select(struct(col("wd"), col("nwd"), col("rq")).as("cell"))
         .agg(sort_array(collect_list(col("cell"))).as("cs"))
-        .select(aggregate(col("cs"), lit(0.0), (a, c) =>
-          a + dbl(c.getField("rq"))
+        .select(sumInOrder(col("cs"))(c => dbl(c.getField("rq"))
             / (dbl(c.getField("nwd")) * dbl(c.getField("nwd"))))
           .as("ss_resid"))
       val tot = daily.agg(count(lit(1)).as("n"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.StatCols.sumInOrder
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
   *
@@ -24,12 +26,11 @@ object Ann {
 
   /** Σ a_i * b_i in double precision, deterministic left-to-right order. */
   def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
+    sumInOrder(zip_with(a, b,
+      (x, y) => x.cast("double") * y.cast("double")))(identity)
 
   def norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0),
-      (acc, v) => acc + v.cast("double") * v.cast("double")))
+    sqrt(sumInOrder(a)(v => v.cast("double") * v.cast("double")))
 
   /** Zero-norm vectors (padding rows, failed encoder output) get cosine
     * 0.0, NOT IEEE NaN: under Spark's ordering NaN sorts ABOVE every real
@@ -85,10 +86,8 @@ object Ann {
       s"nBits ($nBits) must be in [1, 64]: signatures pack into one long " +
         "and 1L << p aliases bit p-64 beyond it")
     val bits = (0 until nBits).map { p =>
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * planeComponent(p, i)),
-        lit(0.0), (acc, v) => acc + v)
+      val proj = sumInOrder(zip_with(vec, sequence(lit(0), size(vec) - 1),
+        (x, i) => x.cast("double") * planeComponent(p, i)))(identity)
       when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
     }
     bits.reduce(_.bitwiseOR(_))
@@ -158,10 +157,8 @@ object Ann {
     * array column (narrow, codegen'd HOFs — one pass per row). */
   def centroidDots(vec: Column, nlist: Int): Column =
     array((0 until nlist).map { c =>
-      aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * centroidComponent(c, i)),
-        lit(0.0), (acc, v) => acc + v)
+      sumInOrder(zip_with(vec, sequence(lit(0), size(vec) - 1),
+        (x, i) => x.cast("double") * centroidComponent(c, i)))(identity)
     }: _*)
 
   /** IVF (inverted-file) ANN — the second scale path next to LSH: corpus

@@ -4,13 +4,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.extract.PageSynth.splitmix64
-import graft.functions.StatCols.{pln, sumInOrder}
+import graft.functions.StatCols.{coMoment, doubledMidrank, pln, sumInOrder}
 import graft.operators.{BloomSemiJoin, Skyline}
 
 /** Round-5 operator batch: the Bloom-pruned semi-join's superset +
   * broadcast contracts, the two-phase skyline's exact equivalence to the
   * naive quadratic definition, portable_ln's codegen + Math.log
-  * identity, and the StatCols `pln` / `sumInOrder` bit contracts. */
+  * identity, and the StatCols `pln` / `sumInOrder` / `coMoment` /
+  * `doubledMidrank` bit contracts. */
 class BloomSkylineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -195,5 +196,72 @@ class BloomSkylineSpec extends AnyFunSuite {
     assert(s1.keySet == (rows.map(_._1) ++ specials.map(_._1)).toSet)
     assert(s1 == sums(all.repartition(17, col("ord"))),
       "sumInOrder depends on partitioning")
+  }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  test("coMoment == n·Σab − Σa·Σb in Scala doubles, bit for bit") {
+    // sums past 2^53 round in the DOUBLE cast (2^53 + 1 reads 2^53), so
+    // the widened result is not the exact BIGINT co-moment rounded once
+    val big = (1L << 53) + 1L
+    val rows = Seq(
+      (4L, 30L, 10L, 10L),
+      (3L, -7L, -2L, 5L),
+      (big, big, big, 3L),
+      (7L, big + 2L, -big, big),
+      (Long.MaxValue, Long.MaxValue, Long.MinValue, Long.MaxValue),
+      (0L, 0L, 0L, 0L)) ++
+      (0L until 200L).map { i =>
+        val r = splitmix64(i)
+        ((r & 0xFFFFFL) + 1L, r >> 9, splitmix64(r) >> 11, r >> 12)
+      }
+    val got = rows.toDF("n", "sab", "sa", "sb")
+      .select(coMoment(col("n"), col("sab"), col("sa"), col("sb")),
+        coMoment(col("n"), col("sab"), col("sa"), col("sa")))
+      .as[(Double, Double)].collect()
+    rows.zip(got).foreach { case ((n, sab, sa, sb), (cm, v)) =>
+      assert(bits(cm) == bits(n.toDouble * sab.toDouble
+        - sa.toDouble * sb.toDouble), s"coMoment($n, $sab, $sa, $sb)")
+      assert(bits(v) == bits(n.toDouble * sab.toDouble
+        - sa.toDouble * sa.toDouble), s"coMoment($n, $sab, $sa, $sa)")
+    }
+    val exact = BigInt(big) * BigInt(big) - BigInt(big) * BigInt(3L)
+    assert(bits(got(2)._1) != bits(exact.toDouble),
+      "the 2^53 row no longer exercises the DOUBLE cast")
+  }
+
+  test("doubledMidrank == lowest + highest rank of each tie run") {
+    val values = (0L until 300L).map(i => splitmix64(i) % 23L).sorted
+    val runs = values.groupBy(identity).view.mapValues(_.size.toLong)
+      .toSeq.sortBy(_._1)
+    val cum = runs.map(_._2).scanLeft(0L)(_ + _).tail
+    val got = runs.zip(cum).map { case ((v, t), c) => (v, t, c) }
+      .toDF("v", "t", "t_cum")
+      .select(col("v"), doubledMidrank("t")).as[(Long, Long)].collect().toMap
+    // ranks are 1-based positions in the sorted list, ties included
+    val want = values.zipWithIndex.groupBy(_._1).view
+      .mapValues(r => r.map(_._2).min + 1L + r.map(_._2).max + 1L).toMap
+    assert(runs.exists(_._2 > 1), "no tie runs")
+    assert(got == want)
+  }
+
+  test("the BIGINT sumInOrder throws on overflow under ANSI, wraps off it") {
+    val lists = Seq(Seq(1L, 2L, -5L), Seq(Long.MaxValue, 1L),
+      Seq(Long.MinValue, -1L, 3L))
+    def sums(xs: Seq[Long]): Long = Seq(xs).toDF("xs")
+      .select(sumInOrder(col("xs"), lit(0L))(identity)).as[Long].head()
+    def overflows(xs: Seq[Long]): Boolean =
+      try { sums(xs); false }
+      catch {
+        case e: Throwable => Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists(_.isInstanceOf[ArithmeticException])
+      }
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    assert(ansi == "true")
+    assert(sums(lists.head) == -2L)
+    assert(lists.tail.forall(overflows))
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try lists.foreach(xs => assert(sums(xs) == xs.foldLeft(0L)(_ + _)))
+    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 }

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source rules:
   *   - the column vocabulary (`dbl`, `pln`) is defined once, in
   *     `graft/functions/StatCols.scala`, and no other main source defines a
-  *     local copy or calls `portable_ln` by name;
+  *     local copy or calls `portable_ln` by name; no other main source
+  *     writes out a list-sum fold, an n-scaled co-moment or a doubled
+  *     midrank (`sumInOrder`, `coMoment`, `doubledMidrank`);
   *   - every lineage cut and round-robin spread goes through
   *     `graft/operators/Cut.scala`;
   *   - the ascending-pair expansion lives once, in
@@ -38,6 +40,21 @@ class SourceRulesSpec extends AnyFunSuite {
 
   private def mainSources: Seq[Path] = sources(mainRoot)
 
+  /** `path:line: match` of every match of `bad` in a main source other
+    * than `home`; a match may span lines. */
+  private def spans(home: Path, bad: scala.util.matching.Regex): Seq[String] =
+    for {
+      p <- mainSources if p != home
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      m <- bad.findAllMatchIn(text)
+    } yield s"$p:${text.take(m.start).count(_ == '\n') + 1}: " +
+      m.matched.replaceAll("\\s+", " ").take(120)
+
+  /** A balanced `( … )` group, nested `depth` levels deep at most. */
+  private def parens(depth: Int): String =
+    if (depth == 0) """\([^()]*\)"""
+    else """\((?:[^()]|""" + parens(depth - 1) + """)*\)"""
+
   /** `path:line: text` of every line of `files` that `bad` matches. */
   private def hits(files: Seq[Path])(bad: String => Boolean): Seq[String] =
     for {
@@ -52,6 +69,26 @@ class SourceRulesSpec extends AnyFunSuite {
       hits(mainSources.filter(_ != home))(l => banned.exists(l.contains))
     assert(found.isEmpty,
       "use graft.functions.StatCols instead of a local copy:\n" +
+        found.mkString("\n"))
+  }
+
+  test("list sums, co-moments and doubled midranks live only in StatCols") {
+    // aggregate(list, lit(0.0) or lit(0L), (acc, e) => acc + …), a block
+    // body's last statement included
+    val fold = ("""\baggregate\((?:[^()]|""" + parens(5) +
+      """)*?,\s*lit\(0(?:\.0|L)\)\s*,\s*\(\s*(\w+)\s*,\s*\w+\s*\)\s*=>""" +
+      """\s*(?:\{\s*(?:val\s[^\n]*\n\s*)*)?\1\s*\+""").r
+    // dbl(n) * dbl(Σab) - dbl(Σa) * dbl(Σb) over a count n or k (a 2×2
+    // determinant a·d − b·c is no moment and stays inline)
+    val dblArg = """dbl""" + parens(3)
+    val coMoment = ("""\bdbl\((?:n|k|col\("[nk]"\))\)\s*\*\s*""" + dblArg +
+      """\s*-\s*""" + dblArg + """\s*\*\s*dbl\(""").r
+    // lit(2L) * (col("t_cum") - col("t")) + col("t") + 1L
+    val midrank = ("""lit\(2L\)\s*\*\s*\(\s*col\("(\w+)_cum"\)\s*-\s*""" +
+      """col\("\1"\)\s*\)\s*\+\s*col\("\1"\)\s*\+\s*(?:lit\(\s*)?1L""").r
+    val found = Seq(fold, coMoment, midrank).flatMap(spans(home, _))
+    assert(found.isEmpty,
+      "use StatCols.sumInOrder / coMoment / doubledMidrank instead:\n" +
         found.mkString("\n"))
   }
 
@@ -70,12 +107,7 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(Files.isRegularFile(pairsHome), s"$pairsHome is missing")
     // slice(list, i + lit(2), size(list)), possibly over several lines
     val tail = """slice\(\s*[\w.]+(?:\([^()]*\))?\s*,[^,]*?\+\s*lit\(2\)\s*,\s*size\(""".r
-    val found = for {
-      p <- mainSources if p != pairsHome
-      text = new String(Files.readAllBytes(p), "UTF-8")
-      m <- tail.findAllMatchIn(text)
-    } yield s"$p:${text.take(m.start).count(_ == '\n') + 1}: " +
-      m.matched.replaceAll("\\s+", " ")
+    val found = spans(pairsHome, tail)
     assert(found.isEmpty,
       "use graft.operators.Pairs instead:\n" + found.mkString("\n"))
   }
